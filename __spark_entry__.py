@@ -33,6 +33,7 @@ import menelaus_spark  # noqa: F401  (ensures PYTHONPATH export for workers)
 from menelaus_spark import audio, tables
 from menelaus_spark.operators import dedup, similarity
 from menelaus_spark.operators import text as T
+from menelaus_spark.verdicts import local_frame
 
 
 _PYFILES_SESSIONS: set = set()
@@ -1665,8 +1666,8 @@ def q_hdddm_lineitem(spark, sf_dir):
             state = det.update(batch, batch_id=str(yr), summary_values=sums[yr])
             rows.append((str(yr), state or "pass",
                          det.epsilon[-1] if det.epsilon else None, det.beta))
-    return spark.createDataFrame(
-        rows, schema="year string, state string, epsilon double, beta double"
+    return local_frame(
+        spark, rows, "year string, state string, epsilon double, beta double"
     )
 
 
@@ -1739,8 +1740,8 @@ def q_kdq_lineitem(spark, sf_dir):
         # order differs at ~1e-13 relative, far under this grain
         rows.append((str(yr), state or "pass",
                      round(det.test_dist, 6), round(det._critical_dist, 6)))
-    return spark.createDataFrame(
-        rows, schema="year string, state string, kl double, critical double"
+    return local_frame(
+        spark, rows, "year string, state string, kl double, critical double"
     )
 
 
@@ -1846,8 +1847,8 @@ def q_cdbd_example_confidence(spark, sf_dir):
             state = det.update(batch, batch_id=str(yr), summary_values=sums[yr])
             rows.append((str(yr), state or "pass",
                          det.epsilon[-1] if det.epsilon else None, det.beta))
-    return spark.createDataFrame(
-        rows, schema="year string, state string, epsilon double, beta double"
+    return local_frame(
+        spark, rows, "year string, state string, epsilon double, beta double"
     )
 
 
@@ -1867,8 +1868,8 @@ def _drift_sequence_rows(spark, det, batches):
             tb = det.total_batches
             rows.append((lbl, state or "pass", det.distances.get(tb),
                          det.epsilon_values.get(tb), det.thresholds.get(tb)))
-    out = spark.createDataFrame(
-        rows, schema="year string, state string, dist double, eps double, beta double"
+    out = local_frame(
+        spark, rows, "year string, state string, dist double, eps double, beta double"
     )
     r6 = lambda c: F.round(F.col(c) * F.lit(1000000.0)) / F.lit(1000000.0)  # noqa: E731
     return out.select(
@@ -2687,8 +2688,8 @@ def q_nndvi_lineitem(spark, sf_dir):
         else:
             state = det.update(batch)
             rows.append((str(yr), state or "pass", det.d_act, det.threshold))
-    return spark.createDataFrame(
-        rows, schema="year string, state string, d_act double, threshold double"
+    return local_frame(
+        spark, rows, "year string, state string, d_act double, threshold double"
     )
 
 
@@ -2987,8 +2988,8 @@ def q_md3_events(spark, sf_dir):
     det = MD3(sensitivity=1.5)
     det.set_reference(ref_pdf, target_name="y")
     state, n_proc = det.update_batch(stream, order_col="event_id")
-    return spark.createDataFrame(
-        [(state or "none", int(n_proc))], "state string, n_processed long"
+    return local_frame(
+        spark, [(state or "none", int(n_proc))], "state string, n_processed long"
     )
 
 
@@ -4062,8 +4063,8 @@ def q_streaming_neardup(spark, sf_dir):
         rows = spark.sql(
             f"SELECT DISTINCT id_a, id_b, jaccard FROM {qname}"
         ).collect()
-        return spark.createDataFrame(
-            rows, "id_a string, id_b string, jaccard double"
+        return local_frame(
+            spark, rows, "id_a string, id_b string, jaccard double"
         ).orderBy("id_a", "id_b")
     finally:
         shutil.rmtree(work, ignore_errors=True)

@@ -64,6 +64,7 @@ from pyspark.sql import functions as F
 from menelaus_spark.functions import distances as dist
 from menelaus_spark.functions import stats
 from menelaus_spark.operators import histograms as H
+from menelaus_spark.verdicts import local_frame
 
 DRIFT = "drift"
 
@@ -472,7 +473,7 @@ class HDM:
             for c, (vals, cnts) in s["data"].items()
             for v, n in zip(vals, cnts)
         ]
-        return spark.createDataFrame(rows, "feature string, value double, count long")
+        return local_frame(spark, rows, "feature string, value double, count long")
 
     def _set_ref_summary(self, s: dict) -> None:
         old = self._ref_summary

@@ -51,6 +51,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from menelaus_spark.functions.stats import norm_ppf
+from menelaus_spark.verdicts import local_frame
 
 
 class NNSpacePartitioner:
@@ -271,8 +272,8 @@ class NNDVI:
             .filter(F.col("__n") > cap).collect()
         )
         if hot:
-            spark = D.sparkSession
-            hot_df = spark.createDataFrame(
+            hot_df = local_frame(
+                D.sparkSession,
                 [(int(r["t"]), int(r["b"]), int(np.ceil(int(r["__n"]) / cap)))
                  for r in hot],
                 "t int, b bigint, __m int",

@@ -220,33 +220,29 @@ def audio_neardup_pairs(
         # shingle frame is never shuffled. Above the cap (e.g. the
         # 800k-clip scaling witness) the distributed plans run
         # unchanged.
-        cols = [key_col, "sig"]
-        if containment_threshold is not None:
-            cols.append("heads")
-        pdf = sh.select(*cols).toPandas()  # Arrow collect off the pin
+        from collections import defaultdict
+
+        pdf = sh.select(key_col, "sig", "heads").toPandas()  # Arrow collect off the pin
         pairs = lsh_candidate_pairs_driver(
             list(zip(pdf[key_col], pdf["sig"])), bands, rows)
-        if containment_threshold is not None:
-            # twin of the head-bucket union: explode(slice(heads, 1,
-            # prefix_keys)) keeps per-row duplicates, the bucket count
-            # counts ROWS, and same-id pairs fall to id_a < id_b
-            from collections import defaultdict
-
-            buckets: dict = defaultdict(list)
-            for rid, heads in zip(pdf[key_col], pdf["heads"]):
-                if heads is None:
-                    continue
-                for hshingle in heads[:prefix_keys]:
-                    buckets[hshingle].append(rid)
-            for g in buckets.values():
-                if len(g) < 2 or len(g) > prefix_cap:
-                    continue
-                for x in range(len(g)):
-                    for y in range(x + 1, len(g)):
-                        a, b2 = g[x], g[y]
-                        if a == b2:
-                            continue
-                        pairs.add((a, b2) if a < b2 else (b2, a))
+        # twin of the head-bucket union: explode(slice(heads, 1,
+        # prefix_keys)) keeps per-row duplicates, the bucket count
+        # counts ROWS, and same-id pairs fall to id_a < id_b
+        buckets: dict = defaultdict(list)
+        for rid, heads in zip(pdf[key_col], pdf["heads"]):
+            if heads is None:
+                continue
+            for hshingle in heads[:prefix_keys]:
+                buckets[hshingle].append(rid)
+        for g in buckets.values():
+            if len(g) < 2 or len(g) > prefix_cap:
+                continue
+            for x in range(len(g)):
+                for y in range(x + 1, len(g)):
+                    a, b2 = g[x], g[y]
+                    if a == b2:
+                        continue
+                    pairs.add((a, b2) if a < b2 else (b2, a))
         cands = local_pairs_frame(df.sparkSession, pairs,
                                   dict(sh.dtypes)[key_col])
     if cands is None:
@@ -354,12 +350,13 @@ def transcript_candidate_pairs(
     shared by thousands of clips is the text-dedup path's job), so
     candidate volume is bounded by cap x blocks.
 
-    At or below ``driver_cap`` block rows (LIMIT-probed — the probe
-    reads only the pruned transcript column, never the payload) the
-    grouping and pair generation run driver-side on the collected
-    JVM-computed (id, md5 block) rows, and the resulting LocalRelation
-    broadcasts into the verify joins so the fingerprint frame is never
-    shuffled; above the cap the block self-join plan is unchanged.
+    At or below ``driver_cap`` block rows (gated by ``blocks.count()``,
+    one parallel pass over the pruned transcript column, never the
+    payload) the grouping and pair generation run driver-side on the
+    collected JVM-computed (id, md5 block) rows, and the resulting
+    LocalRelation broadcasts into the verify joins so the fingerprint
+    frame is never shuffled; above the cap the block self-join plan is
+    unchanged.
     The cap sits below the audio scaling-witness size (800k clips)."""
     from menelaus_spark.operators.dedup import (capped_block_pairs_driver,
                                                 local_pairs_frame,

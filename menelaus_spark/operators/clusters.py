@@ -92,6 +92,11 @@ def _driver_components(edges: DataFrame) -> DataFrame:
             lo, hi = (ru, rv) if ru < rv else (rv, ru)
             parent[hi] = lo
     rows = [(x, find(x)) for x in parent]
+    # A Python-list frame, not verdicts.local_frame: at the 1M-edge cap
+    # (~2M rows) the LocalRelation measured slower on 4 cores (create +
+    # one aggregation: 12.7 s vs 9.7 s for long ids), and string ids
+    # pass spark.sql.execution.arrow.localRelationThreshold and turn
+    # into a one-partition-per-Arrow-batch RDD (1954 partitions).
     id_type = edges.schema[0].dataType
     out_schema = T.StructType([
         T.StructField("id", id_type), T.StructField("cluster_id", id_type)

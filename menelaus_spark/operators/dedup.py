@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from menelaus_spark.operators.text import tokens_col
+from menelaus_spark.verdicts import local_frame
 
 
 class OwnedCache:
@@ -564,15 +565,8 @@ def local_pairs_frame(spark, pairs, id_type: str):
     """(id_a, id_b) LocalRelation from a driver pair set — sorted for
     deterministic physical row order; its small known size lets the
     planner broadcast it into the verify joins, so the fingerprint
-    frame is never shuffled."""
-    import pandas as pd
-
-    schema = f"id_a {id_type}, id_b {id_type}"
-    if not pairs:
-        return spark.createDataFrame([], schema)
-    data = sorted(pairs)
-    return spark.createDataFrame(  # pandas input -> Arrow path
-        pd.DataFrame(data, columns=["id_a", "id_b"]), schema)
+    frame is never shuffled. Empty sets are LocalRelations too."""
+    return local_frame(spark, sorted(pairs), f"id_a {id_type}, id_b {id_type}")
 
 
 def minhash_lsh_dedup(
@@ -691,13 +685,10 @@ def repeated_ngram_pairs(
                     key = (a, b) if a < b else (b, a)
                     counts[key] = counts.get(key, 0) + 1
         id_type = dict(df.dtypes)[id_col]
-        schema = f"id_a {id_type}, id_b {id_type}, shared_spans long"
-        data = sorted((a, b, c) for (a, b), c in counts.items())
-        if not data:
-            return df.sparkSession.createDataFrame([], schema)
-        return df.sparkSession.createDataFrame(
-            pd.DataFrame(data, columns=["id_a", "id_b", "shared_spans"]),
-            schema)
+        return local_frame(
+            df.sparkSession,
+            sorted((a, b, c) for (a, b), c in counts.items()),
+            f"id_a {id_type}, id_b {id_type}, shared_spans long")
     dfreq = spans.groupBy("__h").agg(F.count(F.lit(1)).alias("__df"))
     cold = spans.join(dfreq.filter(F.col("__df") <= hot_cap), on="__h")
     a = cold.select(F.col(id_col).alias("id_a"), "__h")
@@ -996,7 +987,7 @@ def kmeans_blocks(
         fr_rows = [(r["block"],
                     int(min(1.0, 1.05 * sample_cap / int(r["count"])) * 1_000_000))
                    for r in oversized]
-        thr_df = spark.createDataFrame(fr_rows, "block string, __thr long")
+        thr_df = local_frame(spark, fr_rows, "block string, __thr long")
         hash_col = F.pmod(F.xxhash64(F.col(id_col), F.lit(round_seed)),
                           F.lit(1_000_000))
         samp = (

@@ -12,6 +12,8 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from menelaus_spark.verdicts import local_frame
+
 
 def _window_pred(idx_col: str, from_index: int, to_index: int):
     return (F.col(idx_col) >= from_index) & (F.col(idx_col) < to_index)
@@ -82,10 +84,10 @@ def brownian_noise(df: DataFrame, idx_col: str, from_index: int, to_index: int,
     walk = np.empty(steps)
     walk[0] = x0
     walk[1:] = x0 + np.cumsum(increments[1:])
-    spark = df.sparkSession
-    walk_df = spark.createDataFrame(
+    walk_df = local_frame(
+        df.sparkSession,
         [(int(from_index + i), float(w)) for i, w in enumerate(walk)],
-        schema=f"{idx_col} long, __walk double",
+        f"{idx_col} long, __walk double",
     )
     out = df.join(F.broadcast(walk_df), on=idx_col, how="left")
     return out.withColumn(

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from menelaus_spark.operators.dedup import OwnedCache
+from menelaus_spark.verdicts import local_frame
 
 # one-slot internal pins (dedup.OwnedCache semantics): repeated calls
 # hold at most ONE cached decode-derived frame per owner
@@ -515,13 +516,8 @@ def _video_pairs_driver(spark, recs: list, id_col: str, id_type: str,
         sa, sb = recs[i][1], recs[j][1]
         inter = len(set(sa) & set(sb))
         data.append((a, b2, inter, len(sa), len(sb)))
-    schema = f"id_a {id_type}, id_b {id_type}, __i int, __sa int, __sb int"
-    if data:  # pandas input -> Arrow path
-        local = spark.createDataFrame(
-            pd.DataFrame(data, columns=["id_a", "id_b", "__i", "__sa", "__sb"]),
-            schema)
-    else:
-        local = spark.createDataFrame([], schema)
+    local = local_frame(
+        spark, data, f"id_a {id_type}, id_b {id_type}, __i int, __sa int, __sb int")
     inter = F.col("__i")
     union = F.col("__sa") + F.col("__sb") - inter
     return (
@@ -732,11 +728,8 @@ def image_neardup_pairs(df: DataFrame, id_col: str = "image_id",
                                     [r[1] for r in rows_],
                                     band_cap, max_hamming)
         id_type = dict(df.dtypes)[id_col]
-        schema = f"id_a {id_type}, id_b {id_type}, hamming int"
-        if not pairs:
-            return df.sparkSession.createDataFrame([], schema)
-        return df.sparkSession.createDataFrame(  # pandas input -> Arrow path
-            pd.DataFrame(pairs, columns=["id_a", "id_b", "hamming"]), schema)
+        return local_frame(df.sparkSession, pairs,
+                           f"id_a {id_type}, id_b {id_type}, hamming int")
     bands = F.array(*[
         F.struct(F.lit(b).alias("band"),
                  (F.shiftright(F.col("phash"), 16 * b)

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from menelaus_spark.operators.dedup import cosine_cols
+from menelaus_spark.verdicts import local_frame
 
 
 def cosine_topk(
@@ -28,10 +29,10 @@ def cosine_topk(
     """Exact top-k by cosine for each query vector: broadcast the tiny
     query table, one scan of the corpus, per-query window top-k.
     Returns (query_id, id, cosine, rank)."""
-    spark = df.sparkSession
-    qdf = spark.createDataFrame(
+    qdf = local_frame(
+        df.sparkSession,
         [(qid, [float(x) for x in v]) for qid, v in queries],
-        schema="query_id string, qvec array<double>",
+        "query_id string, qvec array<double>",
     )
     scored = df.select(
         F.col(id_col), F.col(vec_col).cast("array<double>").alias("__v")
@@ -52,8 +53,18 @@ def _dbl_array_sql(values) -> str:
     hundreds of driver py4j round-trips per plane/centroid matrix
     (measured 0.48 s -> 0.01 s for 8x64 literals); ``repr`` emits the
     shortest round-trip decimal, which Spark's parser reads back to
-    the identical double."""
-    return "array(" + ",".join(repr(float(x)) + "D" for x in values) + ")"
+    the identical double. NaN and ±inf have no decimal literal (a NaN
+    centroid comes from an inf vector in the corpus), so they are
+    spelled as casts from their string names."""
+    return "array(" + ",".join(_dbl_sql(float(x)) for x in values) + ")"
+
+
+def _dbl_sql(x: float) -> str:
+    if np.isfinite(x):
+        return repr(x) + "D"
+    if np.isnan(x):
+        return "double('NaN')"
+    return "double('Infinity')" if x > 0 else "double('-Infinity')"
 
 
 def _bucket_expr(vec_sql: str, planes: np.ndarray):
@@ -109,9 +120,8 @@ def lsh_ann_topk(
                     buckets.add(base ^ (1 << i) ^ (1 << j))
         for bkt in sorted(buckets):
             probe_rows.append((qid, [float(x) for x in v], bkt))
-    spark = df.sparkSession
-    qdf = spark.createDataFrame(
-        probe_rows, schema="query_id string, qvec array<double>, bucket int"
+    qdf = local_frame(
+        df.sparkSession, probe_rows, "query_id string, qvec array<double>, bucket int"
     )
     scored = corpus.join(F.broadcast(qdf), on="bucket").withColumn(
         "cosine", F.round(cosine_cols(F.col("__v"), F.col("qvec")), 6)
@@ -224,8 +234,8 @@ def ivf_ann_topk(
         order = sorted(range(n_eff), key=lambda i: (-qd[i], i))[: min(nprobe, n_eff)]
         for li in order:
             probe_rows.append((qid, [float(x) for x in v], int(li)))
-    qdf = df.sparkSession.createDataFrame(
-        probe_rows, schema="query_id string, qvec array<double>, list_id int"
+    qdf = local_frame(
+        df.sparkSession, probe_rows, "query_id string, qvec array<double>, list_id int"
     )
     scored = corpus.join(F.broadcast(qdf), on="list_id").withColumn(
         "cosine", F.round(cosine_cols(F.col("__v"), F.col("qvec")), 6)
@@ -379,8 +389,8 @@ def pq_ann_topk(
             for j in range(m_eff)
         ]
         lut_rows.append((str(qid), lut, qn))
-    qdf = df.sparkSession.createDataFrame(
-        lut_rows, schema="query_id string, lut array<array<double>>, qnorm double"
+    qdf = local_frame(
+        df.sparkSession, lut_rows, "query_id string, lut array<array<double>>, qnorm double"
     )
     scored = corpus.crossJoin(F.broadcast(qdf)).withColumn(
         "approx_cosine",
@@ -404,9 +414,10 @@ def pq_ann_topk(
     )
     if rerank <= 0:
         return shortlist.filter(F.col("rank") <= k)
-    qv = df.sparkSession.createDataFrame(
+    qv = local_frame(
+        df.sparkSession,
         [(str(qid), [float(x) for x in v]) for qid, v in queries],
-        schema="query_id string, qvec array<double>",
+        "query_id string, qvec array<double>",
     )
     # broadcast the SHORTLIST (<= rerank x n_queries rows), never the
     # corpus: at sf-test sizes Spark's size estimate would otherwise
@@ -520,9 +531,9 @@ def ivfpq_ann_topk(
         order = sorted(range(n_eff), key=lambda i: (-qd[i], i))[: min(nprobe, n_eff)]
         for li in order:
             probe_rows.append((str(qid), int(li), lut, qn))
-    qdf = df.sparkSession.createDataFrame(
-        probe_rows,
-        schema="query_id string, list_id int, lut array<array<double>>, qnorm double",
+    qdf = local_frame(
+        df.sparkSession, probe_rows,
+        "query_id string, list_id int, lut array<array<double>>, qnorm double",
     )
     scored = corpus.join(F.broadcast(qdf), on="list_id").withColumn(
         "approx_cosine",
@@ -546,9 +557,10 @@ def ivfpq_ann_topk(
     )
     if rerank <= 0:
         return shortlist.filter(F.col("rank") <= k)
-    qv = df.sparkSession.createDataFrame(
+    qv = local_frame(
+        df.sparkSession,
         [(str(qid), [float(x) for x in v]) for qid, v in queries],
-        schema="query_id string, qvec array<double>",
+        "query_id string, qvec array<double>",
     )
     # broadcast the SHORTLIST (<= rerank x n_queries rows), never the
     # corpus: at sf-test sizes Spark's size estimate would otherwise

@@ -43,9 +43,10 @@ from menelaus_spark.verdicts import (
     DRIFT,
     FAIL,
     PASS,
-    VERDICT_SCHEMA,
     VIOLATION_SCHEMA,
     Verdict,
+    empty_violations,
+    verdicts_df,
 )
 
 KS_BINS = 1024
@@ -424,7 +425,7 @@ class ValidationSuite:
                for r in rows}
         return {pk: out.get(pk, [0] * len(conds)) for pk in pks}
 
-    def _quality_verdicts(self, pk: str, feats_pk: DataFrame, n_rows: int,
+    def _quality_verdicts(self, pk: str, feats_pk: DataFrame | None, n_rows: int,
                           precounts: list[int] | None = None):
         """Per-clip audio-quality + payload-size verdicts from the
         decode-pass metrics: ONE tiny aggregation over the cached
@@ -499,12 +500,21 @@ class ValidationSuite:
             ]
         return aggs
 
-    def _constraint_verdicts(self, pk: str, part_df: DataFrame, stats: dict):
+    def _schema_result(self, df: DataFrame):
+        """Schema conformance of the whole table: every partition is a
+        filter of ``df`` and shares its schema, so one driver-side check
+        serves the whole run."""
+        if self.expected_schema is None:
+            return None
+        return C.schema_check(df, self.expected_schema)
+
+    def _constraint_verdicts(self, pk: str, part_df: DataFrame, stats: dict,
+                             schema_result: tuple | None):
         verdicts, violations = [], []
         n_rows = int(stats["__n"])
 
-        if self.expected_schema is not None:
-            ok, problems = C.schema_check(part_df, self.expected_schema)
+        if schema_result is not None:
+            ok, problems = schema_result
             verdicts.append(Verdict(pk, "schema", PASS if ok else FAIL, n_rows=n_rows,
                                     details=problems))
 
@@ -1345,7 +1355,7 @@ class ValidationSuite:
             verdict_rows = verdict_rows + self._neardup_verdicts(df)
         if self.hot_key_max_frac is not None:
             verdict_rows = verdict_rows + self._hotkey_verdicts(df)
-        verdicts_df = self.spark.createDataFrame(verdict_rows, schema=VERDICT_SCHEMA)
+        verdicts = verdicts_df(self.spark, verdict_rows)
         import os
 
         viol_root = os.path.join(self.manifest.dir, "violations")
@@ -1357,10 +1367,11 @@ class ValidationSuite:
                 *[os.path.join(viol_root, d) for d in sorted(os.listdir(viol_root))]
             )
         else:
-            violations_df = self.spark.createDataFrame([], schema=VIOLATION_SCHEMA)
-        return verdicts_df, violations_df
+            violations_df = empty_violations(self.spark)
+        return verdicts, violations_df
 
     def _run_sequential(self, df: DataFrame, todo: list[str]) -> None:
+        schema_result = self._schema_result(df)
         for pk in todo:
             t0 = time.time()
             # NO persist of the raw partition: the bytes column makes
@@ -1374,7 +1385,8 @@ class ValidationSuite:
             n_rows = int(stats["__n"])
             fingerprint = {"n": n_rows, "key_hash": int(stats["__key_hash"] or 0)}
             is_ref = not self.manifest.records  # first partition ever = reference
-            verdicts, violations = self._constraint_verdicts(pk, part_df, stats)
+            verdicts, violations = self._constraint_verdicts(pk, part_df, stats,
+                                                             schema_result)
             d_verdicts, d_violations = self._drift_verdicts(pk, part_df, n_rows, is_ref, stats)
             if self.kdq is not None and (is_ref or self.kdq.drift_state == DRIFT):
                 self._kdq_ref_pk = pk
@@ -1758,7 +1770,11 @@ class ValidationSuite:
             got = {str(r[self.partition_col]): int(r["__bad"] or 0) for r in bad_rows}
             nan_by = {pk: got.get(pk, 0) for pk in todo}
 
-        # sequential decision loop over collected summaries
+        # sequential decision loop over collected summaries; the
+        # per-run invariants (schema check, HDM cast list) are built
+        # once here — each costs py4j round-trips per partition
+        schema_result = self._schema_result(df)
+        hdm_casts = [F.col(c).cast("double").alias(c) for c in self.hdm_cols]
         for i, pk in enumerate(todo):
             t_pk = time.time() if i else t0  # first record absorbs global passes
             stats = stats_by[pk]
@@ -1766,15 +1782,14 @@ class ValidationSuite:
             fingerprint = {"n": n_rows, "key_hash": int(stats["__key_hash"] or 0)}
             is_ref = not self.manifest.records
             part_df = df.filter(F.col(self.partition_col) == self._pk_value(df, pk))
-            verdicts, violations = self._constraint_verdicts(pk, part_df, stats)
+            verdicts, violations = self._constraint_verdicts(pk, part_df, stats,
+                                                             schema_result)
 
             # HDM: test-side agg AND distinct-value summary both come
             # precomputed from the global passes, so the exact
             # re-binning semantics run driver-side with no per-batch job
             if self.hdm is not None:
-                hdm_df = part_df.select(
-                    *[F.col(c).cast("double").alias(c) for c in self.hdm_cols]
-                ).coalesce(self.hdm_input_partitions)
+                hdm_df = part_df.select(*hdm_casts).coalesce(self.hdm_input_partitions)
                 if is_ref:
                     self.hdm.set_reference(hdm_df, batch_id=pk,
                                            summary_values=hdm_sum_by.get(pk))
@@ -1872,11 +1887,15 @@ class ValidationSuite:
                     )
 
             if self._quality_active():
+                # the partition's feats frame only feeds violation rows,
+                # so it is built only when some count is non-zero
+                precounts = qcounts_by.get(pk)
                 qv, qviol = self._quality_verdicts(
                     pk,
-                    feats.filter(F.col(self.partition_col).cast("string") == pk),
+                    feats.filter(F.col(self.partition_col).cast("string") == pk)
+                    if precounts is None or any(precounts) else None,
                     n_rows,
-                    precounts=qcounts_by.get(pk),
+                    precounts=precounts,
                 )
                 verdicts.extend(qv)
                 violations.extend(qviol)

@@ -10,10 +10,13 @@ violation rows" per the north rule.
 
 from __future__ import annotations
 
+from collections.abc import Iterable
 from dataclasses import dataclass, field
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 PASS, WARNING, DRIFT, FAIL = "pass", "warning", "drift", "fail"
 
@@ -62,9 +65,47 @@ class Verdict:
         }
 
 
-def verdicts_df(spark: SparkSession, verdicts: list[Verdict]) -> DataFrame:
-    return spark.createDataFrame([v.as_row() for v in verdicts], schema=VERDICT_SCHEMA)
+def local_frame(spark: SparkSession, rows: Iterable, schema: T.StructType | str) -> DataFrame:
+    """A LocalRelation over rows the driver already holds — the one way
+    the engine turns driver-side rows into a DataFrame.
+
+    ``rows`` are tuples (by position) or dicts (by field name; a missing
+    key is None); ``schema`` is a StructType or a DDL string. The rows
+    become a pyarrow Table typed by the schema, and ``createDataFrame``'s
+    Arrow-Table branch plans it as a ``LocalTableScan`` whatever
+    ``spark.sql.execution.arrow.pyspark.enabled`` says, empty frames
+    included (up to ``spark.sql.execution.arrow.localRelationThreshold``
+    bytes). A plain list would plan a Python-RDD scan that starts Python
+    workers on every action just to unpickle these rows. A None in a
+    non-nullable field raises ValueError, as the list path's verifier
+    does.
+    """
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    names = schema.fieldNames()
+    rows = list(rows)
+    if rows and isinstance(rows[0], dict):
+        cols = [[r.get(n) for r in rows] for n in names]
+    else:
+        bad = next((r for r in rows if len(r) != len(names)), None)
+        if bad is not None:
+            raise ValueError(f"row {bad!r} does not have the {len(names)} fields of {names}")
+        cols = list(zip(*rows)) or [()] * len(names)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+    for f, col in zip(arrow_schema, table.columns):
+        if not f.nullable and col.null_count:
+            raise ValueError(f"field {f.name!r} is not nullable but holds None")
+    return spark.createDataFrame(table, schema)
+
+
+def verdicts_df(spark: SparkSession, rows: list[dict]) -> DataFrame:
+    """Verdict rows (``Verdict.as_row`` dicts) as a VERDICT_SCHEMA frame."""
+    return local_frame(spark, rows, VERDICT_SCHEMA)
 
 
 def empty_violations(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([], schema=VIOLATION_SCHEMA)
+    return local_frame(spark, [], VIOLATION_SCHEMA)
