@@ -5200,7 +5200,7 @@ def _lsh_oracle_sql() -> str:
 def oracle_sql() -> dict[str, str]:
     hit_cols, lang_case = _lang_case()
     # two 60-bit lanes per md5 (hex 1-15 and 17-31), mirroring
-    # dedup._md5_hash64's family exactly
+    # dedup.minhash_sig_py's family exactly
     minhash_mins = ", ".join(
         f"min(('0x' || substring(md5(concat('{i // 2}|', shingle)), "
         f"{1 if i % 2 == 0 else 17}, 15))::BIGINT) as h{i}"

@@ -4,9 +4,9 @@ n-gram Jaccard, MinHash + LSH, SimHash, embedding-cosine near-dup.
 Design notes for 100 TB:
 
 - Exact dedup is a single hash-groupBy on md5(normalized text).
-- MinHash signatures are computed in ONE pass: explode shingles ->
-  groupBy(doc) with k min-aggregates (JVM-side md5-prefix hashing so
-  the identical function is expressible in the DuckDB oracle).
+- MinHash signatures are computed in ONE Arrow pass, per row, with
+  no shuffle; the md5-prefix hash family is expressible verbatim in
+  the DuckDB oracle.
 - LSH banding turns the quadratic candidate search into a groupBy on
   (band, band_hash); only same-bucket pairs are verified with exact
   Jaccard — the standard shingle->minhash->band->bucket-join pipeline.
@@ -366,24 +366,10 @@ def ngram_jaccard_pairs(
     return small_pairs.unionByName(big_pairs)
 
 
-def _md5_hash64(i: int, s: Column) -> Column:
-    """Deterministic 60-bit hash i of the minhash family — TWO lanes
-    per md5 (hex chars 1-15 and 17-31 of md5('j|'||s) for j = i//2),
-    halving the md5 work per shingle. The identical expression exists
-    verbatim in DuckDB for oracle parity
-    (('0x' || substring(md5('j|' || s), pos, 15))::BIGINT)."""
-    j, lane = divmod(i, 2)
-    pos = 1 if lane == 0 else 17
-    return F.conv(
-        F.substring(F.md5(F.concat(F.lit(f"{j}|"), s)), pos, 15), 16, 10
-    ).cast("long")
-
-
 def minhash_signatures(
     df: DataFrame, id_col: str, text_col: str = "text", n: int = 3, k: int = 32
 ) -> DataFrame:
-    """(id, sig array<long>) — k MinHash values per doc in one
-    explode + groupBy pass with k min-aggregates. Docs with no
+    """(id, sig array<long>) — k MinHash values per doc. Docs with no
     shingles get an empty signature."""
     sh = with_shingles(df, id_col, text_col, n)
     return minhash_from_shingles(sh, id_col, "shingles", k)
@@ -391,72 +377,39 @@ def minhash_signatures(
 
 def minhash_from_shingles(
     sh: DataFrame, id_col: str, shingle_col: str = "shingles", k: int = 32,
-    kernel: str = "arrow",
 ) -> DataFrame:
     """MinHash signatures from a precomputed (id, shingle set) frame —
     the shared kernel behind text minhash and audio-fingerprint
     near-dup (the shingle DOMAIN differs, the signature plan does not).
 
-    ``kernel="arrow"`` (default) computes each row's signature with
-    :func:`minhash_sig_py` in one mapInPandas pass — no explode, no
-    groupBy shuffle, and none of the 2k-lane codegen compile the JVM
-    expression tree pays on first run (measured: 5.2 s cold vs 2.9 s
-    at 5k docs; signatures bit-equal, asserted in tests and replayed
-    by the DuckDB oracles). ``kernel="jvm"`` keeps the explode ->
-    k-min-aggregate expression plan."""
-    if kernel == "arrow":
-        id_type = dict(sh.dtypes)[id_col]
+    Each row's signature is :func:`minhash_sig_py` over its shingles,
+    in one mapInPandas pass: no explode, no groupBy shuffle. Lane i is
+    min over shingles s of the 60-bit integer in hex chars 1-15
+    (i even) or 17-31 (i odd) of md5('{i // 2}|' || s), the family the
+    DuckDB oracles replay as
+    min(('0x' || substring(md5(concat('j|', shingle)), pos, 15))::BIGINT).
+    Rows with a NULL or empty shingle set get an empty signature."""
+    id_type = dict(sh.dtypes)[id_col]
 
-        def work(it):
-            for pdf in it:
-                yield pd.DataFrame({
-                    id_col: pdf[id_col],
-                    "sig": [minhash_sig_py(list(s) if s is not None else [], k)
-                            for s in pdf[shingle_col]],
-                })
+    def work(it):
+        for pdf in it:
+            yield pd.DataFrame({
+                id_col: pdf[id_col],
+                "sig": [minhash_sig_py(list(s) if s is not None else [], k)
+                        for s in pdf[shingle_col]],
+            })
 
-        return sh.select(id_col, shingle_col).mapInPandas(
-            work, schema=f"{id_col} {id_type}, sig array<long>")
-    exploded = sh.select(F.col(id_col), F.explode(shingle_col).alias("__shingle"))
-    # materialize each md5 ONCE per (shingle, j) in an explicit
-    # projection — the two 60-bit lanes are then substring/conv over
-    # the shared digest (codegen does not reliably share the md5
-    # subexpression across separate aggregate expressions)
-    n_md5 = (k + 1) // 2
-    hashed = exploded.select(
-        F.col(id_col),
-        *[
-            F.md5(F.concat(F.lit(f"{j}|"), F.col("__shingle"))).alias(f"__m{j}")
-            for j in range(n_md5)
-        ],
-    )
-    aggs = [
-        F.min(
-            F.conv(
-                F.substring(F.col(f"__m{i // 2}"), 1 if i % 2 == 0 else 17, 15), 16, 10
-            ).cast("long")
-        ).alias(f"h{i}")
-        for i in range(k)
-    ]
-    sig = hashed.groupBy(id_col).agg(*aggs).select(
-        F.col(id_col), F.array(*[F.col(f"h{i}") for i in range(k)]).alias("sig")
-    )
-    # keep empty-shingle docs (left join back) with empty signatures
-    return sh.select(id_col).join(sig, on=id_col, how="left").select(
-        F.col(id_col),
-        F.coalesce(F.col("sig"), F.array().cast("array<long>")).alias("sig"),
-    )
+    return sh.select(id_col, shingle_col).mapInPandas(
+        work, schema=f"{id_col} {id_type}, sig array<long>")
 
 
 def minhash_sig_py(shingles, k: int = 32) -> list[int]:
-    """Pure-Python twin of :func:`minhash_from_shingles` for ONE
-    document's shingle-string set: identical md5 two-lane family
-    (hex chars 1-15 and 17-31 of md5('j|'||s)), identical mins —
-    asserted equal in tests. Lets an Arrow pass that already holds the
-    shingles in Python (audio/video decode kernels) emit the signature
-    as a per-row column, removing the explode -> groupBy(k min-aggs)
-    shuffle from those pipelines. Empty sets yield an empty signature,
-    matching the frame kernel's left-join contract."""
+    """MinHash signature of ONE document's shingle-string set: the
+    md5 two-lane family (hex chars 1-15 and 17-31 of md5('j|'||s)),
+    min per lane. The repo's single MinHash implementation — the frame
+    kernel (:func:`minhash_from_shingles`), the audio/video decode
+    kernels and the streaming near-dup stage all call it. Empty sets
+    yield an empty signature."""
     import hashlib
 
     if not shingles:
@@ -475,6 +428,19 @@ def minhash_sig_py(shingles, k: int = 32) -> list[int]:
                 if mins[i] is None or v < mins[i]:
                     mins[i] = v
     return mins
+
+
+def band_keys(sig, bands: int, rows: int) -> list[str]:
+    """LSH band-bucket keys of one signature, bit-equal to
+    :func:`lsh_candidate_pairs`'s
+    md5(concat_ws(',', slice(sig, b*rows+1, rows))) per band b."""
+    import hashlib
+
+    return [
+        hashlib.md5(",".join(
+            str(int(x)) for x in sig[b * rows:(b + 1) * rows]).encode()).hexdigest()
+        for b in range(bands)
+    ]
 
 
 def lsh_candidate_pairs(sig_df: DataFrame, id_col: str, bands: int = 8, rows: int = 4) -> DataFrame:
@@ -506,34 +472,16 @@ def lsh_candidate_pairs(sig_df: DataFrame, id_col: str, bands: int = 8, rows: in
 
 def lsh_candidate_pairs_driver(recs, bands: int, rows: int) -> set:
     """Driver twin of :func:`lsh_candidate_pairs` over collected
-    ``(id, sig)`` rows: same md5-of-comma-joined-slice band buckets
-    (the signature longs come from the JVM, only the banding md5 is
-    recomputed — an exact string/int operation), same ``id_a < id_b``
-    rule, same distinct set. Used by the bounded-driver near-dup fast
-    paths; bucket pair volume is the same as the distributed join's."""
-    import hashlib
-    from collections import defaultdict
-
-    buckets: dict[tuple, list] = defaultdict(list)
-    for rid, sig in recs:
-        if sig is None or len(sig) == 0:  # F.size("sig") > 0
-            continue
-        for b in range(bands):
-            seg = sig[b * rows:(b + 1) * rows]
-            bh = hashlib.md5(
-                ",".join(str(int(x)) for x in seg).encode()).hexdigest()
-            buckets[(b, bh)].append(rid)
-    pairs: set = set()
-    for g in buckets.values():
-        if len(g) < 2:
-            continue
-        for x in range(len(g)):
-            for y in range(x + 1, len(g)):
-                a, b2 = g[x], g[y]
-                if a == b2:
-                    continue
-                pairs.add((a, b2) if a < b2 else (b2, a))
-    return pairs
+    ``(id, sig)`` rows: same band buckets (:func:`band_keys`, an exact
+    string/int operation over the collected signature longs), same
+    ``id_a < id_b`` rule, same distinct set. Used by the bounded-driver
+    near-dup fast paths; bucket pair volume is the same as the
+    distributed join's."""
+    return capped_block_pairs_driver(
+        ((rid, (b, bh)) for rid, sig in recs
+         if sig is not None and len(sig)  # F.size("sig") > 0
+         for b, bh in enumerate(band_keys(sig, bands, rows))),
+        None)
 
 
 def capped_block_pairs_driver(rows_, cap: int | None) -> set:
@@ -625,7 +573,7 @@ def repeated_ngram_pairs(
     text_col: str = "text",
     n: int = 8,
     hot_cap: int = 64,
-    driver_cap: int = 20_000,
+    driver_cap: int = 1_000_000,
 ) -> DataFrame:
     """Document pairs sharing at least one EXACT n-token span — the
     substring-level exact-duplication signal (Lee et al. 2022,
@@ -650,6 +598,10 @@ def repeated_ngram_pairs(
       id_b, then one groupBy counting shared spans per pair. Candidate
       volume is bounded by sum over spans of df^2 <= hot_cap * total
       span occurrences — linear in corpus size for fixed hot_cap.
+
+    At or below ``driver_cap`` (doc, span) rows the pairing runs
+    driver-side on the collected span keys; the gate counts the rows
+    it collects, so a few very long documents cannot blow the driver.
     """
     spans = with_shingles(df, id_col, text_col, n).select(
         F.col(id_col), F.explode("shingles").alias("__g")
@@ -657,14 +609,14 @@ def repeated_ngram_pairs(
         F.col(id_col),
         F.conv(F.substring(F.md5("__g"), 1, 15), 16, 10).cast("long").alias("__h"),
     )
-    # bounded-driver fast path (documents gated by a parquet-stats
-    # count; the span keys are JVM-computed before the collect): the
+    # bounded-driver fast path (one LIMIT cap+1 probe is both the gate
+    # and the collect; the span keys are JVM-computed before it): the
     # doc-frequency cap, the inverted-index self-join and the
     # shared-span count are all exact integer set logic, grouped in
     # numpy instead of three exchanges. Above the cap the distributed
     # plan is unchanged.
-    if driver_cap and df.count() <= driver_cap:
-        pdf = spans.toPandas()
+    pdf = spans.limit(driver_cap + 1).toPandas() if driver_cap else None
+    if pdf is not None and len(pdf) <= driver_cap:
         h = pdf["__h"].to_numpy()
         ids = np.empty(len(pdf), dtype=object)
         ids[:] = list(pdf[id_col])

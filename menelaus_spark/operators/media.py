@@ -34,7 +34,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from menelaus_spark.operators.dedup import OwnedCache
+from menelaus_spark.operators.dedup import OwnedCache, band_keys
 from menelaus_spark.verdicts import local_frame
 
 # one-slot internal pins (dedup.OwnedCache semantics): repeated calls
@@ -482,23 +482,18 @@ def _video_pairs_driver(spark, recs: list, id_col: str, id_type: str,
                         bands: int, rows: int,
                         threshold: float) -> DataFrame:
     """Driver twin of the LSH candidate join for video shingles: same
-    md5-of-comma-joined-signature-slice band buckets, same
-    ``id_a < id_b`` rule; the exact intersection/size integers feed the
+    band buckets (dedup.band_keys), same ``id_a < id_b`` rule; the exact intersection/size integers feed the
     SAME JVM round/when expression over a local relation, so the
     jaccard doubles (and the threshold decision) are computed by the
     identical Spark code path — equality is by construction, not by a
     Python float twin."""
-    import hashlib
     from collections import defaultdict
 
     buckets: dict[tuple, list[int]] = defaultdict(list)
     for idx, (vid, sh, sig) in enumerate(recs):
         if not sig:  # F.size("sig") > 0
             continue
-        for b in range(bands):
-            seg = sig[b * rows:(b + 1) * rows]
-            bh = hashlib.md5(
-                ",".join(str(int(x)) for x in seg).encode()).hexdigest()
+        for b, bh in enumerate(band_keys(sig, bands, rows)):
             buckets[(b, bh)].append(idx)
     cand: dict[tuple, tuple[int, int]] = {}
     for g in buckets.values():

@@ -18,7 +18,7 @@ Likewise the count-min sketch bounds frequency estimation to a fixed
 ``sum``.
 
 Everything is deterministic md5-lane hashing (the repo-wide shared
-hash family, operators/dedup.py:_md5_hash64) so the identical
+hash family, operators/dedup.py:minhash_sig_py) so the identical
 computation replays verbatim in the DuckDB oracle.  No UDFs anywhere
 — pure JVM expressions inside whole-stage codegen.
 

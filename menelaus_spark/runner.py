@@ -14,8 +14,11 @@ Per partition (one "batch" in reference terms):
   partition initializes every reference; later partitions update the
   sequential state machines.
 
-All heavy passes are distributed; only O(bins + leaves + categories)
-summaries reach the driver. Completed partitions are recorded in the
+Statistics for every unvisited partition come from a constant number
+of global passes grouped by partition key; the sequential drift
+decisions then run driver-side over the collected summaries. Only
+O(bins + leaves + categories) summaries reach the driver above the
+bounded-driver caps. Completed partitions are recorded in the
 CheckpointManifest (lineage fingerprint, metrics, serialized state,
 verdict rows); a resumed run replays those verdicts byte-identically
 and continues from the first unvisited partition.
@@ -26,7 +29,6 @@ from __future__ import annotations
 import time
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -273,7 +275,6 @@ class ValidationSuite:
         # KS / PSI reference summaries (set on first partition)
         self._ks_ref: dict | None = None  # col -> {"lo","hi","counts","n"}
         self._psi_ref: dict | None = None  # {"freqs": {cat: n}, "n": int}
-        self._feats_cache = None
 
     # ---------------------------------------------------- check runners
 
@@ -315,8 +316,8 @@ class ValidationSuite:
 
     def _quality_conds(self) -> list:
         """(check_name, row predicate over the feats frame, value expr)
-        in fixed emission order — shared by both execution paths so
-        verdict tables stay byte-identical. Memoized per instance: the
+        in fixed emission order, so verdict tables stay byte-identical
+        across runs and resumes. Memoized per instance: the
         list depends only on the (immutable) suite config, and building
         these Column trees costs ~0.1 s of py4j round-trips per call —
         the old per-partition rebuild was ~1 s of pure driver chatter
@@ -411,11 +412,11 @@ class ValidationSuite:
 
     def _quality_counts_by_part(self, feats: DataFrame, pks: list[str]) -> dict:
         """Violation counts for EVERY quality check x partition in ONE
-        aggregation over the cached feats frame (keeps the vectorized
-        path's job count O(1) in the partition count)."""
+        aggregation over the cached feats frame (keeps the suite's job
+        count O(1) in the partition count)."""
         conds = self._quality_conds()
         if not conds:
-            return {}
+            return {pk: [] for pk in pks}
         rows = feats.groupBy(self.partition_col).agg(*[
             F.sum(cond.cast("long")).alias(f"__q{i}")
             for i, (_, cond, _) in enumerate(conds)
@@ -425,27 +426,21 @@ class ValidationSuite:
                for r in rows}
         return {pk: out.get(pk, [0] * len(conds)) for pk in pks}
 
-    def _quality_verdicts(self, pk: str, feats_pk: DataFrame | None, n_rows: int,
-                          precounts: list[int] | None = None):
-        """Per-clip audio-quality + payload-size verdicts from the
-        decode-pass metrics: ONE tiny aggregation over the cached
-        (key, f*, q*) frame (or the precollected grouped counts);
-        violation rows only materialized on failure."""
-        conds = self._quality_conds()
-        if not conds:
-            return [], []
-        if precounts is None:
-            row = feats_pk.agg(*[
-                F.sum(cond.cast("long")).alias(f"__q{i}")
-                for i, (_, cond, _) in enumerate(conds)
-            ]).collect()[0]
-            precounts = [int(row[f"__q{i}"] or 0) for i in range(len(conds))]
+    def _quality_verdicts(self, pk: str, feats: DataFrame, n_rows: int,
+                          counts: list[int]):
+        """Per-clip audio-quality + payload-size verdicts for one
+        partition from its collected violation counts
+        (_quality_counts_by_part); violation rows are only
+        materialized on failure, from the cached feats frame."""
         verdicts, violations = [], []
-        for i, (name, cond, value) in enumerate(conds):
-            n_bad = precounts[i]
+        feats_pk = None
+        for (name, cond, value), n_bad in zip(self._quality_conds(), counts):
             verdicts.append(Verdict(pk, name, PASS if n_bad == 0 else FAIL,
                                     statistic=float(n_bad), threshold=0.0, n_rows=n_rows))
             if n_bad:
+                if feats_pk is None:
+                    feats_pk = feats.filter(
+                        F.col(self.partition_col).cast("string") == pk)
                 violations.append(
                     feats_pk.filter(cond)
                     .select(F.col(self.key_col).alias("row_key"),
@@ -594,62 +589,6 @@ class ValidationSuite:
                     .withColumn("reason", F.lit("referential:transcript"))
                 )
         return verdicts, violations
-
-    def _ks_psi_ranges(self, ref_stats: dict) -> dict:
-        """Bin ranges for the KS histograms: the stored reference
-        ranges, or (fresh run) the first partition's min/max from the
-        constraint pass."""
-        if not self.ks_cols:
-            return {}
-        if self._ks_ref:
-            return {c: (self._ks_ref[c]["lo"], self._ks_ref[c]["hi"]) for c in self.ks_cols}
-        return {c: (ref_stats[f"__mm_lo_{c}"], ref_stats[f"__mm_hi_{c}"]) for c in self.ks_cols}
-
-    def _ks_psi_collect(self, df: DataFrame, ranges: dict, by_part: bool = False) -> dict:
-        """KS histograms (all columns) + PSI category frequencies in
-        ONE exploded salted aggregation pass — optionally grouped by
-        partition key, so a single pass covers EVERY partition
-        (vectorized-over-partitions plan). Returns
-        {pk (or None): (mat {col: counts}, freqs {cat: n})}."""
-        structs = []
-        for c in self.ks_cols:
-            # clamp test values into the reference bin range so the
-            # cumulative comparison stays aligned (mass outside the
-            # range piles into the edge bins -> CDF gap registers)
-            col = F.least(
-                F.greatest(F.col(c).cast("double"), F.lit(float(ranges[c][0]))),
-                F.lit(float(ranges[c][1])),
-            )
-            structs.append(F.struct(
-                F.lit(f"ks:{c}").alias("kind"),
-                H.bin_index_col(col, ranges[c][0], ranges[c][1], KS_BINS)
-                .cast("string").alias("key"),
-            ))
-        if self.psi_col:
-            structs.append(F.struct(
-                F.lit("psi").alias("kind"),
-                F.col(self.psi_col).cast("string").alias("key"),
-            ))
-        keys = ["kind", "key"]
-        sel = [F.explode(F.array(*structs)).alias("kk")]
-        if by_part:
-            sel.insert(0, F.col(self.partition_col).cast("string").alias("__pk"))
-            keys = ["__pk", "kind", "key"]
-        exploded = (
-            df.select(*sel)
-            .select(*(["__pk"] if by_part else []), "kk.kind", "kk.key")
-            .filter(F.col("key").isNotNull())
-        )
-        rows = H.salted_count(exploded, keys).collect()
-        out: dict = {}
-        for r in rows:
-            pk = r["__pk"] if by_part else None
-            mat, freqs = out.setdefault(pk, ({c: np.zeros(KS_BINS) for c in self.ks_cols}, {}))
-            if r["kind"] == "psi":
-                freqs[str(r["key"])] = int(r["count"])
-            else:
-                mat[r["kind"][3:]][int(r["key"])] = float(r["count"])
-        return out
 
     @staticmethod
     def _bin_blame(ref_counts, test_counts, lo: float, hi: float,
@@ -802,97 +741,6 @@ class ValidationSuite:
                     n_rows=n_rows,
                     details={"n_categories": int((cnts > 0).sum())}))
         return verdicts
-
-    def _drift_verdicts(self, pk: str, part_df: DataFrame, n_rows: int,
-                        is_ref: bool, stats: dict):
-        verdicts, violations = [], []
-
-        if self.hdm is not None:
-            hdm_df = part_df.select(
-                *[F.col(c).cast("double").alias(c) for c in self.hdm_cols]
-            ).coalesce(self.hdm_input_partitions)
-            if is_ref:
-                self.hdm.set_reference(hdm_df, batch_id=pk)
-                verdicts.append(Verdict(pk, "hdddm", PASS, n_rows=n_rows,
-                                        details={"role": "reference"}))
-            else:
-                mm = {c: (stats[f"__mm_lo_{c}"], stats[f"__mm_hi_{c}"]) for c in self.hdm_cols}
-                state = self.hdm.update(hdm_df, batch_id=pk, precomputed=(n_rows, mm))
-                det = {}
-                if state == DRIFT and self.hdm.feature_info:
-                    det["max_drift_feature"] = self.hdm.feature_info["max_drift_feature"]
-                verdicts.append(Verdict(
-                    pk, "hdddm", DRIFT if state == DRIFT else PASS,
-                    statistic=self.hdm.epsilon[-1] if self.hdm.epsilon else None,
-                    threshold=self.hdm.beta, n_rows=n_rows, details=det,
-                ))
-
-        feats = None
-        if self.kdq is not None or self._quality_active():
-            feats = audio.features_df(
-                part_df, key_col=self.key_col,
-                carry_cols=self._feats_carry_cols(with_part=False),
-                quality=self.quality_rules is not None,
-                byte_len=self._payload_in_decode(),
-                header=self.meta_rules is not None,
-            ).persist()
-            self._feats_cache = feats
-        if self.kdq is not None:
-            clean = feats.filter(_f0_clean()).select(
-                *[f"f{i}" for i in range(audio.N_FEATURES)]
-            )
-            if is_ref:
-                self.kdq.set_reference(clean)
-                n_clean = int(self.kdq._ref_counts.sum())
-                verdicts.append(Verdict(pk, "kdq_tree", PASS, n_rows=n_rows,
-                                        details={"role": "reference"}))
-            else:
-                state = self.kdq.update(clean)
-                n_clean = int(self.kdq._test_counts.sum())
-                verdicts.append(Verdict(pk, "kdq_tree", DRIFT if state == DRIFT else PASS,
-                                        statistic=self.kdq.test_dist,
-                                        threshold=self.kdq._critical_dist, n_rows=n_rows))
-            # decode integrity comes free from the leaf-count totals:
-            # undecodable clips produce NaN feature rows, filtered out
-            # of `clean`, so n_nan = n_rows - sum(leaf counts). The
-            # violation rows (clip ids) are only materialized on failure.
-            n_nan = n_rows - n_clean
-            verdicts.append(Verdict(pk, "decode_integrity", PASS if n_nan == 0 else FAIL,
-                                    statistic=float(n_nan), threshold=0.0, n_rows=n_rows))
-            if n_nan:
-                violations.append(
-                    feats.filter(_f0_bad())
-                    .select(F.col(self.key_col).alias("row_key"))
-                    .withColumn("value", F.lit(None).cast("string"))
-                    .withColumn("reason", F.lit("decode_integrity"))
-                )
-        elif feats is not None:
-            # quality rules without kdq: the decode pass ran anyway, so
-            # undecodable clips (excluded from every quality condition
-            # by _f0_clean) must still get their own verdict — derived
-            # from a direct count of bad rows, no leaf totals needed
-            n_nan = int(feats.filter(_f0_bad()).count())
-            verdicts.append(Verdict(pk, "decode_integrity", PASS if n_nan == 0 else FAIL,
-                                    statistic=float(n_nan), threshold=0.0, n_rows=n_rows))
-            if n_nan:
-                violations.append(
-                    feats.filter(_f0_bad())
-                    .select(F.col(self.key_col).alias("row_key"))
-                    .withColumn("value", F.lit(None).cast("string"))
-                    .withColumn("reason", F.lit("decode_integrity"))
-                )
-
-        if self._quality_active():
-            qv, qviol = self._quality_verdicts(pk, feats, n_rows)
-            verdicts.extend(qv)
-            violations.extend(qviol)
-
-        if self.ks_cols or self.psi_col:
-            ranges = self._ks_psi_ranges(stats)
-            collected = self._ks_psi_collect(part_df, ranges, by_part=False)
-            mat, freqs = collected.get(None, ({c: np.zeros(KS_BINS) for c in self.ks_cols}, {}))
-            verdicts.extend(self._ks_psi_decide(pk, n_rows, is_ref, ranges, mat, freqs))
-        return verdicts, violations
 
     # ------------------------------------------------------ state (re)store
 
@@ -1298,7 +1146,7 @@ class ValidationSuite:
                                n_rows=got[0], details=det).as_row())
         return out
 
-    def run(self, df: DataFrame, vectorized: bool = True,
+    def run(self, df: DataFrame,
             verify_lineage: bool = False) -> tuple[DataFrame, DataFrame]:
         """Validate every partition not yet in the manifest; return
         (verdicts, violations) DataFrames covering ALL partitions
@@ -1310,17 +1158,15 @@ class ValidationSuite:
         the guard against trusting replayed verdicts over data that
         changed underneath the checkpoint.
 
-        ``vectorized=True`` (default, the scale plan): per-partition
-        statistics for ALL unvisited partitions come from a constant
-        number of global passes — one groupBy(partition) constraint
-        aggregation, ONE fused (partition, kind, key) pass carrying the
-        KS histograms, PSI frequencies AND HDM distinct-value
-        summaries, and ONE decode+leaf-assign pandas pass — then the
-        sequential drift decisions run driver-side on the collected
-        summaries. Job count is O(1) in the partition count (plus one
-        kdq recount pass per drift event). ``vectorized=False`` runs
-        the same checks partition-by-partition; both paths produce
-        byte-identical verdict tables.
+        Per-partition statistics for ALL unvisited partitions come
+        from a constant number of global passes — one
+        groupBy(partition) constraint aggregation, ONE fused
+        (partition, kind, key) pass carrying the KS histograms, PSI
+        frequencies AND HDM distinct-value summaries, and ONE
+        decode+leaf-assign pandas pass — then the sequential drift
+        decisions run driver-side on the collected summaries. Job
+        count is O(1) in the partition count (plus one kdq recount
+        pass per drift event).
         """
         # sort driver-side: an orderBy here would add a range-partition
         # exchange plus its sampling job to collect O(partitions) rows.
@@ -1339,10 +1185,7 @@ class ValidationSuite:
             self._restore(df, self.manifest.last_states())
 
         if todo:
-            if vectorized:
-                self._run_vectorized(df, todo)
-            else:
-                self._run_sequential(df, todo)
+            self._run_vectorized(df, todo)
 
         verdict_rows = self.manifest.replayed_verdicts()
         if verify_lineage and done:
@@ -1369,34 +1212,6 @@ class ValidationSuite:
         else:
             violations_df = empty_violations(self.spark)
         return verdicts, violations_df
-
-    def _run_sequential(self, df: DataFrame, todo: list[str]) -> None:
-        schema_result = self._schema_result(df)
-        for pk in todo:
-            t0 = time.time()
-            # NO persist of the raw partition: the bytes column makes
-            # cached rows expensive to re-serialize, and at 10^12 rows
-            # caching raw partitions is impossible anyway. Each check
-            # re-scans parquet with column + partition pruning — only
-            # the feature pass ever reads the binary column, and its
-            # small (clip_id, f0..f11) output IS cached.
-            part_df = df.filter(F.col(self.partition_col) == self._pk_value(df, pk))
-            stats = part_df.agg(*self._constraint_aggs()).collect()[0].asDict()
-            n_rows = int(stats["__n"])
-            fingerprint = {"n": n_rows, "key_hash": int(stats["__key_hash"] or 0)}
-            is_ref = not self.manifest.records  # first partition ever = reference
-            verdicts, violations = self._constraint_verdicts(pk, part_df, stats,
-                                                             schema_result)
-            d_verdicts, d_violations = self._drift_verdicts(pk, part_df, n_rows, is_ref, stats)
-            if self.kdq is not None and (is_ref or self.kdq.drift_state == DRIFT):
-                self._kdq_ref_pk = pk
-            verdicts.extend(d_verdicts)
-            violations.extend(d_violations)
-            self._finish_partition(pk, n_rows, fingerprint, verdicts, violations, t0,
-                                   metrics=self._metrics_from_stats(stats))
-            if self._feats_cache is not None:
-                self._feats_cache.unpersist()
-                self._feats_cache = None
 
     # ---------------------------------------- vectorized-over-partitions
 
@@ -1504,6 +1319,9 @@ class ValidationSuite:
                 return kspsi_by, hdm_sum_by
         structs = []
         for c in self.ks_cols:
+            # clamp test values into the reference bin range so the
+            # cumulative comparison stays aligned (mass outside the
+            # range piles into the edge bins -> CDF gap registers)
             col = F.least(
                 F.greatest(F.col(c).cast("double"), F.lit(float(ranges[c][0]))),
                 F.lit(float(ranges[c][1])),
@@ -1648,8 +1466,10 @@ class ValidationSuite:
             ]).collect()[0].asDict()
             ranges = {c: (mm[f"__mm_lo_{c}"], mm[f"__mm_hi_{c}"])
                       for c in self.ks_cols}
-        elif run_summary and (self.ks_cols or self.psi_col):
-            ranges = self._ks_psi_ranges({})
+        elif run_summary and self.ks_cols:
+            # resumed run: bin against the stored reference ranges
+            ranges = {c: (self._ks_ref[c]["lo"], self._ks_ref[c]["hi"])
+                      for c in self.ks_cols}
 
         feats = None
         feats_future = None
@@ -1662,7 +1482,6 @@ class ValidationSuite:
                 byte_len=self._payload_in_decode(),
                 header=self.meta_rules is not None,
             ).persist()
-            self._feats_cache = feats
             feats_future = pool.submit(feats.count)
 
         # global pass 1: all constraint stats + min/max, one shuffle —
@@ -1706,8 +1525,8 @@ class ValidationSuite:
             clean = feats.filter(_f0_clean())
             if self.kdq._tree is None:
                 # small-table fast path: when EVERY partition fits
-                # under the build-sample cap (so the sequential path's
-                # "sample" is the full clean partition — no seeded
+                # under the build-sample cap (so the distributed
+                # chain's "sample" is the full clean partition — no seeded
                 # sampling whose row set depends on physical
                 # partitioning) and the total is driver-collectable,
                 # ONE Arrow collect of the clean feature matrix
@@ -1847,32 +1666,22 @@ class ValidationSuite:
                         )
                     self.kdq.install_reference(tree, ref_counts)
                 if is_ref and self._kdq_fresh_ref and pk == self._kdq_ref_pk:
-                    n_clean = int(counts_by[pk].sum())
                     verdicts.append(Verdict(pk, "kdq_tree", PASS, n_rows=n_rows,
                                             details={"role": "reference"}))
                 else:
                     state = self.kdq.observe_counts(counts_by[pk])
-                    n_clean = int(counts_by[pk].sum())
                     if state == DRIFT:
                         self._kdq_ref_pk = pk
                     verdicts.append(Verdict(pk, "kdq_tree", DRIFT if state == DRIFT else PASS,
                                             statistic=self.kdq.test_dist,
                                             threshold=self.kdq._critical_dist, n_rows=n_rows))
-                n_nan = n_rows - n_clean
-                verdicts.append(Verdict(pk, "decode_integrity", PASS if n_nan == 0 else FAIL,
-                                        statistic=float(n_nan), threshold=0.0, n_rows=n_rows))
-                if n_nan:
-                    violations.append(
-                        feats.filter(
-                            (F.col(self.partition_col).cast("string") == pk)
-                            & _f0_bad()
-                        )
-                        .select(F.col(self.key_col).alias("row_key"))
-                        .withColumn("value", F.lit(None).cast("string"))
-                        .withColumn("reason", F.lit("decode_integrity"))
-                    )
+                # decode integrity comes free from the leaf-count totals:
+                # undecodable clips produce NaN feature rows, which no
+                # leaf counts
+                n_nan = n_rows - int(counts_by[pk].sum())
             elif feats is not None:
                 n_nan = nan_by[pk]
+            if feats is not None:
                 verdicts.append(Verdict(pk, "decode_integrity", PASS if n_nan == 0 else FAIL,
                                         statistic=float(n_nan), threshold=0.0, n_rows=n_rows))
                 if n_nan:
@@ -1887,16 +1696,7 @@ class ValidationSuite:
                     )
 
             if self._quality_active():
-                # the partition's feats frame only feeds violation rows,
-                # so it is built only when some count is non-zero
-                precounts = qcounts_by.get(pk)
-                qv, qviol = self._quality_verdicts(
-                    pk,
-                    feats.filter(F.col(self.partition_col).cast("string") == pk)
-                    if precounts is None or any(precounts) else None,
-                    n_rows,
-                    precounts=precounts,
-                )
+                qv, qviol = self._quality_verdicts(pk, feats, n_rows, qcounts_by[pk])
                 verdicts.extend(qv)
                 violations.extend(qviol)
 
@@ -1909,6 +1709,5 @@ class ValidationSuite:
             self._finish_partition(pk, n_rows, fingerprint, verdicts, violations, t_pk,
                                    metrics=self._metrics_from_stats(stats))
 
-        if self._feats_cache is not None:
-            self._feats_cache.unpersist()
-            self._feats_cache = None
+        if feats is not None:
+            feats.unpersist()

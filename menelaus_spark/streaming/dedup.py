@@ -3,10 +3,10 @@
 The batch audio near-dup path (operators/audio_dedup.py) answers "which
 clips in this corpus are copies"; this module answers it INCREMENTALLY
 as clips arrive: each micro-batch's clips are fingerprinted, banded
-with EXACTLY the batch pipeline's MinHash/LSH family (two 60-bit md5
-lanes, band hash = md5 of the comma-joined row signatures — bit-equal
-to `dedup.minhash_from_shingles` + `lsh_candidate_pairs`, asserted by
-the differential test), and checked against every clip previously seen
+with the batch pipeline's own MinHash/LSH functions
+(`dedup.minhash_sig_py` signatures and `dedup.band_keys` bucket keys,
+the latter asserted bit-equal to `lsh_candidate_pairs`' JVM banding),
+and checked against every clip previously seen
 in the same LSH bucket via `applyInPandasWithState` — the bucket
 membership IS the streaming state, so no growing-corpus re-scan ever
 happens.
@@ -28,7 +28,6 @@ order, so output is deterministic for a given micro-batch split.
 
 from __future__ import annotations
 
-import hashlib
 import math
 import pickle
 
@@ -38,42 +37,6 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 PAIR_SCHEMA = "id_a string, id_b string, jaccard double, band int"
 STATE_SCHEMA = "members binary"
-
-
-def _md5_lanes(j: int, shingle: str) -> tuple[int, int]:
-    """The batch pipeline's two-lane md5 family, bit-exact:
-    conv(substring(md5('{j}|'||s), 1, 15), 16, 10) and the lane at
-    chars 17..31 (dedup._md5_hash64 / minhash_from_shingles)."""
-    h = hashlib.md5(f"{j}|{shingle}".encode()).hexdigest()
-    return int(h[0:15], 16), int(h[16:31], 16)
-
-
-def minhash_signature(shingles, k: int = 16) -> list[int]:
-    """k-lane MinHash signature of a shingle set — numpy/driver twin of
-    `minhash_from_shingles` (empty set -> empty signature)."""
-    if not len(shingles):
-        return []
-    mins = [None] * k
-    for s in shingles:
-        for j in range((k + 1) // 2):
-            lo, hi = _md5_lanes(j, s)
-            i = 2 * j
-            if mins[i] is None or lo < mins[i]:
-                mins[i] = lo
-            if i + 1 < k and (mins[i + 1] is None or hi < mins[i + 1]):
-                mins[i + 1] = hi
-    return [int(v) for v in mins]
-
-
-def band_hashes(sig: list[int], bands: int = 8, rows: int = 2) -> list[str]:
-    """Band-bucket keys, bit-equal to `lsh_candidate_pairs`'s
-    md5(concat_ws(',', slice(sig, b*rows+1, rows)))."""
-    return [
-        hashlib.md5(
-            ",".join(str(v) for v in sig[b * rows: (b + 1) * rows]).encode()
-        ).hexdigest()
-        for b in range(bands)
-    ]
 
 
 def fingerprint_banded_stream(
@@ -91,6 +54,7 @@ def fingerprint_banded_stream(
     per decodable clip: (key, band, bhash, shingles)."""
     from menelaus_spark.audio import decode_batch, fingerprint_shingles
     from menelaus_spark.operators.audio_dedup import shingle_hex
+    from menelaus_spark.operators.dedup import band_keys, minhash_sig_py
 
     schema = f"{key_col} string, band int, bhash string, shingles array<string>"
 
@@ -109,8 +73,8 @@ def fingerprint_banded_stream(
                     sh = []
                 if not sh:
                     continue
-                sig = minhash_signature(sh, k)
-                for b, bh in enumerate(band_hashes(sig, bands, rows)):
+                sig = minhash_sig_py(sh, k)
+                for b, bh in enumerate(band_keys(sig, bands, rows)):
                     keys.append(key)
                     bnds.append(b)
                     hashes.append(bh)

@@ -396,9 +396,9 @@ def test_full_codec_transcode_neardup_detected(spark):
 
 def test_decode_pass_sig_matches_frame_kernel(spark):
     """The per-row signature computed inside the decode pass
-    (dedup.minhash_sig_py) must equal the explode->groupBy frame
-    kernel's signature bit-for-bit — the r06 fusion is a plan change,
-    not a value change."""
+    (dedup.minhash_sig_py) must equal the frame kernel's signature
+    (minhash_from_shingles over the shingle column) bit-for-bit — the
+    fusion is a plan change, not a value change."""
     from menelaus_spark.operators.audio_dedup import FP_MINHASH_K
     from menelaus_spark.operators.dedup import minhash_from_shingles
 
@@ -411,14 +411,17 @@ def test_decode_pass_sig_matches_frame_kernel(spark):
         kernel = {
             r["clip_id"]: list(r["sig"])
             for r in minhash_from_shingles(sh, "clip_id", "shingles",
-                                           FP_MINHASH_K, kernel="jvm").collect()
+                                           FP_MINHASH_K).collect()
         }
         assert embedded == kernel
+        assert any(embedded.values())
     finally:
         sh.unpersist()
 
 
 def test_minhash_sig_py_matches_kernel_on_text_shingles(spark):
+    # the driver-side twin, called on collected shingle sets, must
+    # equal the frame kernel's Spark plan, empty-shingle docs included
     from menelaus_spark.operators.dedup import (
         minhash_from_shingles,
         minhash_sig_py,
@@ -434,12 +437,90 @@ def test_minhash_sig_py_matches_kernel_on_text_shingles(spark):
     sh = with_shingles(docs, "doc_id", "text", 3).persist()
     try:
         kernel = {r["doc_id"]: list(r["sig"])
-                  for r in minhash_from_shingles(sh, "doc_id", "shingles", 8,
-                                         kernel="jvm").collect()}
+                  for r in minhash_from_shingles(sh, "doc_id", "shingles",
+                                                 8).collect()}
         for r in sh.collect():
             assert minhash_sig_py(list(r["shingles"]), 8) == kernel[r["doc_id"]]
+        assert kernel[3] == []
     finally:
         sh.unpersist()
+
+
+def _duckdb_minhash(sets: dict, k: int) -> dict:
+    """Signatures recomputed in DuckDB with the md5-lane expression the
+    oracle_sql() texts use; ids with no shingles get no group, hence
+    an empty signature."""
+    import duckdb
+    import pandas as pd
+
+    flat = pd.DataFrame(
+        [(str(i), s) for i, sh in sets.items() for s in sh],
+        columns=["id", "shingle"],
+    ).astype(str)
+    mins = ", ".join(
+        f"min(('0x' || substring(md5(concat('{i // 2}|', shingle)), "
+        f"{1 if i % 2 == 0 else 17}, 15))::BIGINT) AS h{i}"
+        for i in range(k)
+    )
+    con = duckdb.connect()
+    try:
+        con.register("sh", flat)
+        rows = con.execute(f"SELECT id, {mins} FROM sh GROUP BY id").fetchall()
+    finally:
+        con.close()
+    got = {r[0]: list(r[1:]) for r in rows}
+    return {str(i): got.get(str(i), []) for i in sets}
+
+
+def test_minhash_from_shingles_matches_duckdb(spark):
+    """minhash_from_shingles must equal the md5-lane MinHash family
+    recomputed in DuckDB — the cross-engine reference the
+    minhash_documents oracle also uses — over text shingles at two
+    widths, audio fingerprint shingles, empty shingle sets and the
+    streaming stage's hex-string sets."""
+    from menelaus_spark.operators.audio_dedup import FP_MINHASH_K
+    from menelaus_spark.operators.dedup import minhash_from_shingles, with_shingles
+
+    def check(sh, id_col, k):
+        sets = {r[id_col]: list(r["shingles"] or []) for r in sh.collect()}
+        got = {str(r[id_col]): list(r["sig"]) for r in
+               minhash_from_shingles(sh, id_col, "shingles", k).collect()}
+        assert got == _duckdb_minhash(sets, k)
+        return got
+
+    docs = spark.createDataFrame(
+        [(1, "the quick brown fox jumps over the lazy dog and runs"),
+         (2, "pack my box with five dozen liquor jugs right now"),
+         (3, ""), (4, "one two"), (5, "the quick brown fox jumps over it")],
+        "doc_id long, text string",
+    )
+    text = with_shingles(docs, "doc_id", "text", 3).persist()
+    try:
+        for k in (8, 32):
+            sigs = check(text, "doc_id", k)
+            assert sigs["3"] == [] and sigs["4"] == []  # empty-shingle docs
+            assert len(sigs["1"]) == k
+    finally:
+        text.unpersist()
+
+    df = tables.audio_table(
+        spark, n_rows=40, n_parts=2, drift={}, neardup_frac=0.25, null_frac=0.1
+    )
+    audio_sh = audio_shingles(df).persist()
+    try:
+        sigs = check(audio_sh, "clip_id", FP_MINHASH_K)
+        assert any(sigs.values())
+    finally:
+        audio_sh.unpersist()
+
+    streaming = spark.createDataFrame(
+        [("a", ["00deadbeef00cafe", "0123456789abcdef", "ffffffffffffffff"]),
+         ("b", ["0123456789abcdef"]),
+         ("c", [f"{i:016x}" for i in range(40)]),
+         ("d", [])],
+        "id string, shingles array<string>",
+    )
+    check(streaming, "id", 16)
 
 
 def test_neardup_driver_fast_path_matches_distributed(spark):
@@ -474,29 +555,3 @@ def test_neardup_driver_fast_path_matches_distributed(spark):
         fast, slow = canon(fn(200_000)), canon(fn(0))
         assert fast == slow, name
         assert fast[1], name  # fixtures inject duplicates: never vacuous
-
-
-def test_minhash_arrow_kernel_matches_jvm_kernel(spark):
-    # the default Arrow signature kernel (minhash_sig_py per row, no
-    # explode/groupBy) must be bit-equal to the JVM expression plan,
-    # including empty-shingle docs, at both entry widths
-    from menelaus_spark.operators.dedup import minhash_from_shingles, with_shingles
-
-    docs = spark.createDataFrame(
-        [(1, "the quick brown fox jumps over the lazy dog and runs"),
-         (2, "pack my box with five dozen liquor jugs right now"),
-         (3, ""), (4, "one two"), (5, "the quick brown fox jumps over it")],
-        "doc_id long, text string",
-    )
-    sh = with_shingles(docs, "doc_id", "text", 3).persist()
-    try:
-        for k in (8, 32):
-            arrow = {r["doc_id"]: list(r["sig"]) for r in
-                     minhash_from_shingles(sh, "doc_id", "shingles", k).collect()}
-            jvm = {r["doc_id"]: list(r["sig"]) for r in
-                   minhash_from_shingles(sh, "doc_id", "shingles", k,
-                                         kernel="jvm").collect()}
-            assert arrow == jvm
-            assert arrow[3] == []  # empty-shingle contract
-    finally:
-        sh.unpersist()

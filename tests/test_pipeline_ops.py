@@ -564,3 +564,31 @@ def test_repeated_ngram_driver_fast_path_matches_distributed(spark):
                                             driver_cap=0))
     assert fast == slow
     assert fast[1]
+
+
+def test_repeated_ngram_driver_cap_counts_span_rows(spark):
+    # four long documents: far fewer documents than the cap but more
+    # (doc, span) rows than it. The gate must count the rows the driver
+    # path collects, so cap+1 spans stay distributed and exactly cap
+    # spans go to the driver — with the same rows either way
+    shared = " ".join(f"shared{i}" for i in range(30))
+    rows = [(d, " ".join(f"d{d}w{i}" for i in range(200)) + " " + shared)
+            for d in range(4)]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    n_spans = dedup.with_shingles(df, "doc_id", "text", 8).select(
+        F.explode("shingles")).count()
+    assert n_spans == 4 * 223
+
+    def canon(d):
+        return (d.dtypes, sorted(map(tuple, d.collect())))
+
+    def pairs(cap):
+        return dedup.repeated_ngram_pairs(df, "doc_id", "text", n=8,
+                                          driver_cap=cap)
+
+    over, at = pairs(n_spans - 1), pairs(n_spans)
+    assert not over.isLocal()
+    assert at.isLocal()
+    slow = canon(pairs(0))
+    assert canon(over) == slow and canon(at) == slow
+    assert slow[1] == [(a, b, 23) for a in range(4) for b in range(a + 1, 4)]

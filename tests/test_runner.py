@@ -251,26 +251,16 @@ def test_referential_check(spark, tmp_path):
     assert violations_df.filter(F.col("check_name") == "referential:transcript").count() > 10
 
 
-def test_vectorized_matches_sequential(spark, tmp_path, audio_df):
-    s_v = _suite(spark, tmp_path, "vec")
-    v_rows, _ = s_v.run(audio_df, vectorized=True)
-    s_s = _suite(spark, tmp_path, "seq")
-    s_rows, _ = s_s.run(audio_df, vectorized=False)
-    v = sorted(json.dumps(r.asDict(recursive=True), sort_keys=True) for r in v_rows.collect())
-    s = sorted(json.dumps(r.asDict(recursive=True), sort_keys=True) for r in s_rows.collect())
-    assert v == s
-
-
 def test_hdm_past_cap_fallback_identical(spark, tmp_path, audio_df):
     # driver_value_cap=0 makes the global summary pass refuse to carry
     # HDM values to the driver (runner falls back to HDDDM's own
     # per-batch summary jobs, which themselves spill to cluster mode);
     # verdicts must be identical to the default driver-path run
     s_cap = _suite(spark, tmp_path, "capped", hdm_params={"driver_value_cap": 0})
-    c_rows, _ = s_cap.run(audio_df, vectorized=True)
+    c_rows, _ = s_cap.run(audio_df)
     assert s_cap.hdm._ref_summary["mode"] == "cluster"  # spill branch ran
     s_def = _suite(spark, tmp_path, "uncapped")
-    d_rows, _ = s_def.run(audio_df, vectorized=True)
+    d_rows, _ = s_def.run(audio_df)
     c = sorted(json.dumps(r.asDict(recursive=True), sort_keys=True) for r in c_rows.collect())
     d = sorted(json.dumps(r.asDict(recursive=True), sort_keys=True) for r in d_rows.collect())
     assert c == d
@@ -357,16 +347,6 @@ def test_audio_depth_checks(spark, tmp_path, depth_df):
     assert int(row["details"]["value"]) > 4096  # value = payload byte length
 
 
-def test_audio_depth_vectorized_matches_sequential(spark, tmp_path, depth_df):
-    s_v = _suite(spark, tmp_path, "adepth_vec", **_AUDIO_DEPTH_KW)
-    v_rows, _ = s_v.run(depth_df, vectorized=True)
-    s_s = _suite(spark, tmp_path, "adepth_seq", **_AUDIO_DEPTH_KW)
-    s_rows, _ = s_s.run(depth_df, vectorized=False)
-    v = sorted(json.dumps(r.asDict(recursive=True), sort_keys=True) for r in v_rows.collect())
-    s = sorted(json.dumps(r.asDict(recursive=True), sort_keys=True) for r in s_rows.collect())
-    assert v == s
-
-
 def test_payload_fallback_without_decode_pass(spark, tmp_path, depth_df):
     # no kdq features, no quality rules -> length(bytes) rides the
     # fused constraint aggregation instead of the decode pass, with
@@ -393,29 +373,24 @@ def test_decode_failure_rows_flow_through_suite(spark, tmp_path):
     boundary maps pandas NaN to null) — regression test for the
     null-robust _f0_clean/_f0_bad predicates: a NULL payload in the
     REFERENCE partition must not crash the kdq tree build, and
-    undecodable clips must fail decode_integrity with violation rows,
-    identically in both execution paths."""
+    undecodable clips must fail decode_integrity with violation rows."""
     pdf = tables.audio_table(spark, n_rows=200, n_parts=2, drift={}).toPandas()
     pdf.loc[0, "bytes"] = None                    # NULL payload, ref partition
     idx = pdf[pdf["part"] == 1].index[:5]
     pdf.loc[idx, "bytes"] = b"corrupt-not-a-wav"  # undecodable, partition 1
     df = spark.createDataFrame(pdf)
 
-    results = {}
-    for mode, vec in [("vec", True), ("seq", False)]:
-        suite = _suite(spark, tmp_path, f"decfail_{mode}",
-                       quality_rules={"clip_rate_max": 0.05}, payload_tol=0.02)
-        v, viol = suite.run(df, vectorized=vec)
-        r = {(x["partition_key"], x["check_name"]): x for x in v.collect()}
-        results[mode] = (
-            r[("0", "decode_integrity")]["state"],
-            r[("0", "decode_integrity")]["statistic"],
-            r[("1", "decode_integrity")]["statistic"],
-            r[("1", "payload_size")]["statistic"],
-            viol.filter(F.col("check_name") == "decode_integrity").count(),
-        )
-    assert results["vec"] == results["seq"]
-    assert results["vec"] == ("fail", 1.0, 5.0, 5.0, 6)
+    suite = _suite(spark, tmp_path, "decfail",
+                   quality_rules={"clip_rate_max": 0.05}, payload_tol=0.02)
+    v, viol = suite.run(df)
+    r = {(x["partition_key"], x["check_name"]): x for x in v.collect()}
+    assert (
+        r[("0", "decode_integrity")]["state"],
+        r[("0", "decode_integrity")]["statistic"],
+        r[("1", "decode_integrity")]["statistic"],
+        r[("1", "payload_size")]["statistic"],
+        viol.filter(F.col("check_name") == "decode_integrity").count(),
+    ) == ("fail", 1.0, 5.0, 5.0, 6)
 
 
 def test_decode_integrity_without_kdq(spark, tmp_path):
@@ -428,21 +403,17 @@ def test_decode_integrity_without_kdq(spark, tmp_path):
     pdf.loc[idx, "bytes"] = b"corrupt-not-a-wav"
     df = spark.createDataFrame(pdf)
 
-    results = {}
-    for mode, vec in [("vec", True), ("seq", False)]:
-        suite = _suite(spark, tmp_path, f"nokdq_{mode}", kdq_features=False,
-                       quality_rules={"clip_rate_max": 0.05})
-        assert suite.kdq is None and suite._quality_active()
-        v, viol = suite.run(df, vectorized=vec)
-        r = {(x["partition_key"], x["check_name"]): x for x in v.collect()}
-        results[mode] = (
-            r[("0", "decode_integrity")]["state"],
-            r[("1", "decode_integrity")]["state"],
-            r[("1", "decode_integrity")]["statistic"],
-            viol.filter(F.col("check_name") == "decode_integrity").count(),
-        )
-    assert results["vec"] == results["seq"]
-    assert results["vec"] == ("pass", "fail", 4.0, 4)
+    suite = _suite(spark, tmp_path, "nokdq", kdq_features=False,
+                   quality_rules={"clip_rate_max": 0.05})
+    assert suite.kdq is None and suite._quality_active()
+    v, viol = suite.run(df)
+    r = {(x["partition_key"], x["check_name"]): x for x in v.collect()}
+    assert (
+        r[("0", "decode_integrity")]["state"],
+        r[("1", "decode_integrity")]["state"],
+        r[("1", "decode_integrity")]["statistic"],
+        viol.filter(F.col("check_name") == "decode_integrity").count(),
+    ) == ("pass", "fail", 4.0, 4)
 
 
 def test_payload_codec_gate(spark, tmp_path):
@@ -691,18 +662,6 @@ def test_metadata_consistency_check(spark, tmp_path, metalies_df):
     assert bool((tag_lie & ~sr_lie & ~dur_lie).any())
 
 
-def test_metadata_vectorized_matches_sequential(spark, tmp_path, metalies_df):
-    v_rows, _ = _meta_suite(spark, tmp_path, "meta_vec").run(
-        metalies_df, vectorized=True)
-    s_rows, _ = _meta_suite(spark, tmp_path, "meta_seq").run(
-        metalies_df, vectorized=False)
-    v = sorted(json.dumps(r.asDict(recursive=True), sort_keys=True)
-               for r in v_rows.collect())
-    s = sorted(json.dumps(r.asDict(recursive=True), sort_keys=True)
-               for r in s_rows.collect())
-    assert v == s
-
-
 def test_resume_byte_identical_codec_mixed_corrupt(spark, tmp_path):
     # resume byte-identity on the HARD input: three physical codecs AND
     # a damaged partition — the kill/resume path must reproduce the
@@ -905,47 +864,82 @@ def test_uniqueness_sketch_sidecar_invalidated_by_changed_partition(spark, tmp_p
     df.unpersist()
 
 
-def test_kdq_driver_fast_path_matches_distributed(spark, tmp_path, audio_df):
-    """The kdq small-table fast path (one Arrow collect + driver-side
-    tree builds / leaf counts) must reproduce the distributed chain's
-    verdict table byte-for-byte, including the drift-event rebuild
-    sequence on the drifted fixture."""
+def _manifest_rows(suite):
+    return [json.dumps([r["verdicts"], r["n_violations"]], sort_keys=True)
+            for r in suite.manifest.records]
+
+
+def _check_kdq_fast_path(spark, tmp_path, df, make):
     import menelaus_spark.runner as R
 
-    s1 = _suite(spark, tmp_path, "spec")
-    s1.run(audio_df)
-    assert s1._kdq_groups is not None  # fast path actually engaged
-    rows1 = [json.dumps(r["verdicts"], sort_keys=True) for r in s1.manifest.records]
+    s1 = make(spark, tmp_path, "spec")
+    s1.run(df)
+    # fast path actually engaged wherever kdq runs
+    assert (s1._kdq_groups is not None) == (s1.kdq is not None)
+    rows1 = _manifest_rows(s1)
 
     cap = R.KDQ_DRIVER_ROW_CAP
     R.KDQ_DRIVER_ROW_CAP = 0  # force the distributed chain
     try:
-        s2 = _suite(spark, tmp_path, "dist")
-        s2.run(audio_df)
+        s2 = make(spark, tmp_path, "dist")
+        s2.run(df)
         assert s2._kdq_groups is None
-        rows2 = [json.dumps(r["verdicts"], sort_keys=True) for r in s2.manifest.records]
+        rows2 = _manifest_rows(s2)
     finally:
         R.KDQ_DRIVER_ROW_CAP = cap
     assert rows1 == rows2
 
 
-def test_summary_driver_fast_path_matches_exploded(spark, tmp_path, audio_df):
-    """The summary-pass driver fast path (bounded raw collect + numpy
-    twin binning) must reproduce the exploded salted aggregation's
-    verdict table byte-for-byte (KS histograms + PSI frequencies on
-    the drifted fixture)."""
+def _check_summary_fast_path(spark, tmp_path, df, make):
     import menelaus_spark.runner as R
 
-    s1 = _suite(spark, tmp_path, "sum_fast")
-    s1.run(audio_df)
-    rows1 = [json.dumps(r["verdicts"], sort_keys=True) for r in s1.manifest.records]
+    s1 = make(spark, tmp_path, "sum_fast")
+    s1.run(df)
+    rows1 = _manifest_rows(s1)
 
     cap = R.SUMMARY_DRIVER_ROW_CAP
     R.SUMMARY_DRIVER_ROW_CAP = 0  # force the exploded aggregation
     try:
-        s2 = _suite(spark, tmp_path, "sum_dist")
-        s2.run(audio_df)
-        rows2 = [json.dumps(r["verdicts"], sort_keys=True) for r in s2.manifest.records]
+        s2 = make(spark, tmp_path, "sum_dist")
+        s2.run(df)
+        rows2 = _manifest_rows(s2)
     finally:
         R.SUMMARY_DRIVER_ROW_CAP = cap
     assert rows1 == rows2
+
+
+def test_kdq_driver_fast_path_matches_distributed(spark, tmp_path, audio_df):
+    """The kdq small-table fast path (one Arrow collect + driver-side
+    tree builds / leaf counts) must reproduce the distributed chain's
+    verdict table byte-for-byte, including the drift-event rebuild
+    sequence on the drifted fixture."""
+    _check_kdq_fast_path(spark, tmp_path, audio_df, _suite)
+
+
+def test_summary_driver_fast_path_matches_exploded(spark, tmp_path, audio_df):
+    """The summary-pass driver fast path (bounded raw collect + numpy
+    twin binning) must reproduce the exploded salted aggregation's
+    verdict table byte-for-byte (KS histograms, PSI frequencies and
+    HDM summaries)."""
+    _check_summary_fast_path(spark, tmp_path, audio_df, _suite)
+
+
+# (table fixture, suite builder) beyond the drifted audio table: the
+# audio-depth quality fixture and the lying-metadata fixture, so every
+# check family keeps a byte-equal comparison of the two plans
+_FAST_PATH_CASES = {
+    "depth": ("depth_df", lambda spark, tmp_path, name:
+              _suite(spark, tmp_path, name, **_AUDIO_DEPTH_KW)),
+    "meta": ("metalies_df", _meta_suite),
+}
+
+
+@pytest.mark.parametrize("case", list(_FAST_PATH_CASES))
+def test_driver_fast_paths_match_distributed(spark, tmp_path, request, case):
+    """Both driver fast paths (kdq and summary pass) reproduce their
+    distributed plans' verdict tables on the quality and metadata
+    fixtures."""
+    fixture, make = _FAST_PATH_CASES[case]
+    df = request.getfixturevalue(fixture)
+    _check_kdq_fast_path(spark, tmp_path, df, make)
+    _check_summary_fast_path(spark, tmp_path, df, make)

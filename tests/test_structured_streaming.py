@@ -364,14 +364,16 @@ def test_streaming_neardup_matches_batch(spark, tmp_path):
 
 
 def test_streaming_minhash_family_bit_equal_to_batch(spark):
-    # the stream computes signatures/band keys in Python (no streaming
-    # aggregation); they must be BIT-equal to the JVM exprs the batch
-    # pipeline uses, or bucket membership silently diverges
+    # the stream computes band keys in Python (no streaming
+    # aggregation); they must be BIT-equal to the JVM banding the batch
+    # pipeline uses, or bucket membership silently diverges. The
+    # signatures themselves are checked against DuckDB in
+    # test_audio_dedup.
     from menelaus_spark.operators.dedup import (
+        band_keys,
         lsh_candidate_pairs,
         minhash_from_shingles,
     )
-    from menelaus_spark.streaming.dedup import band_hashes, minhash_signature
 
     sets = {
         "a": ["00deadbeef00cafe", "0123456789abcdef", "ffffffffffffffff"],
@@ -382,14 +384,8 @@ def test_streaming_minhash_family_bit_equal_to_batch(spark):
     sdf = spark.createDataFrame(
         [(k, v) for k, v in sets.items()], "id string, shingles array<string>"
     )
-    jvm_sigs = {
-        r.id: list(r.sig)
-        for r in minhash_from_shingles(sdf, "id", "shingles", k=16).collect()
-    }
-    for k, sh in sets.items():
-        assert minhash_signature(sh, 16) == jvm_sigs[k], k
-
     sig_df = minhash_from_shingles(sdf, "id", "shingles", k=16)
+    sigs = {r.id: list(r.sig) for r in sig_df.collect()}
     banded = lsh_candidate_pairs(sig_df, "id", bands=8, rows=2)
     # band keys: recompute the JVM banding the way lsh_candidate_pairs
     # does and compare bucket keys per id
@@ -421,7 +417,7 @@ def test_streaming_minhash_family_bit_equal_to_batch(spark):
     for k, sh in sets.items():
         if not sh:
             continue
-        py = band_hashes(minhash_signature(sh, 16), bands=8, rows=2)
+        py = band_keys(sigs[k], bands=8, rows=2)
         assert {b: h for b, h in enumerate(py)} == jvm_keys[k], k
     assert banded.count() >= 0  # plan sanity
 
