@@ -297,9 +297,18 @@ def ngram_jaccard_pairs(
 
     if not over:
         return kernel_pairs(hdoc)
-    hdoc_big = hdoc.filter(F.col("__blk").isin(over))
+    # the over-cap blocks become a small broadcast frame, and a
+    # null-safe semi / anti join splits hdoc on it (a null block lands
+    # on the side its collected size picked): the plan and its generated
+    # code stay the same whatever the blocks are, where a literal isin()
+    # list would grow with them and make every input a new codegen unit
+    over_df = F.broadcast(local_frame(
+        hdoc.sparkSession, [(b,) for b in over],
+        f"__ob {dict(hdoc.dtypes)['__blk']}"))
+    on = hdoc["__blk"].eqNullSafe(over_df["__ob"])
+    hdoc_big = hdoc.join(over_df, on, "left_semi")
     small_pairs = (
-        kernel_pairs(hdoc.filter(~F.col("__blk").isin(over)))
+        kernel_pairs(hdoc.join(over_df, on, "left_anti"))
         if under else None
     )
 
@@ -532,9 +541,11 @@ def minhash_lsh_dedup(
     join -> exact-Jaccard verification of candidates only.
     Returns (id_a, id_b, jaccard >= threshold).
 
-    At or below ``driver_cap`` documents (gated by a parquet-stats
-    count) the banding/bucket self-join/distinct runs driver-side on
-    the collected signature frame (lsh_candidate_pairs_driver — the
+    At or below ``driver_cap`` documents (gated by one
+    ``limit(driver_cap + 1).count()`` probe, which evaluates a derived
+    input for at most cap + 1 rows per partition, not in full) the
+    banding/bucket self-join/distinct runs driver-side on the
+    collected signature frame (lsh_candidate_pairs_driver — the
     md5 banding is the only recomputed expression, an exact string
     op), and the LocalRelation candidate set broadcasts its pair +
     sh_a intermediate into the verify joins so the shingle frame is
@@ -543,7 +554,7 @@ def minhash_lsh_dedup(
     assert bands * rows == k
     sh = with_shingles(df, id_col, text_col, n)
     cands = None
-    if driver_cap and df.count() <= driver_cap:
+    if driver_cap and df.limit(driver_cap + 1).count() <= driver_cap:
         pdf = minhash_from_shingles(sh, id_col, "shingles", k).toPandas()
         pairs = lsh_candidate_pairs_driver(
             list(zip(pdf[id_col], pdf["sig"])), bands, rows)

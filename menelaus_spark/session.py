@@ -65,6 +65,24 @@ def get_spark(
         .config("spark.memory.offHeap.enabled", "true")
         .config("spark.memory.offHeap.size", os.environ.get("SPARK_OFFHEAP", "16g"))
         .config("spark.sql.columnVector.offheap.enabled", "true")
+        # Whole-stage codegen cache (static, one per JVM). The engine
+        # runs many small distinct plans that repeat run after run, and
+        # Spark's default of 100 entries is below their working set: a
+        # drift_tabular op generates 111 distinct units and a suite op
+        # 69, so at 100 every warm drift op recompiled 72-98 units in
+        # Janino and C2 re-JIT'd the new classes. The whole 88-entry
+        # queries() registry at sf0.01 is 992 units
+        # (tools/codegen_working_set.py); 2048 holds about twice that,
+        # so a steady-state run recompiles nothing.
+        .config("spark.sql.codegen.cache.maxEntries", "2048")
+        # The cache is keyed on the generated source, whose class name
+        # carries the codegen stage id by default. AQE numbers stages in
+        # the order they finish, which varies when a plan runs branches
+        # in parallel (hll_distinct_events, the suite's overlapped
+        # passes), so one plan yields several sources. With both
+        # defaults a warm suite op recompiled 18-23 units; with the
+        # larger cache alone a warm drift op still recompiled 4-8.
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.host", "127.0.0.1")
         # InferFiltersFromGenerate turns every explode(expr) into a

@@ -530,6 +530,55 @@ def test_ngram_jaccard_hybrid_paths_bit_equal(spark):
     assert k2 == a2 and len(k2) == len(kernel)
 
 
+@pytest.mark.parametrize("blk_type", ["string", "long"])
+def test_ngram_jaccard_mixed_split_matches_single_path(spark, blk_type):
+    """A cap between the block sizes sends some blocks to the kernel and
+    the rest to AllPairs through the broadcast (block, over) split; the
+    union equals either single-path run."""
+    texts = ["a b c d e f g h", "a b c d e f g z", "a b c d e f y z",
+             "p q r s t u v w", "p q r s t u v x"]
+    rows = [(10 * b + i, texts[(i + b) % len(texts)], b)
+            for b, size in enumerate([5, 4, 2, 2, 1]) for i in range(size)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string, blk long") \
+        .withColumn("blk", F.col("blk").cast(blk_type))
+
+    def pairs(cap):
+        out = dedup.ngram_jaccard_pairs(
+            docs, "doc_id", "text", n=2, threshold=0.3, block_col="blk",
+            kernel_block_rows=cap)
+        return out, sorted(map(tuple, out.collect()))
+
+    mixed_df, mixed = pairs(3)
+    assert mixed == pairs(10_000)[1] == pairs(0)[1]
+    assert len(mixed) >= 5
+    plan = mixed_df._jdf.queryExecution().executedPlan().toString()
+    assert "LeftSemi" in plan and "LeftAnti" in plan
+
+
+def test_minhash_lsh_driver_cap_boundary(spark):
+    # a derived (non-scan) input of n documents: the limit(cap + 1)
+    # probe picks the driver path at cap = n and the distributed one at
+    # cap = n - 1, and both give the same pairs
+    n = 140
+    base = F.when(F.col("id") >= 120, F.col("id") - 120).otherwise(F.col("id"))
+    df = spark.range(n).select(
+        F.col("id").alias("doc_id"),
+        F.concat(F.lit("sentence number "), base % 7, F.lit(" about topic "),
+                 base % 5, F.lit(" repeated words "),
+                 F.repeat(F.lit("x "), (base % 11).cast("int"))).alias("text"))
+
+    def run(cap):
+        out = dedup.minhash_lsh_dedup(df, "doc_id", "text", n=3, k=8, bands=4,
+                                      rows=2, threshold=0.1, driver_cap=cap)
+        local = "LocalRelation" in out._jdf.queryExecution().optimizedPlan().toString()
+        return local, out.dtypes, sorted(map(tuple, out.collect()))
+
+    at_cap, under_cap = run(n), run(n - 1)
+    assert at_cap[0] and not under_cap[0]
+    assert at_cap[1:] == under_cap[1:]
+    assert len(at_cap[2]) >= 20  # the 20 exact copies pair up
+
+
 def test_minhash_lsh_driver_fast_path_matches_distributed(spark):
     # driver-side banding (driver_cap) must be byte-equal to the
     # distributed bucket self-join — values AND dtypes
