@@ -28,6 +28,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 import menelaus_spark  # noqa: F401  (ensures PYTHONPATH export for workers)
 from menelaus_spark import audio, tables
@@ -72,6 +73,24 @@ def _ensure_workers_can_import(spark: SparkSession) -> None:
     _PYFILES_SESSIONS.add(key)
 
 
+# path -> (stat signature, the StructType Spark inferred for it)
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _stat_signature(path: str) -> tuple:
+    """(file, size, mtime_ns, inode) of every file at or under
+    ``path``: a rewrite, an added or a removed file changes it."""
+    if os.path.isfile(path):
+        files = [path]
+    else:
+        files = sorted(os.path.join(d, fn) for d, _, fns in os.walk(path) for fn in fns)
+    sig = []
+    for f in files:
+        st = os.stat(f)
+        sig.append((f, st.st_size, st.st_mtime_ns, st.st_ino))
+    return tuple(sig)
+
+
 def _t(spark: SparkSession, sf_dir: str, name: str, spread: bool = False) -> DataFrame:
     """Read one testdata table. ``spread=True`` repartitions a
     single-split local file to defaultParallelism — the small parquet
@@ -80,9 +99,26 @@ def _t(spark: SparkSession, sf_dir: str, name: str, spread: bool = False) -> Dat
     Only the heavy pipelines opt in: for cheap scans the ~1 s shuffle
     of the text column costs more than it buys (measured r03: it was
     the r02 token_stats/ann regression). At real scale the scan has
-    many splits and the branch never fires."""
+    many splits and the branch never fires.
+
+    A read without a schema runs one Spark job to infer it from the
+    Parquet footers, even for a single file with mergeSchema off
+    (about 0.2 s warm against 0.035 s with the schema given, on 4
+    cores). So the schema Spark inferred is kept per path and passed
+    back through ``spark.read.schema`` on later reads, which then run
+    no job. Each path's entry holds its ``_stat_signature``: when any
+    file under the path changes size, mtime or inode, or a file comes
+    or goes, the table is inferred again. A path with no local files to
+    stat (a URI) is inferred on every read."""
     _ensure_workers_can_import(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    sig = _stat_signature(path)
+    known = _SCHEMAS.get(path)
+    if sig and known is not None and known[0] == sig:
+        df = spark.read.schema(known[1]).parquet(path)
+    else:
+        df = spark.read.parquet(path)
+        _SCHEMAS[path] = (sig, df.schema)
     if spread:
         par = spark.sparkContext.defaultParallelism
         if df.rdd.getNumPartitions() < par:

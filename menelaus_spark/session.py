@@ -83,6 +83,17 @@ def get_spark(
         # defaults a warm suite op recompiled 18-23 units; with the
         # larger cache alone a warm drift op still recompiled 4-8.
         .config("spark.sql.codegen.useIdInClassName", "false")
+        # PySpark wraps F.col and every Column method in a call-site
+        # capture: it walks the Python stack and sets, then clears,
+        # PySparkCurrentOrigin in the JVM over py4j. The engine builds
+        # its detectors from many small column expressions, so this is
+        # a fixed driver cost on every query. Measured on 4 cores,
+        # (F.col("x") + 1) * 2 took 41 py4j round trips and 7.6-10.4 ms
+        # with capture, 8 and 1.3-1.7 ms without. Static conf, read once
+        # per process (pyspark.errors.utils.is_debugging_enabled).
+        # Analysis errors still name the column; only the Python
+        # file:line context is gone.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.host", "127.0.0.1")
         # InferFiltersFromGenerate turns every explode(expr) into a
