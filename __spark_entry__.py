@@ -26,7 +26,7 @@ import sys
 import tempfile
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -40,6 +40,43 @@ from menelaus_spark.verdicts import local_frame
 _PYFILES_SESSIONS: set = set()
 
 
+def _pyfiles_zip(repo: str) -> str:
+    """A zip of ``repo``'s menelaus_spark sources, named by a digest of
+    their paths and bytes. Two checkouts on one host get the same zip
+    only when their sources are identical, so neither's workers can
+    import the other's code. The zip is written to a temporary name and
+    renamed into place, so no reader sees a partial one."""
+    import hashlib
+    import zipfile
+
+    srcs = {}
+    for dirpath, _, files in os.walk(os.path.join(repo, "menelaus_spark")):
+        for fn in files:
+            if fn.endswith(".py"):
+                full = os.path.join(dirpath, fn)
+                with open(full, "rb") as f:
+                    srcs[os.path.relpath(full, repo)] = f.read()
+    digest = hashlib.sha256()
+    for rel in sorted(srcs):
+        digest.update(f"{rel}\0{len(srcs[rel])}\0".encode())
+        digest.update(srcs[rel])
+    out_dir = tempfile.gettempdir()
+    zip_path = os.path.join(
+        out_dir, f"menelaus_spark_pyfiles_{digest.hexdigest()[:16]}.zip")
+    if not os.path.exists(zip_path):
+        fd, tmp = tempfile.mkstemp(dir=out_dir, suffix=".zip.tmp")
+        try:
+            with os.fdopen(fd, "wb") as f, zipfile.ZipFile(f, "w", zipfile.ZIP_DEFLATED) as zf:
+                for rel in sorted(srcs):
+                    zf.writestr(rel, srcs[rel])
+            os.chmod(tmp, 0o644)  # mkstemp's 0600 would hide it from other users
+            os.replace(tmp, zip_path)
+        except BaseException:
+            os.unlink(tmp)
+            raise
+    return zip_path
+
+
 def _ensure_workers_can_import(spark: SparkSession) -> None:
     """Ship menelaus_spark to Python workers via addPyFile. Needed when
     the caller built its SparkSession BEFORE importing this module (the
@@ -49,23 +86,7 @@ def _ensure_workers_can_import(spark: SparkSession) -> None:
     key = sc.applicationId
     if key in _PYFILES_SESSIONS:
         return
-    import zipfile
-
-    repo = os.path.dirname(os.path.abspath(__file__))
-    zip_path = os.path.join(tempfile.gettempdir(), "menelaus_spark_pyfiles.zip")
-    pkg_dir = os.path.join(repo, "menelaus_spark")
-    newest_src = max(
-        os.path.getmtime(os.path.join(dp, fn))
-        for dp, _, fs in os.walk(pkg_dir) for fn in fs if fn.endswith(".py")
-    )
-    if not os.path.exists(zip_path) or os.path.getmtime(zip_path) < newest_src:
-        with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_DEFLATED) as zf:
-            pkg = os.path.join(repo, "menelaus_spark")
-            for dirpath, _, files in os.walk(pkg):
-                for fn in files:
-                    if fn.endswith(".py"):
-                        full = os.path.join(dirpath, fn)
-                        zf.write(full, os.path.relpath(full, repo))
+    zip_path = _pyfiles_zip(os.path.dirname(os.path.abspath(__file__)))
     try:
         sc.addPyFile(zip_path)
     except Exception:
@@ -180,8 +201,6 @@ def q_profile_events_by_type(spark, sf_dir):
 
 def q_topk_orders_per_customer(spark, sf_dir):
     """Top-3 orders by totalprice per customer (ranking window)."""
-    from pyspark.sql import Window
-
     o = _t(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy(F.desc("o_totalprice"), F.col("o_orderkey"))
     return (
@@ -262,17 +281,36 @@ def q_asof_last_view_before_purchase(spark, sf_dir):
 HIST_BINS = 64
 
 
+def _local_sort(df: DataFrame, *cols: str) -> DataFrame:
+    """``df`` sorted on one partition. For a final result bounded by a
+    constant (bins, groups) this replaces ``orderBy``'s range-sampling
+    job and exchange with an in-task sort."""
+    return df.coalesce(1).sortWithinPartitions(*cols)
+
+
+def _with_totals(df: DataFrame, **totals: str) -> DataFrame:
+    """``df`` on one partition, plus each named column total as a
+    column (``t0="c0"`` adds ``t0 = sum(c0)``). For a frame bounded by
+    a constant (bins, categories) an unpartitioned window sums it in
+    the same task, where ``agg`` + a broadcast cross join runs two
+    more jobs."""
+    whole = Window.partitionBy()
+    return df.coalesce(1).select(
+        "*", *[F.sum(c).over(whole).alias(t) for t, c in totals.items()]
+    )
+
+
 def q_hist_extendedprice(spark, sf_dir):
     """Aligned-bin histogram of l_extendedprice (the HDM histogram
     kernel) with data-derived range."""
-    from menelaus_spark.operators.histograms import bin_index_col, joint_minmax, salted_count
+    from menelaus_spark.operators.histograms import bin_index_col, joint_minmax
 
     li = _t(spark, sf_dir, "lineitem")
     lo, hi = joint_minmax(li, ["l_extendedprice"])["l_extendedprice"]
     binned = li.select(
         bin_index_col(F.col("l_extendedprice").cast("double"), lo, hi, HIST_BINS).alias("bin")
     ).filter(F.col("bin").isNotNull())
-    return salted_count(binned, ["bin"]).orderBy("bin")
+    return _local_sort(binned.groupBy("bin").agg(F.count(F.lit(1)).alias("count")), "bin")
 
 
 def q_hellinger_returnflag(spark, sf_dir):
@@ -290,9 +328,8 @@ def q_hellinger_returnflag(spark, sf_dir):
         F.sum((F.col("l_returnflag") == "R").cast("long")).alias("r_cnt"),
         F.sum((F.col("l_returnflag") == "A").cast("long")).alias("a_cnt"),
     )
-    totals = counts.agg(F.sum("r_cnt").alias("rt"), F.sum("a_cnt").alias("at"))
     return (
-        counts.crossJoin(F.broadcast(totals))
+        _with_totals(counts, rt="r_cnt", at="a_cnt")
         .agg(
             F.round(
                 F.sqrt(F.sum(F.pow(F.sqrt(F.col("r_cnt") / F.col("rt"))
@@ -311,10 +348,9 @@ def q_psi_event_type_halves(spark, sf_dir):
         F.sum((F.col("half") == 0).cast("long")).alias("c0"),
         F.sum((F.col("half") == 1).cast("long")).alias("c1"),
     )
-    tot = freqs.agg(F.sum("c0").alias("t0"), F.sum("c1").alias("t1"))
     eps = 1e-4
     return (
-        freqs.crossJoin(F.broadcast(tot))
+        _with_totals(freqs, t0="c0", t1="c1")
         .select(
             F.greatest(F.col("c0") / F.col("t0"), F.lit(eps)).alias("p"),
             F.greatest(F.col("c1") / F.col("t1"), F.lit(eps)).alias("q"),
@@ -383,11 +419,10 @@ def q_chisq_event_type_halves(spark, sf_dir):
         F.sum((F.col("half") == 0).cast("long")).alias("c0"),
         F.sum((F.col("half") == 1).cast("long")).alias("c1"),
     ).filter(F.col("c0") + F.col("c1") > 0)
-    tot = freqs.agg(F.sum("c0").alias("t0"), F.sum("c1").alias("t1"))
     e0 = F.col("t0") * (F.col("c0") + F.col("c1")) / (F.col("t0") + F.col("t1"))
     e1 = F.col("t1") * (F.col("c0") + F.col("c1")) / (F.col("t0") + F.col("t1"))
     return (
-        freqs.crossJoin(F.broadcast(tot))
+        _with_totals(freqs, t0="c0", t1="c1")
         .agg(
             F.round(F.sum((F.col("c0") - e0) * (F.col("c0") - e0) / e0
                           + (F.col("c1") - e1) * (F.col("c1") - e1) / e1),
@@ -400,8 +435,6 @@ def q_chisq_event_type_halves(spark, sf_dir):
 def q_ks_value_click_vs_error(spark, sf_dir):
     """Two-sample KS statistic between `value` distributions of click
     vs error events via cumulative aligned histograms + window cumsum."""
-    from pyspark.sql import Window
-
     from menelaus_spark.operators.histograms import bin_index_col, joint_minmax
 
     ev = _t(spark, sf_dir, "events").filter(F.col("event_type").isin(["click", "error"]))
@@ -415,11 +448,10 @@ def q_ks_value_click_vs_error(spark, sf_dir):
         F.sum((F.col("event_type") == "error").cast("long")).alias("c2"),
     )
     w = Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, 0)
-    tot = counts.agg(F.sum("c1").alias("t1"), F.sum("c2").alias("t2"))
     return (
-        counts.withColumn("cum1", F.sum("c1").over(w))
+        _with_totals(counts, t1="c1", t2="c2")
+        .withColumn("cum1", F.sum("c1").over(w))
         .withColumn("cum2", F.sum("c2").over(w))
-        .crossJoin(F.broadcast(tot))
         .agg(F.round(F.max(F.abs(F.col("cum1") / F.col("t1") - F.col("cum2") / F.col("t2"))), 6).alias("ks"))
     )
 
@@ -431,8 +463,6 @@ def q_emd_value_click_vs_error(spark, sf_dir):
     the KS entry uses (functions/distances.emd_1d is the suite-side
     numpy twin). EMD integrates the whole CDF gap, catching thin mean
     shifts KS's single max understates."""
-    from pyspark.sql import Window
-
     from menelaus_spark.operators.histograms import bin_index_col, joint_minmax
 
     ev = _t(spark, sf_dir, "events").filter(F.col("event_type").isin(["click", "error"]))
@@ -446,19 +476,18 @@ def q_emd_value_click_vs_error(spark, sf_dir):
         F.sum((F.col("event_type") == "error").cast("long")).alias("c2"),
     )
     w = Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, 0)
-    tot = counts.agg(F.sum("c1").alias("t1"), F.sum("c2").alias("t2"))
     bw = (float(hi) - float(lo)) / HIST_BINS
     # unlike KS's max, the EMD sum must count EMPTY bins: the CDF gap
     # after a populated bin persists across every empty bin up to the
     # next populated one, so each row's |gap| is weighted by that span
     # (the last populated bin's gap is 0 — both CDFs reach 1)
     return (
-        counts.withColumn("cum1", F.sum("c1").over(w))
+        _with_totals(counts, t1="c1", t2="c2")
+        .withColumn("cum1", F.sum("c1").over(w))
         .withColumn("cum2", F.sum("c2").over(w))
         .withColumn("span",
                     F.lead("bin", 1, HIST_BINS).over(Window.orderBy("bin"))
                     - F.col("bin"))
-        .crossJoin(F.broadcast(tot))
         .agg(F.round(
             F.lit(bw) * F.sum(F.col("span").cast("double")
                               * F.abs(F.col("cum1") / F.col("t1")
@@ -475,8 +504,6 @@ def q_cvm_value_click_vs_error(spark, sf_dir):
     (functions/distances.cvm_statistic is the suite-side numpy twin).
     Scale-free in [0, 1]; empty bins carry zero pooled mass, so unlike
     EMD no bin-span weighting is needed."""
-    from pyspark.sql import Window
-
     from menelaus_spark.operators.histograms import bin_index_col, joint_minmax
 
     ev = _t(spark, sf_dir, "events").filter(F.col("event_type").isin(["click", "error"]))
@@ -490,12 +517,11 @@ def q_cvm_value_click_vs_error(spark, sf_dir):
         F.sum((F.col("event_type") == "error").cast("long")).alias("c2"),
     )
     w = Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, 0)
-    tot = counts.agg(F.sum("c1").alias("t1"), F.sum("c2").alias("t2"))
     gap = F.col("cum1") / F.col("t1") - F.col("cum2") / F.col("t2")
     return (
-        counts.withColumn("cum1", F.sum("c1").over(w))
+        _with_totals(counts, t1="c1", t2="c2")
+        .withColumn("cum1", F.sum("c1").over(w))
         .withColumn("cum2", F.sum("c2").over(w))
-        .crossJoin(F.broadcast(tot))
         .agg(F.round(
             F.sum((F.col("c1") + F.col("c2")) / (F.col("t1") + F.col("t2"))
                   * gap * gap),
@@ -1582,10 +1608,11 @@ def q_lsh_ann_topk(spark, sf_dir):
     return out.select("query_id", "vec_id", F.round("cosine", 4).alias("cos4"), "rank")
 
 
-def _lineitem_year_batches(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem").withColumn("yr", F.year("l_shipdate"))
-    years = sorted(r[0] for r in li.select("yr").distinct().collect())
-    return li, years
+def _distinct_years(df: DataFrame) -> list:
+    """The sorted distinct ``yr`` values of ``df``: one distinct job.
+    Entries that collect every year's rows anyway take the years from
+    that collect instead."""
+    return sorted(r[0] for r in df.select("yr").distinct().collect())
 
 
 _LI_DRIFT_COLS = ["l_quantity", "l_extendedprice", "l_discount"]
@@ -1609,14 +1636,14 @@ def _small_proj_partitions(spark) -> int:
 
 
 def _lineitem_year_proj(spark, sf_dir):
-    """Pinned (yr, 3 numeric cols) projection + its year list: the
-    per-year batch filters of the drift-sequence queries must not each
-    re-scan the full table (the projection is ~20 MB at sf0.1)."""
-    li, years = _lineitem_year_batches(spark, sf_dir)
-    proj = li.select(
-        "yr", *[F.col(c).cast("double").alias(c) for c in _LI_DRIFT_COLS]
+    """Pinned (yr, 3 numeric cols) projection: the per-year batch
+    filters of the drift-sequence queries must not each re-scan the
+    full table (the projection is ~20 MB at sf0.1)."""
+    li = _t(spark, sf_dir, "lineitem")
+    return li.select(
+        F.year("l_shipdate").alias("yr"),
+        *[F.col(c).cast("double").alias(c) for c in _LI_DRIFT_COLS],
     ).coalesce(_small_proj_partitions(spark)).persist()
-    return proj, years
 
 
 def _batch_summaries(df, batch_col: str, cols: list[str],
@@ -1687,11 +1714,12 @@ def q_hdddm_lineitem(spark, sf_dir):
     the entire machine bit-exactly (_hdddm_lineitem_oracle)."""
     from menelaus_spark.checks.hdm import HDDDM
 
-    proj, years = _lineitem_year_proj(spark, sf_dir)
+    proj = _lineitem_year_proj(spark, sf_dir)
     det = HDDDM(detect_batch=2, seed=42)
-    # every per-year summary in ONE pass; the state machine then runs
-    # driver-side except the (batch 2) bootstrap job
+    # every per-year summary in ONE pass, which also names the years;
+    # the state machine then runs driver-side
     sums = _batch_summaries(proj, "yr", _LI_DRIFT_COLS)
+    years = sorted(int(y) for y in sums)
     rows = []
     for i, yr in enumerate(years):
         batch = proj.filter(F.col("yr") == yr).drop("yr")
@@ -1720,7 +1748,7 @@ def q_kdq_lineitem(spark, sf_dir):
     bit-identical to the r05 per-batch loop — same oracle hash."""
     from menelaus_spark.checks.kdqtree import KdqTreeBatch
 
-    proj, years = _lineitem_year_proj(spark, sf_dir)
+    proj = _lineitem_year_proj(spark, sf_dir)
     det = KdqTreeBatch(count_ubound=100, bootstrap_samples=100, seed=42)
 
     from menelaus_spark.checks.kdqtree import (
@@ -1733,18 +1761,23 @@ def q_kdq_lineitem(spark, sf_dir):
     # feeds every tree build AND every leaf count driver-side — zero
     # Spark jobs per drift event, bit-identical trees/counts (the
     # build is row-order independent and fill_counts is the same
-    # kernel the distributed fill broadcasts). Above the caps the
-    # grouped distributed pass runs as before.
+    # kernel the distributed fill broadcasts). The collect also names
+    # the years. Above the caps the grouped distributed pass runs as
+    # before, after a distinct job for the years.
     groups_nd = collect_group_features(
-        proj, "yr", list(_LI_DRIFT_COLS), years, det.build_sample_cap
+        proj, "yr", list(_LI_DRIFT_COLS), None, det.build_sample_cap
     )
     if groups_nd is not None:
+        years = sorted(int(y) for y in groups_nd)
+
         def counts_for(tree, scope_years):
             return {y: tree.fill_counts(groups_nd[y]) for y in scope_years}
 
         def build_from(yr):
             return det.build_tree_from_sample(groups_nd[yr])
     else:
+        years = _distinct_years(proj)
+
         def counts_for(tree, scope_years):
             return distributed_leaf_counts_by_group(
                 proj, "yr", list(_LI_DRIFT_COLS), tree, scope_years, det.n_salt
@@ -1794,10 +1827,10 @@ def q_streaming_traces(spark, sf_dir):
         order_col="event_id", value_cols=["value"],
     )
     # when/otherwise: zero-drift groups must aggregate to 0, not NULL
-    return trace.groupBy("group").agg(
+    return _local_sort(trace.groupBy("group").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.when(F.col("state") == "drift", 1).otherwise(0)).alias("n_drift"),
-    ).orderBy("group")
+    ), "group")
 
 
 def q_streaming_cusum_traces(spark, sf_dir):
@@ -1816,10 +1849,10 @@ def q_streaming_cusum_traces(spark, sf_dir):
     )
     # when/otherwise (not a null-propagating comparison cast): a group
     # with zero drift rows must aggregate to 0, not NULL
-    return trace.groupBy("group").agg(
+    return _local_sort(trace.groupBy("group").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.when(F.col("state") == "drift", 1).otherwise(0)).alias("n_drift"),
-    ).orderBy("group")
+    ), "group")
 
 
 def q_streaming_ensemble_events(spark, sf_dir):
@@ -1849,11 +1882,11 @@ def q_streaming_ensemble_events(spark, sf_dir):
         order_col="event_id",
         value_cols=["value"],
     )
-    return trace.groupBy("group").agg(
+    return _local_sort(trace.groupBy("group").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.when(F.col("state") == "drift", 1).otherwise(0)).alias("n_drift"),
         F.max("statistic").alias("max_members_alarming"),
-    ).orderBy("group")
+    ), "group")
 
 
 def q_cdbd_example_confidence(spark, sf_dir):
@@ -1922,9 +1955,10 @@ def q_hdddm_lineitem_cumulative(spark, sf_dir):
     reproduced by a recursive-CTE DuckDB oracle and hash-checked."""
     from menelaus_spark.checks.hdm import HDDDM
 
-    proj, years = _lineitem_year_proj(spark, sf_dir)
+    proj = _lineitem_year_proj(spark, sf_dir)
     det = HDDDM(detect_batch=3, statistic="stdev", seed=42)
     sums = _batch_summaries(proj, "yr", _LI_DRIFT_COLS)
+    years = sorted(int(y) for y in sums)
     batches = [
         (str(yr), proj.filter(F.col("yr") == yr).drop("yr"), sums[yr])
         for yr in years
@@ -2713,7 +2747,8 @@ def q_nndvi_lineitem(spark, sf_dir):
     (_nndvi_lineitem_oracle)."""
     from menelaus_spark.checks.nndvi import NNDVI
 
-    proj, years = _lineitem_year_proj(spark, sf_dir)
+    proj = _lineitem_year_proj(spark, sf_dir)
+    years = _distinct_years(proj)
     det = NNDVI(k_nn=20, sampling_times=100, batch_sample_cap=300, seed=42)
     rows = []
     for i, yr in enumerate(years):
@@ -2849,8 +2884,6 @@ def _labeled_events(spark, sf_dir):
     from 10% to 35% at each group's midpoint (a real concept drift),
     derived purely from (event_id, rn, mx) so the DuckDB oracle
     rebuilds the identical stream. y_pred = y_true XOR err."""
-    from pyspark.sql import Window
-
     ev = _t(spark, sf_dir, "events").withColumn(
         "grp", F.pmod("user_id", F.lit(8)).cast("string")
     )
@@ -4541,32 +4574,55 @@ def _audio_dedup_resolution_oracle() -> str | None:
 # --------------------------------------------------------------------------
 # sketches / sampling / sessionization (r05 additions)
 
-def q_hll_distinct_events(spark, sf_dir):
-    """HyperLogLog approx-distinct of events.user_id (p=8) — the
-    10^12-row uniqueness SCREEN: one scan, a 256-row register shuffle,
-    no key shuffle (operators/sketches.py).  Emits the exact integer
-    sketch state (v_zero, s_int), the estimate, the exact distinct for
-    reference, and merge_mismatches = register-level diff between the
-    global sketch and the max-merge of four per-quarter sketches
-    (always 0 — max is associative; the mergeability proof rides the
-    entry)."""
+def _hll_quarter_rollup(ev: DataFrame, p: int) -> DataFrame:
+    """(reg, q, rho, gid) user_id registers of ``events``: the global
+    register table at gid 1 and one per event_id % 4 quarter at gid 0,
+    each computed from the raw rows in one scan and one exchange (gid
+    3 is rollup's grand total row)."""
     from menelaus_spark.operators import sketches as SK
 
-    ev = _t(spark, sf_dir, "events")
-    reg = SK.hll_registers(ev, "user_id", p=8)
-    by_q = SK.hll_registers_by(
-        ev.withColumn("q", F.pmod("event_id", F.lit(4))), "q", "user_id", p=8)
-    merged = by_q.groupBy("reg").agg(F.max("rho").alias("rho"))
-    mism = (
-        reg.withColumnRenamed("rho", "rho_g")
-        .join(merged.withColumnRenamed("rho", "rho_m"), "reg", "full")
-        .agg(F.coalesce(
-            F.sum((~(F.col("rho_g").eqNullSafe(F.col("rho_m")))).cast("long")),
-            F.lit(0).cast("long")).alias("merge_mismatches"))
+    return (
+        ev.filter(F.col("user_id").isNotNull())
+        .select(F.pmod("event_id", F.lit(4)).alias("q"),
+                *SK.hll_register_cols("user_id", p=p))
+        .rollup("reg", "q")
+        .agg(F.max("rho").alias("rho"), F.grouping_id().alias("gid"))
     )
-    est = SK.hll_estimate_df(reg, p=8)
-    exact = ev.agg(F.countDistinct("user_id").alias("exact_distinct"))
-    return est.crossJoin(F.broadcast(exact)).crossJoin(F.broadcast(mism))
+
+
+def q_hll_distinct_events(spark, sf_dir):
+    """HyperLogLog approx-distinct of events.user_id (p=8) — the
+    10^12-row uniqueness SCREEN (operators/sketches.py).  Emits the
+    exact integer sketch state (v_zero, s_int), the estimate, the exact
+    distinct for reference, and merge_mismatches = register-level diff
+    between the global sketch and the max-merge of four per-quarter
+    sketches (always 0 — max is associative; the mergeability proof
+    rides the entry).
+
+    One scan and one exchange build both sketches
+    (``_hll_quarter_rollup``).  Its <= 5 * 2^p + 1 rows are collected;
+    the estimate (``hll_estimate_registers``, the exact-integer driver
+    twin of ``hll_estimate_df``) and the merge check run driver-side."""
+    from menelaus_spark.operators import sketches as SK
+
+    p = 8
+    ev = _t(spark, sf_dir, "events")
+    regs = _hll_quarter_rollup(ev, p).collect()
+    glob = {r["reg"]: r["rho"] for r in regs if r["gid"] == 1}
+    merged: dict = {}
+    for r in regs:
+        if r["gid"] == 0:
+            merged[r["reg"]] = max(merged.get(r["reg"], 0), r["rho"])
+    mism = sum(glob.get(k) != merged.get(k) for k in glob.keys() | merged.keys())
+    est, v_zero, s_int = SK.hll_estimate_registers(glob.values(), p=p)
+    exact = ev.agg(F.countDistinct("user_id")).collect()[0][0]
+    # round in Spark: F.round's HALF_UP decimal rounding, as hll_estimate_df
+    return local_frame(
+        spark, [(1 << p, v_zero, s_int, est, exact, mism)],
+        "m int, v_zero long, s_int long, est double, exact_distinct long, "
+        "merge_mismatches long",
+    ).select("m", "v_zero", "s_int", F.round("est", 4).alias("est_distinct"),
+             "exact_distinct", "merge_mismatches")
 
 
 def q_cms_freq_events(spark, sf_dir):

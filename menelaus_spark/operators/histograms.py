@@ -158,16 +158,6 @@ def collect_histogram_matrix(
     return mat
 
 
-def category_frequencies(df: DataFrame, col: str, n_salt: int = 16) -> DataFrame:
-    """(category, count) with salted two-stage aggregation — feeds PSI
-    on the Zipf-skewed codec column."""
-    return salted_count(df.select(F.col(col).alias("category")), ["category"], n_salt=n_salt)
-
-
-def collect_frequencies(freq_df: DataFrame) -> dict:
-    return {row["category"]: int(row["count"]) for row in freq_df.collect()}
-
-
 def align_frequencies(ref: dict, test: dict) -> tuple[np.ndarray, np.ndarray, list]:
     """Outer-align two category->count dicts on the category universe."""
     cats = sorted(set(ref) | set(test), key=lambda x: (x is None, str(x)))

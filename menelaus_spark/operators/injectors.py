@@ -59,18 +59,6 @@ def label_swap(df: DataFrame, idx_col: str, from_index: int, to_index: int,
     )
 
 
-def label_join(df: DataFrame, idx_col: str, from_index: int, to_index: int,
-               target_col: str, class_1, class_2, new_class) -> DataFrame:
-    """Merge two classes into one inside the window
-    (label_manipulation.py LabelJoinInjector semantics)."""
-    pred = _window_pred(idx_col, from_index, to_index)
-    return df.withColumn(
-        target_col,
-        F.when(pred & F.col(target_col).isin([class_1, class_2]), F.lit(new_class))
-        .otherwise(F.col(target_col)),
-    )
-
-
 def brownian_noise(df: DataFrame, idx_col: str, from_index: int, to_index: int,
                    col: str, x0: float, seed: int = 0) -> DataFrame:
     """col += Wiener walk over the window (noise.py:6-62). The walk is

@@ -50,13 +50,3 @@ def profile(df: DataFrame, numeric_cols: list[str], all_cols: list[str] | None =
     """Run the single-pass profile; returns a flat stats dict."""
     row = df.agg(*profile_aggs(df, numeric_cols, all_cols, quantiles, exact_quantiles)).collect()[0]
     return row.asDict()
-
-
-def profile_by(df: DataFrame, group_col: str, numeric_cols: list[str],
-               all_cols: list[str] | None = None, quantiles=DEFAULT_QUANTILES,
-               exact_quantiles: bool = False) -> DataFrame:
-    """Grouped variant: one row of stats per group (e.g. per partition
-    key) in one shuffle."""
-    return df.groupBy(group_col).agg(
-        *profile_aggs(df, numeric_cols, all_cols, quantiles, exact_quantiles)
-    )

@@ -35,10 +35,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 __all__ = [
+    "hll_register_cols",
     "hll_registers",
     "hll_registers_by",
     "hll_merge",
     "hll_estimate",
+    "hll_estimate_registers",
     "hll_estimate_df",
     "hll_estimate_by_df",
     "cms_counters",
@@ -82,20 +84,28 @@ def _rho_expr(h: Column, p: int) -> Column:
     ).cast("int")
 
 
+def hll_register_cols(col: str, p: int = 8, seed: str = "hll") -> list[Column]:
+    """The per-row ``reg`` and ``rho`` columns of a value: the register
+    index is the top ``p`` bits of the hash, rho the leading-zero rank
+    of the remaining 60-p bits.  Rows with a null value must be
+    filtered out first.  For plans that group registers their own way,
+    e.g. a rollup of global and per-group registers in one exchange."""
+    h = _hash60(F.col(col), seed)
+    return [
+        F.shiftright(h, _HASH_BITS - p).cast("int").alias("reg"),
+        _rho_expr(h, p).alias("rho"),
+    ]
+
+
 def hll_registers(df: DataFrame, col: str, p: int = 8, seed: str = "hll") -> DataFrame:
     """(reg:int, rho:int) register table — absent registers mean 0.
 
-    One scan: the register index is the low ``p`` bits of the hash,
-    rho the leading-zero rank of the remaining 60-p bits.  groupBy
-    over at most 2^p keys -> the shuffle is 2^p rows regardless of
-    input size, with map-side partial max doing all the work."""
-    h = _hash60(F.col(col), seed)
+    One scan (``hll_register_cols``), then groupBy over at most 2^p
+    keys -> the shuffle is 2^p rows regardless of input size, with
+    map-side partial max doing all the work."""
     return (
         df.filter(F.col(col).isNotNull())
-        .select(
-            F.shiftright(h, _HASH_BITS - p).cast("int").alias("reg"),
-            _rho_expr(h, p).alias("rho"),
-        )
+        .select(*hll_register_cols(col, p, seed))
         .groupBy("reg")
         .agg(F.max("rho").alias("rho"))
     )
@@ -107,14 +117,9 @@ def hll_registers_by(df: DataFrame, group_col: str, col: str, p: int = 8,
     at most n_groups * 2^p rows.  ``hll_merge`` of the groups equals
     the global register table exactly (max is associative), which is
     the per-Iceberg-partition rollup contract."""
-    h = _hash60(F.col(col), seed)
     return (
         df.filter(F.col(col).isNotNull())
-        .select(
-            F.col(group_col),
-            F.shiftright(h, _HASH_BITS - p).cast("int").alias("reg"),
-            _rho_expr(h, p).alias("rho"),
-        )
+        .select(F.col(group_col), *hll_register_cols(col, p, seed))
         .groupBy(group_col, "reg")
         .agg(F.max("rho").alias("rho"))
     )
@@ -143,19 +148,21 @@ def _estimate_from(v_zero: int, s_int: int, p: int) -> float:
     return e_raw
 
 
+def hll_estimate_registers(rhos, p: int = 8) -> tuple[float, int, int]:
+    """(estimate, v_zero, s_int) from the rho of each non-empty
+    register, already on the driver (at most 2^p values) — the
+    driver twin of ``hll_estimate_df``."""
+    rhos = list(rhos)
+    kmax = _HASH_BITS - p + 1
+    v_zero = (1 << p) - len(rhos)
+    s_int = sum(1 << (kmax - r) for r in rhos) + v_zero * (1 << kmax)
+    return _estimate_from(v_zero, s_int, p), v_zero, s_int
+
+
 def hll_estimate(register_df: DataFrame, p: int = 8) -> tuple[float, int, int]:
     """Driver-side estimate from a register table: (estimate, v_zero,
     s_int).  Collects at most 2^p rows."""
-    m = 1 << p
-    kmax = _HASH_BITS - p + 1
-    row = register_df.agg(
-        F.count(F.lit(1)).alias("nz"),
-        F.coalesce(F.sum(F.expr(f"shiftleft(cast(1 as bigint), {kmax} - rho)")),
-                   F.lit(0).cast("long")).alias("s_nz"),
-    ).collect()[0]
-    v_zero = m - int(row["nz"])
-    s_int = int(row["s_nz"]) + v_zero * (1 << kmax)
-    return _estimate_from(v_zero, s_int, p), v_zero, s_int
+    return hll_estimate_registers((r[0] for r in register_df.select("rho").collect()), p)
 
 
 def hll_estimate_df(register_df: DataFrame, p: int = 8) -> DataFrame:
