@@ -1765,7 +1765,7 @@ def q_kdq_lineitem(spark, sf_dir):
     # the years. Above the caps the grouped distributed pass runs as
     # before, after a distinct job for the years.
     groups_nd = collect_group_features(
-        proj, "yr", list(_LI_DRIFT_COLS), None, det.build_sample_cap
+        proj, "yr", list(_LI_DRIFT_COLS), det.build_sample_cap
     )
     if groups_nd is not None:
         years = sorted(int(y) for y in groups_nd)

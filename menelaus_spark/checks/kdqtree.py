@@ -325,7 +325,6 @@ def collect_group_features(
     df: DataFrame,
     group_col: str,
     feature_cols: list[str],
-    groups: list | None,
     per_group_cap: int,
     total_cap: int = 1_000_000,
 ) -> dict | None:
@@ -338,11 +337,9 @@ def collect_group_features(
     None otherwise, in which case the caller runs the distributed
     chain unchanged. The LIMIT bounds the driver transfer even when
     the input is huge — the over-cap probe row just flips the
-    answer to None. ``groups=None`` collects every group present
-    (null groups are dropped), so the keys name the groups and the
-    caller needs no separate distinct job."""
-    if groups is not None:
-        df = df.filter(F.col(group_col).isin(list(groups)))
+    answer to None. Every non-null group present is collected, so
+    the keys name the groups and the caller needs no separate
+    distinct job."""
     pdf = (
         df.select(F.col(group_col).alias("__g"), *feature_cols)
         .limit(total_cap + 1)
@@ -355,8 +352,6 @@ def collect_group_features(
         if len(sub) > per_group_cap:
             return None
         out[g] = sub[list(feature_cols)].to_numpy(dtype=np.float64)
-    for g in groups or ():
-        out.setdefault(g, np.empty((0, len(feature_cols)), dtype=np.float64))
     return out
 
 

@@ -3,7 +3,7 @@ their meaning.
 
 At validation-table sizes each Spark job costs a fixed 40-60 ms, so the
 job count of an entry sets its time. The warm count of each entry is
-pinned here. Each driver fast path must return its distributed twin's
+bounded here. Each driver fast path must return its distributed twin's
 rows over the cap, the HLL rollup must build the same registers as the
 plain sketch operators, and the worker zip must be this checkout's own
 sources."""
@@ -24,7 +24,7 @@ import __spark_entry__ as entrymod  # noqa: E402
 from menelaus_spark.checks import kdqtree  # noqa: E402
 from menelaus_spark.operators import sketches as SK  # noqa: E402
 
-# warm jobs per entry at sf0.001 on 4 cores
+# at most this many warm jobs per entry at sf0.001 on 4 cores
 WARM_JOBS = {
     "hist_extendedprice": 4,
     "hellinger_returnflag": 4,
@@ -63,7 +63,7 @@ def test_warm_job_count(spark, sf_dir, name):
     spark.catalog.clearCache()
     _, n = _jobs(spark, lambda: q(spark, sf_dir).collect())
     spark.catalog.clearCache()
-    assert n == WARM_JOBS[name]
+    assert n <= WARM_JOBS[name]
 
 
 def test_kdq_over_cap_matches_fast_path(spark, sf_dir, monkeypatch):
