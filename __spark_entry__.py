@@ -24,6 +24,7 @@ import os
 import shutil
 import sys
 import tempfile
+import time
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -38,6 +39,33 @@ from menelaus_spark.verdicts import local_frame
 
 
 _PYFILES_SESSIONS: set = set()
+_PYFILES_PREFIX = "menelaus_spark_pyfiles_"
+# a worker zip not written or reused for this long is deleted: one is
+# left behind for every source state a session ever ran
+_PYFILES_MAX_AGE_S = 7 * 24 * 3600
+# the fixed name older checkouts wrote before the zips were
+# content-addressed (tools/submit_validation.py's menelaus_spark.zip is
+# a user's spark-submit artifact, not ours to delete)
+_PYFILES_LEGACY = "menelaus_spark_pyfiles.zip"
+
+
+def _prune_pyfiles_zips(out_dir: str, keep: str) -> None:
+    """Delete the legacy zip and every other worker zip in ``out_dir``
+    older than _PYFILES_MAX_AGE_S. Spark copies a zip when it is added
+    to a session, so deleting one never breaks a running session."""
+    cutoff = time.time() - _PYFILES_MAX_AGE_S
+    for fn in os.listdir(out_dir):
+        path = os.path.join(out_dir, fn)
+        if path == keep:
+            continue
+        try:
+            if fn == _PYFILES_LEGACY or (
+                fn.startswith(_PYFILES_PREFIX) and fn.endswith(".zip")
+                and os.path.getmtime(path) < cutoff
+            ):
+                os.unlink(path)
+        except OSError:
+            pass  # gone already, or another user's
 
 
 def _pyfiles_zip(repo: str) -> str:
@@ -45,7 +73,9 @@ def _pyfiles_zip(repo: str) -> str:
     their paths and bytes. Two checkouts on one host get the same zip
     only when their sources are identical, so neither's workers can
     import the other's code. The zip is written to a temporary name and
-    renamed into place, so no reader sees a partial one."""
+    renamed into place, so no reader sees a partial one. A reused zip is
+    touched, so its age is the time since its last use, and stale zips
+    of other source states are pruned (_prune_pyfiles_zips)."""
     import hashlib
     import zipfile
 
@@ -61,9 +91,13 @@ def _pyfiles_zip(repo: str) -> str:
         digest.update(f"{rel}\0{len(srcs[rel])}\0".encode())
         digest.update(srcs[rel])
     out_dir = tempfile.gettempdir()
-    zip_path = os.path.join(
-        out_dir, f"menelaus_spark_pyfiles_{digest.hexdigest()[:16]}.zip")
-    if not os.path.exists(zip_path):
+    zip_path = os.path.join(out_dir, f"{_PYFILES_PREFIX}{digest.hexdigest()[:16]}.zip")
+    if os.path.exists(zip_path):
+        try:
+            os.utime(zip_path)
+        except OSError:
+            pass  # another user's zip: its owner's sessions keep it fresh
+    else:
         fd, tmp = tempfile.mkstemp(dir=out_dir, suffix=".zip.tmp")
         try:
             with os.fdopen(fd, "wb") as f, zipfile.ZipFile(f, "w", zipfile.ZIP_DEFLATED) as zf:
@@ -74,6 +108,7 @@ def _pyfiles_zip(repo: str) -> str:
         except BaseException:
             os.unlink(tmp)
             raise
+    _prune_pyfiles_zips(out_dir, zip_path)
     return zip_path
 
 

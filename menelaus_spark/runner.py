@@ -84,6 +84,21 @@ def ks_critical(n: int, m: int, alpha: float = 0.05) -> float:
     return c * float(np.sqrt((n + m) / (n * m))) if n and m else float("inf")
 
 
+def _cancel_tasks(sc, tag: str, futures: list) -> None:
+    """Stop a run's driver-thread passes: drop the ones not started,
+    cancel the Spark jobs tagged ``tag`` and wait for the rest to end.
+    Spark cancels only jobs already submitted, so the cancel repeats
+    until every task is done, catching a job submitted after a round."""
+    from concurrent.futures import wait
+
+    for f in futures:
+        f.cancel()
+    while True:
+        sc.cancelJobsWithTag(tag)
+        if not wait(futures, timeout=0.1).not_done:
+            return
+
+
 class ValidationSuite:
     def __init__(
         self,
@@ -766,15 +781,10 @@ class ValidationSuite:
             ]
             self.hdm.set_state(states["hdddm"], ref)
         if self.kdq is not None and "kdq_tree" in states:
-            ref_pk = states.get("kdq_ref_pk")
-            ref_df = None
-            if ref_pk is not None:
-                part = df.filter(F.col(self.partition_col) == self._pk_value(df, ref_pk))
-                ref_df = audio.features_df(part, key_col=self.key_col).filter(
-                    _f0_clean()
-                ).drop(self.key_col)
-            self.kdq.set_state(states["kdq_tree"], ref_data=ref_df)
-            self._kdq_ref_pk = ref_pk
+            # the reference frame is rebuilt from _kdq_ref_pk when a
+            # drift needs it (_kdq_clean_feats_for), so none is restored
+            self.kdq.set_state(states["kdq_tree"])
+            self._kdq_ref_pk = states.get("kdq_ref_pk")
         self._ks_ref = states.get("ks_ref")
         self._psi_ref = states.get("psi_ref")
 
@@ -832,7 +842,17 @@ class ValidationSuite:
             }
         )
 
-    def _global_uniqueness_verdict(self, df: DataFrame, part_keys: list[str] | None = None):
+    @staticmethod
+    def _sorted_keys(values) -> list[str]:
+        """Raw partition values -> their string keys in partition-key
+        order. Sorted driver-side: an orderBy would add a range-partition
+        exchange plus its sampling job to collect O(partitions) rows.
+        Python's sort on the raw values matches Spark's orderBy for
+        every partition-key type we accept (int/str/date)."""
+        return [str(v) for v in sorted(
+            values, key=lambda v: (v is not None, v))]  # NULLS FIRST, like orderBy
+
+    def _global_uniqueness_verdict(self, df: DataFrame):
         """Cross-partition key uniqueness: within-partition dup checks
         cannot see a clip_id repeated in two partitions, so one global
         pass covers the whole table.
@@ -859,12 +879,9 @@ class ValidationSuite:
         one-shot verdict tables identical; in sketch mode the screen's
         per-partition registers additionally persist as checkpoint
         sidecars, so a RESUMED run scans only unvisited partitions."""
-        if part_keys is None:
-            part_keys = [
-                str(r[0]) for r in df.select(self.partition_col)
-                .distinct().orderBy(self.partition_col).collect()
-            ]
         if self.uniqueness_mode == "sketch":
+            part_keys = self._sorted_keys(
+                r[0] for r in df.select(self.partition_col).distinct().collect())
             verdict = self._uniqueness_sketch_screen(df, part_keys)
             if verdict is not None:
                 return verdict
@@ -1167,37 +1184,95 @@ class ValidationSuite:
         decisions run driver-side on the collected summaries. Job
         count is O(1) in the partition count (plus one kdq recount
         pass per drift event).
+
+        The scope is known before any Spark job runs: all of ``df`` on
+        a fresh checkpoint, else the rows outside the manifest's
+        completed partitions. So the decode — the suite's wall-clock
+        floor and the only pass that reads the binary column — is
+        started before any other pass, and on a warm plan it is the
+        first job Spark schedules. The constraint aggregation and the
+        exact global uniqueness pass follow it on driver threads, and
+        the summary pass on this one: Spark schedules concurrent jobs
+        FIFO and back-fills the slots the decode leaves idle, so the
+        small passes hide under it (spark_optimization_guide §2.6).
+        The partition list and the KS reference ranges are read from
+        the constraint aggregation's groups and min/max columns.
+
+        The frames a run caches (the feature frame, HDM's reference
+        frames) are released before it returns or raises. A run that
+        raises first cancels the Spark jobs its driver threads still
+        run, so the error does not wait for the decode to finish.
         """
-        # sort driver-side: an orderBy here would add a range-partition
-        # exchange plus its sampling job to collect O(partitions) rows.
-        # Python's sort on the raw values matches Spark's orderBy for
-        # every partition-key type we accept (int/str/date).
-        part_keys = [
-            str(v)
-            for v in sorted(
-                (r[0] for r in df.select(self.partition_col).distinct().collect()),
-                key=lambda v: (v is not None, v),  # NULLS FIRST, like orderBy
-            )
-        ]
+        import uuid
+        from concurrent.futures import ThreadPoolExecutor
+
         done = set(self.manifest.completed_keys())
-        todo = [pk for pk in part_keys if pk not in done]
         if done:
             self._restore(df, self.manifest.last_states())
+        scoped = self._scope(df, done)
+        sc = self.spark.sparkContext
+        tag = f"menelaus-suite-{uuid.uuid4().hex}"
+        pool = ThreadPoolExecutor(max_workers=3)
+        futures: list = []
 
-        if todo:
-            self._run_vectorized(df, todo)
+        def submit(fn, *args):
+            # a pool thread does not inherit this thread's job tags, so
+            # each task tags the jobs it submits itself
+            def tagged():
+                sc.addJobTag(tag)
+                try:
+                    return fn(*args)
+                finally:
+                    sc.removeJobTag(tag)
+            futures.append(pool.submit(tagged))
+            return futures[-1]
 
-        verdict_rows = self.manifest.replayed_verdicts()
-        if verify_lineage and done:
-            # only partitions REPLAYED from a prior run need the check —
-            # ones validated just now fingerprinted their own data
-            verdict_rows = verdict_rows + self._lineage_verdicts(df, done)
-        if self.global_uniqueness:
-            verdict_rows = verdict_rows + [self._global_uniqueness_verdict(df, part_keys)]
-        if self.neardup_rate_max is not None:
-            verdict_rows = verdict_rows + self._neardup_verdicts(df)
-        if self.hot_key_max_frac is not None:
-            verdict_rows = verdict_rows + self._hotkey_verdicts(df)
+        feats = None
+        try:
+            feats_future = None
+            if self.kdq is not None or self._quality_active():
+                feats = audio.features_df(
+                    scoped, key_col=self.key_col,
+                    carry_cols=self._feats_carry_cols(with_part=True),
+                    quality=self.quality_rules is not None,
+                    byte_len=self._payload_in_decode(),
+                    header=self.meta_rules is not None,
+                ).persist()
+                feats_future = submit(feats.count)
+            stat_future = submit(
+                scoped.groupBy(self.partition_col).agg(*self._constraint_aggs()).collect)
+            # sketch mode reads the manifest fingerprints this run
+            # writes, so only the exact pass can start now
+            uniq_future = None
+            if self.global_uniqueness and self.uniqueness_mode == "exact":
+                uniq_future = submit(self._global_uniqueness_verdict, df)
+            self._run_vectorized(df, scoped, submit, feats, feats_future, stat_future)
+
+            verdict_rows = self.manifest.replayed_verdicts()
+            if verify_lineage and done:
+                # only partitions REPLAYED from a prior run need the check —
+                # ones validated just now fingerprinted their own data
+                verdict_rows = verdict_rows + self._lineage_verdicts(df, done)
+            if self.global_uniqueness:
+                verdict_rows = verdict_rows + [
+                    uniq_future.result() if uniq_future is not None
+                    else self._global_uniqueness_verdict(df)]
+            if self.neardup_rate_max is not None:
+                verdict_rows = verdict_rows + self._neardup_verdicts(df)
+            if self.hot_key_max_frac is not None:
+                verdict_rows = verdict_rows + self._hotkey_verdicts(df)
+        except BaseException:
+            # a failed run raises now, not once the decode and the
+            # uniqueness pass have read the whole table
+            _cancel_tasks(sc, tag, futures)
+            raise
+        finally:
+            # join the passes still in flight before uncaching their input
+            pool.shutdown(wait=True)
+            if feats is not None:
+                feats.unpersist()
+            if self.hdm is not None:
+                self.hdm._release_owned()
         verdicts = verdicts_df(self.spark, verdict_rows)
         import os
 
@@ -1212,6 +1287,15 @@ class ValidationSuite:
         else:
             violations_df = empty_violations(self.spark)
         return verdicts, violations_df
+
+    def _scope(self, df: DataFrame, done: set[str]) -> DataFrame:
+        """The rows a run validates: every partition of ``df`` not in
+        the manifest's ``done`` keys. Built without a Spark job; a done
+        key no longer in ``df`` filters nothing."""
+        if not done:
+            return df
+        return df.filter(~F.col(self.partition_col).isin(
+            [self._pk_value(df, pk) for pk in sorted(done)]))
 
     # ---------------------------------------- vectorized-over-partitions
 
@@ -1233,8 +1317,31 @@ class ValidationSuite:
             out[r["__pk"]][int(r["leaf"])] = int(r["count"])
         return out
 
+    def _summary_probe(self, scoped: DataFrame):
+        """The summary pass's driver fast path, first step: under the
+        row cap (probed by the LIMIT itself), ONE bounded Arrow collect
+        of the raw projection replaces the explode + salted aggregation
+        (see _global_summary_pass). It needs neither the partition list
+        nor the KS ranges, so it runs while the constraint aggregation
+        is in flight. Returns the collected frame, or None when the psi
+        column is not string-typed (cast-to-string is then not the
+        identity, and Java's double->string formatting is not
+        replicated driver-side)."""
+        if self.psi_col and not isinstance(
+            scoped.schema[self.psi_col].dataType, T.StringType
+        ):
+            return None
+        sel = [F.col(self.partition_col).cast("string").alias("__pk")]
+        sel += [F.col(c).cast("double").alias(f"__ks_{c}") for c in self.ks_cols]
+        if self.psi_col:
+            sel.append(F.col(self.psi_col).alias("__psi"))
+        if self.hdm is not None:
+            sel += [F.col(c).cast("double").alias(f"__hdm_{c}")
+                    for c in self.hdm_cols]
+        return scoped.select(*sel).limit(SUMMARY_DRIVER_ROW_CAP + 1).toPandas()
+
     def _global_summary_pass(
-        self, scoped: DataFrame, todo: list[str], ranges: dict
+        self, scoped: DataFrame, todo: list[str], ranges: dict, pdf
     ) -> tuple[dict, dict]:
         """KS histograms + PSI frequencies + HDM distinct-value
         summaries for EVERY partition in ONE exploded salted
@@ -1244,36 +1351,20 @@ class ValidationSuite:
         driver cap still guards the HDM side: past it, HDM falls back
         to its own per-batch summary jobs.
 
+        ``pdf`` is _summary_probe's collect. When it is under the cap
+        and the gates hold, the binning / counting is done by the
+        proven numpy twins (histograms.bin_weighted_driver replicates
+        bin_index_col's IEEE arithmetic bit-for-bit) and no further job
+        runs. The remaining gate, preserving exact equivalence with the
+        exploded pass: no NaN in the collected KS columns (a null
+        clamps to the range floor while NaN clamps to the ceiling in
+        the JVM expression, and pandas cannot tell them apart). Over
+        the cap or on a gate miss, the exploded pass runs unchanged —
+        the 100-TB path.
+
         Returns (kspsi_by, hdm_sum_by)."""
         hdm_cols = self.hdm_cols if self.hdm is not None else []
-        # Driver fast path: under the row cap (probed by the LIMIT
-        # itself), ONE bounded Arrow collect of the raw projection
-        # replaces the explode + salted aggregation, with the binning /
-        # counting done by the proven numpy twins
-        # (histograms.bin_weighted_driver replicates bin_index_col's
-        # IEEE arithmetic bit-for-bit). Gates, each preserving exact
-        # equivalence with the exploded pass:
-        # - psi column must be string-typed (cast-to-string is then
-        #   the identity; Java double->string formatting is not
-        #   replicated driver-side);
-        # - no NaN in the collected KS columns (a null clamps to the
-        #   range floor while NaN clamps to the ceiling in the JVM
-        #   expression, and pandas cannot tell them apart).
-        # Over the cap or on a gate miss, the exploded pass runs
-        # unchanged — the 100-TB path.
-        psi_ok = (not self.psi_col) or isinstance(
-            scoped.schema[self.psi_col].dataType, T.StringType
-        )
-        if psi_ok:
-            sel = [F.col(self.partition_col).cast("string").alias("__pk")]
-            sel += [F.col(c).cast("double").alias(f"__ks_{c}")
-                    for c in self.ks_cols]
-            if self.psi_col:
-                sel.append(F.col(self.psi_col).alias("__psi"))
-            sel += [F.col(c).cast("double").alias(f"__hdm_{c}")
-                    for c in hdm_cols]
-            pdf = scoped.select(*sel).limit(
-                SUMMARY_DRIVER_ROW_CAP + 1).toPandas()
+        if pdf is not None:
             ks_ok = len(pdf) <= SUMMARY_DRIVER_ROW_CAP and not any(
                 np.isnan(pdf[f"__ks_{c}"].to_numpy(np.float64)).any()
                 for c in self.ks_cols
@@ -1336,7 +1427,6 @@ class ValidationSuite:
                 F.lit("psi").alias("kind"),
                 F.col(self.psi_col).cast("string").alias("key"),
             ))
-        hdm_cols = self.hdm_cols if self.hdm is not None else []
         for c in hdm_cols:
             v = F.col(c).cast("double")
             structs.append(F.struct(
@@ -1432,78 +1522,46 @@ class ValidationSuite:
         ary, _ = self.kdq._collect_build_sample(clean_part_feats)
         return self.kdq.build_tree_from_sample(ary)
 
-    def _run_vectorized(self, df: DataFrame, todo: list[str]) -> None:
+    def _run_vectorized(self, df: DataFrame, scoped: DataFrame, submit,
+                        feats: DataFrame | None, feats_future, stat_future) -> None:
+        """Validate the partitions of ``scoped``. run() has already
+        submitted, in this order, global pass 3 (decode + features +
+        quality metrics into the cached ``feats``, on ``feats_future``)
+        and global pass 1 (all constraint stats + min/max, one shuffle,
+        on ``stat_future``). ``submit(fn, *args)`` runs a further pass
+        on run()'s driver thread pool and returns its future."""
         t0 = time.time()
-        pv = [self._pk_value(df, pk) for pk in todo]
-        scoped = df.filter(F.col(self.partition_col).isin(pv))
-
-        # The decode pass (pass 3) is independent of passes 1-2, and it
-        # is the wall-clock floor of the suite (the only pass that reads
-        # the binary column). Kick its materialization off on a driver
-        # thread so the constraint aggregation and the summary pass run
-        # WHILE the decode occupies the executors — Spark schedules
-        # concurrent jobs FIFO and back-fills idle slots, so the two
-        # metadata scans hide under the decode instead of following it
-        # (spark_optimization_guide §2.6). Same jobs, same results; only
-        # the submission order changes.
-        from concurrent.futures import ThreadPoolExecutor
-
-        # Pass 2 needs ONLY the KS bin ranges from pass 1 (fresh runs:
-        # the reference partition's min/max), so those come from a tiny
-        # dedicated min/max job run FIRST — before the decode job is
-        # submitted, since a FIFO scheduler would otherwise queue its
-        # tasks behind the whole decode and stall pass 2 by seconds.
-        run_summary = bool(self.ks_cols or self.psi_col or self.hdm is not None)
-        ranges: dict = {}
-        if run_summary and self.ks_cols and not self._ks_ref:
-            mm = scoped.filter(
-                F.col(self.partition_col) == self._pk_value(df, todo[0])
-            ).agg(*[
-                a for c in self.ks_cols for a in (
-                    F.min(F.col(c).cast("double")).alias(f"__mm_lo_{c}"),
-                    F.max(F.col(c).cast("double")).alias(f"__mm_hi_{c}"),
-                )
-            ]).collect()[0].asDict()
-            ranges = {c: (mm[f"__mm_lo_{c}"], mm[f"__mm_hi_{c}"])
-                      for c in self.ks_cols}
-        elif run_summary and self.ks_cols:
-            # resumed run: bin against the stored reference ranges
-            ranges = {c: (self._ks_ref[c]["lo"], self._ks_ref[c]["hi"])
-                      for c in self.ks_cols}
-
-        feats = None
-        feats_future = None
-        pool = ThreadPoolExecutor(max_workers=2)
-        if self.kdq is not None or self._quality_active():
-            feats = audio.features_df(
-                scoped, key_col=self.key_col,
-                carry_cols=self._feats_carry_cols(with_part=True),
-                quality=self.quality_rules is not None,
-                byte_len=self._payload_in_decode(),
-                header=self.meta_rules is not None,
-            ).persist()
-            feats_future = pool.submit(feats.count)
-
-        # global pass 1: all constraint stats + min/max, one shuffle —
-        # submitted on a driver thread so it runs CONCURRENTLY with
-        # pass 2 (guide §2.6), both hiding under the decode pass,
-        # instead of strictly sequentially.
-        stat_future = pool.submit(
-            scoped.groupBy(self.partition_col).agg(*self._constraint_aggs()).collect
-        )
-
         # global pass 2: KS histograms + PSI frequencies + HDM
         # distinct-value summaries for every partition, all in ONE
-        # exploded salted aggregation (one scan of the numeric/codec
-        # projection). The sequential HDM updates then run driver-side
-        # on the collected summaries — zero Spark jobs per partition,
-        # keeping the suite's job count O(1) in the partition count
+        # bounded collect or exploded salted aggregation. The sequential
+        # HDM updates then run driver-side on the collected summaries —
+        # zero Spark jobs per partition, keeping the suite's job count
+        # O(1) in the partition count. The fast path's collect needs
+        # nothing from pass 1, so it runs while pass 1 is in flight.
+        run_summary = bool(self.ks_cols or self.psi_col or self.hdm is not None)
+        probe = self._summary_probe(scoped) if run_summary else None
+
+        # pass 1's groups are the partitions to validate; on a fresh
+        # run the first one's min/max are the KS reference ranges, a
+        # resumed run bins against the stored reference ranges
+        stat_rows = stat_future.result()
+        stats_by = {str(r[self.partition_col]): r.asDict() for r in stat_rows}
+        todo = self._sorted_keys(r[self.partition_col] for r in stat_rows)
+        if not todo:  # every partition is done: the decode ran over no rows
+            if feats_future is not None:
+                feats_future.result()
+            return
+        if self._ks_ref:
+            ranges = {c: (self._ks_ref[c]["lo"], self._ks_ref[c]["hi"])
+                      for c in self.ks_cols}
+        else:
+            ranges = {c: (stats_by[todo[0]][f"__mm_lo_{c}"],
+                          stats_by[todo[0]][f"__mm_hi_{c}"])
+                      for c in self.ks_cols}
         kspsi_by: dict = {}
         hdm_sum_by: dict = {}
         if run_summary:
-            kspsi_by, hdm_sum_by = self._global_summary_pass(scoped, todo, ranges)
-        stat_rows = stat_future.result()
-        stats_by = {str(r[self.partition_col]): r.asDict() for r in stat_rows}
+            kspsi_by, hdm_sum_by = self._global_summary_pass(scoped, todo, ranges, probe)
 
         # global pass 3 (the only pandas stage): decode + features +
         # quality metrics for ALL partitions, already running on the
@@ -1519,7 +1577,7 @@ class ValidationSuite:
         # the two independent jobs back-fill each other's idle slots
         qcounts_future = None
         if self._quality_active():
-            qcounts_future = pool.submit(self._quality_counts_by_part, feats, todo)
+            qcounts_future = submit(self._quality_counts_by_part, feats, todo)
         self._kdq_groups = None
         if self.kdq is not None:
             clean = feats.filter(_f0_clean())
@@ -1579,7 +1637,6 @@ class ValidationSuite:
                 self._kdq_fresh_ref = False
         if qcounts_future is not None:
             qcounts_by = qcounts_future.result()
-        pool.shutdown(wait=False)
         nan_by: dict = {}
         if feats is not None and self.kdq is None:
             # no kdq leaf totals to derive decode failures from — one
@@ -1708,6 +1765,3 @@ class ValidationSuite:
 
             self._finish_partition(pk, n_rows, fingerprint, verdicts, violations, t_pk,
                                    metrics=self._metrics_from_stats(stats))
-
-        if feats is not None:
-            feats.unpersist()

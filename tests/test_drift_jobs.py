@@ -12,6 +12,7 @@ import functools
 import os
 import sys
 import tempfile
+import time
 import uuid
 import zipfile
 
@@ -145,6 +146,27 @@ def test_pyfiles_zip_is_content_addressed(tmp_path, monkeypatch):
         assert zf.read("menelaus_spark/checks/hdm.py") == b"Y = 3\n"
     # nothing but the finished zips is left in the directory
     assert sorted(os.listdir(out)) == sorted(os.path.basename(p) for p in (first, changed))
+
+    # zips unused for longer than the age limit and the legacy fixed
+    # name are pruned; a reused zip is touched, so it stays. The
+    # spark-submit zip tools/submit_validation.py packages is kept.
+    stale = time.time() - entrymod._PYFILES_MAX_AGE_S - 60
+    old = out / "menelaus_spark_pyfiles_0123456789abcdef.zip"
+    for path in (old, out / "menelaus_spark_pyfiles.zip", out / "menelaus_spark.zip",
+                 out / "unrelated.zip"):
+        path.write_bytes(b"zip")
+        os.utime(path, (stale, stale))
+    os.utime(first, (stale, stale))
+    assert entrymod._pyfiles_zip(repo) == changed
+    assert os.path.exists(changed) and not os.path.exists(first)
+    (tmp_path / "a" / "menelaus_spark" / "checks" / "hdm.py").write_text("Y = 2\n")
+    assert entrymod._pyfiles_zip(repo) == first
+    for path in (first, changed):
+        os.utime(path, (stale, stale))
+    assert entrymod._pyfiles_zip(repo) == first  # reused: touched, not pruned
+    assert os.path.getmtime(first) > stale + 60
+    assert sorted(os.listdir(out)) == sorted(
+        [os.path.basename(first), "menelaus_spark.zip", "unrelated.zip"])
 
 
 def test_shipped_zip_holds_this_checkout():

@@ -943,3 +943,51 @@ def test_driver_fast_paths_match_distributed(spark, tmp_path, request, case):
     df = request.getfixturevalue(fixture)
     _check_kdq_fast_path(spark, tmp_path, df, make)
     _check_summary_fast_path(spark, tmp_path, df, make)
+
+
+def _distinct_scope(self, df, done):
+    """The scoping runs used before the constraint pass supplied the
+    partition list: a distinct job for the keys, then an ``isin`` of
+    the ones not done."""
+    keys = self._sorted_keys(
+        r[0] for r in df.select(self.partition_col).distinct().collect())
+    todo = [pk for pk in keys if pk not in done]
+    return df.filter(F.col(self.partition_col).isin(
+        [self._pk_value(df, pk) for pk in todo]))
+
+
+@pytest.mark.parametrize("case", ["gone_partition", "string_partition"])
+def test_resume_scope_matches_distinct_scoping(spark, tmp_path, monkeypatch, case):
+    """A resumed run validates the partitions the manifest lacks. Its
+    scope is built without a job, as the complement of the done keys;
+    it must give the same partitions, verdict rows and manifest records
+    as an ``isin`` of the table's keys left to do. Two cases: a done
+    partition that is no longer in the table, and a string-typed
+    partition column."""
+    import shutil
+
+    df = spark.createDataFrame(
+        tables.audio_table(spark, n_rows=600, n_parts=6, null_frac=0.02).toPandas())
+    if case == "string_partition":
+        df = df.withColumn("part", F.col("part").cast("string"))
+    first = _suite(spark, tmp_path, "first")
+    first.run(df.filter(F.col("part").isin(0, 1, 2)))
+    if case == "gone_partition":
+        df = df.filter(F.col("part") != 1)
+
+    def resume(name):
+        shutil.copytree(first.manifest.dir, str(tmp_path / name))
+        suite = _suite(spark, tmp_path, name)
+        verdicts, _ = suite.run(df)
+        rows = sorted(json.dumps(r.asDict(recursive=True), sort_keys=True)
+                      for r in verdicts.collect())
+        recs = [{k: v for k, v in r.items() if k != "elapsed_s"}
+                for r in suite.manifest.records]
+        return rows, recs
+
+    rows, recs = resume("complement")
+    monkeypatch.setattr(ValidationSuite, "_scope", _distinct_scope)
+    want_rows, want_recs = resume("distinct")
+    assert [r["partition_key"] for r in recs] == ["0", "1", "2", "3", "4", "5"]
+    assert rows == want_rows
+    assert json.dumps(recs, sort_keys=True) == json.dumps(want_recs, sort_keys=True)

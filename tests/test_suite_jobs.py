@@ -1,0 +1,100 @@
+"""The suite run submits few Spark jobs and leaves nothing cached.
+
+At validation-table sizes each Spark job costs a fixed 40-60 ms, so the
+job count of a suite run sets much of its time. A warm run of the
+benchmark's ``suite_cold`` configuration is bounded here, and every
+frame a run caches must be released when it returns or raises."""
+
+import os
+import sys
+
+import pytest
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from menelaus_spark.runner import ValidationSuite  # noqa: E402
+from perfbench.workloads import Context, SuiteCold  # noqa: E402
+
+# at most this many jobs in a warm suite_cold run at smoke size on 4
+# cores (18 while the partition list and the KS ranges had jobs of
+# their own)
+WARM_SUITE_JOBS = 14
+
+
+def _job_ids(sc) -> set[int]:
+    # new ids with no job group cover the jobs of every driver thread:
+    # the suite's pool threads do not inherit a group set on this one
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return set(sc.statusTracker().getJobIdsForGroup())
+
+
+def _cached(spark) -> int:
+    return spark._jsparkSession.sharedState().cacheManager().cachedData().size()
+
+
+@pytest.fixture(scope="module")
+def suite_cold(spark, tmp_path_factory):
+    """The benchmark's suite_cold workload at smoke size (200 clips in
+    10 partitions, seed 42) and its table, read once."""
+    ctx = Context(spark, str(tmp_path_factory.mktemp("suite_cold")), 42, {"clips": 200})
+    wl = SuiteCold(ctx)
+    wl.prepare()
+    return wl, spark.read.parquet(wl.path)
+
+
+def test_suite_cold_warm_job_count(spark, suite_cold):
+    wl, df = suite_cold
+    wl.suite(wl.fresh_checkpoint()).run(df)  # cold: codegen, first plans
+    before = _job_ids(spark.sparkContext)
+    wl.suite(wl.fresh_checkpoint()).run(df)
+    n = len(_job_ids(spark.sparkContext) - before)
+    assert n <= WARM_SUITE_JOBS
+
+
+def test_run_releases_cached_frames(spark, suite_cold):
+    wl, df = suite_cold
+    n0 = _cached(spark)
+    ckpt = wl.fresh_checkpoint()
+    wl.suite(ckpt).run(df.filter("part < 4"))
+    assert _cached(spark) == n0
+    # a resume restores the HDM and kdq references from the table
+    wl.suite(ckpt).run(df)
+    assert _cached(spark) == n0
+
+
+def test_run_releases_cached_frames_when_it_raises(spark, suite_cold, monkeypatch):
+    wl, df = suite_cold
+    n0 = _cached(spark)
+    finish = ValidationSuite._finish_partition
+    calls = []
+
+    def fail_second(self, *args, **kwargs):
+        calls.append(1)
+        if len(calls) == 2:  # after HDM has owned a reference frame
+            raise RuntimeError("partition write failed")
+        return finish(self, *args, **kwargs)
+
+    monkeypatch.setattr(ValidationSuite, "_finish_partition", fail_second)
+    with pytest.raises(RuntimeError, match="partition write failed"):
+        wl.suite(wl.fresh_checkpoint()).run(df)
+    assert _cached(spark) == n0
+
+
+def test_run_that_raises_cancels_its_passes(spark, suite_cold, monkeypatch):
+    # the probe fails on the main thread just after the decode, the
+    # constraint pass and the uniqueness pass were submitted: they are
+    # cancelled, not waited for, and the probe's error is the one raised
+    wl, df = suite_cold
+    sc = spark.sparkContext
+    tags = sc.getJobTags()
+
+    def fail(self, scoped):
+        raise RuntimeError("probe failed")
+
+    monkeypatch.setattr(ValidationSuite, "_summary_probe", fail)
+    before = _job_ids(sc)
+    with pytest.raises(RuntimeError, match="probe failed"):
+        wl.suite(wl.fresh_checkpoint()).run(df)
+    new = _job_ids(sc) - before
+    assert "FAILED" in {sc.statusTracker().getJobInfo(j).status for j in new}
+    assert sc.getJobTags() == tags
