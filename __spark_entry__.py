@@ -35,7 +35,7 @@ import menelaus_spark  # noqa: F401  (ensures PYTHONPATH export for workers)
 from menelaus_spark import audio, tables
 from menelaus_spark.operators import dedup, similarity
 from menelaus_spark.operators import text as T
-from menelaus_spark.verdicts import local_frame
+from menelaus_spark.verdicts import driver_rows, local_frame
 
 
 _PYFILES_SESSIONS: set = set()
@@ -1681,18 +1681,17 @@ def _lineitem_year_proj(spark, sf_dir):
     ).coalesce(_small_proj_partitions(spark)).persist()
 
 
-def _batch_summaries(df, batch_col: str, cols: list[str],
-                     driver_row_cap: int = 1_000_000) -> dict:
+def _batch_summaries(df, batch_col: str, cols: list[str]) -> dict:
     """ALL per-batch (value, count) summaries in ONE pass ->
     {batch_value: {col: (values, counts)}} — the same feed the
     ValidationSuite gives HDM, so a drift sequence over k batches costs
     one Spark job instead of one summary job per batch. Null values
     are kept as groups (n/min/max derive from the summary).
 
-    Fast path (r06): under ``driver_row_cap`` rows (probed by the
-    LIMIT itself — no count job), ONE bounded Arrow collect of the raw
-    projection replaces the explode + two-stage salted aggregation,
-    and np.unique does the (value -> count) grouping driver-side. The
+    Fast path (r06): under the ``batch_summaries`` row cap, ONE bounded
+    Arrow collect of the raw projection (driver_rows) replaces the
+    explode + two-stage salted aggregation, and np.unique does the
+    (value -> count) grouping driver-side. The
     per-value counts are identical; null/NaN rows consolidate into one
     NaN entry instead of Spark's separate null/NaN groups (both arrive
     driver-side as NaN anyway), which every consumer treats
@@ -1703,13 +1702,12 @@ def _batch_summaries(df, batch_col: str, cols: list[str],
 
     from menelaus_spark.operators import histograms as H
 
-    sel = df.select(
+    pdf = driver_rows(df.select(
         F.col(batch_col).alias("__b"),
         *[F.col(c).cast("double").alias(c) for c in cols],
-    ).limit(driver_row_cap + 1)
-    pdf = sel.toPandas()
+    ), "batch_summaries")
     out: dict = {}
-    if len(pdf) <= driver_row_cap:
+    if pdf is not None:
         for b, g in pdf.groupby("__b"):
             d = {}
             for c in cols:
@@ -1755,19 +1753,32 @@ def q_hdddm_lineitem(spark, sf_dir):
     # the state machine then runs driver-side
     sums = _batch_summaries(proj, "yr", _LI_DRIFT_COLS)
     years = sorted(int(y) for y in sums)
+    return _hdm_sequence_frame(spark, det, [
+        (str(yr), proj.filter(F.col("yr") == yr).drop("yr"), sums[yr])
+        for yr in years
+    ], _epsilon_beta, "epsilon double, beta double")
+
+
+def _hdm_sequence_frame(spark, det, batches, stats, ddl: str):
+    """One (year, state, *ddl) row per (label, DataFrame, summary)
+    batch of an HDM detector: ``stats(det)`` names each update's
+    diagnostics. The batch frames the detector cached are released."""
     rows = []
-    for i, yr in enumerate(years):
-        batch = proj.filter(F.col("yr") == yr).drop("yr")
-        if i == 0:
-            det.set_reference(batch, batch_id=str(yr), summary_values=sums[yr])
-            rows.append((str(yr), "reference", None, None))
-        else:
-            state = det.update(batch, batch_id=str(yr), summary_values=sums[yr])
-            rows.append((str(yr), state or "pass",
-                         det.epsilon[-1] if det.epsilon else None, det.beta))
-    return local_frame(
-        spark, rows, "year string, state string, epsilon double, beta double"
-    )
+    try:
+        for i, (lbl, batch, sv) in enumerate(batches):
+            if i == 0:
+                det.set_reference(batch, batch_id=lbl, summary_values=sv)
+                rows.append({"year": lbl, "state": "reference"})
+            else:
+                state = det.update(batch, batch_id=lbl, summary_values=sv)
+                rows.append({"year": lbl, "state": state or "pass", **stats(det)})
+    finally:
+        det._release_owned()
+    return local_frame(spark, rows, "year string, state string, " + ddl)
+
+
+def _epsilon_beta(det) -> dict:
+    return {"epsilon": det.epsilon[-1] if det.epsilon else None, "beta": det.beta}
 
 
 def q_kdq_lineitem(spark, sf_dir):
@@ -1815,7 +1826,7 @@ def q_kdq_lineitem(spark, sf_dir):
 
         def counts_for(tree, scope_years):
             return distributed_leaf_counts_by_group(
-                proj, "yr", list(_LI_DRIFT_COLS), tree, scope_years, det.n_salt
+                proj, "yr", list(_LI_DRIFT_COLS), tree, scope_years
             )
 
         def build_from(yr):
@@ -1941,19 +1952,10 @@ def q_cdbd_example_confidence(spark, sf_dir):
     sums = _batch_summaries(df, "year", ["confidence"])
     years = sorted(sums)
     det = CDBD(detect_batch=2, seed=42)
-    rows = []
-    for i, yr in enumerate(years):
-        batch = df.filter(F.col("year") == yr).select("confidence")
-        if i == 0:
-            det.set_reference(batch, batch_id=str(yr), summary_values=sums[yr])
-            rows.append((str(yr), "reference", None, None))
-        else:
-            state = det.update(batch, batch_id=str(yr), summary_values=sums[yr])
-            rows.append((str(yr), state or "pass",
-                         det.epsilon[-1] if det.epsilon else None, det.beta))
-    return local_frame(
-        spark, rows, "year string, state string, epsilon double, beta double"
-    )
+    return _hdm_sequence_frame(spark, det, [
+        (str(yr), df.filter(F.col("year") == yr).select("confidence"), sums[yr])
+        for yr in years
+    ], _epsilon_beta, "epsilon double, beta double")
 
 
 def _drift_sequence_rows(spark, det, batches):
@@ -1962,19 +1964,11 @@ def _drift_sequence_rows(spark, det, batches):
     3 sequences then run entirely driver-side after that single job);
     report via the detector's own diagnostic dicts so post-drift rows
     never show a stale beta."""
-    rows = []
-    for i, (lbl, batch, sv) in enumerate(batches):
-        if i == 0:
-            det.set_reference(batch, batch_id=lbl, summary_values=sv)
-            rows.append((lbl, "reference", None, None, None))
-        else:
-            state = det.update(batch, batch_id=lbl, summary_values=sv)
-            tb = det.total_batches
-            rows.append((lbl, state or "pass", det.distances.get(tb),
-                         det.epsilon_values.get(tb), det.thresholds.get(tb)))
-    out = local_frame(
-        spark, rows, "year string, state string, dist double, eps double, beta double"
-    )
+    out = _hdm_sequence_frame(spark, det, batches, lambda d: {
+        "dist": d.distances.get(d.total_batches),
+        "eps": d.epsilon_values.get(d.total_batches),
+        "beta": d.thresholds.get(d.total_batches),
+    }, "dist double, eps double, beta double")
     r6 = lambda c: F.round(F.col(c) * F.lit(1000000.0)) / F.lit(1000000.0)  # noqa: E731
     return out.select(
         "year", "state", r6("dist").alias("dist6"),

@@ -39,12 +39,13 @@ the accumulated reference is held as a MERGEABLE per-feature
 counts is exactly equal to binning raw rows, for ANY future
 (range, nbins) edges — so raw reference data is never re-scanned:
 each update scans only the incoming batch once to extend the summary.
-While the summary is small (<= ``driver_value_cap`` entries) it lives
-on the driver and histograms are pure numpy (zero Spark jobs for the
-reference side); past the cap it spills to a persisted compact
-DataFrame and histograms run as one salted weighted aggregation over
-(distinct values), not rows.  Both paths use the identical
-floor((v-lo)/width) double arithmetic, so results are bit-equal.
+While the summary is small (at most the ``hdm_values`` entry of
+``verdicts.DRIVER_ROW_CAPS``) it lives on the driver and histograms
+are pure numpy (zero Spark jobs for the reference side); past the cap
+it spills to a persisted compact DataFrame and histograms run as one
+salted weighted aggregation over (distinct values), not rows.  Both
+paths use the identical floor((v-lo)/width) double arithmetic, so
+results are bit-equal.
 The reference's pandas ``sample(n, replace=True)`` bootstrap becomes
 a seeded driver-side Poissonized resample of the reference HISTOGRAM
 (bin count ~ Poisson(f * c_b) — the exact distribution of
@@ -64,7 +65,7 @@ from pyspark.sql import functions as F
 from menelaus_spark.functions import distances as dist
 from menelaus_spark.functions import stats
 from menelaus_spark.operators import histograms as H
-from menelaus_spark.verdicts import local_frame
+from menelaus_spark.verdicts import DRIVER_ROW_CAPS, driver_rows, local_frame
 
 DRIFT = "drift"
 
@@ -87,8 +88,6 @@ class HDM:
         subsets: int = 5,
         order_col: str | None = None,
         seed: int = 42,
-        n_salt: int = 16,
-        driver_value_cap: int = 2_000_000,
     ):
         if callable(divergence):
             self.distance_function = divergence
@@ -104,8 +103,6 @@ class HDM:
         self.subsets = subsets
         self.order_col = order_col
         self.seed = seed
-        self.n_salt = n_salt
-        self.driver_value_cap = driver_value_cap
 
         self.total_batches = 0
         self.batches_since_reset = 0
@@ -409,16 +406,15 @@ class HDM:
         ex = df.select(F.explode(F.array(*structs)).alias("fv")).select(
             "fv.feature", "fv.value"
         )
-        return H.salted_count(ex, ["feature", "value"], n_salt=self.n_salt)
+        return H.salted_count(ex, ["feature", "value"])
 
     def _summarize(self, df: DataFrame) -> dict:
-        """Build a batch summary; collect to the driver while small
-        (<= driver_value_cap entries), else keep as a persisted compact
-        DataFrame. The limit(cap+1) bounds driver transfer: under the
-        cap it returns every summary row in one Arrow action."""
+        """Build a batch summary; collect it to the driver while it
+        fits the ``hdm_values`` cap (driver_rows), else keep it as a
+        persisted compact DataFrame."""
         sdf = self._batch_summary_df(df).persist()
-        pdf = sdf.limit(self.driver_value_cap + 1).toPandas()
-        if len(pdf) <= self.driver_value_cap:
+        pdf = driver_rows(sdf, "hdm_values")
+        if pdf is not None:
             sdf.unpersist()
             out = {c: (np.array([]), np.array([])) for c in self._input_cols}
             for c, g in pdf.groupby("feature"):
@@ -497,7 +493,7 @@ class HDM:
                 np.add.at(un, inv, n)
                 data[c] = (uv, un)
                 total += len(uv)
-            if total <= self.driver_value_cap:
+            if total <= DRIVER_ROW_CAPS["hdm_values"]:
                 return {"mode": "driver", "data": data}
             merged = {"mode": "driver", "data": data}
             return {"mode": "cluster", "df": self._summary_as_df(merged).persist()}
@@ -547,9 +543,7 @@ class HDM:
         binned = tagged.select(
             "__role", "feature", bin_expr.alias("bin"), "count"
         ).filter(F.col("bin").isNotNull())
-        counts = H.salted_weighted_count(
-            binned, ["__role", "feature", "bin"], "count", n_salt=self.n_salt
-        )
+        counts = H.salted_weighted_count(binned, ["__role", "feature", "bin"], "count")
         mats = [np.zeros((len(cols), nbins)) for _ in range(2)]
         fidx = {c: i for i, c in enumerate(cols)}
         for row in counts.collect():

@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from menelaus_spark.functions.distances import dasu_smooth, kl_divergence
+from menelaus_spark.verdicts import driver_rows
 
 
 class KDQTreePartitioner:
@@ -280,7 +281,7 @@ def _leaf_col_or_udf(df: DataFrame, feature_cols: list[str],
 
 
 def distributed_leaf_counts(
-    df: DataFrame, feature_cols: list[str], tree: KDQTreePartitioner, n_salt: int = 16
+    df: DataFrame, feature_cols: list[str], tree: KDQTreePartitioner
 ) -> np.ndarray:
     """Distributed fill: assign leaves via the compiled JVM expression
     (pandas-UDF fallback above LEAF_EXPR_MAX_NODES), count with a
@@ -288,7 +289,7 @@ def distributed_leaf_counts(
     from menelaus_spark.operators.histograms import salted_count
 
     leaves = df.select(_leaf_col_or_udf(df, feature_cols, tree).alias("leaf"))
-    counts_df = salted_count(leaves, ["leaf"], n_salt=n_salt)
+    counts_df = salted_count(leaves, ["leaf"])
     counts = np.zeros(tree.n_leaves, dtype=np.int64)
     for row in counts_df.collect():
         counts[int(row["leaf"])] = int(row["count"])
@@ -301,7 +302,6 @@ def distributed_leaf_counts_by_group(
     feature_cols: list[str],
     tree: KDQTreePartitioner,
     groups: list,
-    n_salt: int = 16,
 ) -> dict:
     """Leaf counts for MANY batches in ONE grouped pass: broadcast the
     flat tree arrays, assign leaves in an Arrow-batched pandas UDF,
@@ -314,7 +314,7 @@ def distributed_leaf_counts_by_group(
         F.col(group_col).alias("__g"),
         _leaf_col_or_udf(df, feature_cols, tree).alias("leaf"),
     )
-    rows = salted_count(leaves, ["__g", "leaf"], n_salt=n_salt).collect()
+    rows = salted_count(leaves, ["__g", "leaf"]).collect()
     out = {g: np.zeros(tree.n_leaves, dtype=np.int64) for g in groups}
     for r in rows:
         out[r["__g"]][int(r["leaf"])] = int(r["count"])
@@ -326,26 +326,20 @@ def collect_group_features(
     group_col: str,
     feature_cols: list[str],
     per_group_cap: int,
-    total_cap: int = 1_000_000,
 ) -> dict | None:
     """One bounded Arrow collect of (group, features) for driver-side
     tree builds + leaf counts: returns {group: float64 ndarray} when
     every group fits under ``per_group_cap`` (so a caller's tree
     "sample" is the FULL group — the regime where
     _collect_build_sample takes no seeded subsample and the driver
-    build is bit-identical) and the total fits under ``total_cap``;
-    None otherwise, in which case the caller runs the distributed
-    chain unchanged. The LIMIT bounds the driver transfer even when
-    the input is huge — the over-cap probe row just flips the
-    answer to None. Every non-null group present is collected, so
-    the keys name the groups and the caller needs no separate
-    distinct job."""
-    pdf = (
-        df.select(F.col(group_col).alias("__g"), *feature_cols)
-        .limit(total_cap + 1)
-        .toPandas()
-    )
-    if len(pdf) > total_cap:
+    build is bit-identical) and the total fits the ``kdq_group_rows``
+    cap (driver_rows); None otherwise, in which case the caller runs
+    the distributed chain unchanged. Every non-null group present is
+    collected, so the keys name the groups and the caller needs no
+    separate distinct job."""
+    pdf = driver_rows(
+        df.select(F.col(group_col).alias("__g"), *feature_cols), "kdq_group_rows")
+    if pdf is None:
         return None
     out = {}
     for g, sub in pdf.groupby("__g"):
@@ -387,7 +381,6 @@ class KdqTreeBatch:
         cutpoint_proportion_lbound: float = 2e-10,
         build_sample_cap: int = 200_000,
         seed: int = 42,
-        n_salt: int = 16,
     ):
         self.alpha = alpha
         self.bootstrap_samples = bootstrap_samples
@@ -395,7 +388,6 @@ class KdqTreeBatch:
         self.cutpoint_proportion_lbound = cutpoint_proportion_lbound
         self.build_sample_cap = build_sample_cap
         self.seed = seed
-        self.n_salt = n_salt
         self.total_batches = 0
         self.batches_since_reset = 0
         self.drift_state: str | None = None
@@ -439,7 +431,7 @@ class KdqTreeBatch:
         self._tree = KDQTreePartitioner(self.count_ubound, self.cutpoint_proportion_lbound)
         self._tree.build(ary)
         # distributed fill of the FULL reference into the sampled tree
-        self._ref_counts = distributed_leaf_counts(df, self._input_cols, self._tree, self.n_salt)
+        self._ref_counts = distributed_leaf_counts(df, self._input_cols, self._tree)
         sample_size = int(self._ref_counts.sum())
         self._critical_dist = bootstrap_critical_kld(
             self._ref_counts, sample_size, self.alpha, self.bootstrap_samples, self.seed
@@ -456,7 +448,7 @@ class KdqTreeBatch:
         if self._tree is None:
             self.set_reference(df)
             return self.drift_state
-        self._test_counts = distributed_leaf_counts(df, self._input_cols, self._tree, self.n_salt)
+        self._test_counts = distributed_leaf_counts(df, self._input_cols, self._tree)
         self.test_dist = self._tree.kl_distance(self._ref_counts, self._test_counts)
         if self.test_dist > self._critical_dist:
             self.drift_state = "drift"

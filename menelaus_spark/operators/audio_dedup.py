@@ -46,6 +46,7 @@ from menelaus_spark.operators.dedup import (
     minhash_from_shingles,
     minhash_sig_py,
 )
+from menelaus_spark.verdicts import driver_rows
 
 
 FP_HEADS = 4  # time-order head shingles emitted for prefix-trim buckets
@@ -171,7 +172,6 @@ def audio_neardup_pairs(
     containment_threshold: float | None = None,
     prefix_keys: int = 4,
     prefix_cap: int = 200,
-    driver_cap: int = 100_000,
 ) -> DataFrame:
     """Near-duplicate clip pairs: (id_a, id_b, jaccard, containment)
     with fingerprint-shingle Jaccard >= threshold. bands=8 x rows=2
@@ -203,26 +203,26 @@ def audio_neardup_pairs(
         # should pass a managed fp (audio_fingerprints(df).persist())
         # and unpersist it themselves, as audio_dedup_resolution does.
         sh = _SHINGLE_CACHE.persist(audio_shingles(df, key_col, bytes_col, codec_col))
-    cands = None
+    pdf = None
     # fast path only for the containment variant: its head-bucket
     # chain (explode + count + two joins + union + distinct) is what
     # the driver generation removes; the plain LSH plan over the
     # decode-pass signature column is already cheaper distributed
     # (measured: 1.0 s vs 1.7 s at 16k clips)
-    if ("sig" in sh.columns and k == FP_MINHASH_K and driver_cap
-            and containment_threshold is not None and "heads" in sh.columns
-            and sh.count() <= driver_cap):
-        # bounded-driver fast path (the count doubles as the pin's /
-        # caller-persisted frame's materializing action — one decode
-        # either way): banding, bucket self-joins and the distinct all
-        # run on the collected (id, sig[, heads]) rows; the resulting
-        # LocalRelation broadcasts into the verify joins below, so the
-        # shingle frame is never shuffled. Above the cap (e.g. the
-        # 800k-clip scaling witness) the distributed plans run
-        # unchanged.
+    if ("sig" in sh.columns and k == FP_MINHASH_K
+            and containment_threshold is not None and "heads" in sh.columns):
+        # the probe materializes every partition of the pin / caller-
+        # persisted frame whole: one decode either way
+        pdf = driver_rows(sh.select(key_col, "sig", "heads"), "audio_lsh")
+    if pdf is not None:
+        # bounded-driver fast path: banding, bucket self-joins and the
+        # distinct all run on the collected (id, sig, heads) rows; the
+        # resulting LocalRelation broadcasts into the verify joins
+        # below, so the shingle frame is never shuffled. Above the cap
+        # (e.g. the 800k-clip scaling witness) the distributed plans
+        # run unchanged.
         from collections import defaultdict
 
-        pdf = sh.select(key_col, "sig", "heads").toPandas()  # Arrow collect off the pin
         pairs = lsh_candidate_pairs_driver(
             list(zip(pdf[key_col], pdf["sig"])), bands, rows)
         # twin of the head-bucket union: explode(slice(heads, 1,
@@ -245,7 +245,7 @@ def audio_neardup_pairs(
                     pairs.add((a, b2) if a < b2 else (b2, a))
         cands = local_pairs_frame(df.sparkSession, pairs,
                                   dict(sh.dtypes)[key_col])
-    if cands is None:
+    else:
         if "sig" in sh.columns and k == FP_MINHASH_K:
             # decode-pass signature: per-row column, no explode/groupBy
             sigs = sh.select(key_col, "sig")
@@ -275,7 +275,7 @@ def audio_neardup_pairs(
         sh.select(F.col(key_col).alias("id_a"), F.col("shingles").alias("sh_a")),
         on="id_a",
     )
-    if cands.isLocal():
+    if pdf is not None:
         # bounded driver-generated candidates: broadcast the pair +
         # sh_a intermediate so the shingle frame is never shuffled
         paired = F.broadcast(paired)
@@ -342,7 +342,6 @@ def transcript_candidate_pairs(
     key_col: str = "clip_id",
     transcript_col: str = "transcript",
     block_cap: int = 50,
-    driver_cap: int = 200_000,
 ) -> DataFrame:
     """(id_a, id_b) candidate pairs from transcript-equality blocking:
     groupBy on md5(normalized transcript) with singleton and hot-block
@@ -350,14 +349,12 @@ def transcript_candidate_pairs(
     shared by thousands of clips is the text-dedup path's job), so
     candidate volume is bounded by cap x blocks.
 
-    At or below ``driver_cap`` block rows (gated by ``blocks.count()``,
-    one parallel pass over the pruned transcript column, never the
-    payload) the grouping and pair generation run driver-side on the
-    collected JVM-computed (id, md5 block) rows, and the resulting
-    LocalRelation broadcasts into the verify joins so the fingerprint
-    frame is never shuffled; above the cap the block self-join plan is
-    unchanged.
-    The cap sits below the audio scaling-witness size (800k clips)."""
+    Under the ``transcript_blocks`` cap the JVM-computed (id, md5
+    block) rows are collected (driver_rows: one pass over the pruned
+    transcript column, never the payload), the grouping and pair
+    generation run driver-side, and the resulting LocalRelation
+    broadcasts into the verify joins so the fingerprint frame is never
+    shuffled; above the cap the block self-join plan is unchanged."""
     from menelaus_spark.operators.dedup import (capped_block_pairs_driver,
                                                 local_pairs_frame,
                                                 normalized_text)
@@ -372,11 +369,8 @@ def transcript_candidate_pairs(
             F.md5(normalized_text(F.col(transcript_col))).alias("__blk"),
         )
     )
-    if driver_cap and blocks.count() <= driver_cap:
-        # count + Arrow collect: two parallel one-pass jobs over the
-        # pruned transcript projection (a LIMIT probe would ramp
-        # through partitions sequentially)
-        pdf = blocks.toPandas()
+    pdf = driver_rows(blocks, "transcript_blocks")
+    if pdf is not None:
         pairs = capped_block_pairs_driver(
             list(zip(pdf[key_col], pdf["__blk"])), block_cap)
         return local_pairs_frame(df.sparkSession, pairs,

@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
+from menelaus_spark.verdicts import DRIVER_ROW_CAPS
+
 
 def _signature(edges: DataFrame) -> tuple[int, int]:
     """(row count, bit_xor of xxhash64(u, v)) — an order-insensitive
@@ -68,8 +70,8 @@ def _driver_components(edges: DataFrame) -> DataFrame:
     component (Python ``min`` and Spark ``min``/``least`` agree on
     both long and lexicographic string ids). One collect job instead
     of one job per star half-round; the caller gates entry on the
-    exact edge count, so this never sees more than ``driver_cap``
-    edges."""
+    exact edge count, so this never sees more edges than the
+    ``cc_edges`` cap."""
     parent: dict = {}
 
     def find(x):
@@ -109,7 +111,6 @@ def connected_components(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_rounds: int = 50,
-    driver_cap: int = 1_000_000,
 ) -> DataFrame:
     """(id, cluster_id) for every node that appears in ``pairs``, where
     ``cluster_id`` is the minimum id in the node's connected component
@@ -128,13 +129,12 @@ def connected_components(
     )
     if sig[0] == 0:
         return edges.select(F.col("u").alias("id"), F.col("v").alias("cluster_id"))
-    if sig[0] <= driver_cap:
+    if sig[0] <= DRIVER_ROW_CAPS["cc_edges"]:
         # small-graph fast path: the signature job already paid for the
-        # exact edge count; under the cap (16 MB of id pairs at the
-        # default) a driver union-find replaces the O(log^2 n)
-        # one-job-per-half-round star loop with ONE collect — identical
-        # component minima (r06). Corpus-scale edge sets exceed the cap
-        # and take the distributed loop below.
+        # exact edge count; under the cap a driver union-find replaces
+        # the O(log^2 n) one-job-per-half-round star loop with ONE
+        # collect — identical component minima (r06). Corpus-scale edge
+        # sets exceed the cap and take the distributed loop below.
         return _driver_components(edges)
 
     prev_frame = None

@@ -22,7 +22,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from menelaus_spark.operators.text import tokens_col
-from menelaus_spark.verdicts import local_frame
+from menelaus_spark.verdicts import driver_rows, local_frame
 
 
 class OwnedCache:
@@ -535,38 +535,33 @@ def minhash_lsh_dedup(
     bands: int = 8,
     rows: int = 4,
     threshold: float = 0.8,
-    driver_cap: int = 200_000,
 ) -> DataFrame:
     """Full near-dup pipeline: shingle -> minhash -> band -> bucket
     join -> exact-Jaccard verification of candidates only.
     Returns (id_a, id_b, jaccard >= threshold).
 
-    At or below ``driver_cap`` documents (gated by one
-    ``limit(driver_cap + 1).count()`` probe, which evaluates a derived
-    input for at most cap + 1 rows per partition, not in full) the
-    banding/bucket self-join/distinct runs driver-side on the
-    collected signature frame (lsh_candidate_pairs_driver — the
-    md5 banding is the only recomputed expression, an exact string
-    op), and the LocalRelation candidate set broadcasts its pair +
-    sh_a intermediate into the verify joins so the shingle frame is
-    never shuffled. Above the cap the distributed plans are
-    unchanged."""
+    Under the ``text_lsh`` cap the signature frame is collected
+    (driver_rows) and the banding/bucket self-join/distinct runs
+    driver-side (lsh_candidate_pairs_driver — the md5 banding is the
+    only recomputed expression, an exact string op); the
+    LocalRelation candidate set broadcasts its pair + sh_a
+    intermediate into the verify joins so the shingle frame is never
+    shuffled. Above the cap the distributed plans are unchanged."""
     assert bands * rows == k
     sh = with_shingles(df, id_col, text_col, n)
-    cands = None
-    if driver_cap and df.limit(driver_cap + 1).count() <= driver_cap:
-        pdf = minhash_from_shingles(sh, id_col, "shingles", k).toPandas()
+    sigs = minhash_from_shingles(sh, id_col, "shingles", k)
+    pdf = driver_rows(sigs, "text_lsh")
+    if pdf is not None:
         pairs = lsh_candidate_pairs_driver(
             list(zip(pdf[id_col], pdf["sig"])), bands, rows)
         cands = local_pairs_frame(df.sparkSession, pairs,
                                   dict(df.dtypes)[id_col])
-    if cands is None:
-        sigs = minhash_from_shingles(sh, id_col, "shingles", k)
+    else:
         cands = lsh_candidate_pairs(sigs, id_col, bands, rows)
     paired = cands.join(
         sh.select(F.col(id_col).alias("id_a"), F.col("shingles").alias("sh_a")),
         on="id_a")
-    if cands.isLocal():
+    if pdf is not None:
         paired = F.broadcast(paired)
     verified = (
         paired
@@ -584,7 +579,6 @@ def repeated_ngram_pairs(
     text_col: str = "text",
     n: int = 8,
     hot_cap: int = 64,
-    driver_cap: int = 1_000_000,
 ) -> DataFrame:
     """Document pairs sharing at least one EXACT n-token span — the
     substring-level exact-duplication signal (Lee et al. 2022,
@@ -610,9 +604,10 @@ def repeated_ngram_pairs(
       volume is bounded by sum over spans of df^2 <= hot_cap * total
       span occurrences — linear in corpus size for fixed hot_cap.
 
-    At or below ``driver_cap`` (doc, span) rows the pairing runs
-    driver-side on the collected span keys; the gate counts the rows
-    it collects, so a few very long documents cannot blow the driver.
+    Under the ``ngram_spans`` cap on (doc, span) rows the pairing
+    runs driver-side on the collected span keys; the cap counts the
+    rows collected, so a few very long documents cannot blow the
+    driver.
     """
     spans = with_shingles(df, id_col, text_col, n).select(
         F.col(id_col), F.explode("shingles").alias("__g")
@@ -620,14 +615,13 @@ def repeated_ngram_pairs(
         F.col(id_col),
         F.conv(F.substring(F.md5("__g"), 1, 15), 16, 10).cast("long").alias("__h"),
     )
-    # bounded-driver fast path (one LIMIT cap+1 probe is both the gate
-    # and the collect; the span keys are JVM-computed before it): the
-    # doc-frequency cap, the inverted-index self-join and the
-    # shared-span count are all exact integer set logic, grouped in
-    # numpy instead of three exchanges. Above the cap the distributed
-    # plan is unchanged.
-    pdf = spans.limit(driver_cap + 1).toPandas() if driver_cap else None
-    if pdf is not None and len(pdf) <= driver_cap:
+    # bounded-driver fast path (the span keys are JVM-computed before
+    # the collect): the doc-frequency cap, the inverted-index self-join
+    # and the shared-span count are all exact integer set logic,
+    # grouped in numpy instead of three exchanges. Above the cap the
+    # distributed plan is unchanged.
+    pdf = driver_rows(spans, "ngram_spans")
+    if pdf is not None:
         h = pdf["__h"].to_numpy()
         ids = np.empty(len(pdf), dtype=object)
         ids[:] = list(pdf[id_col])

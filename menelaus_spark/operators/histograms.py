@@ -93,27 +93,32 @@ def bin_weighted_driver(
     return out
 
 
-def salted_count(df: DataFrame, keys: list[str], n_salt: int = 16) -> DataFrame:
+# reducers a hot key's rows spread over in the salted counts
+_N_SALT = 16
+
+
+def _salt():
+    return F.pmod(F.xxhash64(F.spark_partition_id(), F.monotonically_increasing_id()),
+                  F.lit(_N_SALT))
+
+
+def salted_count(df: DataFrame, keys: list[str]) -> DataFrame:
     """Two-stage salted count: groupBy(keys + salt).count, then
     groupBy(keys).sum. The salt routes a hot key's rows across
-    ``n_salt`` reducers before the final tiny combine — the explicit
+    ``_N_SALT`` reducers before the final tiny combine — the explicit
     skew defusal the north rule requires (Spark's partial aggregation
     helps too; this makes the guarantee explicit and plan-visible).
     """
-    salt = F.pmod(F.xxhash64(F.spark_partition_id(), F.monotonically_increasing_id()), F.lit(n_salt))
-    stage1 = df.groupBy(*keys, salt.alias("__salt")).agg(F.count(F.lit(1)).alias("__c"))
+    stage1 = df.groupBy(*keys, _salt().alias("__salt")).agg(F.count(F.lit(1)).alias("__c"))
     return stage1.groupBy(*keys).agg(F.sum("__c").alias("count"))
 
 
-def salted_weighted_count(
-    df: DataFrame, keys: list[str], weight: str, n_salt: int = 16
-) -> DataFrame:
+def salted_weighted_count(df: DataFrame, keys: list[str], weight: str) -> DataFrame:
     """Two-stage salted SUM of a weight column — the weighted twin of
     :func:`salted_count`, used when rows are already (key, n) summaries
     (e.g. HDM's per-batch distinct-value summaries) rather than raw
     observations."""
-    salt = F.pmod(F.xxhash64(F.spark_partition_id(), F.monotonically_increasing_id()), F.lit(n_salt))
-    stage1 = df.groupBy(*keys, salt.alias("__salt")).agg(F.sum(weight).alias("__c"))
+    stage1 = df.groupBy(*keys, _salt().alias("__salt")).agg(F.sum(weight).alias("__c"))
     return stage1.groupBy(*keys).agg(F.sum("__c").alias("count"))
 
 
@@ -121,7 +126,6 @@ def multi_feature_histogram(
     df: DataFrame,
     ranges: dict[str, tuple[float, float]],
     nbins: int,
-    n_salt: int = 16,
 ) -> DataFrame:
     """Aligned-bin histograms for ALL features in ONE shuffle.
 
@@ -143,7 +147,7 @@ def multi_feature_histogram(
         .select("fb.feature", "fb.bin")
         .filter(F.col("bin").isNotNull())
     )
-    return salted_count(exploded, ["feature", "bin"], n_salt=n_salt)
+    return salted_count(exploded, ["feature", "bin"])
 
 
 def collect_histogram_matrix(

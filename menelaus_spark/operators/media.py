@@ -35,21 +35,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from menelaus_spark.operators.dedup import OwnedCache, band_keys
-from menelaus_spark.verdicts import local_frame
+from menelaus_spark.verdicts import driver_rows, local_frame
 
 # one-slot internal pins (dedup.OwnedCache semantics): repeated calls
 # hold at most ONE cached decode-derived frame per owner
 _PHASH_CACHE = OwnedCache()
 _VIDEO_SHINGLE_CACHE = OwnedCache()
-
-# bounded-driver fast-path caps (the connected_components driver_cap
-# pattern): at or below the cap the pair search runs on ONE collected
-# frame driver-side; above it the distributed banded/LSH plans run
-# byte-for-byte unchanged. Both caps sit well below the media scaling
-# witness sizes (2.25M images / 450k videos), so witness-scale runs
-# keep the core-scaling distributed joins.
-IMAGE_NEARDUP_DRIVER_ROW_CAP = 250_000
-VIDEO_NEARDUP_DRIVER_ROW_CAP = 50_000
 
 __all__ = [
     "encode_bmp", "decode_bmp", "image_pixels", "image_feature_row",
@@ -491,7 +482,7 @@ def _video_pairs_driver(spark, recs: list, id_col: str, id_type: str,
 
     buckets: dict[tuple, list[int]] = defaultdict(list)
     for idx, (vid, sh, sig) in enumerate(recs):
-        if not sig:  # F.size("sig") > 0
+        if sig is None or not len(sig):  # F.size("sig") > 0
             continue
         for b, bh in enumerate(band_keys(sig, bands, rows)):
             buckets[(b, bh)].append(idx)
@@ -525,8 +516,7 @@ def _video_pairs_driver(spark, recs: list, id_col: str, id_type: str,
 
 def video_neardup_pairs(df: DataFrame, id_col: str = "video_id",
                         bytes_col: str = "bytes", threshold: float = 0.35,
-                        k: int = 16, bands: int = 8, rows: int = 2,
-                        driver_cap: int = VIDEO_NEARDUP_DRIVER_ROW_CAP) -> DataFrame:
+                        k: int = 16, bands: int = 8, rows: int = 2) -> DataFrame:
     """Near-duplicate video pairs (id_a, id_b, jaccard): frame-code
     shingles -> the repo's ONE shared MinHash/LSH kernel
     (dedup.minhash_from_shingles + lsh_candidate_pairs, the same plan
@@ -541,13 +531,15 @@ def video_neardup_pairs(df: DataFrame, id_col: str = "video_id",
     # y4m payload (verified in the plan: 3x MapInPandas decode)
     sh = _VIDEO_SHINGLE_CACHE.persist(video_shingles(df, id_col, bytes_col))
     if "sig" in sh.columns and k == VIDEO_MINHASH_K:
-        # the count doubles as the pin's materializing action (one y4m
-        # decode either way); at or below driver_cap the banding,
+        # the probe materializes every partition of the pin whole (one
+        # y4m decode either way); under the ``video`` cap the banding,
         # candidate join and exact intersection run on the collected
-        # shingle frame in one job, with the jaccard/threshold decided
-        # by the same JVM expression over a local relation
-        if driver_cap and sh.count() <= driver_cap:
-            recs = [(r[0], r[1], r[2]) for r in sh.collect()]
+        # shingle frame, with the jaccard/threshold decided by the same
+        # JVM expression over a local relation; above it the
+        # distributed LSH plan runs unchanged
+        pdf = driver_rows(sh, "video")
+        if pdf is not None:
+            recs = list(zip(pdf[id_col], pdf["shingles"], pdf["sig"]))
             _VIDEO_SHINGLE_CACHE.release()
             id_type = dict(df.dtypes)[id_col]
             return _video_pairs_driver(df.sparkSession, recs, id_col,
@@ -684,8 +676,7 @@ def _image_pairs_driver(ids: list, hashes: list, band_cap: int,
 def image_neardup_pairs(df: DataFrame, id_col: str = "image_id",
                         bytes_col: str = "bytes",
                         max_hamming: int = 3,
-                        band_cap: int = 1024,
-                        driver_cap: int = IMAGE_NEARDUP_DRIVER_ROW_CAP) -> DataFrame:
+                        band_cap: int = 1024) -> DataFrame:
     """Image near-dup pairs (id_a, id_b, hamming <= max_hamming) via
     4x16-bit band blocking over the phash — by pigeonhole any pair
     within Hamming 3 of 64 bits agrees on at least one full band, so
@@ -711,16 +702,15 @@ def image_neardup_pairs(df: DataFrame, id_col: str = "image_id",
     # MapInPandas decode). The frame is (id, phash) only — tiny.
     ph = _PHASH_CACHE.persist(
         image_phashes(df, id_col, bytes_col).filter(F.col("phash").isNotNull()))
-    # the count doubles as the pin's materializing action (the decode
-    # runs exactly once either way); at or below driver_cap the whole
-    # pair search happens on the collected (id, phash) frame — 16
+    # the probe materializes every partition of the pin whole (the
+    # decode runs exactly once either way); under the ``image`` cap the
+    # whole pair search happens on the collected (id, phash) frame — 16
     # bytes/row — in one job instead of the 4-way banded/exact join
     # pipeline's ~13
-    if driver_cap and ph.count() <= driver_cap:
-        rows_ = ph.collect()
+    pdf = driver_rows(ph, "image")
+    if pdf is not None:
         _PHASH_CACHE.release()
-        pairs = _image_pairs_driver([r[0] for r in rows_],
-                                    [r[1] for r in rows_],
+        pairs = _image_pairs_driver(list(pdf[id_col]), pdf["phash"],
                                     band_cap, max_hamming)
         id_type = dict(df.dtypes)[id_col]
         return local_frame(df.sparkSession, pairs,

@@ -43,28 +43,17 @@ from menelaus_spark.operators import histograms as H
 from menelaus_spark.state import CheckpointManifest
 from menelaus_spark.verdicts import (
     DRIFT,
+    DRIVER_ROW_CAPS,
     FAIL,
     PASS,
     VIOLATION_SCHEMA,
     Verdict,
+    driver_rows,
     empty_violations,
     verdicts_df,
 )
 
 KS_BINS = 1024
-# Total clean-row cap for the kdq small-table fast path (one Arrow
-# collect of the feature matrix replaces every per-drift-event
-# sample-collect + leaf-count job). Sized so the driver work it
-# serializes (collect + tree builds + bincounts, ~10 MB / well under a
-# second at the cap) stays far below the per-job scheduling latency it
-# removes — and BELOW the scaling-witness table sizes (800k clips),
-# where the distributed counts must keep scaling with cores and do:
-# above the cap the distributed chain runs byte-for-byte unchanged.
-KDQ_DRIVER_ROW_CAP = 100_000
-# Same economics for the KS/PSI/HDM summary pass: one bounded Arrow
-# collect + numpy-twin binning under the cap, exploded salted
-# aggregation above it.
-SUMMARY_DRIVER_ROW_CAP = 100_000
 
 
 def _f0_clean():
@@ -1319,14 +1308,14 @@ class ValidationSuite:
 
     def _summary_probe(self, scoped: DataFrame):
         """The summary pass's driver fast path, first step: under the
-        row cap (probed by the LIMIT itself), ONE bounded Arrow collect
+        ``summary_probe`` cap, ONE bounded Arrow collect (driver_rows)
         of the raw projection replaces the explode + salted aggregation
         (see _global_summary_pass). It needs neither the partition list
         nor the KS ranges, so it runs while the constraint aggregation
-        is in flight. Returns the collected frame, or None when the psi
-        column is not string-typed (cast-to-string is then not the
-        identity, and Java's double->string formatting is not
-        replicated driver-side)."""
+        is in flight. Returns the collected frame, or None over the cap
+        or when the psi column is not string-typed (cast-to-string is
+        then not the identity, and Java's double->string formatting is
+        not replicated driver-side)."""
         if self.psi_col and not isinstance(
             scoped.schema[self.psi_col].dataType, T.StringType
         ):
@@ -1338,7 +1327,7 @@ class ValidationSuite:
         if self.hdm is not None:
             sel += [F.col(c).cast("double").alias(f"__hdm_{c}")
                     for c in self.hdm_cols]
-        return scoped.select(*sel).limit(SUMMARY_DRIVER_ROW_CAP + 1).toPandas()
+        return driver_rows(scoped.select(*sel), "summary_probe")
 
     def _global_summary_pass(
         self, scoped: DataFrame, todo: list[str], ranges: dict, pdf
@@ -1351,8 +1340,8 @@ class ValidationSuite:
         driver cap still guards the HDM side: past it, HDM falls back
         to its own per-batch summary jobs.
 
-        ``pdf`` is _summary_probe's collect. When it is under the cap
-        and the gates hold, the binning / counting is done by the
+        ``pdf`` is _summary_probe's collect. When it is there and the
+        gate holds, the binning / counting is done by the
         proven numpy twins (histograms.bin_weighted_driver replicates
         bin_index_col's IEEE arithmetic bit-for-bit) and no further job
         runs. The remaining gate, preserving exact equivalence with the
@@ -1365,7 +1354,7 @@ class ValidationSuite:
         Returns (kspsi_by, hdm_sum_by)."""
         hdm_cols = self.hdm_cols if self.hdm is not None else []
         if pdf is not None:
-            ks_ok = len(pdf) <= SUMMARY_DRIVER_ROW_CAP and not any(
+            ks_ok = not any(
                 np.isnan(pdf[f"__ks_{c}"].to_numpy(np.float64)).any()
                 for c in self.ks_cols
             )
@@ -1400,7 +1389,7 @@ class ValidationSuite:
                             n_hdm_entries += vals.size
                         hdm_data[str(pk)] = d
                 hdm_sum_by: dict = {}
-                if hdm_cols and n_hdm_entries <= self.hdm.driver_value_cap:
+                if hdm_cols and n_hdm_entries <= DRIVER_ROW_CAPS["hdm_values"]:
                     hdm_sum_by = {
                         pk: hdm_data.get(
                             pk, {c: (np.array([]), np.array([]))
@@ -1450,7 +1439,7 @@ class ValidationSuite:
             # back to its own per-batch jobs. persist() so the single
             # union action materializes the aggregation once for both
             # branches; the extra driver transfer is bounded by cap.
-            cap = int(self.hdm.driver_value_cap)
+            cap = DRIVER_ROW_CAPS["hdm_values"]
             agg = agg.persist()
             try:
                 is_hdm = F.col("kind").startswith("hdm:")
@@ -1593,16 +1582,16 @@ class ValidationSuite:
                 # independent and the leaf assignment is the same
                 # numpy kernel the distributed fill broadcasts, so
                 # every tree, count vector and drift decision is
-                # bit-identical (asserted in tests). Above the caps —
-                # the 100-TB regime — the distributed chain below runs
-                # unchanged; same pattern as connected_components'
-                # driver_cap.
+                # bit-identical (asserted in tests). The constraint
+                # pass's exact counts gate it against the ``suite_kdq``
+                # cap. Above the caps — the 100-TB regime — the
+                # distributed chain below runs unchanged.
                 cap_ok = all(
                     int(stats_by[pk]["__n"]) <= self.kdq.build_sample_cap
                     for pk in todo
                 ) and sum(
                     int(stats_by[pk]["__n"]) for pk in todo
-                ) <= KDQ_DRIVER_ROW_CAP
+                ) <= DRIVER_ROW_CAPS["suite_kdq"]
                 if cap_ok:
                     fcols = [f"f{i}" for i in range(audio.N_FEATURES)]
                     pdf = clean.select(

@@ -10,13 +10,16 @@ violation rows" per the north rule.
 
 from __future__ import annotations
 
+import sys
 from collections.abc import Iterable
 from dataclasses import dataclass, field
 
+import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.traceback_utils import SCCallSiteSync
 
 PASS, WARNING, DRIFT, FAIL = "pass", "warning", "drift", "fail"
 
@@ -100,6 +103,53 @@ def local_frame(spark: SparkSession, rows: Iterable, schema: T.StructType | str)
         if not f.nullable and col.null_count:
             raise ValueError(f"field {f.name!r} is not nullable but holds None")
     return spark.createDataFrame(table, schema)
+
+
+# Row caps of the bounded-driver fast paths, one entry per path. At or
+# under its cap a path collects its rows and finishes on the driver;
+# over it the distributed plan runs unchanged. Every cap sits below the
+# scaling-witness sizes (800k clips, 2.25M images, 450k videos), so
+# witness runs keep the distributed plans that scale with cores.
+DRIVER_ROW_CAPS: dict[str, int] = {
+    # suite KS/PSI/HDM projection: one collect + numpy twins replace the exploded pass
+    "summary_probe": 100_000,
+    # suite kdq clean feature rows: collect + tree builds stay ~10 MB and under a second
+    "suite_kdq": 100_000,
+    # HDM (feature, value, count) entries held as numpy arrays; past it they spill to a frame
+    "hdm_values": 2_000_000,
+    # kdq_lineitem (year, features) rows: driver tree builds replace the per-event jobs
+    "kdq_group_rows": 1_000_000,
+    # drift sequences' (batch, values) rows: np.unique replaces the exploded aggregation
+    "batch_summaries": 1_000_000,
+    # minhash_lsh_dedup signatures: driver banding 2.5-3.9 s faster at sf0.1 on 4 cores
+    "text_lsh": 200_000,
+    # repeated_ngram_pairs (doc, span key) rows, not documents, so long documents count
+    "ngram_spans": 1_000_000,
+    # audio containment (clip, sig, heads) rows: replaces the head-bucket join chain
+    "audio_lsh": 100_000,
+    # transcript_candidate_pairs (clip, md5 block) rows: replaces the block self-join
+    "transcript_blocks": 200_000,
+    # image_neardup_pairs (id, phash) rows, 16 bytes each: one job instead of ~13
+    "image": 250_000,
+    # video_neardup_pairs (id, shingles, sig) rows: whole shingle sets, the widest rows
+    "video": 50_000,
+    # connected_components edges (~16 MB of id pairs): one collect, not a job per round
+    "cc_edges": 1_000_000,
+}
+
+
+def driver_rows(df: DataFrame, name: str) -> pd.DataFrame | None:
+    """``df`` collected when it has at most ``DRIVER_ROW_CAPS[name]``
+    rows, else None. One ``limit(cap + 1).toPandas()`` job is both the
+    gate and the collect. The job's call site is the caller's line, so
+    a trace charges it to the fast path that asked."""
+    cap = DRIVER_ROW_CAPS[name]
+    caller = sys._getframe(1)
+    site = SCCallSiteSync(df.sparkSession.sparkContext)
+    site._call_site = f"toPandas at {caller.f_code.co_filename}:{caller.f_lineno}"
+    with site:
+        pdf = df.limit(cap + 1).toPandas()
+    return pdf if len(pdf) <= cap else None
 
 
 def verdicts_df(spark: SparkSession, rows: list[dict]) -> DataFrame:

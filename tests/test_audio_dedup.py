@@ -17,6 +17,7 @@ from menelaus_spark.operators.audio_dedup import (
     audio_shingles,
     transcript_blocked_neardup,
 )
+from menelaus_spark.verdicts import DRIVER_ROW_CAPS
 
 
 def _clip(seed=7, sr=16000, dur_s=0.8, f0=440.0):
@@ -523,8 +524,8 @@ def test_minhash_from_shingles_matches_duckdb(spark):
     check(streaming, "id", 16)
 
 
-def test_neardup_driver_fast_path_matches_distributed(spark):
-    # bounded-driver candidate generation (driver_cap) must be
+def test_neardup_driver_fast_path_matches_distributed(spark, monkeypatch):
+    # bounded-driver candidate generation (the audio caps) must be
     # byte-equal — values AND dtypes — to the forced distributed
     # LSH/block-join plans on every matching path
     df = tables.audio_table(spark, n_rows=160, n_parts=4, drift={},
@@ -542,16 +543,22 @@ def test_neardup_driver_fast_path_matches_distributed(spark):
     from menelaus_spark.operators.audio_dedup import (
         speed_blocked_neardup, transcript_candidate_pairs)
 
+    def at_cap(fn, cap):
+        with monkeypatch.context() as m:
+            m.setitem(DRIVER_ROW_CAPS, "transcript_blocks", cap)
+            m.setitem(DRIVER_ROW_CAPS, "audio_lsh", cap)
+            return canon(fn())
+
     for name, fn in [
-        ("tcp", lambda cap: transcript_candidate_pairs(df, driver_cap=cap)),
-        ("lsh", lambda cap: audio_neardup_pairs(df, driver_cap=cap)),
-        ("containment", lambda cap: audio_neardup_pairs(
-            df_trim, containment_threshold=0.9, driver_cap=cap)),
-        ("transcript", lambda cap: transcript_blocked_neardup(
-            df, pairs=transcript_candidate_pairs(df, driver_cap=cap))),
-        ("speed", lambda cap: speed_blocked_neardup(
-            df_speed, pairs=transcript_candidate_pairs(df_speed, driver_cap=cap))),
+        ("tcp", lambda: transcript_candidate_pairs(df)),
+        ("lsh", lambda: audio_neardup_pairs(df)),
+        ("containment", lambda: audio_neardup_pairs(
+            df_trim, containment_threshold=0.9)),
+        ("transcript", lambda: transcript_blocked_neardup(
+            df, pairs=transcript_candidate_pairs(df))),
+        ("speed", lambda: speed_blocked_neardup(
+            df_speed, pairs=transcript_candidate_pairs(df_speed))),
     ]:
-        fast, slow = canon(fn(200_000)), canon(fn(0))
+        fast, slow = at_cap(fn, 200_000), at_cap(fn, 0)
         assert fast == slow, name
         assert fast[1], name  # fixtures inject duplicates: never vacuous

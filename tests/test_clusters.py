@@ -11,6 +11,7 @@ from menelaus_spark.operators.clusters import (
     connected_components,
     resolve_representatives,
 )
+from menelaus_spark.verdicts import DRIVER_ROW_CAPS
 
 
 def _union_find(pairs):
@@ -113,14 +114,15 @@ def test_cluster_members_and_resolution(spark):
     assert kept == {"a", "x", "solo"}
 
 
-def test_max_rounds_guard(spark):
+def test_max_rounds_guard(spark, monkeypatch):
     df = spark.createDataFrame([("a", "b"), ("b", "c")], "id_a string, id_b string")
-    # driver_cap=0 forces the distributed star loop even on a tiny graph
+    # a cc_edges cap of 0 forces the distributed star loop even on a tiny graph
+    monkeypatch.setitem(DRIVER_ROW_CAPS, "cc_edges", 0)
     with pytest.raises(RuntimeError):
-        connected_components(df, max_rounds=0, driver_cap=0)
+        connected_components(df, max_rounds=0)
 
 
-def test_driver_fast_path_matches_distributed(spark):
+def test_driver_fast_path_matches_distributed(spark, monkeypatch):
     """The under-cap union-find fast path and the distributed star loop
     must return the identical (id, cluster_id) set — chains, merged
     stars, string and long ids."""
@@ -131,5 +133,7 @@ def test_driver_fast_path_matches_distributed(spark):
     for pairs, schema in cases:
         df = spark.createDataFrame(pairs, schema)
         fast = sorted(map(tuple, connected_components(df).collect()))
-        slow = sorted(map(tuple, connected_components(df, driver_cap=0).collect()))
+        with monkeypatch.context() as m:
+            m.setitem(DRIVER_ROW_CAPS, "cc_edges", 0)
+            slow = sorted(map(tuple, connected_components(df).collect()))
         assert fast == slow

@@ -4,11 +4,11 @@ their meaning.
 At validation-table sizes each Spark job costs a fixed 40-60 ms, so the
 job count of an entry sets its time. The warm count of each entry is
 bounded here. Each driver fast path must return its distributed twin's
-rows over the cap, the HLL rollup must build the same registers as the
+rows over the cap, the HDM entries must release the frames their
+detector cached, the HLL rollup must build the same registers as the
 plain sketch operators, and the worker zip must be this checkout's own
 sources."""
 
-import functools
 import os
 import sys
 import tempfile
@@ -24,6 +24,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as entrymod  # noqa: E402
 from menelaus_spark.checks import kdqtree  # noqa: E402
 from menelaus_spark.operators import sketches as SK  # noqa: E402
+from menelaus_spark.verdicts import DRIVER_ROW_CAPS  # noqa: E402
 
 # at most this many warm jobs per entry at sf0.001 on 4 cores
 WARM_JOBS = {
@@ -72,12 +73,13 @@ def test_kdq_over_cap_matches_fast_path(spark, sf_dir, monkeypatch):
     collect = kdqtree.collect_group_features
     took = []
 
-    def over_cap(*args, **kwargs):
-        out = collect(*args, **{**kwargs, "total_cap": 0})
+    def recorded(*args, **kwargs):
+        out = collect(*args, **kwargs)
         took.append(out)
         return out
 
-    monkeypatch.setattr(kdqtree, "collect_group_features", over_cap)
+    monkeypatch.setitem(DRIVER_ROW_CAPS, "kdq_group_rows", 0)
+    monkeypatch.setattr(kdqtree, "collect_group_features", recorded)
     slow = _rows(spark, sf_dir, "kdq_lineitem")
     spark.catalog.clearCache()
     assert took == [None]
@@ -86,14 +88,27 @@ def test_kdq_over_cap_matches_fast_path(spark, sf_dir, monkeypatch):
 
 def test_hdddm_over_cap_matches_fast_path(spark, sf_dir, monkeypatch):
     fast = _rows(spark, sf_dir, "hdddm_lineitem")
-    monkeypatch.setattr(entrymod, "_batch_summaries",
-                        functools.partial(entrymod._batch_summaries, driver_row_cap=0))
+    monkeypatch.setitem(DRIVER_ROW_CAPS, "batch_summaries", 0)
     # the over-cap summary is a salted aggregation: more than the one
     # collect job of the fast path
     slow, n = _jobs(spark, lambda: _rows(spark, sf_dir, "hdddm_lineitem"))
     spark.catalog.clearCache()
     assert n > WARM_JOBS["hdddm_lineitem"]
     assert slow == fast
+
+
+@pytest.mark.parametrize(
+    "name", ["hdddm_lineitem", "hdddm_lineitem_cumulative", "cdbd_events_value"])
+def test_hdm_entries_release_detector_frames(spark, sf_dir, name):
+    # the detector caches each batch frame it is fed; the entry must
+    # release them, so one call leaves only its pinned projection
+    # (the (batch, values) frame the per-batch filters read)
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    entrymod.queries()[name](spark, sf_dir).collect()
+    n = cache.cachedData().size()
+    spark.catalog.clearCache()
+    assert n == 1
 
 
 def test_hll_rollup_matches_sketch_operators(spark, sf_dir):

@@ -8,6 +8,7 @@ import pandas as pd
 import pytest
 
 from menelaus_spark.checks.hdm import CDBD, HDDDM, HDM
+from menelaus_spark.verdicts import DRIVER_ROW_CAPS
 
 
 def _sdf(spark, arr):
@@ -267,8 +268,8 @@ def _run_sequence(spark, batches, **kw):
     return hdm, verdicts
 
 
-def test_cluster_spill_branch_bit_equal_to_driver(spark):
-    # driver_value_cap=0 forces _summarize to spill every batch summary
+def test_cluster_spill_branch_bit_equal_to_driver(spark, monkeypatch):
+    # an hdm_values cap of 0 forces _summarize to spill every batch summary
     # to a persisted cluster DataFrame, _merge_summaries to union
     # cluster frames, and _hists_from_summaries to run the salted
     # weighted aggregation — the exact branch that runs at 100 TB. The
@@ -285,9 +286,9 @@ def test_cluster_spill_branch_bit_equal_to_driver(spark):
 
     for detect_batch in (1, 2):
         drv, vd = _run_sequence(spark, batches, detect_batch=detect_batch)
-        clu, vc = _run_sequence(
-            spark, batches, detect_batch=detect_batch, driver_value_cap=0
-        )
+        with monkeypatch.context() as m:
+            m.setitem(DRIVER_ROW_CAPS, "hdm_values", 0)
+            clu, vc = _run_sequence(spark, batches, detect_batch=detect_batch)
         assert clu._ref_summary["mode"] == "cluster"  # branch executed
         assert vc == vd
         assert clu.distances == drv.distances

@@ -2,21 +2,31 @@
 plans a LocalTableScan whatever the Arrow conf says (empty frames
 included), round-trips rows exactly like the Python-list path, and
 keeps its non-nullable checks; the suite's verdict table and the
-near-dup pair frames ride on it. Also covers non-finite SQL double
+near-dup pair frames ride on it. The opposite direction,
+`verdicts.driver_rows`, collects a frame in one job only when it fits
+its entry of the one cap table. Also covers non-finite SQL double
 literals reaching `ivf_ann_topk`."""
+
+import ast
+import glob
+import os
+import uuid
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from menelaus_spark import tables
 from menelaus_spark.operators import similarity
 from menelaus_spark.operators.dedup import _lloyd, local_pairs_frame
 from menelaus_spark.runner import ValidationSuite
 from menelaus_spark.verdicts import (
+    DRIVER_ROW_CAPS,
     FAIL,
     PASS,
     VERDICT_SCHEMA,
     Verdict,
+    driver_rows,
     local_frame,
     verdicts_df,
 )
@@ -92,6 +102,61 @@ def test_suite_verdicts_plan_is_local_table_scan(spark, tmp_path):
     assert violations.isLocal() and violations.count() == 0
     states = {(r["partition_key"], r["check_name"]): r["state"] for r in verdicts.collect()}
     assert states[("0", "schema")] == PASS and states[("1", "schema")] == PASS
+
+
+def _probe_frame(spark, n):
+    return spark.range(n, numPartitions=4).select(
+        "id", (F.col("id") * 0.5).alias("x"), F.col("id").cast("string").alias("s"))
+
+
+@pytest.mark.parametrize("n", [0, 300])
+def test_driver_rows_at_cap_returns_every_row(spark, monkeypatch, n):
+    monkeypatch.setitem(DRIVER_ROW_CAPS, "summary_probe", n)
+    pdf = driver_rows(_probe_frame(spark, n), "summary_probe")
+    assert sorted(pdf["id"]) == list(range(n))
+    # an empty collect keeps the frame's columns and dtypes
+    want = _probe_frame(spark, 3).toPandas().dtypes
+    assert list(pdf.columns) == ["id", "x", "s"] and pdf.dtypes.equals(want)
+
+
+def test_driver_rows_over_cap_returns_none(spark, monkeypatch):
+    monkeypatch.setitem(DRIVER_ROW_CAPS, "summary_probe", 299)
+    assert driver_rows(_probe_frame(spark, 300), "summary_probe") is None
+
+
+def test_driver_rows_runs_one_job(spark):
+    sc = spark.sparkContext
+    df = _probe_frame(spark, 300)
+    group = f"driver_rows_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        pdf = driver_rows(df, "summary_probe")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(pdf) == 300
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
+def test_no_callable_takes_a_cap_or_salt_option():
+    # every fast-path cap lives in DRIVER_ROW_CAPS and the salt count
+    # is one constant: no function grows a per-call option for them
+    gone = {"driver_cap", "total_cap", "driver_row_cap", "driver_value_cap", "n_salt"}
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = [os.path.join(root, "__spark_entry__.py")] + glob.glob(
+        os.path.join(root, "menelaus_spark", "**", "*.py"), recursive=True)
+    found = []
+    for path in paths:
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        for node in ast.walk(tree):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
+                a = node.args
+                names = {x.arg for x in a.posonlyargs + a.args + a.kwonlyargs}
+                found += [f"{os.path.relpath(path, root)}:{node.lineno} {n}"
+                          for n in sorted(names & gone)]
+    assert len(paths) > 20 and found == []
 
 
 def test_dbl_array_sql_spells_non_finite_values(spark):

@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from menelaus_spark.operators import media
+from menelaus_spark.verdicts import DRIVER_ROW_CAPS
 
 
 def test_bmp_roundtrip_exact():
@@ -174,8 +175,8 @@ def test_image_neardup_random_texture(spark):
         assert pairs[(f"i{5 + s:04d}", f"i{25 + s:04d}")] == 0  # 2x upscale
 
 
-def test_media_neardup_driver_fast_path_matches_distributed(spark):
-    # bounded-driver fast path (driver_cap) must be byte-equal to the
+def test_media_neardup_driver_fast_path_matches_distributed(spark, monkeypatch):
+    # bounded-driver fast path (image/video caps) must be byte-equal to the
     # forced distributed banded/LSH plans — values AND dtypes — on
     # string ids, long ids, and a hot-bucket (gradient) image corpus
     img_hot = media.image_neardup_table(spark, n_images=60)  # gradient: hot bands
@@ -186,6 +187,12 @@ def test_media_neardup_driver_fast_path_matches_distributed(spark):
     def canon(df):
         return (df.dtypes, sorted(map(tuple, df.collect())))
 
+    def distributed(op, df, **kw):
+        with monkeypatch.context() as m:
+            m.setitem(DRIVER_ROW_CAPS, "image", 0)
+            m.setitem(DRIVER_ROW_CAPS, "video", 0)
+            return canon(op(df, **kw))
+
     for df, op, kw in [
         (img_hot, media.image_neardup_pairs, {}),
         (img_hot, media.image_neardup_pairs, {"band_cap": 1}),
@@ -193,15 +200,15 @@ def test_media_neardup_driver_fast_path_matches_distributed(spark):
         (vids, media.video_neardup_pairs, {}),
     ]:
         fast = canon(op(df, **kw))
-        slow = canon(op(df, driver_cap=0, **kw))
+        slow = distributed(op, df, **kw)
         assert fast == slow
         assert fast[1]  # fixtures inject copies: never vacuous
     # long ids (image_table/video_table produce long ids)
     img_long = img_rand.withColumn(
         "image_id", F.regexp_replace("image_id", "i", "9").cast("long"))
-    assert canon(media.image_neardup_pairs(img_long)) == canon(
-        media.image_neardup_pairs(img_long, driver_cap=0))
+    assert canon(media.image_neardup_pairs(img_long)) == distributed(
+        media.image_neardup_pairs, img_long)
     vid_long = vids.withColumn(
         "video_id", F.regexp_replace("video_id", "v", "9").cast("long"))
-    assert canon(media.video_neardup_pairs(vid_long)) == canon(
-        media.video_neardup_pairs(vid_long, driver_cap=0))
+    assert canon(media.video_neardup_pairs(vid_long)) == distributed(
+        media.video_neardup_pairs, vid_long)

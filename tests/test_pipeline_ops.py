@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from menelaus_spark.operators import dedup, similarity, text
+from menelaus_spark.verdicts import DRIVER_ROW_CAPS
 
 
 @pytest.fixture(scope="module")
@@ -555,7 +556,7 @@ def test_ngram_jaccard_mixed_split_matches_single_path(spark, blk_type):
     assert "LeftSemi" in plan and "LeftAnti" in plan
 
 
-def test_minhash_lsh_driver_cap_boundary(spark):
+def test_minhash_lsh_driver_cap_boundary(spark, monkeypatch):
     # a derived (non-scan) input of n documents: the limit(cap + 1)
     # probe picks the driver path at cap = n and the distributed one at
     # cap = n - 1, and both give the same pairs
@@ -568,8 +569,9 @@ def test_minhash_lsh_driver_cap_boundary(spark):
                  F.repeat(F.lit("x "), (base % 11).cast("int"))).alias("text"))
 
     def run(cap):
+        monkeypatch.setitem(DRIVER_ROW_CAPS, "text_lsh", cap)
         out = dedup.minhash_lsh_dedup(df, "doc_id", "text", n=3, k=8, bands=4,
-                                      rows=2, threshold=0.1, driver_cap=cap)
+                                      rows=2, threshold=0.1)
         local = "LocalRelation" in out._jdf.queryExecution().optimizedPlan().toString()
         return local, out.dtypes, sorted(map(tuple, out.collect()))
 
@@ -579,8 +581,8 @@ def test_minhash_lsh_driver_cap_boundary(spark):
     assert len(at_cap[2]) >= 20  # the 20 exact copies pair up
 
 
-def test_minhash_lsh_driver_fast_path_matches_distributed(spark):
-    # driver-side banding (driver_cap) must be byte-equal to the
+def test_minhash_lsh_driver_fast_path_matches_distributed(spark, monkeypatch):
+    # driver-side banding (the text_lsh cap) must be byte-equal to the
     # distributed bucket self-join — values AND dtypes
     rows = [(i, f"sentence number {i % 7} about topic {i % 5} repeated "
                 f"words {'x ' * (i % 11)}") for i in range(120)]
@@ -592,14 +594,14 @@ def test_minhash_lsh_driver_fast_path_matches_distributed(spark):
 
     fast = canon(dedup.minhash_lsh_dedup(df, "doc_id", "text", n=3, k=8,
                                          bands=4, rows=2, threshold=0.1))
+    monkeypatch.setitem(DRIVER_ROW_CAPS, "text_lsh", 0)
     slow = canon(dedup.minhash_lsh_dedup(df, "doc_id", "text", n=3, k=8,
-                                         bands=4, rows=2, threshold=0.1,
-                                         driver_cap=0))
+                                         bands=4, rows=2, threshold=0.1))
     assert fast == slow
     assert fast[1]  # exact copies guarantee pairs
 
 
-def test_repeated_ngram_driver_fast_path_matches_distributed(spark):
+def test_repeated_ngram_driver_fast_path_matches_distributed(spark, monkeypatch):
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     rows = [(i, f"{base} doc {i} " + "filler word " * (i % 5)) for i in range(40)]
     rows += [(100 + i, rows[i][1] + " suffix") for i in range(10)]  # shared spans
@@ -609,13 +611,13 @@ def test_repeated_ngram_driver_fast_path_matches_distributed(spark):
         return (d.dtypes, sorted(map(tuple, d.collect())))
 
     fast = canon(dedup.repeated_ngram_pairs(df, "doc_id", "text", n=8))
-    slow = canon(dedup.repeated_ngram_pairs(df, "doc_id", "text", n=8,
-                                            driver_cap=0))
+    monkeypatch.setitem(DRIVER_ROW_CAPS, "ngram_spans", 0)
+    slow = canon(dedup.repeated_ngram_pairs(df, "doc_id", "text", n=8))
     assert fast == slow
     assert fast[1]
 
 
-def test_repeated_ngram_driver_cap_counts_span_rows(spark):
+def test_repeated_ngram_driver_cap_counts_span_rows(spark, monkeypatch):
     # four long documents: far fewer documents than the cap but more
     # (doc, span) rows than it. The gate must count the rows the driver
     # path collects, so cap+1 spans stay distributed and exactly cap
@@ -632,8 +634,8 @@ def test_repeated_ngram_driver_cap_counts_span_rows(spark):
         return (d.dtypes, sorted(map(tuple, d.collect())))
 
     def pairs(cap):
-        return dedup.repeated_ngram_pairs(df, "doc_id", "text", n=8,
-                                          driver_cap=cap)
+        monkeypatch.setitem(DRIVER_ROW_CAPS, "ngram_spans", cap)
+        return dedup.repeated_ngram_pairs(df, "doc_id", "text", n=8)
 
     over, at = pairs(n_spans - 1), pairs(n_spans)
     assert not over.isLocal()

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from menelaus_spark import tables
 from menelaus_spark.runner import ValidationSuite
+from menelaus_spark.verdicts import DRIVER_ROW_CAPS
 
 
 def _suite(spark, tmp_path, name, **kw):
@@ -251,14 +252,16 @@ def test_referential_check(spark, tmp_path):
     assert violations_df.filter(F.col("check_name") == "referential:transcript").count() > 10
 
 
-def test_hdm_past_cap_fallback_identical(spark, tmp_path, audio_df):
-    # driver_value_cap=0 makes the global summary pass refuse to carry
+def test_hdm_past_cap_fallback_identical(spark, tmp_path, audio_df, monkeypatch):
+    # an hdm_values cap of 0 makes the global summary pass refuse to carry
     # HDM values to the driver (runner falls back to HDDDM's own
     # per-batch summary jobs, which themselves spill to cluster mode);
     # verdicts must be identical to the default driver-path run
-    s_cap = _suite(spark, tmp_path, "capped", hdm_params={"driver_value_cap": 0})
-    c_rows, _ = s_cap.run(audio_df)
-    assert s_cap.hdm._ref_summary["mode"] == "cluster"  # spill branch ran
+    with monkeypatch.context() as m:
+        m.setitem(DRIVER_ROW_CAPS, "hdm_values", 0)
+        s_cap = _suite(spark, tmp_path, "capped")
+        c_rows, _ = s_cap.run(audio_df)
+        assert s_cap.hdm._ref_summary["mode"] == "cluster"  # spill branch ran
     s_def = _suite(spark, tmp_path, "uncapped")
     d_rows, _ = s_def.run(audio_df)
     c = sorted(json.dumps(r.asDict(recursive=True), sort_keys=True) for r in c_rows.collect())
@@ -870,41 +873,31 @@ def _manifest_rows(suite):
 
 
 def _check_kdq_fast_path(spark, tmp_path, df, make):
-    import menelaus_spark.runner as R
-
     s1 = make(spark, tmp_path, "spec")
     s1.run(df)
     # fast path actually engaged wherever kdq runs
     assert (s1._kdq_groups is not None) == (s1.kdq is not None)
     rows1 = _manifest_rows(s1)
 
-    cap = R.KDQ_DRIVER_ROW_CAP
-    R.KDQ_DRIVER_ROW_CAP = 0  # force the distributed chain
-    try:
+    with pytest.MonkeyPatch.context() as m:
+        m.setitem(DRIVER_ROW_CAPS, "suite_kdq", 0)  # force the distributed chain
         s2 = make(spark, tmp_path, "dist")
         s2.run(df)
         assert s2._kdq_groups is None
         rows2 = _manifest_rows(s2)
-    finally:
-        R.KDQ_DRIVER_ROW_CAP = cap
     assert rows1 == rows2
 
 
 def _check_summary_fast_path(spark, tmp_path, df, make):
-    import menelaus_spark.runner as R
-
     s1 = make(spark, tmp_path, "sum_fast")
     s1.run(df)
     rows1 = _manifest_rows(s1)
 
-    cap = R.SUMMARY_DRIVER_ROW_CAP
-    R.SUMMARY_DRIVER_ROW_CAP = 0  # force the exploded aggregation
-    try:
+    with pytest.MonkeyPatch.context() as m:
+        m.setitem(DRIVER_ROW_CAPS, "summary_probe", 0)  # force the exploded aggregation
         s2 = make(spark, tmp_path, "sum_dist")
         s2.run(df)
         rows2 = _manifest_rows(s2)
-    finally:
-        R.SUMMARY_DRIVER_ROW_CAP = cap
     assert rows1 == rows2
 
 
