@@ -27,6 +27,7 @@ import tempfile
 import time
 from collections.abc import Callable
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -348,27 +349,48 @@ def q_hist_extendedprice(spark, sf_dir):
     return _local_sort(binned.groupBy("bin").agg(F.count(F.lit(1)).alias("count")), "bin")
 
 
+def _two_sample_bins(df: DataFrame, label_col: str, a: str, b: str, value_col: str):
+    """Aligned-bin histograms of ``value_col`` for the rows labelled
+    ``a`` and ``b``: (lo, hi, counts[bin, c1, c2]), the joint range
+    from one min/max job and one grouped count with a conditional sum
+    per sample. Rows whose value is null or NaN fall in no bin."""
+    from menelaus_spark.operators.histograms import bin_index_col, joint_minmax
+
+    df = df.filter(F.col(label_col).isin([a, b]))
+    lo, hi = joint_minmax(df, [value_col])[value_col]
+    binned = df.select(
+        label_col,
+        bin_index_col(F.col(value_col).cast("double"), lo, hi, HIST_BINS).alias("bin"),
+    ).filter(F.col("bin").isNotNull())
+    counts = binned.groupBy("bin").agg(
+        F.sum((F.col(label_col) == a).cast("long")).alias("c1"),
+        F.sum((F.col(label_col) == b).cast("long")).alias("c2"),
+    )
+    return lo, hi, counts
+
+
+def _cumulative(counts: DataFrame) -> DataFrame:
+    """``counts`` with the sample totals t1, t2 and the cumulative
+    counts cum1, cum2 in bin order, on one partition."""
+    w = Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, 0)
+    return (
+        _with_totals(counts, t1="c1", t2="c2")
+        .withColumn("cum1", F.sum("c1").over(w))
+        .withColumn("cum2", F.sum("c2").over(w))
+    )
+
+
 def q_hellinger_returnflag(spark, sf_dir):
     """Hellinger distance between l_extendedprice distributions of
     returnflag R vs A over aligned bins — fully as DataFrame aggregation."""
-    from menelaus_spark.operators.histograms import bin_index_col, joint_minmax
-
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag").isin(["R", "A"]))
-    lo, hi = joint_minmax(li, ["l_extendedprice"])["l_extendedprice"]
-    binned = li.select(
-        "l_returnflag",
-        bin_index_col(F.col("l_extendedprice").cast("double"), lo, hi, HIST_BINS).alias("bin"),
-    ).filter(F.col("bin").isNotNull())
-    counts = binned.groupBy("bin").agg(
-        F.sum((F.col("l_returnflag") == "R").cast("long")).alias("r_cnt"),
-        F.sum((F.col("l_returnflag") == "A").cast("long")).alias("a_cnt"),
-    )
+    _, _, counts = _two_sample_bins(
+        _t(spark, sf_dir, "lineitem"), "l_returnflag", "R", "A", "l_extendedprice")
     return (
-        _with_totals(counts, rt="r_cnt", at="a_cnt")
+        _with_totals(counts, t1="c1", t2="c2")
         .agg(
             F.round(
-                F.sqrt(F.sum(F.pow(F.sqrt(F.col("r_cnt") / F.col("rt"))
-                                   - F.sqrt(F.col("a_cnt") / F.col("at")), 2))),
+                F.sqrt(F.sum(F.pow(F.sqrt(F.col("c1") / F.col("t1"))
+                                   - F.sqrt(F.col("c2") / F.col("t2")), 2))),
                 6,
             ).alias("hellinger")
         )
@@ -470,25 +492,11 @@ def q_chisq_event_type_halves(spark, sf_dir):
 def q_ks_value_click_vs_error(spark, sf_dir):
     """Two-sample KS statistic between `value` distributions of click
     vs error events via cumulative aligned histograms + window cumsum."""
-    from menelaus_spark.operators.histograms import bin_index_col, joint_minmax
-
-    ev = _t(spark, sf_dir, "events").filter(F.col("event_type").isin(["click", "error"]))
-    lo, hi = joint_minmax(ev, ["value"])["value"]
-    binned = ev.select(
-        "event_type",
-        bin_index_col(F.col("value").cast("double"), lo, hi, HIST_BINS).alias("bin"),
-    ).filter(F.col("bin").isNotNull())
-    counts = binned.groupBy("bin").agg(
-        F.sum((F.col("event_type") == "click").cast("long")).alias("c1"),
-        F.sum((F.col("event_type") == "error").cast("long")).alias("c2"),
-    )
-    w = Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, 0)
-    return (
-        _with_totals(counts, t1="c1", t2="c2")
-        .withColumn("cum1", F.sum("c1").over(w))
-        .withColumn("cum2", F.sum("c2").over(w))
-        .agg(F.round(F.max(F.abs(F.col("cum1") / F.col("t1") - F.col("cum2") / F.col("t2"))), 6).alias("ks"))
-    )
+    _, _, counts = _two_sample_bins(
+        _t(spark, sf_dir, "events"), "event_type", "click", "error", "value")
+    return _cumulative(counts).agg(
+        F.round(F.max(F.abs(F.col("cum1") / F.col("t1") - F.col("cum2") / F.col("t2"))), 6)
+        .alias("ks"))
 
 
 def q_emd_value_click_vs_error(spark, sf_dir):
@@ -498,28 +506,15 @@ def q_emd_value_click_vs_error(spark, sf_dir):
     the KS entry uses (functions/distances.emd_1d is the suite-side
     numpy twin). EMD integrates the whole CDF gap, catching thin mean
     shifts KS's single max understates."""
-    from menelaus_spark.operators.histograms import bin_index_col, joint_minmax
-
-    ev = _t(spark, sf_dir, "events").filter(F.col("event_type").isin(["click", "error"]))
-    lo, hi = joint_minmax(ev, ["value"])["value"]
-    binned = ev.select(
-        "event_type",
-        bin_index_col(F.col("value").cast("double"), lo, hi, HIST_BINS).alias("bin"),
-    ).filter(F.col("bin").isNotNull())
-    counts = binned.groupBy("bin").agg(
-        F.sum((F.col("event_type") == "click").cast("long")).alias("c1"),
-        F.sum((F.col("event_type") == "error").cast("long")).alias("c2"),
-    )
-    w = Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, 0)
+    lo, hi, counts = _two_sample_bins(
+        _t(spark, sf_dir, "events"), "event_type", "click", "error", "value")
     bw = (float(hi) - float(lo)) / HIST_BINS
     # unlike KS's max, the EMD sum must count EMPTY bins: the CDF gap
     # after a populated bin persists across every empty bin up to the
     # next populated one, so each row's |gap| is weighted by that span
     # (the last populated bin's gap is 0 — both CDFs reach 1)
     return (
-        _with_totals(counts, t1="c1", t2="c2")
-        .withColumn("cum1", F.sum("c1").over(w))
-        .withColumn("cum2", F.sum("c2").over(w))
+        _cumulative(counts)
         .withColumn("span",
                     F.lead("bin", 1, HIST_BINS).over(Window.orderBy("bin"))
                     - F.col("bin"))
@@ -539,29 +534,12 @@ def q_cvm_value_click_vs_error(spark, sf_dir):
     (functions/distances.cvm_statistic is the suite-side numpy twin).
     Scale-free in [0, 1]; empty bins carry zero pooled mass, so unlike
     EMD no bin-span weighting is needed."""
-    from menelaus_spark.operators.histograms import bin_index_col, joint_minmax
-
-    ev = _t(spark, sf_dir, "events").filter(F.col("event_type").isin(["click", "error"]))
-    lo, hi = joint_minmax(ev, ["value"])["value"]
-    binned = ev.select(
-        "event_type",
-        bin_index_col(F.col("value").cast("double"), lo, hi, HIST_BINS).alias("bin"),
-    ).filter(F.col("bin").isNotNull())
-    counts = binned.groupBy("bin").agg(
-        F.sum((F.col("event_type") == "click").cast("long")).alias("c1"),
-        F.sum((F.col("event_type") == "error").cast("long")).alias("c2"),
-    )
-    w = Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, 0)
+    _, _, counts = _two_sample_bins(
+        _t(spark, sf_dir, "events"), "event_type", "click", "error", "value")
     gap = F.col("cum1") / F.col("t1") - F.col("cum2") / F.col("t2")
-    return (
-        _with_totals(counts, t1="c1", t2="c2")
-        .withColumn("cum1", F.sum("c1").over(w))
-        .withColumn("cum2", F.sum("c2").over(w))
-        .agg(F.round(
-            F.sum((F.col("c1") + F.col("c2")) / (F.col("t1") + F.col("t2"))
-                  * gap * gap),
-            6).alias("cvm"))
-    )
+    return _cumulative(counts).agg(F.round(
+        F.sum((F.col("c1") + F.col("c2")) / (F.col("t1") + F.col("t2")) * gap * gap),
+        6).alias("cvm"))
 
 
 # --------------------------------------------------------------------------
@@ -688,7 +666,7 @@ def _kdq_oracle_sql() -> str | None:
     over the full under-cap reference year; the criticals are seeded
     multinomial draws, not SQL-expressible) and are inlined as
     literals; the DISTRIBUTED work the Spark side does — per-year leaf
-    counts via the broadcast-tree pandas UDF + salted aggregation, and
+    counts via the broadcast-tree pandas UDF + grouped count, and
     the Dasu-smoothed KL — is recomputed independently in pure SQL via
     a recursive tree walk over the same parquet. Same inlined-constant
     precedent as the k-means centroids / LSH hyperplanes."""
@@ -1643,11 +1621,11 @@ def q_lsh_ann_topk(spark, sf_dir):
     return out.select("query_id", "vec_id", F.round("cosine", 4).alias("cos4"), "rank")
 
 
-def _distinct_years(df: DataFrame) -> list:
-    """The sorted distinct ``yr`` values of ``df``: one distinct job.
-    Entries that collect every year's rows anyway take the years from
-    that collect instead."""
-    return sorted(r[0] for r in df.select("yr").distinct().collect())
+def _distinct_values(df: DataFrame, col: str) -> list:
+    """The sorted distinct non-null ``col`` values of ``df``: one
+    distinct job. Entries that collect every batch's rows anyway take
+    the batch values from that collect instead."""
+    return sorted(v for (v,) in df.select(col).distinct().collect() if v is not None)
 
 
 _LI_DRIFT_COLS = ["l_quantity", "l_extendedprice", "l_discount"]
@@ -1670,71 +1648,66 @@ def _small_proj_partitions(spark) -> int:
     return max(2, min(spark.sparkContext.defaultParallelism, 16))
 
 
+def _pinned(spark, df: DataFrame) -> DataFrame:
+    """``df`` on at most _small_proj_partitions partitions, persisted
+    once: a fresh DataFrame over an already cached plan reports that
+    plan's storage level (the CacheManager answers ``storageLevel``),
+    so a warm call reuses the pinned projection and does not ask Spark
+    to cache it again."""
+    df = df.coalesce(_small_proj_partitions(spark))
+    if df.storageLevel == StorageLevel.NONE:
+        df.persist()
+    return df
+
+
 def _lineitem_year_proj(spark, sf_dir):
     """Pinned (yr, 3 numeric cols) projection: the per-year batch
     filters of the drift-sequence queries must not each re-scan the
     full table (the projection is ~20 MB at sf0.1)."""
     li = _t(spark, sf_dir, "lineitem")
-    return li.select(
+    return _pinned(spark, li.select(
         F.year("l_shipdate").alias("yr"),
         *[F.col(c).cast("double").alias(c) for c in _LI_DRIFT_COLS],
-    ).coalesce(_small_proj_partitions(spark)).persist()
+    ))
 
 
 def _batch_summaries(df, batch_col: str, cols: list[str]) -> dict:
     """ALL per-batch (value, count) summaries in ONE pass ->
     {batch_value: {col: (values, counts)}} — the same feed the
     ValidationSuite gives HDM, so a drift sequence over k batches costs
-    one Spark job instead of one summary job per batch. Null values
-    are kept as groups (n/min/max derive from the summary).
+    one Spark job instead of one summary job per batch.
 
-    Fast path (r06): under the ``batch_summaries`` row cap, ONE bounded
-    Arrow collect of the raw projection (driver_rows) replaces the
-    explode + two-stage salted aggregation, and np.unique does the
-    (value -> count) grouping driver-side. The
-    per-value counts are identical; null/NaN rows consolidate into one
-    NaN entry instead of Spark's separate null/NaN groups (both arrive
-    driver-side as NaN anyway), which every consumer treats
+    Under the ``batch_summaries`` row cap this is ONE bounded Arrow
+    collect of the raw projection (driver_rows), and np.unique does the
+    (value -> count) grouping driver-side. Null/NaN rows consolidate
+    into one NaN entry (Spark's summary keeps null and NaN apart; both
+    arrive driver-side as NaN anyway), which every consumer treats
     identically: n sums counts, min/max/histogram binning filter NaN
     (hdm._minmax_count_from_summary, histograms.bin_weighted_driver).
-    Over the cap, the exploded aggregation runs unchanged."""
+    Over the cap it names the batches only, {batch_value: None} from
+    one distinct job: each HDM update then builds its own summary,
+    bounded by the ``hdm_values`` cap and kept in the cluster above it
+    (hdm._summarize), so no driver collect here grows with the data."""
     import numpy as np
-
-    from menelaus_spark.operators import histograms as H
 
     pdf = driver_rows(df.select(
         F.col(batch_col).alias("__b"),
         *[F.col(c).cast("double").alias(c) for c in cols],
     ), "batch_summaries")
+    if pdf is None:
+        return {b: None for b in _distinct_values(df, batch_col)}
     out: dict = {}
-    if pdf is not None:
-        for b, g in pdf.groupby("__b"):
-            d = {}
-            for c in cols:
-                a = g[c].to_numpy(np.float64)
-                nan_n = int(np.isnan(a).sum())
-                vals, cnts = np.unique(a[~np.isnan(a)], return_counts=True)
-                if nan_n:
-                    vals = np.append(vals, np.nan)
-                    cnts = np.append(cnts, nan_n)
-                d[c] = (vals.astype(np.float64), cnts.astype(np.float64))
-            out[b] = d
-        return out
-    structs = [
-        F.struct(F.lit(c).alias("feature"), F.col(c).cast("double").alias("value"))
-        for c in cols
-    ]
-    ex = df.select(
-        F.col(batch_col).alias("__b"), F.explode(F.array(*structs)).alias("fv")
-    ).select("__b", "fv.feature", "fv.value")
-    pdf = H.salted_count(ex, ["__b", "feature", "value"]).toPandas()
-    for (b, c), g in pdf.groupby(["__b", "feature"]):
-        out.setdefault(b, {})[str(c)] = (
-            g["value"].to_numpy(np.float64), g["count"].to_numpy(np.float64)
-        )
-    for b in out:
+    for b, g in pdf.groupby("__b"):
+        d = {}
         for c in cols:
-            out[b].setdefault(c, (np.array([]), np.array([])))
+            a = g[c].to_numpy(np.float64)
+            nan_n = int(np.isnan(a).sum())
+            vals, cnts = np.unique(a[~np.isnan(a)], return_counts=True)
+            if nan_n:
+                vals = np.append(vals, np.nan)
+                cnts = np.append(cnts, nan_n)
+            d[c] = (vals.astype(np.float64), cnts.astype(np.float64))
+        out[b] = d
     return out
 
 
@@ -1762,7 +1735,9 @@ def q_hdddm_lineitem(spark, sf_dir):
 def _hdm_sequence_frame(spark, det, batches, stats, ddl: str):
     """One (year, state, *ddl) row per (label, DataFrame, summary)
     batch of an HDM detector: ``stats(det)`` names each update's
-    diagnostics. The batch frames the detector cached are released."""
+    diagnostics. A None summary (``_batch_summaries`` over its cap)
+    makes the detector summarize the batch itself. The batch frames
+    the detector cached are released."""
     rows = []
     try:
         for i, (lbl, batch, sv) in enumerate(batches):
@@ -1786,9 +1761,10 @@ def q_kdq_lineitem(spark, sf_dir):
 
     Vectorized-over-batches (r06): the sequential protocol's per-year
     distributed fill jobs collapse into ONE grouped leaf-count pass per
-    tree (the ValidationSuite's _kdq_counts_by_part plan) — a fresh
-    fill pass is needed only when a drift event installs a new
-    reference tree, and it recounts only the not-yet-decided years.
+    tree (kdqtree.distributed_leaf_counts_by_group, which the
+    ValidationSuite runs too) — a fresh fill pass is needed only when
+    a drift event installs a new reference tree, and it recounts only
+    the not-yet-decided years.
     Leaf counts are exact integers and the tree build is row-order
     independent (min/ptp/np.unique), so every (kl, critical) value is
     bit-identical to the r05 per-batch loop — same oracle hash."""
@@ -1822,7 +1798,7 @@ def q_kdq_lineitem(spark, sf_dir):
         def build_from(yr):
             return det.build_tree_from_sample(groups_nd[yr])
     else:
-        years = _distinct_years(proj)
+        years = _distinct_values(proj, "yr")
 
         def counts_for(tree, scope_years):
             return distributed_leaf_counts_by_group(
@@ -1946,9 +1922,8 @@ def q_cdbd_example_confidence(spark, sf_dir):
     _ensure_workers_can_import(spark)
     # pin the 2-column projection: the synthetic generator is a full
     # mapInPandas pass, so per-year filters must not re-generate it
-    df = tables.make_example_batch_data(spark, year_size=1500).select(
-        "year", "confidence"
-    ).coalesce(_small_proj_partitions(spark)).persist()
+    df = _pinned(spark, tables.make_example_batch_data(spark, year_size=1500).select(
+        "year", "confidence"))
     sums = _batch_summaries(df, "year", ["confidence"])
     years = sorted(sums)
     det = CDBD(detect_batch=2, seed=42)
@@ -1960,8 +1935,9 @@ def q_cdbd_example_confidence(spark, sf_dir):
 
 def _drift_sequence_rows(spark, det, batches):
     """Drive an HDM detector over (label, DataFrame, summary) batches
-    (summaries from the one-pass `_batch_summaries` feed — detect_batch
-    3 sequences then run entirely driver-side after that single job);
+    (summaries from the one-pass `_batch_summaries` feed — under its
+    cap, detect_batch 3 sequences then run entirely driver-side after
+    that single job);
     report via the detector's own diagnostic dicts so post-drift rows
     never show a stale beta."""
     out = _hdm_sequence_frame(spark, det, batches, lambda d: {
@@ -2001,10 +1977,10 @@ def q_cdbd_events_value(spark, sf_dir):
     family as q_hdddm_lineitem_cumulative."""
     from menelaus_spark.checks.hdm import CDBD
 
-    ev = _t(spark, sf_dir, "events").select(
+    ev = _pinned(spark, _t(spark, sf_dir, "events").select(
         F.floor((F.dayofmonth("ts") - 1) / 3).cast("int").alias("bkt"),
         F.col("value").cast("double").alias("value"),
-    ).coalesce(_small_proj_partitions(spark)).persist()
+    ))
     sums = _batch_summaries(ev, "bkt", ["value"])
     bkts = sorted(sums)
     det = CDBD(detect_batch=3, statistic="stdev", seed=42)
@@ -2777,7 +2753,7 @@ def q_nndvi_lineitem(spark, sf_dir):
     from menelaus_spark.checks.nndvi import NNDVI
 
     proj = _lineitem_year_proj(spark, sf_dir)
-    years = _distinct_years(proj)
+    years = _distinct_values(proj, "yr")
     det = NNDVI(k_nn=20, sampling_times=100, batch_sample_cap=300, seed=42)
     rows = []
     for i, yr in enumerate(years):

@@ -27,7 +27,7 @@ CDBD), including:
 - no drift: reference grows by the test batch (:335-341).
 
 Spark-first split: ALL data passes are distributed — one count, one
-joint min/max, and ONE salted summary shuffle per update; the
+joint min/max, and ONE summary shuffle per update; the
 epsilon/beta decision runs on the collected (2 x n_features x bins)
 count matrix, which is O(sqrt(n)) scalars.
 
@@ -43,7 +43,7 @@ While the summary is small (at most the ``hdm_values`` entry of
 ``verdicts.DRIVER_ROW_CAPS``) it lives on the driver and histograms
 are pure numpy (zero Spark jobs for the reference side); past the cap
 it spills to a persisted compact DataFrame and histograms run as one
-salted weighted aggregation over (distinct values), not rows.  Both
+grouped weighted count over (distinct values), not rows.  Both
 paths use the identical floor((v-lo)/width) double arithmetic, so
 results are bit-equal.
 The reference's pandas ``sample(n, replace=True)`` bootstrap becomes
@@ -394,7 +394,7 @@ class HDM:
 
     def _batch_summary_df(self, df: DataFrame) -> DataFrame:
         """(feature, value, count) distinct-value summary of one batch
-        in ONE exploded salted aggregation. Null/NaN values are KEPT as
+        in ONE exploded grouped count. Null/NaN values are KEPT as
         their own groups so that per-feature total row counts (and thus
         min/max + n) are derivable from the summary alone — one Spark
         action per update; the binning step excludes them, exactly as
@@ -514,8 +514,8 @@ class HDM:
     ) -> tuple[np.ndarray, np.ndarray]:
         """Reference + test histograms at the CURRENT (ranges, nbins)
         edges from the (value, count) summaries. Driver mode is pure
-        numpy (zero Spark jobs); cluster mode is one salted weighted
-        aggregation over distinct values — never raw rows. Both use the
+        numpy (zero Spark jobs); cluster mode is one grouped weighted
+        count over distinct values — never raw rows. Both use the
         identical floor((v-lo)/width) double arithmetic."""
         cols = list(ranges.keys())
         if ref_sum["mode"] == "driver" and test_sum["mode"] == "driver":

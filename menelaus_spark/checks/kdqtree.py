@@ -284,8 +284,8 @@ def distributed_leaf_counts(
     df: DataFrame, feature_cols: list[str], tree: KDQTreePartitioner
 ) -> np.ndarray:
     """Distributed fill: assign leaves via the compiled JVM expression
-    (pandas-UDF fallback above LEAF_EXPR_MAX_NODES), count with a
-    salted two-stage aggregation, return the dense O(leaves) vector."""
+    (pandas-UDF fallback above LEAF_EXPR_MAX_NODES), count with one
+    grouped aggregation, return the dense O(leaves) vector."""
     from menelaus_spark.operators.histograms import salted_count
 
     leaves = df.select(_leaf_col_or_udf(df, feature_cols, tree).alias("leaf"))
@@ -303,11 +303,12 @@ def distributed_leaf_counts_by_group(
     tree: KDQTreePartitioner,
     groups: list,
 ) -> dict:
-    """Leaf counts for MANY batches in ONE grouped pass: broadcast the
-    flat tree arrays, assign leaves in an Arrow-batched pandas UDF,
-    salted (group, leaf) count, return {group: dense count vector}.
-    The per-batch twin of :func:`distributed_leaf_counts` — identical
-    exact counts, one Spark job for any number of batches."""
+    """Leaf counts for MANY batches in ONE grouped pass: assign leaves
+    as :func:`distributed_leaf_counts` does, count (group, leaf) over
+    the rows whose ``group_col`` is in ``groups``, return {group: dense
+    count vector}. Identical exact counts, one pass for any number of
+    batches; the ValidationSuite calls it with the partition value
+    cast to a string column."""
     from menelaus_spark.operators.histograms import salted_count
 
     leaves = df.filter(F.col(group_col).isin(list(groups))).select(

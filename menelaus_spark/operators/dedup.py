@@ -202,6 +202,12 @@ def _blockwise_intersections(
         "__blk").applyInPandas(kernel, out_schema)
 
 
+# Blocks of at most this many documents take the block-local
+# intersection kernel; bigger blocks take the AllPairs prefix
+# pipeline. Both return the identical pairs (asserted in tests).
+NGRAM_KERNEL_BLOCK_ROWS = 4096
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str,
@@ -209,7 +215,6 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.8,
     block_col: str | None = None,
-    kernel_block_rows: int = 4096,
 ) -> DataFrame:
     """All pairs with shingle-set Jaccard >= threshold (optionally
     restricted to within-``block_col`` pairs), via EXACT prefix-filter
@@ -227,7 +232,7 @@ def ngram_jaccard_pairs(
       an all-pairs join, so this replaces the previous within-block
       all-pairs plan without changing any result.
 
-    Hybrid execution (r06): blocks with <= ``kernel_block_rows``
+    Hybrid execution (r06): blocks with <= ``NGRAM_KERNEL_BLOCK_ROWS``
     documents skip the whole prefix machinery — their exact pairwise
     intersection counts come from ONE block-local Arrow kernel over
     the already-hashed sets (_blockwise_intersections: sort the
@@ -276,9 +281,9 @@ def ngram_jaccard_pairs(
     # action for the pinned hdoc frame, which every path needs anyway.
     size_rows = hdoc.groupBy("__blk").agg(
         F.count(F.lit(1)).alias("__bn")).collect()
-    over = [r["__blk"] for r in size_rows if int(r["__bn"]) > kernel_block_rows]
+    over = [r["__blk"] for r in size_rows if int(r["__bn"]) > NGRAM_KERNEL_BLOCK_ROWS]
     under = [r["__blk"] for r in size_rows
-             if int(r["__bn"]) <= kernel_block_rows]
+             if int(r["__bn"]) <= NGRAM_KERNEL_BLOCK_ROWS]
 
     jacc = F.round(
         F.when(F.col("__union") == 0, F.lit(0.0))

@@ -134,6 +134,13 @@ def lsh_ann_topk(
     )
 
 
+# Quantizers with at most this many centroid components (n_lists × dim)
+# inline their centroids as JVM array literals; bigger ones broadcast
+# them to an Arrow kernel. Both paths assign identically (asserted in
+# tests); the literal plan is the one the DuckDB oracle replays.
+IVF_LITERAL_CUTOFF = 4096
+
+
 def ivf_ann_topk(
     df: DataFrame,
     id_col: str,
@@ -145,7 +152,6 @@ def ivf_ann_topk(
     sample_cap: int = 100_000,
     n_iters: int = 20,
     seed: int = 42,
-    literal_cutoff: int = 4096,
 ) -> DataFrame:
     """IVF (inverted-file) approximate top-k — the cluster-pruned
     counterpart of :func:`lsh_ann_topk`: a seeded spherical k-means
@@ -158,7 +164,7 @@ def ivf_ann_topk(
     first occurrence (lowest list id) wins equal dots.
 
     Assignment has two physically different, semantically identical
-    paths, switched on ``n_lists × dim`` vs ``literal_cutoff``:
+    paths, switched on ``n_lists × dim`` vs ``IVF_LITERAL_CUTOFF``:
     small quantizers inline the centroids as JVM array literals
     (whole-stage codegen, zero Python — and the config the DuckDB
     oracle replays); production fan-outs (n_lists ≥ 256, dim ≥ 64
@@ -194,7 +200,7 @@ def ivf_ann_topk(
     corpus = df.select(
         F.col(id_col), F.col(vec_col).cast("array<double>").alias("__v")
     )
-    if centroids.size <= literal_cutoff:
+    if centroids.size <= IVF_LITERAL_CUTOFF:
 
         def dot6(vec_sql, c):
             # one parsed expression per centroid (see _dbl_array_sql)
@@ -453,7 +459,6 @@ def ivfpq_ann_topk(
     n_iters: int = 20,
     seed: int = 42,
     rerank: int = 0,
-    literal_cutoff: int = 4096,
 ) -> DataFrame:
     """IVF x PQ — the production ANN architecture at 10^12 vectors:
     the IVF coarse quantizer prunes WHICH vectors each query touches

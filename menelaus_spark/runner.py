@@ -35,7 +35,11 @@ from pyspark.sql import types as T
 
 from menelaus_spark import audio
 from menelaus_spark.checks.hdm import HDDDM
-from menelaus_spark.checks.kdqtree import KdqTreeBatch
+from menelaus_spark.checks.kdqtree import (
+    KdqTreeBatch,
+    distributed_leaf_counts,
+    distributed_leaf_counts_by_group,
+)
 from menelaus_spark.functions import distances as dist
 from menelaus_spark.functions import stats as S
 from menelaus_spark.operators import constraints as C
@@ -1288,28 +1292,10 @@ class ValidationSuite:
 
     # ---------------------------------------- vectorized-over-partitions
 
-    def _kdq_counts_by_part(self, clean_feats: DataFrame, tree, pks: list[str]) -> dict:
-        """Distributed leaf counts for MANY partitions in one pass:
-        assign leaves in the (already cached) feature frame via the
-        compiled JVM tree expression (pandas-UDF fallback above the
-        node cap), salted groupBy (partition, leaf)."""
-        from menelaus_spark.checks.kdqtree import _leaf_col_or_udf
-
-        fcols = [f"f{i}" for i in range(audio.N_FEATURES)]
-        leaves = clean_feats.select(
-            F.col(self.partition_col).cast("string").alias("__pk"),
-            _leaf_col_or_udf(clean_feats, fcols, tree).alias("leaf"),
-        )
-        rows = H.salted_count(leaves, ["__pk", "leaf"]).collect()
-        out = {pk: np.zeros(tree.n_leaves, dtype=np.int64) for pk in pks}
-        for r in rows:
-            out[r["__pk"]][int(r["leaf"])] = int(r["count"])
-        return out
-
     def _summary_probe(self, scoped: DataFrame):
         """The summary pass's driver fast path, first step: under the
         ``summary_probe`` cap, ONE bounded Arrow collect (driver_rows)
-        of the raw projection replaces the explode + salted aggregation
+        of the raw projection replaces the exploded grouped count
         (see _global_summary_pass). It needs neither the partition list
         nor the KS ranges, so it runs while the constraint aggregation
         is in flight. Returns the collected frame, or None over the cap
@@ -1333,9 +1319,9 @@ class ValidationSuite:
         self, scoped: DataFrame, todo: list[str], ranges: dict, pdf
     ) -> tuple[dict, dict]:
         """KS histograms + PSI frequencies + HDM distinct-value
-        summaries for EVERY partition in ONE exploded salted
-        aggregation — one scan of the (numeric, codec) projection
-        where rounds 1-2 used two. HDM values ride as their Java
+        summaries for EVERY partition in ONE exploded grouped count —
+        one scan of the (numeric, codec) projection where rounds 1-2
+        used two. HDM values ride as their Java
         shortest-round-trip string (exact double round-trip), and the
         driver cap still guards the HDM side: past it, HDM falls back
         to its own per-batch summary jobs.
@@ -1522,7 +1508,7 @@ class ValidationSuite:
         t0 = time.time()
         # global pass 2: KS histograms + PSI frequencies + HDM
         # distinct-value summaries for every partition, all in ONE
-        # bounded collect or exploded salted aggregation. The sequential
+        # bounded collect or exploded grouped count. The sequential
         # HDM updates then run driver-side on the collected summaries —
         # zero Spark jobs per partition, keeping the suite's job count
         # O(1) in the partition count. The fast path's collect needs
@@ -1569,7 +1555,15 @@ class ValidationSuite:
             qcounts_future = submit(self._quality_counts_by_part, feats, todo)
         self._kdq_groups = None
         if self.kdq is not None:
-            clean = feats.filter(_f0_clean())
+            fcols = [f"f{i}" for i in range(audio.N_FEATURES)]
+            # clean feature rows keyed by the string partition value
+            # the decision loop uses
+            pk_clean = feats.filter(_f0_clean()).withColumn(
+                "__pk", F.col(self.partition_col).cast("string"))
+
+            def leaf_counts(tree, pks):
+                return distributed_leaf_counts_by_group(pk_clean, "__pk", fcols, tree, pks)
+
             if self.kdq._tree is None:
                 # small-table fast path: when EVERY partition fits
                 # under the build-sample cap (so the distributed
@@ -1593,11 +1587,7 @@ class ValidationSuite:
                     int(stats_by[pk]["__n"]) for pk in todo
                 ) <= DRIVER_ROW_CAPS["suite_kdq"]
                 if cap_ok:
-                    fcols = [f"f{i}" for i in range(audio.N_FEATURES)]
-                    pdf = clean.select(
-                        F.col(self.partition_col).cast("string").alias("__pk"),
-                        *fcols,
-                    ).toPandas()
+                    pdf = pk_clean.select("__pk", *fcols).toPandas()
                     groups = {
                         str(g): sub[fcols].to_numpy(dtype=np.float64)
                         for g, sub in pdf.groupby("__pk")
@@ -1616,13 +1606,13 @@ class ValidationSuite:
                     tree = self._kdq_build_tree(
                         self._kdq_clean_feats_for(df, feats, todo[0], todo)
                     )
-                    counts_by = self._kdq_counts_by_part(clean, tree, todo)
+                    counts_by = leaf_counts(tree, todo)
                 self.kdq.install_reference(tree, counts_by[todo[0]])
                 self.kdq._input_cols = [f"f{i}" for i in range(audio.N_FEATURES)]
                 self._kdq_ref_pk = todo[0]
                 self._kdq_fresh_ref = True
             else:
-                counts_by = self._kdq_counts_by_part(clean, self.kdq._tree, todo)
+                counts_by = leaf_counts(self.kdq._tree, todo)
                 self._kdq_fresh_ref = False
         if qcounts_future is not None:
             qcounts_by = qcounts_future.result()
@@ -1696,20 +1686,12 @@ class ValidationSuite:
                         tree = self._kdq_build_tree(ref_feats)
                         # one recount pass for the drifted reference + all
                         # not-yet-decided partitions under the new tree
-                        clean = feats.filter(_f0_clean())
-                        recount = self._kdq_counts_by_part(
-                            clean.filter(F.col(self.partition_col).cast("string").isin(scope)),
-                            tree, scope,
-                        )
+                        recount = leaf_counts(tree, scope)
                     counts_by.update(recount)
                     if ref_pk in recount:
                         ref_counts = recount[ref_pk]
                     else:  # reference partition completed in a prior run
-                        from menelaus_spark.checks.kdqtree import distributed_leaf_counts
-
-                        ref_counts = distributed_leaf_counts(
-                            ref_feats, [f"f{i}" for i in range(audio.N_FEATURES)], tree
-                        )
+                        ref_counts = distributed_leaf_counts(ref_feats, fcols, tree)
                     self.kdq.install_reference(tree, ref_counts)
                 if is_ref and self._kdq_fresh_ref and pk == self._kdq_ref_pk:
                     verdicts.append(Verdict(pk, "kdq_tree", PASS, n_rows=n_rows,

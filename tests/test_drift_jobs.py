@@ -17,6 +17,8 @@ import uuid
 import zipfile
 
 import pytest
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -86,15 +88,36 @@ def test_kdq_over_cap_matches_fast_path(spark, sf_dir, monkeypatch):
     assert slow == fast
 
 
-def test_hdddm_over_cap_matches_fast_path(spark, sf_dir, monkeypatch):
-    fast = _rows(spark, sf_dir, "hdddm_lineitem")
+@pytest.mark.parametrize("name", [
+    "hdddm_lineitem", "hdddm_lineitem_cumulative", "cdbd_events_value",
+    "cdbd_example_confidence"])
+def test_hdddm_over_cap_matches_fast_path(spark, sf_dir, monkeypatch, name):
+    fast, n_fast = _jobs(spark, lambda: _rows(spark, sf_dir, name))
     monkeypatch.setitem(DRIVER_ROW_CAPS, "batch_summaries", 0)
-    # the over-cap summary is a salted aggregation: more than the one
-    # collect job of the fast path
-    slow, n = _jobs(spark, lambda: _rows(spark, sf_dir, "hdddm_lineitem"))
+    # over the cap the entry names its batches only and each HDM update
+    # builds its own summary: more jobs than the fast path's one collect
+    slow, n = _jobs(spark, lambda: _rows(spark, sf_dir, name))
     spark.catalog.clearCache()
-    assert n > WARM_JOBS["hdddm_lineitem"]
+    assert n > max(n_fast, WARM_JOBS["hdddm_lineitem"])
     assert slow == fast
+
+
+def test_drift_projection_is_pinned_once(spark, sf_dir, monkeypatch):
+    # a second call finds its plan cached and does not persist it again
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    first = entrymod._lineitem_year_proj(spark, sf_dir)
+    persisted = []
+    persist = DataFrame.persist
+    monkeypatch.setattr(DataFrame, "persist",
+                        lambda df, *a, **k: persisted.append(df) or persist(df, *a, **k))
+    again = entrymod._lineitem_year_proj(spark, sf_dir)
+    levels = (first.storageLevel, again.storageLevel)
+    n = cache.cachedData().size()
+    spark.catalog.clearCache()
+    assert persisted == []
+    assert levels[0] == levels[1] != StorageLevel.NONE
+    assert n == 1
 
 
 @pytest.mark.parametrize(

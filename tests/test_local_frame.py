@@ -140,9 +140,11 @@ def test_driver_rows_runs_one_job(spark):
 
 
 def test_no_callable_takes_a_cap_or_salt_option():
-    # every fast-path cap lives in DRIVER_ROW_CAPS and the salt count
-    # is one constant: no function grows a per-call option for them
-    gone = {"driver_cap", "total_cap", "driver_row_cap", "driver_value_cap", "n_salt"}
+    # every fast-path cap lives in DRIVER_ROW_CAPS, the counts have no
+    # salt, and a path selector whose paths agree is a module constant:
+    # no function grows a per-call option for them
+    gone = {"driver_cap", "total_cap", "driver_row_cap", "driver_value_cap", "n_salt",
+            "literal_cutoff", "kernel_block_rows"}
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     paths = [os.path.join(root, "__spark_entry__.py")] + glob.glob(
         os.path.join(root, "menelaus_spark", "**", "*.py"), recursive=True)
@@ -166,7 +168,7 @@ def test_dbl_array_sql_spells_non_finite_values(spark):
     assert a[0] == 1.5 and np.isnan(a[1]) and a[2] == np.inf and a[3] == -np.inf
 
 
-def test_ivf_ann_topk_with_non_finite_vectors(spark):
+def test_ivf_ann_topk_with_non_finite_vectors(spark, monkeypatch):
     rng = np.random.default_rng(3)
     vecs = [[float(x) for x in rng.standard_normal(4)] for _ in range(40)]
     vecs[5] = [float("inf"), 1.0, 0.0, 0.0]  # unit-normalizes to a NaN row
@@ -176,13 +178,14 @@ def test_ivf_ann_topk_with_non_finite_vectors(spark):
     df = local_frame(spark, list(enumerate(vecs)), "vec_id long, embedding array<double>")
     queries = [("q0", vecs[0])]
 
-    def topk(**kw):
+    def topk():
         return similarity.ivf_ann_topk(
-            df, "vec_id", "embedding", queries, k=3, n_lists=4, nprobe=4, **kw
+            df, "vec_id", "embedding", queries, k=3, n_lists=4, nprobe=4
         ).toPandas().sort_values("rank").reset_index(drop=True)
 
     lit = topk()
     assert len(lit) == 3
     assert 0 in set(lit["vec_id"])
     # the broadcast-centroid Arrow kernel agrees with the literal plan
-    assert lit.equals(topk(literal_cutoff=0))
+    monkeypatch.setattr(similarity, "IVF_LITERAL_CUTOFF", 0)
+    assert lit.equals(topk())

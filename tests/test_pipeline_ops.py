@@ -322,18 +322,18 @@ def test_ivf_ann_recall_and_determinism(spark, emb):
     assert a1.equals(a2)
 
 
-def test_ivf_assignment_paths_agree(spark, emb):
+def test_ivf_assignment_paths_agree(spark, emb, monkeypatch):
     # the JVM-literal and broadcast-centroid Arrow assignment paths are
-    # semantically identical: forcing the Arrow kernel (literal_cutoff=0)
-    # must reproduce the literal path's output bit-for-bit
+    # semantically identical: forcing the Arrow kernel (a literal cutoff
+    # of 0) must reproduce the literal path's output bit-for-bit
     rows = emb.limit(2).collect()
     queries = [(f"q{i}", list(r["embedding"])) for i, r in enumerate(rows)]
     lit = similarity.ivf_ann_topk(
         emb, "vec_id", "embedding", queries, k=10, n_lists=4, nprobe=2
     ).toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
+    monkeypatch.setattr(similarity, "IVF_LITERAL_CUTOFF", 0)
     arrow = similarity.ivf_ann_topk(
-        emb, "vec_id", "embedding", queries, k=10, n_lists=4, nprobe=2,
-        literal_cutoff=0,
+        emb, "vec_id", "embedding", queries, k=10, n_lists=4, nprobe=2
     ).toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
     assert lit.equals(arrow)
 
@@ -499,11 +499,16 @@ def test_pq_production_fanout(spark):
         assert len(got) == 10 and (got % 8 == c).all()
 
 
-def test_ngram_jaccard_hybrid_paths_bit_equal(spark):
+def test_ngram_jaccard_hybrid_paths_bit_equal(spark, monkeypatch):
     """The r06 block-local intersection kernel and the AllPairs prefix
     pipeline must return the identical pair set with identical rounded
     jaccard values — the cap only picks the execution plan."""
     from pyspark.sql import functions as F
+
+    def pairs(frame, cap):
+        monkeypatch.setattr(dedup, "NGRAM_KERNEL_BLOCK_ROWS", cap)
+        return sorted(map(tuple, dedup.ngram_jaccard_pairs(
+            frame, "doc_id", "text", n=2, threshold=0.3, block_col="blk").collect()))
 
     rows = [
         (1, "a b c d e f g h", "x"), (2, "a b c d e f g z", "x"),
@@ -512,27 +517,19 @@ def test_ngram_jaccard_hybrid_paths_bit_equal(spark):
         (7, "", "y"), (8, "solo", "y"),
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string, blk string")
-    kernel = sorted(map(tuple, dedup.ngram_jaccard_pairs(
-        docs, "doc_id", "text", n=2, threshold=0.3, block_col="blk",
-        kernel_block_rows=10_000).collect()))
-    allpairs = sorted(map(tuple, dedup.ngram_jaccard_pairs(
-        docs, "doc_id", "text", n=2, threshold=0.3, block_col="blk",
-        kernel_block_rows=0).collect()))
+    kernel = pairs(docs, 10_000)
+    allpairs = pairs(docs, 0)
     assert kernel == allpairs and len(kernel) >= 2
     # string ids too (id_a < id_b ordering is by VALUE in both paths)
     sdocs = docs.select(F.concat(F.lit("d"), F.col("doc_id")).alias("doc_id"),
                         "text", "blk")
-    k2 = sorted(map(tuple, dedup.ngram_jaccard_pairs(
-        sdocs, "doc_id", "text", n=2, threshold=0.3, block_col="blk",
-        kernel_block_rows=10_000).collect()))
-    a2 = sorted(map(tuple, dedup.ngram_jaccard_pairs(
-        sdocs, "doc_id", "text", n=2, threshold=0.3, block_col="blk",
-        kernel_block_rows=0).collect()))
+    k2 = pairs(sdocs, 10_000)
+    a2 = pairs(sdocs, 0)
     assert k2 == a2 and len(k2) == len(kernel)
 
 
 @pytest.mark.parametrize("blk_type", ["string", "long"])
-def test_ngram_jaccard_mixed_split_matches_single_path(spark, blk_type):
+def test_ngram_jaccard_mixed_split_matches_single_path(spark, blk_type, monkeypatch):
     """A cap between the block sizes sends some blocks to the kernel and
     the rest to AllPairs through the broadcast (block, over) split; the
     union equals either single-path run."""
@@ -544,9 +541,9 @@ def test_ngram_jaccard_mixed_split_matches_single_path(spark, blk_type):
         .withColumn("blk", F.col("blk").cast(blk_type))
 
     def pairs(cap):
+        monkeypatch.setattr(dedup, "NGRAM_KERNEL_BLOCK_ROWS", cap)
         out = dedup.ngram_jaccard_pairs(
-            docs, "doc_id", "text", n=2, threshold=0.3, block_col="blk",
-            kernel_block_rows=cap)
+            docs, "doc_id", "text", n=2, threshold=0.3, block_col="blk")
         return out, sorted(map(tuple, out.collect()))
 
     mixed_df, mixed = pairs(3)

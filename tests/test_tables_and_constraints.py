@@ -1,4 +1,5 @@
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from menelaus_spark import audio, tables
@@ -97,9 +98,9 @@ def test_range_and_accepted_values(spark):
 
 
 def test_salted_count_under_extreme_skew(spark):
-    # one hot key carrying 99% of rows: the salted two-stage count must
-    # agree exactly with the plain groupBy count (north rule: explicit
-    # salting defuses codec/duration skew without changing results)
+    # one hot key carrying 99% of rows: the count must agree exactly
+    # with the plain groupBy count (partial aggregation collapses the
+    # hot key to one row per map task before the shuffle)
     from pyspark.sql import functions as F
 
     df = spark.range(50_000).select(
@@ -110,6 +111,24 @@ def test_salted_count_under_extreme_skew(spark):
     plain = {r["category"]: r["count"] for r in df.groupBy("category").count().collect()}
     assert salted == plain
     assert salted["pcm"] == 49_500
+
+
+@pytest.mark.parametrize("weighted", [False, True], ids=["count", "weighted"])
+def test_salted_counts_are_one_grouped_aggregation(spark, weighted):
+    # a count or a sum aggregates partially on the map side, so the
+    # counts shuffle once and carry no row-id salt
+    df = spark.range(0, 4_000, 1, 8).select(
+        (F.col("id") % 3).alias("k"), (F.col("id") % 5).alias("w"))
+    if weighted:
+        out = histograms.salted_weighted_count(df, ["k"], "w")
+        want = df.groupBy("k").agg(F.sum("w").alias("count"))
+    else:
+        out = histograms.salted_count(df, ["k"])
+        want = df.groupBy("k").count()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange hashpartitioning") == 1
+    assert "monotonically_increasing_id" not in plan
+    assert sorted(map(tuple, out.collect())) == sorted(map(tuple, want.collect()))
 
 
 def test_asof_join_tied_right_rows_deterministic(spark):
