@@ -20,6 +20,8 @@ import struct
 
 import numpy as np
 
+from menelaus_spark.payload import map_payloads, payload_rows, payload_schema
+
 _RIFF_HEADER_LEN = 44
 N_FEATURES = 12  # rms, zcr, peak, dc, 8 log-spectral bands
 
@@ -433,13 +435,13 @@ def decode_clip(buf: bytes, codec: str) -> tuple[int, np.ndarray]:
 
 def decode_batch(bufs, codecs) -> list:
     """Decode a whole Arrow batch: -> list of (sr_hz, float32 PCM) per
-    clip, None where decode fails (the NaN-row contract of every
-    kernel). Bit-equal to per-clip :func:`decode_clip` — asserted in
-    tests — but the IMA ADPCM clips of the batch are decoded in ONE
-    vectorized pass: their blocks are independent, so they stack into
-    a single (total_blocks, 256) array and the sequential 504-position
-    feedback loop runs once for the whole batch instead of once per
-    clip. At a few hundred clips per Arrow batch that removes ~99% of
+    clip, None where decode fails (payload.map_payloads turns those
+    into each operator's fail rows). Bit-equal to per-clip
+    :func:`decode_clip` — asserted in tests — but the IMA ADPCM clips
+    of the batch are decoded in ONE vectorized pass: their blocks are
+    independent, so they stack into a single (total_blocks, 256) array
+    and the sequential 504-position feedback loop runs once for the
+    whole batch instead of once per clip. At a few hundred clips per Arrow batch that removes ~99% of
     the loop's Python overhead — ADPCM decode would otherwise dominate
     the feature pass the way scan bytes dominate the PCM path."""
     out = [None] * len(bufs)
@@ -591,107 +593,86 @@ def extract_features(pcm: np.ndarray, sr_hz: int) -> np.ndarray:
     return np.concatenate([[rms, zcr, peak, dc], band_power]).astype(np.float32)
 
 
+def feature_cols(quality: bool = False, byte_len: bool = False,
+                 header: bool = False) -> list[str]:
+    """Column names of a feature row: f0..f11, then the QUALITY_COLS
+    (``quality``) or only q_byte_len (``byte_len``), then the
+    HEADER_COLS (``header``)."""
+    cols = [f"f{i}" for i in range(N_FEATURES)]
+    if quality:
+        cols += list(QUALITY_COLS)
+    elif byte_len:
+        cols += [QUALITY_COLS[-1]]
+    return cols + (list(HEADER_COLS) if header else [])
+
+
+def feature_row(buf, dec, quality: bool = False, byte_len: bool = False,
+                header: bool = False) -> np.ndarray:
+    """One clip's float32 feature row (:func:`feature_cols` order) from
+    its payload and its :func:`decode_batch` result.
+
+    An undecodable clip (``dec`` None) gets NaN features — which the
+    Arrow boundary delivers to Spark as NULLs, so engine-side filters
+    must be null-robust (runner._f0_clean) — and the decode-integrity
+    check reports it. Its payload length and container header facts
+    are still known, so the payload-size and metadata-consistency
+    checks ride the same single read of the binary column. A null
+    payload keeps a NaN length (mirrors the fallback path's isNotNull
+    guard, so both paths' statistics agree)."""
+    cols = feature_cols(quality, byte_len, header)
+    row = np.full(len(cols), np.nan, dtype=np.float32)
+    try:
+        sr, pcm = dec
+        row[:N_FEATURES] = extract_features(pcm, sr)
+        if quality:
+            row[N_FEATURES:N_FEATURES + N_QUALITY - 1] = quality_metrics(pcm, sr)
+    except Exception:
+        row[:] = np.nan
+    if (quality or byte_len) and buf is not None:
+        row[cols.index(QUALITY_COLS[-1])] = len(bytes(buf))
+    if header:
+        try:
+            hsr, hn, htag = wav_header_facts(buf)
+            row[-N_HEADER:] = (hsr, 1000.0 * hn / hsr, htag)
+        except Exception:
+            pass
+    return row
+
+
 def features_for_batch(bufs, codecs, quality: bool = False,
                        byte_len: bool = False,
                        header: bool = False) -> np.ndarray:
-    """Vectorized-over-batch feature extraction for a pandas UDF body.
+    """(n, len(feature_cols)) float32 matrix of :func:`feature_row` over
+    one batch, decoded in one :func:`decode_batch` pass — the kernel
+    :func:`features_df` runs, callable driver-side."""
+    width = len(feature_cols(quality, byte_len, header))
+    rows = [feature_row(b, d, quality, byte_len, header)
+            for b, d in zip(bufs, decode_batch(bufs, codecs))]
+    return np.array(rows, dtype=np.float32).reshape(len(bufs), width)
 
-    Returns an (n, N_FEATURES) float32 matrix; ``quality=True``
-    appends :func:`quality_metrics` + the payload byte length
-    (N_QUALITY extra columns); ``byte_len=True`` alone appends ONLY
-    the byte-length column — the payload-size check without the
-    quality kernels' per-clip frame-RMS cost. ``header=True`` appends
-    the HEADER_COLS container facts (:func:`wav_header_facts`) after
-    everything else — the metadata-consistency check rides the same
-    single read of the binary column. Decode failures yield a NaN
-    row — which the Arrow boundary delivers to Spark as NULLs, so
-    engine-side filters must be null-robust (runner._f0_clean) — and is
-    surfaced as violation rows by the decode-integrity check, never as
-    a UDF crash.
-    """
-    n_q = N_QUALITY if quality else (1 if byte_len else 0)
-    width = N_FEATURES + n_q + (N_HEADER if header else 0)
-    want_len = quality or byte_len
-    len_pos = N_FEATURES + n_q - 1
-    hdr0 = N_FEATURES + n_q
-    out = np.empty((len(bufs), width), dtype=np.float32)
-    # one batched decode: ADPCM clips expand in a single vectorized
-    # pass; failures (null/corrupt/non-WAV payloads) come back None
-    # and become NaN decode-integrity rows, never a UDF crash
-    decoded = decode_batch(bufs, codecs)
-    for i, (buf, dec) in enumerate(zip(bufs, decoded)):
-        try:
-            if dec is None:
-                raise ValueError("undecodable payload")
-            sr, pcm = dec
-            out[i, :N_FEATURES] = extract_features(pcm, sr)
-            if quality:
-                out[i, N_FEATURES:N_FEATURES + N_QUALITY - 1] = (
-                    quality_metrics(pcm, sr))
-        except Exception:
-            out[i] = np.nan
-        if want_len and buf is not None:
-            # payload length is knowable even when decode fails — the
-            # payload-size check rides this column so the binary column
-            # is never re-read by the constraint aggregation. Null
-            # payloads keep NaN (mirrors the fallback path's
-            # isNotNull guard, so both paths' statistics agree)
-            out[i, len_pos] = len(bytes(buf))
-        if header:
-            try:
-                hsr, hn, htag = wav_header_facts(buf)
-                out[i, hdr0] = hsr
-                out[i, hdr0 + 1] = 1000.0 * hn / hsr
-                out[i, hdr0 + 2] = htag
-            except Exception:
-                out[i, hdr0:hdr0 + N_HEADER] = np.nan
-    return out
+
+def _with_payloads(bufs, codecs) -> list:
+    # every clip reaches the feature kernel, decodable or not: its
+    # length and header facts are known either way
+    return list(zip(bufs, decode_batch(bufs, codecs)))
 
 
 def features_df(df, key_col: str = "clip_id", bytes_col: str = "bytes",
                 codec_col: str = "codec", carry_cols: tuple[str, ...] = (),
                 quality: bool = False, byte_len: bool = False,
                 header: bool = False):
-    """(key, f0..f11[, q_*]) feature DataFrame via mapInPandas — the
-    Arrow-batched decode + feature path (no per-row Python in the plan;
-    the numpy kernel runs per Arrow batch). Only (key, bytes, codec)
-    are read: Catalyst prunes every other column, so the huge binary
-    column is the only heavy input and it never shuffles.
-    ``quality=True`` appends the QUALITY_COLS from the same decode;
-    ``byte_len=True`` alone appends only q_byte_len (payload-size
-    check without the quality kernels)."""
-    import pandas as pd
-
-    feature_cols = [f"f{i}" for i in range(N_FEATURES)]
-    if quality:
-        feature_cols += list(QUALITY_COLS)
-    elif byte_len:
-        feature_cols += [QUALITY_COLS[-1]]
-    if header:
-        feature_cols += list(HEADER_COLS)
-    carry_types = dict(df.dtypes)
-    head = f"{key_col} string"
-    for c in carry_cols:
-        head += f", {c} {carry_types[c]}"
-    schema = head + ", " + ", ".join(f"{c} double" for c in feature_cols)
-
-    def extract(batches):
-        for pdf in batches:
-            mat = features_for_batch(
-                pdf[bytes_col].tolist(), pdf[codec_col].tolist(),
-                quality=quality, byte_len=byte_len, header=header,
-            )
-            out = pd.DataFrame(mat.astype(np.float64), columns=feature_cols)
-            for c in reversed(carry_cols):
-                out.insert(0, c, pdf[c].to_numpy())
-            out.insert(0, key_col, pdf[key_col].to_numpy())
-            yield out
-
-    # carry_cols may include codec (payload-codec gating) — dedupe so
-    # the projection never carries the same column twice
-    sel = [key_col, *carry_cols]
-    sel += [c for c in (bytes_col, codec_col) if c not in sel]
-    return df.select(*sel).mapInPandas(extract, schema=schema)
+    """(key, carry_cols..., f0..f11[, q_*]) feature DataFrame: one
+    :func:`~menelaus_spark.payload.map_payloads` pass running
+    :func:`feature_row` per clip. ``quality=True`` appends the
+    QUALITY_COLS from the same decode; ``byte_len=True`` alone appends
+    only q_byte_len (payload-size check without the quality kernels);
+    ``header=True`` appends the HEADER_COLS."""
+    cols = feature_cols(quality, byte_len, header)
+    return map_payloads(
+        df, key_col, bytes_col, ", ".join(f"{c} double" for c in cols),
+        lambda item: [feature_row(*item, quality, byte_len, header).tolist()],
+        fail=[(None,) * len(cols)], decode=_with_payloads,
+        codec_col=codec_col, carry_cols=carry_cols)
 
 
 def snr_db(ref: np.ndarray, test: np.ndarray) -> float:
@@ -728,45 +709,24 @@ def resample_pcm(pcm: np.ndarray, sr_in: int, sr_out: int) -> np.ndarray:
 def resample_clips(df, target_sr: int, key_col: str = "clip_id",
                    bytes_col: str = "bytes", codec_col: str = "codec"):
     """Multimodal 'resize' operator: decode -> resample to target_sr ->
-    re-encode WAV, as ONE Arrow-batched mapInPandas pass (the bytes
-    column is read once and transformed in place; schema mirrors the
-    input contract). Undecodable clips pass through with null bytes —
-    the decode-integrity check owns reporting them.
+    re-encode WAV, one :func:`~menelaus_spark.payload.map_payloads`
+    pass (the bytes column is read once and transformed in place;
+    schema mirrors the input contract). Undecodable clips pass through
+    with null bytes — the decode-integrity check owns reporting them.
 
     Returns (key, bytes, sr_hz, dur_ms).
     """
-    import pandas as pd
+    def resample(dec):
+        sr, pcm = dec
+        out = resample_pcm(pcm, sr, target_sr)
+        # decode yields floats in [-1, 1]; WAV wants int16
+        return [(wav_encode(np.round(out * 32768.0).clip(-32768, 32767), target_sr),
+                 target_sr, int(round(1000.0 * out.size / target_sr)))]
 
-    schema = f"{key_col} string, {bytes_col} binary, sr_hz int, dur_ms int"
-
-    def work(batches):
-        for pdf in batches:
-            keys, bufs, srs, durs = [], [], [], []
-            decoded = decode_batch(pdf[bytes_col].tolist(),
-                                   pdf[codec_col].tolist())
-            for key, dec in zip(pdf[key_col], decoded):
-                keys.append(key)
-                try:
-                    if dec is None:
-                        raise ValueError("undecodable payload")
-                    sr, pcm = dec
-                    out = resample_pcm(pcm, sr, target_sr)
-                    # decode_clip yields floats in [-1, 1]; WAV wants int16
-                    bufs.append(
-                        wav_encode(np.round(out * 32768.0).clip(-32768, 32767),
-                                   target_sr)
-                    )
-                    srs.append(target_sr)
-                    durs.append(int(round(1000.0 * out.size / target_sr)))
-                except Exception:
-                    bufs.append(None)
-                    srs.append(None)
-                    durs.append(None)
-            yield pd.DataFrame(
-                {key_col: keys, bytes_col: bufs, "sr_hz": srs, "dur_ms": durs}
-            )
-
-    return df.select(key_col, bytes_col, codec_col).mapInPandas(work, schema=schema)
+    return map_payloads(df, key_col, bytes_col,
+                        f"{bytes_col} binary, sr_hz int, dur_ms int", resample,
+                        fail=[(None, None, None)], decode=decode_batch,
+                        codec_col=codec_col)
 
 
 def frame_sample(df, n_frames: int = 4, frame_ms: int = 100,
@@ -780,53 +740,44 @@ def frame_sample(df, n_frames: int = 4, frame_ms: int = 100,
     Returns (key, frame_idx, start_ms, samples array<double>) — one row
     per extracted frame; undecodable clips contribute no rows (the
     decode-integrity check owns reporting them).
-
-    The samples column is built as ONE flat float64 buffer + offsets
-    per Arrow batch (pa.ListArray.from_arrays) instead of per-row
-    Python lists — the r06 guide-§4.2 re-slicing pattern; at 16k
-    clips x 4 x 100 ms frames the old ``.tolist()`` path materialized
-    ~100M Python floats and was 5x slower (5.1 s -> 0.9 s measured,
-    values bit-identical: the same ``astype(float64)`` slices feed
-    the buffer).
     """
     import pyarrow as pa
 
-    schema = (
-        f"{key_col} string, frame_idx int, start_ms int, samples array<double>"
-    )
+    schema = payload_schema(
+        df, [key_col], "frame_idx int, start_ms int, samples array<double>")
 
+    def frames(dec):
+        sr, pcm = dec
+        w = max(1, int(sr * frame_ms / 1000))
+        if pcm.size < w:
+            return []
+        starts = [(pcm.size - w) * k // max(n_frames - 1, 1)
+                  for k in range(n_frames)]
+        return [(k, int(round(1000.0 * st / sr)), pcm[st:st + w].astype(np.float64))
+                for k, st in enumerate(starts)]
+
+    # The one decode pass that is not map_payloads: the samples column
+    # is built as ONE flat float64 buffer + offsets per Arrow batch
+    # (pa.ListArray.from_arrays) instead of per-row Python lists. At 16k
+    # clips x 4 x 100 ms frames the per-row path materialized ~100M
+    # Python floats and was 5x slower (5.1 s -> 0.9 s measured, values
+    # bit-identical: the same astype(float64) slices feed the buffer).
+    # The decode and its failure contract are still payload_rows'.
     def work(batches):
         for rb in batches:
-            tb = rb.to_pydict()
-            decoded = decode_batch(tb[bytes_col], tb[codec_col])
-            keys, idxs, starts, chunks, lens = [], [], [], [], []
-            for key, dec in zip(tb[key_col], decoded):
-                if dec is None:
-                    continue
-                sr, pcm = dec
-                w = max(1, int(sr * frame_ms / 1000))
-                if pcm.size < w:
-                    continue
-                span = pcm.size - w
-                for k in range(n_frames):
-                    start = span * k // max(n_frames - 1, 1)
-                    keys.append(key)
-                    idxs.append(k)
-                    starts.append(int(round(1000.0 * start / sr)))
-                    chunks.append(pcm[start:start + w].astype(np.float64))
-                    lens.append(w)
-            if chunks:
-                flat = pa.array(np.concatenate(chunks), type=pa.float64())
-                offsets = pa.array(
-                    np.concatenate([[0], np.cumsum(lens)]).astype(np.int32))
-                samples = pa.ListArray.from_arrays(offsets, flat)
-            else:
-                samples = pa.array([], type=pa.list_(pa.float64()))
+            hits = payload_rows(rb.column(bytes_col).to_pylist(), frames,
+                                decode=decode_batch,
+                                codecs=rb.column(codec_col).to_pylist())
+            rows = [row for _, row in hits]
+            chunks = [c for _, _, c in rows]
+            flat = pa.array(np.concatenate(chunks) if chunks else [], pa.float64())
+            offsets = np.r_[0, np.cumsum([c.size for c in chunks], dtype=np.int64)]
             yield pa.RecordBatch.from_arrays(
-                [pa.array(keys, type=pa.string()),
-                 pa.array(idxs, type=pa.int32()),
-                 pa.array(starts, type=pa.int32()), samples],
-                names=[key_col, "frame_idx", "start_ms", "samples"])
+                [rb.column(key_col).take(pa.array([i for i, _ in hits], pa.int64())),
+                 pa.array([r[0] for r in rows], pa.int32()),
+                 pa.array([r[1] for r in rows], pa.int32()),
+                 pa.ListArray.from_arrays(pa.array(offsets.astype(np.int32)), flat)],
+                names=schema.names)
 
     return df.select(key_col, bytes_col, codec_col).mapInArrow(work, schema=schema)
 
@@ -856,79 +807,52 @@ def vad_segments(df, key_col: str = "clip_id", bytes_col: str = "bytes",
                  codec_col: str = "codec", min_speech_ms: int = 100,
                  sil_rms: float = SILENCE_RMS):
     """Energy-VAD segmentation: contiguous voiced spans from the same
-    FRAME/HOP frame-RMS grid as the quality metrics, one Arrow-batched
-    mapInPandas pass (the standard silence-cutting step of a speech
-    training-data pipeline). Segments shorter than ``min_speech_ms``
-    are dropped; undecodable clips contribute no rows (the
-    decode-integrity check owns reporting them).
+    FRAME/HOP frame-RMS grid as the quality metrics, one
+    :func:`~menelaus_spark.payload.map_payloads` pass (the standard
+    silence-cutting step of a speech training-data pipeline). Segments
+    shorter than ``min_speech_ms`` are dropped; undecodable clips
+    contribute no rows (the decode-integrity check owns reporting them).
 
     Returns (key, seg_idx, start_ms, end_ms) — one row per voiced span.
     """
-    import pandas as pd
+    def segments(dec):
+        sr, pcm = dec
+        return [(seg, *span) for seg, span in
+                enumerate(vad_spans(pcm, sr, min_speech_ms, sil_rms))]
 
-    schema = f"{key_col} string, seg_idx int, start_ms int, end_ms int"
-
-    def work(batches):
-        for pdf in batches:
-            rows = []
-            decoded = decode_batch(pdf[bytes_col].tolist(),
-                                   pdf[codec_col].tolist())
-            for key, dec in zip(pdf[key_col], decoded):
-                if dec is None:
-                    continue
-                sr, pcm = dec
-                for seg, (start_ms, end_ms) in enumerate(
-                        vad_spans(pcm, sr, min_speech_ms, sil_rms)):
-                    rows.append((key, seg, start_ms, end_ms))
-            yield pd.DataFrame(rows, columns=[key_col, "seg_idx", "start_ms", "end_ms"])
-
-    return df.select(key_col, bytes_col, codec_col).mapInPandas(work, schema=schema)
+    return map_payloads(df, key_col, bytes_col,
+                        "seg_idx int, start_ms int, end_ms int", segments,
+                        decode=decode_batch, codec_col=codec_col)
 
 
 def normalize_loudness(df, target_dbfs: float = -20.0, key_col: str = "clip_id",
                        bytes_col: str = "bytes", codec_col: str = "codec"):
     """Loudness normalization: decode -> scale to ``target_dbfs`` RMS
-    -> re-encode WAV, one Arrow-batched pass (gain-staging before
-    feature extraction / augmentation). Samples clip at full scale; the
-    applied gain is reported so callers can bound clipping. Silent or
-    undecodable clips pass through with null bytes.
+    -> re-encode WAV, one :func:`~menelaus_spark.payload.map_payloads`
+    pass (gain-staging before feature extraction / augmentation).
+    Samples clip at full scale; the applied gain is reported so callers
+    can bound clipping. Silent or undecodable clips pass through with
+    null bytes.
 
     Returns (key, bytes, sr_hz, gain_db).
     """
-    import pandas as pd
-
-    schema = f"{key_col} string, {bytes_col} binary, sr_hz int, gain_db double"
     target_rms = 10.0 ** (target_dbfs / 20.0)
 
-    def work(batches):
-        for pdf in batches:
-            keys, bufs, srs, gains = [], [], [], []
-            decoded = decode_batch(pdf[bytes_col].tolist(),
-                                   pdf[codec_col].tolist())
-            for key, dec in zip(pdf[key_col], decoded):
-                keys.append(key)
-                try:
-                    if dec is None:
-                        raise ValueError("undecodable payload")
-                    sr, pcm = dec
-                    x = np.asarray(pcm, dtype=np.float64)
-                    rms = float(np.sqrt(np.mean(x * x))) if x.size else 0.0
-                    if rms == 0.0:
-                        raise ValueError("silent clip")
-                    g = target_rms / rms
-                    out = np.clip(x * g, -1.0, 1.0)
-                    bufs.append(wav_encode(
-                        np.round(out * 32768.0).clip(-32768, 32767), sr))
-                    srs.append(sr)
-                    gains.append(20.0 * np.log10(g))
-                except Exception:
-                    bufs.append(None)
-                    srs.append(None)
-                    gains.append(None)
-            yield pd.DataFrame({key_col: keys, bytes_col: bufs,
-                                "sr_hz": srs, "gain_db": gains})
+    def normalize(dec):
+        sr, pcm = dec
+        x = np.asarray(pcm, dtype=np.float64)
+        rms = float(np.sqrt(np.mean(x * x))) if x.size else 0.0
+        if rms == 0.0:
+            raise ValueError("silent clip")
+        g = target_rms / rms
+        out = np.clip(x * g, -1.0, 1.0)
+        return [(wav_encode(np.round(out * 32768.0).clip(-32768, 32767), sr),
+                 sr, 20.0 * np.log10(g))]
 
-    return df.select(key_col, bytes_col, codec_col).mapInPandas(work, schema=schema)
+    return map_payloads(df, key_col, bytes_col,
+                        f"{bytes_col} binary, sr_hz int, gain_db double", normalize,
+                        fail=[(None, None, None)], decode=decode_batch,
+                        codec_col=codec_col)
 
 
 # --------------------------------------------------------------------------

@@ -25,15 +25,15 @@ scope per the training-data-pipeline mandate).
 
 from __future__ import annotations
 
+from functools import partial
+
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from menelaus_spark.audio import (
     decode_batch,
     fingerprint_codes,
-    fingerprint_shingles,
     fp_sample_count,
     pack_shingles,
 )
@@ -46,6 +46,7 @@ from menelaus_spark.operators.dedup import (
     minhash_from_shingles,
     minhash_sig_py,
 )
+from menelaus_spark.payload import map_payloads
 from menelaus_spark.verdicts import driver_rows
 
 
@@ -66,43 +67,54 @@ def shingle_hex(shingles: np.ndarray) -> list[str]:
     return [f"{v:016x}" for v in np.asarray(shingles, dtype=np.int64).view(np.uint64)]
 
 
+_SHINGLE_FIELDS = "shingles array<string>, heads array<string>, sig array<long>"
+_CODE_FIELDS = "codes array<int>, masks array<int>, peaks array<double>, n_fp int"
+
+
+def _fingerprint_row(dec, shingles: bool, codes: bool) -> list[tuple]:
+    """The one per-clip fingerprint kernel of the three fingerprint
+    passes: the shingle fields (sorted distinct hex shingles, the
+    time-order head shingles, and the MinHash signature — computed
+    while the shingles are still in numpy, minhash_sig_py being the
+    exact md5 twin of the frame kernel) followed by the code fields
+    (per-frame sign codes, confidence masks, sub-bin peak ids, and the
+    canonical-rate sample count)."""
+    sr, pcm = dec
+    c, m, p = fingerprint_codes(pcm, sr)
+    row = ()
+    if shingles:
+        packed = pack_shingles(c)
+        sh = shingle_hex(np.unique(packed))
+        row = (sh, shingle_hex(packed[:FP_HEADS]), minhash_sig_py(sh, FP_MINHASH_K))
+    if codes:
+        row += (c.astype(np.int32), m.astype(np.int32), p,
+                fp_sample_count(pcm.size, sr))
+    return [row]
+
+
+def _fingerprint_pass(df, key_col, bytes_col, codec_col,
+                      shingles: bool, codes: bool) -> DataFrame:
+    # undecodable clips yield empty sets/arrays and n_fp 0: they can
+    # never pair, and the decode-integrity check owns reporting them
+    fields = [f for f, on in ((_SHINGLE_FIELDS, shingles), (_CODE_FIELDS, codes)) if on]
+    fail = (([], [], []) if shingles else ()) + (([], [], [], 0) if codes else ())
+    return map_payloads(
+        df, key_col, bytes_col, ", ".join(fields),
+        partial(_fingerprint_row, shingles=shingles, codes=codes),
+        fail=[fail], decode=decode_batch, codec_col=codec_col)
+
+
 def audio_shingles(
     df: DataFrame,
     key_col: str = "clip_id",
     bytes_col: str = "bytes",
     codec_col: str = "codec",
 ) -> DataFrame:
-    """(key, shingles array<string>, heads, sig) in one Arrow-batched
-    pass — the MinHash signature rides the decode (minhash_sig_py, the
-    exact md5 twin of the frame kernel), so downstream LSH starts from
-    a per-row column with zero extra shuffle. Undecodable or too-short
-    clips yield an empty set — they can never pair, and the
-    decode-integrity check owns reporting them."""
-    schema = (f"{key_col} string, shingles array<string>, "
-              f"heads array<string>, sig array<long>")
-
-    def work(batches):
-        for pdf in batches:
-            keys, shl, hds, sg = [], [], [], []
-            decoded = decode_batch(pdf[bytes_col].tolist(),
-                                   pdf[codec_col].tolist())
-            for key, dec in zip(pdf[key_col], decoded):
-                keys.append(key)
-                try:
-                    if dec is None:
-                        raise ValueError("undecodable payload")
-                    sr, pcm = dec
-                    packed = pack_shingles(fingerprint_codes(pcm, sr)[0])
-                    sh = shingle_hex(np.unique(packed))
-                    shl.append(sh)
-                    hds.append(shingle_hex(packed[:FP_HEADS]))
-                    sg.append(minhash_sig_py(sh, FP_MINHASH_K))
-                except Exception:
-                    shl.append([]); hds.append([]); sg.append([])
-            yield pd.DataFrame({key_col: keys, "shingles": shl, "heads": hds,
-                                "sig": sg})
-
-    return df.select(key_col, bytes_col, codec_col).mapInPandas(work, schema=schema)
+    """(key, shingles array<string>, heads, sig) in one decode pass —
+    the MinHash signature rides the decode, so downstream LSH starts
+    from a per-row column with zero extra shuffle. Undecodable or
+    too-short clips yield an empty set."""
+    return _fingerprint_pass(df, key_col, bytes_col, codec_col, True, False)
 
 
 def audio_fingerprints(
@@ -111,47 +123,13 @@ def audio_fingerprints(
     bytes_col: str = "bytes",
     codec_col: str = "codec",
 ) -> DataFrame:
-    """Everything every matching path needs from ONE Arrow decode
-    pass: (key, shingles/heads array<string>, codes/masks array<int>,
-    peaks array<double>, n_fp int). When a corpus runs several
+    """Everything every matching path needs from ONE decode pass: the
+    :func:`audio_shingles` fields followed by the
+    :func:`audio_fingerprint_codes` fields. When a corpus runs several
     near-dup paths — the production configuration — persist this frame
     and pass it to each; the binary column is then read exactly once
     for the whole dedup suite."""
-    schema = (f"{key_col} string, shingles array<string>, heads array<string>, "
-              f"sig array<long>, "
-              f"codes array<int>, masks array<int>, peaks array<double>, "
-              f"n_fp int")
-
-    def work(batches):
-        for pdf in batches:
-            keys, shl, hds, sg, cs, ms, ps, nf = [], [], [], [], [], [], [], []
-            decoded = decode_batch(pdf[bytes_col].tolist(),
-                                   pdf[codec_col].tolist())
-            for key, dec in zip(pdf[key_col], decoded):
-                keys.append(key)
-                try:
-                    if dec is None:
-                        raise ValueError("undecodable payload")
-                    sr, pcm = dec
-                    c, m, p = fingerprint_codes(pcm, sr)
-                    packed = pack_shingles(c)
-                    sh = shingle_hex(np.unique(packed))
-                    shl.append(sh)
-                    hds.append(shingle_hex(packed[:FP_HEADS]))
-                    sg.append(minhash_sig_py(sh, FP_MINHASH_K))
-                    cs.append(c.astype(np.int32))
-                    ms.append(m.astype(np.int32))
-                    ps.append(p)
-                    nf.append(fp_sample_count(pcm.size, sr))
-                except Exception:
-                    shl.append([]); hds.append([]); sg.append([])
-                    cs.append([]); ms.append([]); ps.append([]); nf.append(0)
-            yield pd.DataFrame({key_col: keys, "shingles": shl, "heads": hds,
-                                "sig": sg,
-                                "codes": cs, "masks": ms, "peaks": ps,
-                                "n_fp": nf})
-
-    return df.select(key_col, bytes_col, codec_col).mapInPandas(work, schema=schema)
+    return _fingerprint_pass(df, key_col, bytes_col, codec_col, True, True)
 
 
 # at most one internally-pinned shingle frame across repeated fp=None
@@ -305,36 +283,12 @@ def audio_fingerprint_codes(
     codec_col: str = "codec",
 ) -> DataFrame:
     """(key, codes array<int>, masks array<int>, peaks array<double>,
-    n_fp int) in one Arrow-batched pass — the per-frame sign codes,
+    n_fp int) in one decode pass — the per-frame sign codes,
     confidence masks, and sub-bin peak ids from
     audio.fingerprint_codes, plus the canonical-rate sample count
     (the speed-factor basis). Undecodable clips yield empty arrays
     and n_fp 0."""
-    schema = (f"{key_col} string, codes array<int>, masks array<int>, "
-              f"peaks array<double>, n_fp int")
-
-    def work(batches):
-        for pdf in batches:
-            keys, cs, ms, ps, nf = [], [], [], [], []
-            decoded = decode_batch(pdf[bytes_col].tolist(),
-                                   pdf[codec_col].tolist())
-            for key, dec in zip(pdf[key_col], decoded):
-                keys.append(key)
-                try:
-                    if dec is None:
-                        raise ValueError("undecodable payload")
-                    sr, pcm = dec
-                    c, m, p = fingerprint_codes(pcm, sr)
-                    cs.append(c.astype(np.int32))
-                    ms.append(m.astype(np.int32))
-                    ps.append(p)
-                    nf.append(fp_sample_count(pcm.size, sr))
-                except Exception:
-                    cs.append([]); ms.append([]); ps.append([]); nf.append(0)
-            yield pd.DataFrame({key_col: keys, "codes": cs, "masks": ms,
-                                "peaks": ps, "n_fp": nf})
-
-    return df.select(key_col, bytes_col, codec_col).mapInPandas(work, schema=schema)
+    return _fingerprint_pass(df, key_col, bytes_col, codec_col, False, True)
 
 
 def transcript_candidate_pairs(

@@ -1,11 +1,11 @@
 """Multimodal image / video columns: opaque ``binary`` payloads with
-typed metadata, decoded and feature-extracted in Arrow-batched
-``mapInPandas`` passes — the image/video twins of the audio pipeline
-(audio.py): same schema discipline (bytes column isolated to the
-decode stage), same fault surface (corrupt payloads become null
-feature rows, never UDF crashes), same determinism contract (both the
-generator and the driver-side oracle twin share the pixel functions
-in this module).
+typed metadata, decoded and feature-extracted by the same one-pass
+primitive as the audio pipeline (payload.map_payloads): same schema
+discipline (bytes column isolated to the decode stage), same fault
+surface (null or corrupt payloads become their operator's fail rows,
+never UDF crashes), same determinism contract (both the generator and
+the driver-side oracle twin share the pixel functions in this
+module).
 
 Containers are REAL, numpy-only formats, not stubs:
 
@@ -18,8 +18,9 @@ Containers are REAL, numpy-only formats, not stubs:
 
 Compressed formats (png/jpeg/h264...) raise NotImplementedError in
 the decoders — the image/audio codec libraries aren't available
-here; the Spark-side plumbing (schema, batching, fault routing) is
-identical for them, as the audio module's mu-law/ADPCM paths show.
+here; the Spark-side plumbing (map_payloads' schema, batching, fault
+routing) is identical for them, as the audio module's mu-law/ADPCM
+paths show.
 
 No reference counterpart (mitre/menelaus is tabular-only); these are
 north-star additions for the multimodal training-data pipeline.
@@ -34,7 +35,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from menelaus_spark.operators.dedup import OwnedCache, band_keys
+from menelaus_spark.operators.dedup import OwnedCache, band_keys, minhash_sig_py
+from menelaus_spark.payload import map_payloads
 from menelaus_spark.verdicts import driver_rows, local_frame
 
 # one-slot internal pins (dedup.OwnedCache semantics): repeated calls
@@ -169,48 +171,23 @@ def image_table(spark, n_rows: int, n_parts: int = 4, h: int = 24, w: int = 32,
 
 def image_features(df: DataFrame, id_col: str = "image_id",
                    bytes_col: str = "bytes") -> DataFrame:
-    """One Arrow pass: decode + feature-extract every image; corrupt
-    or unsupported payloads yield ok=False null rows (the audio
+    """One decode pass: decode + feature-extract every image; null,
+    corrupt or unsupported payloads yield ok=False null rows (the audio
     decode_integrity contract)."""
-    id_type = dict(df.dtypes)[id_col]  # id passes through untouched
-
-    def extract(it):
-        for pdf in it:
-            out = []
-            for i, b in zip(pdf[id_col], pdf[bytes_col]):
-                try:
-                    row = image_feature_row(decode_bmp(bytes(b)))
-                    row.update({id_col: i, "ok": True})
-                except NotImplementedError:
-                    row = {id_col: i, "ok": False, "height": None,
-                           "width": None, "mean_r": None, "mean_g": None,
-                           "mean_b": None, "luma_mean": None, "luma_std": None}
-                out.append(row)
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, bytes_col).mapInPandas(
-        extract, schema=f"{id_col} {id_type}, {IMAGE_FEATURE_FIELDS}")
+    return map_payloads(
+        df, id_col, bytes_col, IMAGE_FEATURE_FIELDS,
+        lambda b: [(True, *image_feature_row(decode_bmp(b)).values())],
+        fail=[(False,) + (None,) * 7])
 
 
 def image_thumbnails(df: DataFrame, out_h: int, out_w: int,
                      id_col: str = "image_id", bytes_col: str = "bytes") -> DataFrame:
-    """Nearest-neighbor thumbnails re-encoded as BMP, one Arrow pass;
+    """Nearest-neighbor thumbnails re-encoded as BMP, one decode pass;
     undecodable payloads carry a null thumb."""
-    id_type = dict(df.dtypes)[id_col]  # id passes through untouched
-
-    def thumbs(it):
-        for pdf in it:
-            ids, blobs = [], []
-            for i, b in zip(pdf[id_col], pdf[bytes_col]):
-                ids.append(i)
-                try:
-                    blobs.append(encode_bmp(resize_nn(decode_bmp(bytes(b)), out_h, out_w)))
-                except NotImplementedError:
-                    blobs.append(None)
-            yield pd.DataFrame({id_col: ids, "thumb": blobs})
-
-    return df.select(id_col, bytes_col).mapInPandas(
-        thumbs, schema=f"{id_col} {id_type}, thumb binary")
+    return map_payloads(
+        df, id_col, bytes_col, "thumb binary",
+        lambda b: [(encode_bmp(resize_nn(decode_bmp(b), out_h, out_w)),)],
+        fail=[(None,)])
 
 
 # --------------------------------------------------------------------------
@@ -319,30 +296,18 @@ def video_table(spark, n_rows: int, n_parts: int = 4, n_frames: int = 8,
 def video_frame_stats(df: DataFrame, stride: int, id_col: str = "video_id",
                       bytes_col: str = "bytes") -> DataFrame:
     """Frame-sampled per-frame luma stats (frames 0, stride, 2*stride,
-    ...) in one Arrow pass; the seek arithmetic means unsampled frames
-    are never materialized. Corrupt payloads emit a single ok=False
-    row so the fault is visible, not silent."""
-    id_type = dict(df.dtypes)[id_col]  # id passes through untouched
+    ...) in one decode pass; the seek arithmetic means unsampled frames
+    are never materialized. A null or corrupt payload — including one
+    whose header parses but a sampled frame does not — emits only a
+    single ok=False row, so the fault is visible, not silent."""
+    def stats(b):
+        hdr = y4m_header(b)
+        return [(idx, True, *frame_stat_row(y4m_frame_y(b, hdr, idx)).values())
+                for idx in range(0, hdr["n_frames"], stride)]
 
-    def stats(it):
-        for pdf in it:
-            rows = []
-            for i, b in zip(pdf[id_col], pdf[bytes_col]):
-                b = bytes(b)
-                try:
-                    hdr = y4m_header(b)
-                    for idx in range(0, hdr["n_frames"], stride):
-                        row = frame_stat_row(y4m_frame_y(b, hdr, idx))
-                        row.update({id_col: i, "frame_idx": idx, "ok": True})
-                        rows.append(row)
-                except NotImplementedError:
-                    rows.append({id_col: i, "frame_idx": -1, "ok": False,
-                                 "y_mean": None, "y_std": None})
-            yield pd.DataFrame(rows)
-
-    return df.select(id_col, bytes_col).mapInPandas(
-        stats, schema=f"{id_col} {id_type}, frame_idx int, ok boolean, "
-                      "y_mean double, y_std double")
+    return map_payloads(df, id_col, bytes_col,
+                        "frame_idx int, ok boolean, y_mean double, y_std double",
+                        stats, fail=[(-1, False, None, None)])
 
 
 # --------------------------------------------------------------------------
@@ -439,34 +404,20 @@ def video_neardup_table(spark, n_videos: int = 20, n_parts: int = 4,
 def video_shingles(df: DataFrame, id_col: str = "video_id",
                    bytes_col: str = "bytes",
                    window: int = FRAME_SHINGLE_WINDOW) -> DataFrame:
-    """(id, shingles, sig) from one Arrow decode pass — the video
-    analog of audio_dedup.audio_fingerprints; the MinHash signature
-    rides the decode (dedup.minhash_sig_py, the exact md5 twin of the
-    frame kernel), so downstream LSH starts from a per-row column.
+    """(id, shingles, sig) from one decode pass — the video analog of
+    audio_dedup.audio_fingerprints; the MinHash signature rides the
+    decode (dedup.minhash_sig_py, the exact md5 twin of the frame
+    kernel), so downstream LSH starts from a per-row column.
     Undecodable payloads yield empty sets (they can never pair)."""
-    from menelaus_spark.operators.dedup import minhash_sig_py
+    def shingles(b):
+        hdr = y4m_header(b)
+        sh = video_shingle_set(np.stack([y4m_frame_y(b, hdr, t)
+                                         for t in range(hdr["n_frames"])]), window)
+        return [(sh, minhash_sig_py(sh, VIDEO_MINHASH_K))]
 
-    id_type = dict(df.dtypes)[id_col]  # id passes through untouched
-
-    def work(it):
-        for pdf in it:
-            ids, sets, sigs = [], [], []
-            for i, b in zip(pdf[id_col], pdf[bytes_col]):
-                ids.append(i)
-                try:
-                    b = bytes(b)
-                    hdr = y4m_header(b)
-                    frames = np.stack([y4m_frame_y(b, hdr, t)
-                                       for t in range(hdr["n_frames"])])
-                    sh = video_shingle_set(frames, window)
-                except NotImplementedError:
-                    sh = []
-                sets.append(sh)
-                sigs.append(minhash_sig_py(sh, VIDEO_MINHASH_K))
-            yield pd.DataFrame({id_col: ids, "shingles": sets, "sig": sigs})
-
-    return df.select(id_col, bytes_col).mapInPandas(
-        work, schema=f"{id_col} {id_type}, shingles array<string>, sig array<long>")
+    return map_payloads(df, id_col, bytes_col,
+                        "shingles array<string>, sig array<long>", shingles,
+                        fail=[([], [])])
 
 
 def _video_pairs_driver(spark, recs: list, id_col: str, id_type: str,
@@ -584,23 +535,10 @@ def image_phash(arr: np.ndarray) -> int:
 
 def image_phashes(df: DataFrame, id_col: str = "image_id",
                   bytes_col: str = "bytes") -> DataFrame:
-    """(id, phash) in one Arrow decode pass; undecodable payloads get
-    a null phash (never pair)."""
-    id_type = dict(df.dtypes)[id_col]  # id passes through untouched
-
-    def work(it):
-        for pdf in it:
-            ids, hs = [], []
-            for i, b in zip(pdf[id_col], pdf[bytes_col]):
-                ids.append(i)
-                try:
-                    hs.append(image_phash(decode_bmp(bytes(b))))
-                except NotImplementedError:
-                    hs.append(None)
-            yield pd.DataFrame({id_col: ids, "phash": pd.array(hs, dtype="Int64")})
-
-    return df.select(id_col, bytes_col).mapInPandas(
-        work, schema=f"{id_col} {id_type}, phash long")
+    """(id, phash) in one decode pass; undecodable payloads get a null
+    phash (never pair)."""
+    return map_payloads(df, id_col, bytes_col, "phash long",
+                        lambda b: [(image_phash(decode_bmp(b)),)], fail=[(None,)])
 
 
 def _hamming64(a: np.ndarray, b: np.ndarray) -> np.ndarray:

@@ -48,44 +48,26 @@ def fingerprint_banded_stream(
     bands: int = 8,
     rows: int = 2,
 ) -> DataFrame:
-    """Streaming-safe fingerprint stage: ONE mapInPandas pass decodes,
-    shingles, signs and bands each clip (no groupBy — a streaming
-    aggregation would force its own state store). Emits ``bands`` rows
-    per decodable clip: (key, band, bhash, shingles)."""
+    """Streaming-safe fingerprint stage: ONE
+    :func:`~menelaus_spark.payload.map_payloads` pass decodes, shingles,
+    signs and bands each clip (no groupBy — a streaming aggregation
+    would force its own state store). Emits ``bands`` rows per
+    decodable clip: (key, band, bhash, shingles)."""
     from menelaus_spark.audio import decode_batch, fingerprint_shingles
     from menelaus_spark.operators.audio_dedup import shingle_hex
     from menelaus_spark.operators.dedup import band_keys, minhash_sig_py
+    from menelaus_spark.payload import map_payloads
 
-    schema = f"{key_col} string, band int, bhash string, shingles array<string>"
+    def banded(dec):
+        sh = shingle_hex(fingerprint_shingles(dec[1], dec[0]))
+        if not sh:
+            return []
+        sig = minhash_sig_py(sh, k)
+        return [(b, bh, sh) for b, bh in enumerate(band_keys(sig, bands, rows))]
 
-    def work(batches):
-        for pdf in batches:
-            keys, bnds, hashes, shs = [], [], [], []
-            decoded = decode_batch(pdf[bytes_col].tolist(),
-                                   pdf[codec_col].tolist())
-            for key, dec in zip(pdf[key_col], decoded):
-                try:
-                    if dec is None:
-                        raise ValueError("undecodable payload")
-                    sr, pcm = dec
-                    sh = shingle_hex(fingerprint_shingles(pcm, sr))
-                except Exception:
-                    sh = []
-                if not sh:
-                    continue
-                sig = minhash_sig_py(sh, k)
-                for b, bh in enumerate(band_keys(sig, bands, rows)):
-                    keys.append(key)
-                    bnds.append(b)
-                    hashes.append(bh)
-                    shs.append(sh)
-            yield pd.DataFrame(
-                {key_col: keys, "band": bnds, "bhash": hashes, "shingles": shs}
-            )
-
-    return stream_df.select(key_col, bytes_col, codec_col).mapInPandas(
-        work, schema=schema
-    )
+    return map_payloads(stream_df, key_col, bytes_col,
+                        "band int, bhash string, shingles array<string>", banded,
+                        decode=decode_batch, codec_col=codec_col)
 
 
 def stateful_neardup_stream(
