@@ -59,7 +59,7 @@ unseeded; its tests seed numpy globally).
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from menelaus_spark.functions import distances as dist
@@ -152,11 +152,16 @@ class HDM:
 
     # -- input validation (schema freeze, reference detector.py:221-307) --
 
-    def _features(self, df: DataFrame) -> list[str]:
+    def _features(self, df: DataFrame | None, summary_values: dict | None = None) -> list[str]:
+        """The feature columns of a batch: ``df``'s, or with ``df=None``
+        the columns ``summary_values`` covers."""
+        if df is None:
+            if summary_values is None:
+                raise ValueError("a batch without a frame needs summary_values")
+            return list(summary_values)
         return [c for c in df.columns if c != self.order_col]
 
-    def _validate(self, df: DataFrame, n: int) -> None:
-        cols = self._features(df)
+    def _validate(self, cols: list[str], n: int) -> None:
         if self._input_cols is None:
             self._input_cols = cols
         elif cols != self._input_cols:
@@ -166,14 +171,19 @@ class HDM:
 
     # -- public API (mirrors set_reference/update, :224-341) --
 
-    def set_reference(self, df: DataFrame, batch_id: str = "reference",
+    def set_reference(self, df: DataFrame | None, batch_id: str = "reference",
                       summary_values: dict | None = None) -> None:
         """``summary_values`` = {col: (distinct values, counts)} lets a
         caller that already summarized the batch (the ValidationSuite's
-        one global summary pass) skip this detector's reference scan."""
+        one global summary pass) skip this detector's reference scan.
+        With ``summary_values``, ``df`` may be None: the columns are
+        the summary's, nothing is persisted and the lineage records
+        ``(batch_id, None)``. ``detect_batch == 1`` re-splits the
+        reference rows, so it needs the frame."""
         self._release_owned()
-        df = self._own(df)
-        cols = self._features(df)
+        cols = self._features(df, summary_values)
+        if df is not None:
+            df = self._own(df)
         if summary_values is not None:
             # n / min / max derive from the caller's summary — zero
             # Spark jobs on this path (the ValidationSuite's and the
@@ -185,7 +195,7 @@ class HDM:
         else:
             s = None
             n, mm = self._minmax_count(df, cols)
-        self._validate(df, n)
+        self._validate(cols, n)
         self._reference = [(batch_id, df)]
         self.reference_batch_ids = [batch_id]
         self._ref_minmax = mm
@@ -193,17 +203,19 @@ class HDM:
         self._ref_summary = s
         self.reset()
 
-    def update(self, df: DataFrame, batch_id: str | None = None,
+    def update(self, df: DataFrame | None, batch_id: str | None = None,
                precomputed: tuple[int, dict] | None = None,
                summary_values: dict | None = None) -> str | None:
         """``precomputed`` = (test_n, {col: (min, max)}) lets a caller
         that already aggregated the batch (e.g. the ValidationSuite's
         fused constraint pass) skip this detector's test-side agg;
         ``summary_values`` = {col: (values, counts)} likewise skips the
-        test-side distinct-value summary scan."""
+        test-side distinct-value summary scan, and ``df`` may then be
+        None, as in set_reference."""
+        cols = self._features(df, summary_values)
         if self.drift_state == DRIFT:
             self.reset()
-        self._validate(df, 2)  # schema check; row count validated in _update_inner
+        self._validate(cols, 2)  # schema check; row count validated in _update_inner
         batch_id = batch_id if batch_id is not None else f"batch_{self.total_batches + 1}"
         self._update_inner(df, batch_id, precomputed, summary_values)
         return self.drift_state
@@ -313,7 +325,7 @@ class HDM:
                         }
                     self.drift_state = DRIFT
                     self._release_owned()  # old reference frames are dead
-                    self._reference = [(batch_id, self._own(X))]
+                    self._reference = [(batch_id, None if X is None else self._own(X))]
                     self.reference_batch_ids = [batch_id]
                     self._ref_minmax = test_mm
                     self._ref_batch_counts = [test_n]
@@ -347,6 +359,9 @@ class HDM:
         self.drift_state = None
         proxy = None
         if self.detect_batch == 1:
+            if self._reference[0][1] is None:
+                raise ValueError("detect_batch=1 re-splits the reference rows; "
+                                 "pass the reference frame")
             first, proxy = self._split_half(self._reference[0][1])
             bid = self._reference[0][0]
             first = self._own(first)
@@ -463,7 +478,8 @@ class HDM:
     def _summary_as_df(self, s: dict) -> DataFrame:
         if s["mode"] == "cluster":
             return s["df"]
-        spark = self._reference[0][1].sparkSession
+        frame = next((d for _, d in self._reference if d is not None), None)
+        spark = frame.sparkSession if frame is not None else SparkSession.active()
         rows = [
             (c, float(v), int(n))
             for c, (vals, cnts) in s["data"].items()
@@ -676,7 +692,7 @@ class CDBD(HDM):
                          statistic=statistic, significance=significance,
                          subsets=subsets, **kw)
 
-    def _validate(self, df, n):
-        if len(self._features(df)) != 1:
+    def _validate(self, cols, n):
+        if len(cols) != 1:
             raise ValueError("CDBD is univariate and only accepts one feature column.")
-        super()._validate(df, n)
+        super()._validate(cols, n)

@@ -53,16 +53,6 @@ def uniqueness_violations(df: DataFrame, key: str) -> DataFrame:
     )
 
 
-def uniqueness_fast_path(df: DataFrame, key: str) -> tuple[int, int]:
-    """(n_rows, approx_distinct) — if equal within sketch error, the
-    exact dup scan can be skipped."""
-    row = df.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.approx_count_distinct(key).alias("d"),
-    ).collect()[0]
-    return int(row["n"]), int(row["d"])
-
-
 def referential_orphans(child: DataFrame, parent: DataFrame, key: str) -> DataFrame:
     """Child keys with no parent -> left-anti join (the Spark-native
     generalization of menelaus input-conformance, SURVEY.md §2.3).

@@ -110,46 +110,6 @@ def salted_weighted_count(df: DataFrame, keys: list[str], weight: str) -> DataFr
     return df.groupBy(*keys).agg(F.sum(weight).alias("count"))
 
 
-def multi_feature_histogram(
-    df: DataFrame,
-    ranges: dict[str, tuple[float, float]],
-    nbins: int,
-) -> DataFrame:
-    """Aligned-bin histograms for ALL features in ONE shuffle.
-
-    Returns (feature string, bin int, count long), sparse (zero bins
-    absent — densify at collect time). Replaces the reference's
-    per-feature Python histogram loop with a single exploded
-    aggregation: rows -> array<struct(feature, bin)> -> explode ->
-    grouped count. One pass over the data regardless of feature count.
-    """
-    structs = [
-        F.struct(
-            F.lit(c).alias("feature"),
-            bin_index_col(F.col(c).cast("double"), lo, hi, nbins).alias("bin"),
-        )
-        for c, (lo, hi) in ranges.items()
-    ]
-    exploded = (
-        df.select(F.explode(F.array(*structs)).alias("fb"))
-        .select("fb.feature", "fb.bin")
-        .filter(F.col("bin").isNotNull())
-    )
-    return salted_count(exploded, ["feature", "bin"])
-
-
-def collect_histogram_matrix(
-    hist_df: DataFrame, features: list[str], nbins: int
-) -> np.ndarray:
-    """Collect the sparse histogram into a dense (n_features, nbins)
-    count matrix (tiny: F x B <= F x sqrt(n))."""
-    mat = np.zeros((len(features), nbins), dtype=np.float64)
-    fidx = {c: i for i, c in enumerate(features)}
-    for row in hist_df.collect():
-        mat[fidx[row["feature"]], int(row["bin"])] = float(row["count"])
-    return mat
-
-
 def align_frequencies(ref: dict, test: dict) -> tuple[np.ndarray, np.ndarray, list]:
     """Outer-align two category->count dicts on the category universe."""
     cats = sorted(set(ref) | set(test), key=lambda x: (x is None, str(x)))

@@ -26,6 +26,7 @@ and continues from the first unvisited partition.
 
 from __future__ import annotations
 
+import functools
 import time
 
 import numpy as np
@@ -120,7 +121,6 @@ class ValidationSuite:
         ks_alpha: float = 0.05,
         kdq_params: dict | None = None,
         hdm_params: dict | None = None,
-        hdm_input_partitions: int = 8,
         global_uniqueness: bool = True,
         uniqueness_mode: str = "exact",
         uniqueness_sketch_p: int = 12,
@@ -211,11 +211,6 @@ class ValidationSuite:
         self.referential = referential
         self.seed = seed
         self.ks_alpha = ks_alpha
-        # the HDM inputs are tiny 2-column numeric projections that get
-        # cached and re-unioned every batch; coalescing them keeps the
-        # per-update task count O(hdm_input_partitions x batches) instead
-        # of O(input_splits x batches). Size to ~rows/10M at real scale.
-        self.hdm_input_partitions = hdm_input_partitions
         hdm_kwargs = {"detect_batch": 2, "order_col": None, "seed": seed}
         hdm_kwargs.update(hdm_params or {})  # callers may override defaults
         self.hdm = HDDDM(**hdm_kwargs) if self.hdm_cols else None
@@ -302,18 +297,25 @@ class ValidationSuite:
         return (self.quality_rules is not None or self._payload_in_decode()
                 or self.meta_rules is not None)
 
-    def _feats_carry_cols(self, with_part: bool) -> tuple:
-        carry = (self.partition_col,) if with_part else ()
+    def _feats_carry_cols(self, summary: bool) -> tuple:
+        """The source columns the decode pass carries: the partition,
+        the payload and metadata checks' inputs, and with ``summary``
+        the KS, PSI and HDM columns that the decoded frame's one
+        collect feeds to the summary pass."""
+        carry = [self.partition_col]
         if self._payload_in_decode():
-            carry += (self.sr_col, self.dur_col)
+            carry += [self.sr_col, self.dur_col]
             if self.payload_codecs is not None or self.payload_bps is not None:
-                carry += (self.codec_col,)
+                carry.append(self.codec_col)
         if self.meta_rules is not None:
-            extra = (self.sr_col, self.dur_col)
+            carry += [self.sr_col, self.dur_col]
             if self.meta_rules.get("codec_tags"):
-                extra += (self.codec_col,)
-            carry += tuple(c for c in extra if c not in carry)
-        return carry
+                carry.append(self.codec_col)
+        if summary:
+            carry += self.ks_cols + ([self.psi_col] if self.psi_col else [])
+            if self.hdm is not None:
+                carry += self.hdm_cols
+        return tuple(dict.fromkeys(carry))
 
     def _payload_codec_gate(self):
         """Row predicate limiting the payload-size check to rows whose
@@ -418,13 +420,22 @@ class ValidationSuite:
         self._quality_conds_cache = out
         return out
 
-    def _quality_counts_by_part(self, feats: DataFrame, pks: list[str]) -> dict:
-        """Violation counts for EVERY quality check x partition in ONE
+    def _quality_counts_by_part(self, feats: DataFrame, pks: list[str],
+                                pdf=None) -> dict:
+        """Violation counts for EVERY quality check x partition: the
+        per-partition sums of the ``__q{i}`` flags of ``pdf``, the
+        decoded frame's collect, when there is one, else ONE
         aggregation over the cached feats frame (keeps the suite's job
         count O(1) in the partition count)."""
         conds = self._quality_conds()
         if not conds:
             return {pk: [] for pk in pks}
+        if pdf is not None:
+            qcols = [f"__q{i}" for i in range(len(conds))]
+            sums = pdf.groupby("__pk")[qcols].sum()
+            return {pk: ([int(n) for n in sums.loc[pk]] if pk in sums.index
+                         else [0] * len(conds))
+                    for pk in pks}
         rows = feats.groupBy(self.partition_col).agg(*[
             F.sum(cond.cast("long")).alias(f"__q{i}")
             for i, (_, cond, _) in enumerate(conds)
@@ -511,8 +522,12 @@ class ValidationSuite:
             return None
         return C.schema_check(df, self.expected_schema)
 
-    def _constraint_verdicts(self, pk: str, part_df: DataFrame, stats: dict,
+    def _constraint_verdicts(self, pk: str, part_df, stats: dict,
                              schema_result: tuple | None):
+        """The constraint verdicts of one partition from its row of the
+        constraint pass. ``part_df()`` returns the partition's frame;
+        it is called only where a violation count is non-zero or the
+        referential check runs, so a clean partition builds none."""
         verdicts, violations = [], []
         n_rows = int(stats["__n"])
 
@@ -532,7 +547,7 @@ class ValidationSuite:
                                     statistic=float(n_bad), threshold=0.0, n_rows=n_rows))
             if n_bad:  # violation rows only materialized on failure
                 violations.append(
-                    C.range_violations(part_df, c, lo, hi, key=self.key_col)
+                    C.range_violations(part_df(), c, lo, hi, key=self.key_col)
                     .withColumn("reason", F.lit(f"range:{c}"))
                 )
 
@@ -542,7 +557,7 @@ class ValidationSuite:
                                     statistic=float(n_bad), threshold=0.0, n_rows=n_rows))
             if n_bad:
                 violations.append(
-                    C.accepted_values_violations(part_df, c, allowed, key=self.key_col)
+                    C.accepted_values_violations(part_df(), c, allowed, key=self.key_col)
                     .withColumn("reason", F.lit(f"accepted:{c}"))
                 )
 
@@ -554,7 +569,7 @@ class ValidationSuite:
             if n_bad:
                 violations.append(
                     C.transcript_rate_violations(
-                        part_df, self.transcript_col, self.dur_col, lo, hi,
+                        part_df(), self.transcript_col, self.dur_col, lo, hi,
                         key=self.key_col)
                     .withColumn("reason", F.lit("transcript_rate"))
                 )
@@ -566,7 +581,7 @@ class ValidationSuite:
             if n_bad:
                 violations.append(
                     C.payload_size_violations(
-                        part_df.filter(self._payload_codec_gate()),
+                        part_df().filter(self._payload_codec_gate()),
                         self.bytes_col, self.sr_col, self.dur_col,
                         self.payload_tol, key=self.key_col)
                     .withColumn("reason", F.lit("payload_size"))
@@ -577,7 +592,7 @@ class ValidationSuite:
                                 PASS if n_dup_rows == 0 else FAIL,
                                 statistic=float(n_dup_rows), threshold=0.0, n_rows=n_rows))
         if n_dup_rows:
-            dups = C.uniqueness_violations(part_df, self.key_col)
+            dups = C.uniqueness_violations(part_df(), self.key_col)
             violations.append(
                 dups.select("row_key", F.col("n_dup").cast("string").alias("value"))
                 .withColumn("reason", F.lit(f"unique:{self.key_col}"))
@@ -585,7 +600,7 @@ class ValidationSuite:
 
         if self.referential is not None:
             orphans = C.referential_orphans(
-                part_df.select(self.key_col), self.referential.select(self.key_col),
+                part_df().select(self.key_col), self.referential.select(self.key_col),
                 self.key_col,
             )
             n_orphan = orphans.count()
@@ -766,12 +781,8 @@ class ValidationSuite:
     def _restore(self, df: DataFrame, states: dict) -> None:
         if self.hdm is not None and "hdddm" in states:
             ref_ids = states["hdddm"]["reference_batch_ids"]
-            ref = [
-                (pk, df.filter(F.col(self.partition_col) == self._pk_value(df, pk)).select(
-                    *[F.col(c).cast("double").alias(c) for c in self.hdm_cols])
-                 .coalesce(self.hdm_input_partitions))
-                for pk in ref_ids
-            ]
+            ref = [(pk, self._hdm_frame(self._part_frame(df, pk)))
+                   for pk in ref_ids]
             self.hdm.set_state(states["hdddm"], ref)
         if self.kdq is not None and "kdq_tree" in states:
             # the reference frame is rebuilt from _kdq_ref_pk when a
@@ -784,6 +795,15 @@ class ValidationSuite:
     def _pk_value(self, df: DataFrame, pk: str):
         dtype = dict(df.dtypes).get(self.partition_col, "string")
         return int(pk) if dtype in ("int", "bigint", "smallint") else pk
+
+    def _part_frame(self, df: DataFrame, pk: str) -> DataFrame:
+        return df.filter(F.col(self.partition_col) == self._pk_value(df, pk))
+
+    def _hdm_frame(self, part_df: DataFrame) -> DataFrame:
+        """HDM's input rows for one partition, for the paths that read
+        rows rather than a summary."""
+        return part_df.select(
+            *[F.col(c).cast("double").alias(c) for c in self.hdm_cols])
 
     # -------------------------------------------------------------- run
 
@@ -1184,12 +1204,15 @@ class ValidationSuite:
         floor and the only pass that reads the binary column — is
         started before any other pass, and on a warm plan it is the
         first job Spark schedules. The constraint aggregation and the
-        exact global uniqueness pass follow it on driver threads, and
-        the summary pass on this one: Spark schedules concurrent jobs
-        FIFO and back-fills the slots the decode leaves idle, so the
-        small passes hide under it (spark_optimization_guide §2.6).
-        The partition list and the KS reference ranges are read from
-        the constraint aggregation's groups and min/max columns.
+        exact global uniqueness pass follow it on driver threads:
+        Spark schedules concurrent jobs FIFO and back-fills the slots
+        the decode leaves idle, so the small passes hide under it
+        (spark_optimization_guide §2.6). The partition list and the KS
+        reference ranges are read from the constraint aggregation's
+        groups and min/max columns. The decode carries the KS, PSI and
+        HDM columns, and one collect of the decoded frame then feeds
+        the summary, kdq, quality and decode-integrity decisions (see
+        _run_vectorized).
 
         The frames a run caches (the feature frame, HDM's reference
         frames) are released before it returns or raises. A run that
@@ -1226,7 +1249,7 @@ class ValidationSuite:
             if self.kdq is not None or self._quality_active():
                 feats = audio.features_df(
                     scoped, key_col=self.key_col,
-                    carry_cols=self._feats_carry_cols(with_part=True),
+                    carry_cols=self._feats_carry_cols(self._summary_in_decode(scoped)),
                     quality=self.quality_rules is not None,
                     byte_len=self._payload_in_decode(),
                     header=self.meta_rules is not None,
@@ -1292,28 +1315,63 @@ class ValidationSuite:
 
     # ---------------------------------------- vectorized-over-partitions
 
-    def _summary_probe(self, scoped: DataFrame):
-        """The summary pass's driver fast path, first step: under the
-        ``summary_probe`` cap, ONE bounded Arrow collect (driver_rows)
-        of the raw projection replaces the exploded grouped count
-        (see _global_summary_pass). It needs neither the partition list
-        nor the KS ranges, so it runs while the constraint aggregation
-        is in flight. Returns the collected frame, or None over the cap
-        or when the psi column is not string-typed (cast-to-string is
-        then not the identity, and Java's double->string formatting is
-        not replicated driver-side)."""
-        if self.psi_col and not isinstance(
-            scoped.schema[self.psi_col].dataType, T.StringType
-        ):
-            return None
-        sel = [F.col(self.partition_col).cast("string").alias("__pk")]
-        sel += [F.col(c).cast("double").alias(f"__ks_{c}") for c in self.ks_cols]
+    def _summary_types_ok(self, scoped: DataFrame) -> bool:
+        """Whether the summary pass's numpy twins may bin a collect of
+        ``scoped``'s columns: not when the psi column is not
+        string-typed (cast-to-string is then not the identity, and
+        Java's double->string formatting is not replicated
+        driver-side)."""
+        return not self.psi_col or isinstance(
+            scoped.schema[self.psi_col].dataType, T.StringType)
+
+    def _summary_in_decode(self, scoped: DataFrame) -> bool:
+        """Whether the summary pass's columns ride the decode pass, to
+        be collected with the decoded frame (_decoded_projection)."""
+        return (bool(self.ks_cols or self.psi_col or self.hdm is not None)
+                and (self.kdq is not None or self._quality_active())
+                and self._summary_types_ok(scoped))
+
+    def _summary_casts(self) -> list:
+        sel = [F.col(c).cast("double").alias(f"__ks_{c}") for c in self.ks_cols]
         if self.psi_col:
             sel.append(F.col(self.psi_col).alias("__psi"))
         if self.hdm is not None:
             sel += [F.col(c).cast("double").alias(f"__hdm_{c}")
                     for c in self.hdm_cols]
-        return driver_rows(scoped.select(*sel), "summary_probe")
+        return sel
+
+    def _summary_probe(self, scoped: DataFrame):
+        """The summary pass's driver fast path for a suite with no
+        decode: under the ``suite_rows`` cap, ONE bounded Arrow collect
+        (driver_rows) of the raw projection replaces the exploded
+        grouped count (see _global_summary_pass). It needs neither the
+        partition list nor the KS ranges, so it runs while the
+        constraint aggregation is in flight. Returns the collected
+        frame, or None over the cap or when _summary_types_ok fails."""
+        if not self._summary_types_ok(scoped):
+            return None
+        return driver_rows(scoped.select(
+            F.col(self.partition_col).cast("string").alias("__pk"),
+            *self._summary_casts()), "suite_rows")
+
+    def _decoded_projection(self, feats: DataFrame, summary: bool) -> DataFrame:
+        """The projection of the cached decoded frame that the driver
+        collects once, under the ``suite_rows`` cap, to feed every
+        decision that reads decoded rows: the string partition key
+        ``__pk`` and the clean flag ``__clean`` (decode integrity), the
+        features (kdq), each _quality_conds predicate as a flag
+        ``__q{i}`` (a null predicate is False, as Spark's ``sum(cast)``
+        counts it 0) and, with ``summary``, the summary pass's
+        ``__ks_*``/``__psi``/``__hdm_*`` columns."""
+        sel = [F.col(self.partition_col).cast("string").alias("__pk"),
+               _f0_clean().alias("__clean")]
+        if self.kdq is not None:
+            sel += [f"f{i}" for i in range(audio.N_FEATURES)]
+        sel += [F.coalesce(cond, F.lit(False)).alias(f"__q{i}")
+                for i, (_, cond, _) in enumerate(self._quality_conds())]
+        if summary:
+            sel += self._summary_casts()
+        return feats.select(*sel)
 
     def _global_summary_pass(
         self, scoped: DataFrame, todo: list[str], ranges: dict, pdf
@@ -1326,8 +1384,9 @@ class ValidationSuite:
         driver cap still guards the HDM side: past it, HDM falls back
         to its own per-batch summary jobs.
 
-        ``pdf`` is _summary_probe's collect. When it is there and the
-        gate holds, the binning / counting is done by the
+        ``pdf`` is the decoded frame's collect (_decoded_projection) or,
+        in a suite with no decode, _summary_probe's. When it is there
+        and the gate holds, the binning / counting is done by the
         proven numpy twins (histograms.bin_weighted_driver replicates
         bin_index_col's IEEE arithmetic bit-for-bit) and no further job
         runs. The remaining gate, preserving exact equivalence with the
@@ -1504,17 +1563,28 @@ class ValidationSuite:
         quality metrics into the cached ``feats``, on ``feats_future``)
         and global pass 1 (all constraint stats + min/max, one shuffle,
         on ``stat_future``). ``submit(fn, *args)`` runs a further pass
-        on run()'s driver thread pool and returns its future."""
+        on run()'s driver thread pool and returns its future.
+
+        While the decode runs, this thread builds the run's invariants:
+        the schema check and the one projection of ``feats`` that the
+        driver collects (_decoded_projection). Once pass 1 has given
+        the partition list and its exact row counts, and the decode has
+        filled the cache, ONE collect of that projection, under the
+        ``suite_rows`` cap, feeds the summary pass's numpy twins, the
+        kdq tree builds and leaf counts, the quality counts and the
+        decode-integrity counts, with no further Spark job. Over the
+        cap each runs its distributed pass, as does the summary pass
+        when the psi column is not string-typed. A suite with no decode
+        keeps the summary pass's own bounded probe, which runs while
+        pass 1 is in flight."""
         t0 = time.time()
-        # global pass 2: KS histograms + PSI frequencies + HDM
-        # distinct-value summaries for every partition, all in ONE
-        # bounded collect or exploded grouped count. The sequential
-        # HDM updates then run driver-side on the collected summaries —
-        # zero Spark jobs per partition, keeping the suite's job count
-        # O(1) in the partition count. The fast path's collect needs
-        # nothing from pass 1, so it runs while pass 1 is in flight.
         run_summary = bool(self.ks_cols or self.psi_col or self.hdm is not None)
-        probe = self._summary_probe(scoped) if run_summary else None
+        summary_in_feats = self._summary_in_decode(scoped)
+        schema_result = self._schema_result(df)
+        proj = (self._decoded_projection(feats, summary_in_feats)
+                if feats is not None else None)
+        probe = (self._summary_probe(scoped)
+                 if run_summary and feats is None else None)
 
         # pass 1's groups are the partitions to validate; on a fresh
         # run the first one's min/max are the KS reference ranges, a
@@ -1533,35 +1603,54 @@ class ValidationSuite:
             ranges = {c: (stats_by[todo[0]][f"__mm_lo_{c}"],
                           stats_by[todo[0]][f"__mm_hi_{c}"])
                       for c in self.ks_cols}
+        # the decoded frame holds one row per scoped row, so pass 1's
+        # exact counts gate its collect
+        collect = proj is not None and sum(
+            int(stats_by[pk]["__n"]) for pk in todo) <= DRIVER_ROW_CAPS["suite_rows"]
+        summary_from_pdf = collect and summary_in_feats
+
+        # global pass 2: KS histograms + PSI frequencies + HDM
+        # distinct-value summaries for every partition, from a bounded
+        # collect or ONE exploded grouped count. The sequential HDM
+        # updates then run driver-side on the collected summaries —
+        # zero Spark jobs per partition, keeping the suite's job count
+        # O(1) in the partition count. The exploded pass runs here,
+        # while the decode is in flight.
         kspsi_by: dict = {}
         hdm_sum_by: dict = {}
-        if run_summary:
+        if run_summary and not summary_from_pdf:
             kspsi_by, hdm_sum_by = self._global_summary_pass(scoped, todo, ranges, probe)
 
         # global pass 3 (the only pandas stage): decode + features +
         # quality metrics for ALL partitions, already running on the
         # background thread — join it before any feats-dependent action
         # so the cache is never materialized twice concurrently
-        counts_by: dict = {}
-        qcounts_by: dict = {}
         if feats_future is not None:
             feats_future.result()
-        # the quality-count aggregation depends only on the (now
-        # materialized) feats cache — run it on the driver thread pool
-        # WHILE the kdq build-sample collect + leaf-count job run, so
-        # the two independent jobs back-fill each other's idle slots
+        pdf = proj.toPandas() if collect else None
+        if summary_from_pdf:
+            kspsi_by, hdm_sum_by = self._global_summary_pass(scoped, todo, ranges, pdf)
+        counts_by: dict = {}
+        qcounts_by: dict = {}
+        # without the collect, the quality-count aggregation runs on the
+        # driver thread pool WHILE the kdq build-sample collect +
+        # leaf-count job run, so the two jobs back-fill each other's
+        # idle slots
         qcounts_future = None
         if self._quality_active():
-            qcounts_future = submit(self._quality_counts_by_part, feats, todo)
+            if pdf is not None:
+                qcounts_by = self._quality_counts_by_part(feats, todo, pdf)
+            else:
+                qcounts_future = submit(self._quality_counts_by_part, feats, todo)
         self._kdq_groups = None
         if self.kdq is not None:
             fcols = [f"f{i}" for i in range(audio.N_FEATURES)]
-            # clean feature rows keyed by the string partition value
-            # the decision loop uses
-            pk_clean = feats.filter(_f0_clean()).withColumn(
-                "__pk", F.col(self.partition_col).cast("string"))
 
             def leaf_counts(tree, pks):
+                # clean feature rows keyed by the string partition value
+                # the decision loop uses
+                pk_clean = feats.filter(_f0_clean()).withColumn(
+                    "__pk", F.col(self.partition_col).cast("string"))
                 return distributed_leaf_counts_by_group(pk_clean, "__pk", fcols, tree, pks)
 
             if self.kdq._tree is None:
@@ -1569,28 +1658,22 @@ class ValidationSuite:
                 # under the build-sample cap (so the distributed
                 # chain's "sample" is the full clean partition — no seeded
                 # sampling whose row set depends on physical
-                # partitioning) and the total is driver-collectable,
-                # ONE Arrow collect of the clean feature matrix
-                # replaces the per-drift-event sample-collect +
-                # leaf-count JOBS: tree builds are row-order
+                # partitioning) and the decoded frame was collected,
+                # its clean feature rows replace the per-drift-event
+                # sample-collect + leaf-count JOBS: tree builds are row-order
                 # independent and the leaf assignment is the same
                 # numpy kernel the distributed fill broadcasts, so
                 # every tree, count vector and drift decision is
-                # bit-identical (asserted in tests). The constraint
-                # pass's exact counts gate it against the ``suite_kdq``
-                # cap. Above the caps — the 100-TB regime — the
-                # distributed chain below runs unchanged.
-                cap_ok = all(
+                # bit-identical (asserted in tests). Above the caps — the
+                # 100-TB regime — the distributed chain below runs
+                # unchanged.
+                if pdf is not None and all(
                     int(stats_by[pk]["__n"]) <= self.kdq.build_sample_cap
                     for pk in todo
-                ) and sum(
-                    int(stats_by[pk]["__n"]) for pk in todo
-                ) <= DRIVER_ROW_CAPS["suite_kdq"]
-                if cap_ok:
-                    pdf = pk_clean.select("__pk", *fcols).toPandas()
+                ):
                     groups = {
                         str(g): sub[fcols].to_numpy(dtype=np.float64)
-                        for g, sub in pdf.groupby("__pk")
+                        for g, sub in pdf[pdf["__clean"]].groupby("__pk")
                     }
                     if all(groups.get(pk) is not None and len(groups[pk])
                            for pk in todo):
@@ -1618,43 +1701,48 @@ class ValidationSuite:
             qcounts_by = qcounts_future.result()
         nan_by: dict = {}
         if feats is not None and self.kdq is None:
-            # no kdq leaf totals to derive decode failures from — one
-            # grouped count of bad rows covers every partition
-            bad_rows = feats.groupBy(self.partition_col).agg(
-                F.sum(_f0_bad().cast("long")).alias("__bad")).collect()
-            got = {str(r[self.partition_col]): int(r["__bad"] or 0) for r in bad_rows}
-            nan_by = {pk: got.get(pk, 0) for pk in todo}
+            # no kdq leaf totals to derive decode failures from: the
+            # collect's clean flags, or one grouped count of bad rows,
+            # cover every partition
+            if pdf is not None:
+                got = (~pdf["__clean"]).groupby(pdf["__pk"]).sum().to_dict()
+            else:
+                bad_rows = feats.groupBy(self.partition_col).agg(
+                    F.sum(_f0_bad().cast("long")).alias("__bad")).collect()
+                got = {str(r[self.partition_col]): r["__bad"] or 0 for r in bad_rows}
+            nan_by = {pk: int(got.get(pk, 0)) for pk in todo}
 
-        # sequential decision loop over collected summaries; the
-        # per-run invariants (schema check, HDM cast list) are built
-        # once here — each costs py4j round-trips per partition
-        schema_result = self._schema_result(df)
-        hdm_casts = [F.col(c).cast("double").alias(c) for c in self.hdm_cols]
+        # sequential decision loop over collected summaries; a
+        # partition's frame is built only where a check reads its rows
         for i, pk in enumerate(todo):
             t_pk = time.time() if i else t0  # first record absorbs global passes
             stats = stats_by[pk]
             n_rows = int(stats["__n"])
             fingerprint = {"n": n_rows, "key_hash": int(stats["__key_hash"] or 0)}
             is_ref = not self.manifest.records
-            part_df = df.filter(F.col(self.partition_col) == self._pk_value(df, pk))
+            part_df = functools.cache(functools.partial(self._part_frame, df, pk))
             verdicts, violations = self._constraint_verdicts(pk, part_df, stats,
                                                              schema_result)
 
             # HDM: test-side agg AND distinct-value summary both come
             # precomputed from the global passes, so the exact
-            # re-binning semantics run driver-side with no per-batch job
+            # re-binning semantics run driver-side with no per-batch job.
+            # HDM reads rows only for the detect_batch == 1 half-split
+            # and when the summary is over its cap.
             if self.hdm is not None:
-                hdm_df = part_df.select(*hdm_casts).coalesce(self.hdm_input_partitions)
+                summary = hdm_sum_by.get(pk)
+                hdm_df = (None if summary is not None and self.hdm.detect_batch != 1
+                          else self._hdm_frame(part_df()))
                 if is_ref:
                     self.hdm.set_reference(hdm_df, batch_id=pk,
-                                           summary_values=hdm_sum_by.get(pk))
+                                           summary_values=summary)
                     verdicts.append(Verdict(pk, "hdddm", PASS, n_rows=n_rows,
                                             details={"role": "reference"}))
                 else:
                     mm = {c: (stats[f"__mm_lo_{c}"], stats[f"__mm_hi_{c}"])
                           for c in self.hdm_cols}
                     state = self.hdm.update(hdm_df, batch_id=pk, precomputed=(n_rows, mm),
-                                            summary_values=hdm_sum_by.get(pk))
+                                            summary_values=summary)
                     det = {}
                     if state == DRIFT and self.hdm.feature_info:
                         det["max_drift_feature"] = self.hdm.feature_info["max_drift_feature"]

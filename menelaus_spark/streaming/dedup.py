@@ -35,7 +35,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-PAIR_SCHEMA = "id_a string, id_b string, jaccard double, band int"
+# the id columns take the key column's type
+PAIR_SCHEMA = "id_a {key}, id_b {key}, jaccard double, band int"
 STATE_SCHEMA = "members binary"
 
 
@@ -82,10 +83,10 @@ def stateful_neardup_stream(
     bucket_cap: int = 200,
 ) -> DataFrame:
     """Incremental near-dup pair stream: (id_a, id_b, jaccard, band)
-    rows, id_a < id_b, emitted the moment the LATER clip of a pair
-    arrives. Bucket state persists across micro-batches in GroupState;
-    restart-safe through the stream's checkpoint like any stateful
-    query.
+    rows, id_a < id_b, with the ids in ``key_col``'s type, emitted the
+    moment the LATER clip of a pair arrives. Bucket state persists
+    across micro-batches in GroupState; restart-safe through the
+    stream's checkpoint like any stateful query.
 
     RECALL CONTRACT under the state bound: once a bucket holds
     ``bucket_cap`` members, later arrivals in that bucket are verified
@@ -138,7 +139,8 @@ def stateful_neardup_stream(
 
     return banded.groupBy("band", "bhash").applyInPandasWithState(
         bucket_fn,
-        outputStructType=PAIR_SCHEMA,
+        outputStructType=PAIR_SCHEMA.format(
+            key=banded.schema[key_col].dataType.simpleString()),
         stateStructType=STATE_SCHEMA,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,

@@ -111,10 +111,11 @@ def local_frame(spark: SparkSession, rows: Iterable, schema: T.StructType | str)
 # scaling-witness sizes (800k clips, 2.25M images, 450k videos), so
 # witness runs keep the distributed plans that scale with cores.
 DRIVER_ROW_CAPS: dict[str, int] = {
-    # suite KS/PSI/HDM projection: one collect + numpy twins replace the exploded pass
-    "summary_probe": 100_000,
-    # suite kdq clean feature rows: collect + tree builds stay ~10 MB and under a second
-    "suite_kdq": 100_000,
+    # suite rows, gated by the constraint pass's exact count: one collect of the decoded
+    # frame (features, quality flags, KS/PSI/HDM columns) feeds the kdq tree builds, the
+    # quality and decode-integrity counts and the summary numpy twins; with no decode,
+    # the summary probe's collect of the KS/PSI/HDM projection
+    "suite_rows": 100_000,
     # HDM (feature, value, count) entries held as numpy arrays; past it they spill to a frame
     "hdm_values": 2_000_000,
     # kdq_lineitem (year, features) rows: driver tree builds replace the per-event jobs

@@ -299,6 +299,48 @@ def test_cluster_spill_branch_bit_equal_to_driver(spark, monkeypatch):
         assert clu._ref_minmax == drv._ref_minmax
 
 
+def _summary(arr):
+    """{f<i>: (distinct values, counts)} of a batch, as the suite's
+    summary pass hands it to HDM."""
+    out = {}
+    for i in range(arr.shape[1]):
+        v, n = np.unique(arr[:, i], return_counts=True)
+        out[f"f{i}"] = (v, n.astype(np.float64))
+    return out
+
+
+def test_summary_batches_need_no_frame(spark):
+    # with summary_values, set_reference and update take df=None: the
+    # columns come from the summary, nothing is persisted, lineage holds
+    # (batch_id, None), and the drift sequence is the one with frames
+    rng = np.random.default_rng(5)
+    batches = [rng.normal(0.0, 1.0, (120, 3)).round(1) for _ in range(3)]
+    batches += [rng.normal(6.0, 1.0, (120, 3)).round(1) for _ in range(2)]
+    runs = []
+    for with_frames in (True, False):
+        hdm = _hdm(detect_batch=2)
+
+        def frame(b):
+            return _sdf(spark, b) if with_frames else None
+
+        hdm.set_reference(frame(batches[0]), batch_id="b0",
+                          summary_values=_summary(batches[0]))
+        verdicts = [hdm.update(frame(b), batch_id=f"b{i}", summary_values=_summary(b))
+                    for i, b in enumerate(batches[1:], 1)]
+        runs.append((verdicts, hdm.get_state()))
+        if not with_frames:
+            assert hdm._owned == []
+            assert all(d is None for _, d in hdm._reference)
+        hdm._release_owned()
+    assert "drift" in runs[0][0]
+    assert runs[0] == runs[1]
+    # the detect_batch=1 half-split reads the reference rows
+    with pytest.raises(ValueError, match="reference frame"):
+        _hdm(detect_batch=1).set_reference(None, summary_values=_summary(batches[0]))
+    with pytest.raises(ValueError, match="summary_values"):
+        _hdm(detect_batch=2).set_reference(None)
+
+
 def test_owned_reference_frames_released_on_drift(spark):
     # long drift sequences must not accumulate persisted frames: every
     # drift-replace releases the previous owned set, and no-drift

@@ -111,8 +111,8 @@ def _probe_frame(spark, n):
 
 @pytest.mark.parametrize("n", [0, 300])
 def test_driver_rows_at_cap_returns_every_row(spark, monkeypatch, n):
-    monkeypatch.setitem(DRIVER_ROW_CAPS, "summary_probe", n)
-    pdf = driver_rows(_probe_frame(spark, n), "summary_probe")
+    monkeypatch.setitem(DRIVER_ROW_CAPS, "suite_rows", n)
+    pdf = driver_rows(_probe_frame(spark, n), "suite_rows")
     assert sorted(pdf["id"]) == list(range(n))
     # an empty collect keeps the frame's columns and dtypes
     want = _probe_frame(spark, 3).toPandas().dtypes
@@ -120,8 +120,8 @@ def test_driver_rows_at_cap_returns_every_row(spark, monkeypatch, n):
 
 
 def test_driver_rows_over_cap_returns_none(spark, monkeypatch):
-    monkeypatch.setitem(DRIVER_ROW_CAPS, "summary_probe", 299)
-    assert driver_rows(_probe_frame(spark, 300), "summary_probe") is None
+    monkeypatch.setitem(DRIVER_ROW_CAPS, "suite_rows", 299)
+    assert driver_rows(_probe_frame(spark, 300), "suite_rows") is None
 
 
 def test_driver_rows_runs_one_job(spark):
@@ -130,7 +130,7 @@ def test_driver_rows_runs_one_job(spark):
     group = f"driver_rows_{uuid.uuid4().hex}"
     sc.setJobGroup(group, group)
     try:
-        pdf = driver_rows(df, "summary_probe")
+        pdf = driver_rows(df, "suite_rows")
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)

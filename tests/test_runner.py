@@ -880,7 +880,7 @@ def _check_kdq_fast_path(spark, tmp_path, df, make):
     rows1 = _manifest_rows(s1)
 
     with pytest.MonkeyPatch.context() as m:
-        m.setitem(DRIVER_ROW_CAPS, "suite_kdq", 0)  # force the distributed chain
+        m.setitem(DRIVER_ROW_CAPS, "suite_rows", 0)  # force the distributed chain
         s2 = make(spark, tmp_path, "dist")
         s2.run(df)
         assert s2._kdq_groups is None
@@ -894,7 +894,7 @@ def _check_summary_fast_path(spark, tmp_path, df, make):
     rows1 = _manifest_rows(s1)
 
     with pytest.MonkeyPatch.context() as m:
-        m.setitem(DRIVER_ROW_CAPS, "summary_probe", 0)  # force the exploded aggregation
+        m.setitem(DRIVER_ROW_CAPS, "suite_rows", 0)  # force the exploded aggregation
         s2 = make(spark, tmp_path, "sum_dist")
         s2.run(df)
         rows2 = _manifest_rows(s2)
@@ -936,6 +936,152 @@ def test_driver_fast_paths_match_distributed(spark, tmp_path, request, case):
     df = request.getfixturevalue(fixture)
     _check_kdq_fast_path(spark, tmp_path, df, make)
     _check_summary_fast_path(spark, tmp_path, df, make)
+
+
+def _violation_rows(violations):
+    return sorted(json.dumps(r.asDict(recursive=True), sort_keys=True)
+                  for r in violations.collect())
+
+
+def _spy(monkeypatch, owner, name, record):
+    """Wrap ``owner.name`` so each call appends ``record(*args)`` to the
+    returned list."""
+    calls = []
+    real = getattr(owner, name)
+
+    def wrapped(*args, **kwargs):
+        calls.append(record(*args, **kwargs))
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(owner, name, wrapped)
+    return calls
+
+
+def _collect_vs_cap0(spark, tmp_path, df, make, name):
+    """(manifest rows, violation rows) of a run that collects the
+    decoded frame, and of one with the ``suite_rows`` cap at 0, which
+    runs every distributed pass."""
+    out = []
+    for cap in (None, 0):
+        with pytest.MonkeyPatch.context() as m:
+            if cap is not None:
+                m.setitem(DRIVER_ROW_CAPS, "suite_rows", cap)
+            s = make(spark, tmp_path, f"{name}_{cap}")
+            _, violations = s.run(df)
+            out.append((_manifest_rows(s), _violation_rows(violations)))
+    return out
+
+
+@pytest.fixture(scope="module")
+def corrupt_df(spark, tmp_path_factory):
+    # a third of partition 1's payloads are undecodable, some partition
+    # 2 payloads are null (a null f0) and some of its durations are
+    # null, which makes the payload-size predicate null
+    path = str(tmp_path_factory.mktemp("audio_corrupt") / "table")
+    df = tables.audio_table(spark, n_rows=300, n_parts=3, null_frac=0.0,
+                            drift={1: {"corrupt_frac": 0.3}})
+    in2 = F.col("part") == 2
+    df = df.withColumn("bytes", F.when(in2 & F.col("clip_id").endswith("3"), None)
+                       .otherwise(F.col("bytes")))
+    df = df.withColumn("dur_ms", F.when(in2 & F.col("clip_id").endswith("7"), None)
+                       .otherwise(F.col("dur_ms")))
+    tables.write_audio_table(df, path)
+    return spark.read.parquet(path)
+
+
+_COLLECT_CASES = {
+    "drifted": ("audio_df", {}),
+    "undecodable": ("corrupt_df", _AUDIO_DEPTH_KW),
+    "quality_only": ("depth_df", dict(_AUDIO_DEPTH_KW, kdq_features=False)),
+    # no decode: the summary pass's own probe is the collect
+    "no_decode": ("audio_df", {"kdq_features": False}),
+}
+
+
+@pytest.mark.parametrize("case", list(_COLLECT_CASES))
+def test_decoded_collect_matches_cap0(spark, tmp_path, request, monkeypatch, case):
+    """One collect of the decoded frame feeds the summary, kdq, quality
+    and decode-integrity decisions; its manifest and violation rows
+    must equal, byte for byte, those of the distributed passes that run
+    with the ``suite_rows`` cap at 0. Without a decode the summary
+    probe is gated by the same cap."""
+    fixture, kw = _COLLECT_CASES[case]
+    df = request.getfixturevalue(fixture)
+    summary_pdf = _spy(monkeypatch, ValidationSuite, "_global_summary_pass",
+                       lambda self, scoped, todo, ranges, pdf: pdf is not None)
+    quality_pdf = _spy(monkeypatch, ValidationSuite, "_quality_counts_by_part",
+                       lambda self, feats, pks, pdf=None: pdf is not None)
+    fast, dist = _collect_vs_cap0(
+        spark, tmp_path, df, lambda sp, tp, name: _suite(sp, tp, name, **kw), case)
+    assert fast == dist
+    # the first run decided from the collect, the second from Spark jobs
+    assert summary_pdf == [True, False]
+    assert quality_pdf == ([True, False] if "quality_rules" in kw else [])
+    if case == "undecodable":
+        states = {(v["partition_key"], v["check_name"]): v
+                  for rec in fast[0] for v in json.loads(rec)[0]}
+        bad = [states[(pk, "decode_integrity")]["statistic"] for pk in "012"]
+        assert bad[0] == 0 and bad[1] > 0 and bad[2] > 0
+        assert sum(json.loads(r)["check_name"] == "decode_integrity"
+                   for r in fast[1]) == sum(bad)
+
+
+def test_decoded_collect_with_non_string_psi_column(spark, tmp_path, audio_df, monkeypatch):
+    """A non-string psi column keeps the summary pass on its exploded
+    aggregation (the driver twin does not replicate Java's
+    number-to-string cast); the kdq decisions still read the collect."""
+    summary_pdf = _spy(monkeypatch, ValidationSuite, "_global_summary_pass",
+                       lambda self, scoped, todo, ranges, pdf: pdf is not None)
+    fast, dist = _collect_vs_cap0(
+        spark, tmp_path, audio_df,
+        lambda sp, tp, name: _suite(sp, tp, name, psi_col="sr_hz"), "psi_int")
+    assert fast == dist
+    assert summary_pdf == [False, False]
+    s = _suite(spark, tmp_path, "psi_int_groups", psi_col="sr_hz")
+    s.run(audio_df)
+    assert s._kdq_groups is not None
+
+
+def test_decoded_collect_hdm_half_split_gets_frames(spark, tmp_path, audio_df, monkeypatch):
+    """HDM with ``detect_batch=1`` re-splits its reference rows, so the
+    suite still hands it every partition's frame; with the default
+    ``detect_batch=2`` it decides from the collected summaries alone."""
+    from menelaus_spark.checks.hdm import HDM
+
+    frames = []
+    for attr in ("set_reference", "update"):
+        frames += [_spy(monkeypatch, HDM, attr,
+                        lambda self, df, *a, **k: df is not None)]
+    kw = {"hdm_params": {"detect_batch": 1, "order_col": "dur_ms"}}
+    fast, dist = _collect_vs_cap0(
+        spark, tmp_path, audio_df, lambda sp, tp, name: _suite(sp, tp, name, **kw),
+        "half_split")
+    assert fast == dist
+    assert all(sum(frames, [])) and len(frames[0]) == 2
+    for calls in frames:
+        calls.clear()
+    _suite(spark, tmp_path, "hdm_summaries").run(audio_df)
+    assert not any(sum(frames, []))
+
+
+def test_decoded_collect_resume_equals_one_shot(spark, tmp_path, audio_df):
+    """A run resumed from a checkpoint of partitions 0-4 gives the
+    one-shot run's manifest rows, with the collect and at cap 0."""
+    import shutil
+
+    first = _suite(spark, tmp_path, "resume_base")
+    first.run(audio_df.filter(F.col("part") < 5))
+    one_shot = _suite(spark, tmp_path, "resume_one_shot")
+    one_shot.run(audio_df)
+    for cap in (None, 0):
+        with pytest.MonkeyPatch.context() as m:
+            if cap is not None:
+                m.setitem(DRIVER_ROW_CAPS, "suite_rows", cap)
+            ck = tmp_path / f"resume_{cap}"
+            shutil.copytree(first.manifest.dir, str(ck))
+            s = _suite(spark, tmp_path, f"resume_{cap}")
+            s.run(audio_df)
+            assert _manifest_rows(s) == _manifest_rows(one_shot)
 
 
 def _distinct_scope(self, df, done):

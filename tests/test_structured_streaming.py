@@ -462,6 +462,39 @@ def test_streaming_neardup_bucket_cap_bounds_state(spark, tmp_path):
         assert a in admitted  # pairs always reach back to an admitted member
 
 
+def test_streaming_neardup_long_keys(spark, tmp_path):
+    # the pair ids take the key column's type: two equal payloads keyed
+    # 1L and 2L pair up as (1, 2), not a type error in the stateful stage
+    from pyspark.sql import types as T
+
+    from menelaus_spark import tables
+    from menelaus_spark.streaming.dedup import stateful_neardup_stream
+
+    base = tables.audio_table(spark, n_rows=1, n_parts=1, drift={}, null_frac=0.0)
+    b = base.select("bytes", "codec").collect()[0]
+    schema = T.StructType([T.StructField("clip_id", T.LongType(), False),
+                           T.StructField("bytes", T.BinaryType(), True),
+                           T.StructField("codec", T.StringType(), True)])
+    df = spark.createDataFrame([(1, bytes(b.bytes), b.codec),
+                                (2, bytes(b.bytes), b.codec)], schema)
+    src = str(tmp_path / "long_src")
+    df.coalesce(1).write.parquet(src)
+
+    pairs = stateful_neardup_stream(spark.readStream.schema(schema).parquet(src))
+    assert pairs.schema["id_a"].dataType == T.LongType()
+    q = (
+        pairs.writeStream.format("memory").queryName("longpairs")
+        .outputMode("update")
+        .option("checkpointLocation", str(tmp_path / "long_ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(300)
+    assert q.exception() is None
+    got = spark.sql("SELECT DISTINCT id_a, id_b, jaccard FROM longpairs").collect()
+    assert [(r.id_a, r.id_b, r.jaccard) for r in got] == [(1, 2, 1.0)]
+
+
 def test_streaming_neardup_bucket_cap_recall_contract(spark, tmp_path):
     # The complement of the state-bound test: the docstring's recall
     # contract says post-cap arrivals pair only against RETAINED

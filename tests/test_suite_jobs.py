@@ -17,8 +17,9 @@ from perfbench.workloads import Context, SuiteCold  # noqa: E402
 
 # at most this many jobs in a warm suite_cold run at smoke size on 4
 # cores (18 while the partition list and the KS ranges had jobs of
-# their own)
-WARM_SUITE_JOBS = 14
+# their own, 14 while the summary probe, the kdq collect and the
+# quality counts each read the data through jobs of their own)
+WARM_SUITE_JOBS = 11
 
 
 def _job_ids(sc) -> set[int]:
@@ -81,19 +82,20 @@ def test_run_releases_cached_frames_when_it_raises(spark, suite_cold, monkeypatc
 
 
 def test_run_that_raises_cancels_its_passes(spark, suite_cold, monkeypatch):
-    # the probe fails on the main thread just after the decode, the
-    # constraint pass and the uniqueness pass were submitted: they are
-    # cancelled, not waited for, and the probe's error is the one raised
+    # building the decoded frame's projection fails on the main thread
+    # just after the decode, the constraint pass and the uniqueness pass
+    # were submitted: they are cancelled, not waited for, and that
+    # error is the one raised
     wl, df = suite_cold
     sc = spark.sparkContext
     tags = sc.getJobTags()
 
-    def fail(self, scoped):
-        raise RuntimeError("probe failed")
+    def fail(self, feats, summary):
+        raise RuntimeError("projection failed")
 
-    monkeypatch.setattr(ValidationSuite, "_summary_probe", fail)
+    monkeypatch.setattr(ValidationSuite, "_decoded_projection", fail)
     before = _job_ids(sc)
-    with pytest.raises(RuntimeError, match="probe failed"):
+    with pytest.raises(RuntimeError, match="projection failed"):
         wl.suite(wl.fresh_checkpoint()).run(df)
     new = _job_ids(sc) - before
     assert "FAILED" in {sc.statusTracker().getJobInfo(j).status for j in new}
