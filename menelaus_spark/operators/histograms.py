@@ -73,6 +73,25 @@ def bin_index_col(col, lo: float, hi: float, nbins: int):
     )
 
 
+def sql_double(v: float) -> str:
+    """``v`` as an exact SQL double literal."""
+    text = {float("inf"): "Infinity", float("-inf"): "-Infinity"}.get(v, repr(v))
+    return f"CAST('{'NaN' if v != v else text}' AS DOUBLE)"
+
+
+def bin_index_sql(x: str, lo: float, hi: float, nbins: int) -> str:
+    """:func:`bin_index_col` as SQL text over the double expression
+    ``x``: the same expression tree, which ``F.expr`` builds in one
+    py4j call where the Column API takes about 80."""
+    lo, hi, width = _range_and_width(lo, hi, nbins)
+    lo_s, hi_s = sql_double(lo), sql_double(hi)
+    return (f"CASE WHEN ({x}) IS NULL OR isnan(CAST(({x}) AS DOUBLE)) THEN NULL"
+            f" WHEN ({x}) < {lo_s} OR ({x}) > {hi_s} THEN NULL"
+            f" WHEN ({x}) = {hi_s} THEN {nbins - 1}"
+            f" ELSE least(CAST(floor((({x}) - {lo_s}) / {sql_double(width)}) AS INT),"
+            f" {nbins - 1}) END")
+
+
 def bin_weighted_driver(
     values: np.ndarray, counts: np.ndarray, lo: float, hi: float, nbins: int
 ) -> np.ndarray:

@@ -15,10 +15,14 @@ Per partition (one "batch" in reference terms):
   sequential state machines.
 
 Statistics for every unvisited partition come from a constant number
-of global passes grouped by partition key; the sequential drift
-decisions then run driver-side over the collected summaries. Only
-O(bins + leaves + categories) summaries reach the driver above the
-bounded-driver caps. Completed partitions are recorded in the
+of global passes grouped by partition key: one constraint aggregation
+and one decode of the payloads. Under the ``suite_rows`` row cap, one
+collect of the decoded frame feeds every decision that reads decoded
+rows (the drift summaries, the kdq trees and leaf counts, the decode
+integrity and quality counts), on fresh and resumed runs alike; over
+it each decision runs one distributed pass, and only O(bins + leaves
++ categories) summaries reach the driver. The sequential drift
+decisions then run driver-side. Completed partitions are recorded in the
 CheckpointManifest (lineage fingerprint, metrics, serialized state,
 verdict rows); a resumed run replays those verdicts byte-identically
 and continues from the first unvisited partition.
@@ -297,11 +301,16 @@ class ValidationSuite:
         return (self.quality_rules is not None or self._payload_in_decode()
                 or self.meta_rules is not None)
 
+    def _decodes(self) -> bool:
+        """Whether a run decodes the payloads: for the kdq features or
+        for a quality, payload-size or metadata check."""
+        return self.kdq is not None or self._quality_active()
+
     def _feats_carry_cols(self, summary: bool) -> tuple:
         """The source columns the decode pass carries: the partition,
         the payload and metadata checks' inputs, and with ``summary``
-        the KS, PSI and HDM columns that the decoded frame's one
-        collect feeds to the summary pass."""
+        the summary pass's inputs (_summary_cols) that the decoded
+        frame's one collect feeds to it."""
         carry = [self.partition_col]
         if self._payload_in_decode():
             carry += [self.sr_col, self.dur_col]
@@ -312,9 +321,7 @@ class ValidationSuite:
             if self.meta_rules.get("codec_tags"):
                 carry.append(self.codec_col)
         if summary:
-            carry += self.ks_cols + ([self.psi_col] if self.psi_col else [])
-            if self.hdm is not None:
-                carry += self.hdm_cols
+            carry += list(self._summary_cols)
         return tuple(dict.fromkeys(carry))
 
     def _payload_codec_gate(self):
@@ -326,8 +333,11 @@ class ValidationSuite:
 
     def _quality_conds(self) -> list:
         """(check_name, row predicate over the feats frame, value expr)
-        in fixed emission order, so verdict tables stay byte-identical
-        across runs and resumes. Memoized per instance: the
+        of every per-row check of a suite that decodes, in fixed
+        emission order, so verdict tables stay byte-identical across
+        runs and resumes. The first is decode integrity: a row whose
+        payload did not decode has a null or NaN f0, which every other
+        predicate excludes. Memoized per instance: the
         list depends only on the (immutable) suite config, and building
         these Column trees costs ~0.1 s of py4j round-trips per call —
         the old per-partition rebuild was ~1 s of pure driver chatter
@@ -335,7 +345,7 @@ class ValidationSuite:
         cached = getattr(self, "_quality_conds_cache", None)
         if cached is not None:
             return cached
-        out = []
+        out = [("decode_integrity", _f0_bad(), F.lit(None).cast("string"))]
         clean = _f0_clean()
         rules = self.quality_rules or {}
         if "clip_rate_max" in rules:
@@ -428,8 +438,6 @@ class ValidationSuite:
         aggregation over the cached feats frame (keeps the suite's job
         count O(1) in the partition count)."""
         conds = self._quality_conds()
-        if not conds:
-            return {pk: [] for pk in pks}
         if pdf is not None:
             qcols = [f"__q{i}" for i in range(len(conds))]
             sums = pdf.groupby("__pk")[qcols].sum()
@@ -447,8 +455,9 @@ class ValidationSuite:
 
     def _quality_verdicts(self, pk: str, feats: DataFrame, n_rows: int,
                           counts: list[int]):
-        """Per-clip audio-quality + payload-size verdicts for one
-        partition from its collected violation counts
+        """Decode-integrity, per-clip audio-quality, payload-size and
+        metadata verdicts for one partition from its collected
+        violation counts
         (_quality_counts_by_part); violation rows are only
         materialized on failure, from the cached feats frame."""
         verdicts, violations = [], []
@@ -1190,13 +1199,16 @@ class ValidationSuite:
 
         Per-partition statistics for ALL unvisited partitions come
         from a constant number of global passes — one
-        groupBy(partition) constraint aggregation, ONE fused
-        (partition, kind, key) pass carrying the KS histograms, PSI
-        frequencies AND HDM distinct-value summaries, and ONE
-        decode+leaf-assign pandas pass — then the sequential drift
-        decisions run driver-side on the collected summaries. Job
-        count is O(1) in the partition count (plus one kdq recount
-        pass per drift event).
+        groupBy(partition) constraint aggregation and ONE decode
+        pandas pass, then under the ``suite_rows`` cap one collect of
+        the decoded frame, and over it one distributed pass per
+        decision (the fused (partition, kind, key) count of the KS
+        histograms, PSI frequencies and HDM distinct values, one kdq
+        leaf count, one count of the decode-integrity and quality
+        flags) — then the sequential drift decisions run driver-side
+        on the collected summaries. Job count is O(1) in the partition
+        count (over the cap, plus one kdq recount pass per drift
+        event).
 
         The scope is known before any Spark job runs: all of ``df`` on
         a fresh checkpoint, else the rows outside the manifest's
@@ -1210,9 +1222,9 @@ class ValidationSuite:
         (spark_optimization_guide §2.6). The partition list and the KS
         reference ranges are read from the constraint aggregation's
         groups and min/max columns. The decode carries the KS, PSI and
-        HDM columns, and one collect of the decoded frame then feeds
-        the summary, kdq, quality and decode-integrity decisions (see
-        _run_vectorized).
+        HDM columns (_summary_cols), and one collect of the decoded
+        frame then feeds the summary, kdq, decode-integrity and
+        quality decisions (see _run_vectorized).
 
         The frames a run caches (the feature frame, HDM's reference
         frames) are released before it returns or raises. A run that
@@ -1246,10 +1258,12 @@ class ValidationSuite:
         feats = None
         try:
             feats_future = None
-            if self.kdq is not None or self._quality_active():
+            if self._decodes():
+                summary = self._summary_in_decode()
                 feats = audio.features_df(
-                    scoped, key_col=self.key_col,
-                    carry_cols=self._feats_carry_cols(self._summary_in_decode(scoped)),
+                    scoped.withColumns(self._summary_cols) if summary else scoped,
+                    key_col=self.key_col,
+                    carry_cols=self._feats_carry_cols(summary),
                     quality=self.quality_rules is not None,
                     byte_len=self._payload_in_decode(),
                     header=self.meta_rules is not None,
@@ -1315,62 +1329,76 @@ class ValidationSuite:
 
     # ---------------------------------------- vectorized-over-partitions
 
-    def _summary_types_ok(self, scoped: DataFrame) -> bool:
-        """Whether the summary pass's numpy twins may bin a collect of
-        ``scoped``'s columns: not when the psi column is not
-        string-typed (cast-to-string is then not the identity, and
-        Java's double->string formatting is not replicated
-        driver-side)."""
-        return not self.psi_col or isinstance(
-            scoped.schema[self.psi_col].dataType, T.StringType)
-
-    def _summary_in_decode(self, scoped: DataFrame) -> bool:
+    def _summary_in_decode(self) -> bool:
         """Whether the summary pass's columns ride the decode pass, to
         be collected with the decoded frame (_decoded_projection)."""
         return (bool(self.ks_cols or self.psi_col or self.hdm is not None)
-                and (self.kdq is not None or self._quality_active())
-                and self._summary_types_ok(scoped))
+                and self._decodes())
 
-    def _summary_casts(self) -> list:
-        sel = [F.col(c).cast("double").alias(f"__ks_{c}") for c in self.ks_cols]
+    @staticmethod
+    def _ks_bin(col: str, rng: tuple):
+        """Column ``col``'s KS bin index against the reference range
+        ``rng``, null where no bin counts the row. Values are clamped
+        into the range first, so that mass outside it piles into the
+        edge bins and the CDF gap registers."""
+        lo, hi = float(rng[0]), float(rng[1])
+        name = col.replace("`", "``")
+        x = (f"least(greatest(CAST(`{name}` AS DOUBLE), {H.sql_double(lo)}),"
+             f" {H.sql_double(hi)})")
+        return F.expr(H.bin_index_sql(x, lo, hi, KS_BINS))
+
+    @functools.cached_property
+    def _summary_cols(self) -> dict:
+        """{name: expression} of the summary pass's inputs as a collect
+        carries them: each KS column as its Java string (the decode's
+        pandas boundary would turn a NaN into a null, which the KS clamp
+        sends to the other edge), the psi column as a string and each
+        HDM column as a double. Cached: it depends only on the suite
+        config, and each expression costs py4j round trips."""
+        cols = {f"__ks_{c}": F.col(c).cast("double").cast("string")
+                for c in self.ks_cols}
         if self.psi_col:
-            sel.append(F.col(self.psi_col).alias("__psi"))
+            cols["__psi"] = F.col(self.psi_col).cast("string")
         if self.hdm is not None:
-            sel += [F.col(c).cast("double").alias(f"__hdm_{c}")
-                    for c in self.hdm_cols]
-        return sel
+            cols.update({f"__hdm_{c}": F.col(c).cast("double") for c in self.hdm_cols})
+        return cols
 
-    def _summary_probe(self, scoped: DataFrame):
+    def _with_ks_bins(self, frame: DataFrame, ranges: dict) -> DataFrame:
+        """``frame``, which holds _summary_cols, with each KS column
+        replaced by its bin index (_ks_bin): the collect then holds the
+        exploded pass's keys, and the driver only counts them. Spark's
+        ordering of null, NaN and +-inf and its float arithmetic need
+        no numpy twin."""
+        return frame.withColumns({f"__ks_{c}": self._ks_bin(f"__ks_{c}", ranges[c])
+                                  for c in self.ks_cols})
+
+    def _summary_probe(self, scoped: DataFrame, ranges: dict):
         """The summary pass's driver fast path for a suite with no
         decode: under the ``suite_rows`` cap, ONE bounded Arrow collect
-        (driver_rows) of the raw projection replaces the exploded
-        grouped count (see _global_summary_pass). It needs neither the
-        partition list nor the KS ranges, so it runs while the
-        constraint aggregation is in flight. Returns the collected
-        frame, or None over the cap or when _summary_types_ok fails."""
-        if not self._summary_types_ok(scoped):
-            return None
-        return driver_rows(scoped.select(
+        (driver_rows) of the summary columns replaces the exploded
+        grouped count (see _global_summary_pass). Returns the collected
+        frame, or None over the cap."""
+        return driver_rows(self._with_ks_bins(scoped.select(
             F.col(self.partition_col).cast("string").alias("__pk"),
-            *self._summary_casts()), "suite_rows")
+            *[e.alias(n) for n, e in self._summary_cols.items()]), ranges), "suite_rows")
 
     def _decoded_projection(self, feats: DataFrame, summary: bool) -> DataFrame:
         """The projection of the cached decoded frame that the driver
         collects once, under the ``suite_rows`` cap, to feed every
         decision that reads decoded rows: the string partition key
-        ``__pk`` and the clean flag ``__clean`` (decode integrity), the
-        features (kdq), each _quality_conds predicate as a flag
-        ``__q{i}`` (a null predicate is False, as Spark's ``sum(cast)``
-        counts it 0) and, with ``summary``, the summary pass's
-        ``__ks_*``/``__psi``/``__hdm_*`` columns."""
-        sel = [F.col(self.partition_col).cast("string").alias("__pk"),
-               _f0_clean().alias("__clean")]
+        ``__pk``, the features (kdq), each _quality_conds predicate as a
+        flag ``__q{i}`` (a null predicate is False, as Spark's
+        ``sum(cast)`` counts it 0; ``__q0`` is decode integrity) and,
+        with ``summary``, the summary pass's inputs (_summary_cols),
+        whose KS columns _with_ks_bins bins once the ranges are
+        known."""
+        sel = [F.col(self.partition_col).cast("string").alias("__pk")]
         if self.kdq is not None:
             sel += [f"f{i}" for i in range(audio.N_FEATURES)]
         sel += [F.coalesce(cond, F.lit(False)).alias(f"__q{i}")
                 for i, (_, cond, _) in enumerate(self._quality_conds())]
         if summary:
-            sel += self._summary_casts()
+            sel += list(self._summary_cols)
         return feats.select(*sel)
 
     def _global_summary_pass(
@@ -1385,77 +1413,52 @@ class ValidationSuite:
         to its own per-batch summary jobs.
 
         ``pdf`` is the decoded frame's collect (_decoded_projection) or,
-        in a suite with no decode, _summary_probe's. When it is there
-        and the gate holds, the binning / counting is done by the
-        proven numpy twins (histograms.bin_weighted_driver replicates
-        bin_index_col's IEEE arithmetic bit-for-bit) and no further job
-        runs. The remaining gate, preserving exact equivalence with the
-        exploded pass: no NaN in the collected KS columns (a null
-        clamps to the range floor while NaN clamps to the ceiling in
-        the JVM expression, and pandas cannot tell them apart). Over
-        the cap or on a gate miss, the exploded pass runs unchanged —
-        the 100-TB path.
+        in a suite with no decode, _summary_probe's. When it is there,
+        its columns already hold the exploded pass's keys
+        (_with_ks_bins), so the driver only counts them and no further
+        job runs. Over the cap, the exploded pass runs unchanged — the
+        100-TB path.
 
         Returns (kspsi_by, hdm_sum_by)."""
         hdm_cols = self.hdm_cols if self.hdm is not None else []
         if pdf is not None:
-            ks_ok = not any(
-                np.isnan(pdf[f"__ks_{c}"].to_numpy(np.float64)).any()
-                for c in self.ks_cols
-            )
-            if ks_ok:
-                kspsi_by: dict = {}
-                hdm_data: dict = {}
-                n_hdm_entries = 0
-                for pk, g in pdf.groupby("__pk"):
-                    mat = {c: np.zeros(KS_BINS) for c in self.ks_cols}
-                    freqs: dict = {}
-                    for c in self.ks_cols:
-                        lo, hi = float(ranges[c][0]), float(ranges[c][1])
-                        v = np.minimum(
-                            np.maximum(g[f"__ks_{c}"].to_numpy(np.float64), lo),
-                            hi,
-                        )
-                        mat[c] = H.bin_weighted_driver(
-                            v, np.ones(v.size), lo, hi, KS_BINS)
-                    if self.psi_col:
-                        vc = g["__psi"].value_counts(dropna=True)
-                        freqs = {str(k): int(n) for k, n in vc.items()}
-                    if self.ks_cols or self.psi_col:
-                        kspsi_by[str(pk)] = (mat, freqs)
-                    if hdm_cols:
-                        d = {}
-                        for c in hdm_cols:
-                            a = g[f"__hdm_{c}"].to_numpy(np.float64)
-                            vals, cnts = np.unique(
-                                a[~np.isnan(a)], return_counts=True)
-                            d[c] = (vals.astype(np.float64),
-                                    cnts.astype(np.float64))
-                            n_hdm_entries += vals.size
-                        hdm_data[str(pk)] = d
-                hdm_sum_by: dict = {}
-                if hdm_cols and n_hdm_entries <= DRIVER_ROW_CAPS["hdm_values"]:
-                    hdm_sum_by = {
-                        pk: hdm_data.get(
-                            pk, {c: (np.array([]), np.array([]))
-                                 for c in hdm_cols})
-                        for pk in todo
-                    }
-                return kspsi_by, hdm_sum_by
-        structs = []
-        for c in self.ks_cols:
-            # clamp test values into the reference bin range so the
-            # cumulative comparison stays aligned (mass outside the
-            # range piles into the edge bins -> CDF gap registers)
-            col = F.least(
-                F.greatest(F.col(c).cast("double"), F.lit(float(ranges[c][0]))),
-                F.lit(float(ranges[c][1])),
-            )
-            structs.append(F.struct(
-                F.lit(f"ks:{c}").alias("kind"),
-                H.bin_index_col(col, ranges[c][0], ranges[c][1], KS_BINS)
-                .cast("string").alias("key"),
-            ))
+            kspsi_by: dict = {}
+            hdm_data: dict = {}
+            n_hdm_entries = 0
+            for pk, g in pdf.groupby("__pk"):
+                mat = {}
+                freqs: dict = {}
+                for c in self.ks_cols:
+                    b = g[f"__ks_{c}"].to_numpy(np.float64)
+                    mat[c] = np.bincount(b[~np.isnan(b)].astype(np.int64),
+                                         minlength=KS_BINS).astype(np.float64)
+                if self.psi_col:
+                    vc = g["__psi"].value_counts(dropna=True)
+                    freqs = {str(k): int(n) for k, n in vc.items()}
+                if self.ks_cols or self.psi_col:
+                    kspsi_by[str(pk)] = (mat, freqs)
+                if hdm_cols:
+                    d = {}
+                    for c in hdm_cols:
+                        a = g[f"__hdm_{c}"].to_numpy(np.float64)
+                        vals, cnts = np.unique(
+                            a[~np.isnan(a)], return_counts=True)
+                        d[c] = (vals.astype(np.float64),
+                                cnts.astype(np.float64))
+                        n_hdm_entries += vals.size
+                    hdm_data[str(pk)] = d
+            hdm_sum_by: dict = {}
+            if hdm_cols and n_hdm_entries <= DRIVER_ROW_CAPS["hdm_values"]:
+                hdm_sum_by = {
+                    pk: hdm_data.get(
+                        pk, {c: (np.array([]), np.array([]))
+                             for c in hdm_cols})
+                    for pk in todo
+                }
+            return kspsi_by, hdm_sum_by
+        structs = [F.struct(F.lit(f"ks:{c}").alias("kind"),
+                            self._ks_bin(c, ranges[c]).cast("string").alias("key"))
+                   for c in self.ks_cols]
         if self.psi_col:
             structs.append(F.struct(
                 F.lit("psi").alias("kind"),
@@ -1550,10 +1553,18 @@ class ValidationSuite:
             _f0_clean()
         ).select(*fcols)
 
-    def _kdq_build_tree(self, clean_part_feats: DataFrame):
-        """Driver-side tree build from a bounded sample of one
-        partition's feature vectors."""
-        ary, _ = self.kdq._collect_build_sample(clean_part_feats)
+    def _kdq_tree(self, df: DataFrame, feats: DataFrame | None, pk: str,
+                  todo: list[str], groups: dict | None):
+        """The kdq tree of partition ``pk``, built driver-side from its
+        clean feature vectors: its group of the decoded frame's collect
+        when that holds at most ``build_sample_cap`` rows (where
+        _collect_build_sample would take the whole partition too; tree
+        builds are row-order independent, so the tree is the same), else
+        _collect_build_sample's bounded sample."""
+        ary = None if groups is None else groups.get(pk)
+        if ary is None or len(ary) > self.kdq.build_sample_cap:
+            ary, _ = self.kdq._collect_build_sample(
+                self._kdq_clean_feats_for(df, feats, pk, todo))
         return self.kdq.build_tree_from_sample(ary)
 
     def _run_vectorized(self, df: DataFrame, scoped: DataFrame, submit,
@@ -1568,23 +1579,21 @@ class ValidationSuite:
         While the decode runs, this thread builds the run's invariants:
         the schema check and the one projection of ``feats`` that the
         driver collects (_decoded_projection). Once pass 1 has given
-        the partition list and its exact row counts, and the decode has
-        filled the cache, ONE collect of that projection, under the
-        ``suite_rows`` cap, feeds the summary pass's numpy twins, the
-        kdq tree builds and leaf counts, the quality counts and the
-        decode-integrity counts, with no further Spark job. Over the
-        cap each runs its distributed pass, as does the summary pass
-        when the psi column is not string-typed. A suite with no decode
-        keeps the summary pass's own bounded probe, which runs while
-        pass 1 is in flight."""
+        the partition list, its exact row counts and the KS ranges, and
+        the decode has filled the cache, ONE collect of that
+        projection, under the
+        ``suite_rows`` cap, feeds every decision that reads decoded
+        rows, on a fresh and on a resumed run alike: the summary
+        counts, the kdq tree builds and leaf counts, and the
+        decode-integrity and quality counts. Over the cap each runs its
+        one distributed pass. A suite with no decode collects the
+        summary columns with its own bounded probe."""
         t0 = time.time()
         run_summary = bool(self.ks_cols or self.psi_col or self.hdm is not None)
-        summary_in_feats = self._summary_in_decode(scoped)
+        summary_in_feats = self._summary_in_decode()
         schema_result = self._schema_result(df)
         proj = (self._decoded_projection(feats, summary_in_feats)
                 if feats is not None else None)
-        probe = (self._summary_probe(scoped)
-                 if run_summary and feats is None else None)
 
         # pass 1's groups are the partitions to validate; on a fresh
         # run the first one's min/max are the KS reference ranges, a
@@ -1603,6 +1612,10 @@ class ValidationSuite:
             ranges = {c: (stats_by[todo[0]][f"__mm_lo_{c}"],
                           stats_by[todo[0]][f"__mm_hi_{c}"])
                       for c in self.ks_cols}
+        if summary_in_feats:
+            proj = self._with_ks_bins(proj, ranges)
+        probe = (self._summary_probe(scoped, ranges)
+                 if run_summary and feats is None else None)
         # the decoded frame holds one row per scoped row, so pass 1's
         # exact counts gate its collect
         collect = proj is not None and sum(
@@ -1630,87 +1643,45 @@ class ValidationSuite:
         pdf = proj.toPandas() if collect else None
         if summary_from_pdf:
             kspsi_by, hdm_sum_by = self._global_summary_pass(scoped, todo, ranges, pdf)
-        counts_by: dict = {}
-        qcounts_by: dict = {}
         # without the collect, the quality-count aggregation runs on the
         # driver thread pool WHILE the kdq build-sample collect +
         # leaf-count job run, so the two jobs back-fill each other's
         # idle slots
+        qcounts_by: dict = {}
         qcounts_future = None
-        if self._quality_active():
-            if pdf is not None:
-                qcounts_by = self._quality_counts_by_part(feats, todo, pdf)
-            else:
-                qcounts_future = submit(self._quality_counts_by_part, feats, todo)
-        self._kdq_groups = None
-        if self.kdq is not None:
-            fcols = [f"f{i}" for i in range(audio.N_FEATURES)]
+        if pdf is not None:
+            qcounts_by = self._quality_counts_by_part(feats, todo, pdf)
+        elif feats is not None:
+            qcounts_future = submit(self._quality_counts_by_part, feats, todo)
+        fcols = [f"f{i}" for i in range(audio.N_FEATURES)]
+        # each partition's clean feature rows (__q0 is decode integrity)
+        groups = self._kdq_groups = None if pdf is None or self.kdq is None else {
+            str(g): sub[fcols].to_numpy(dtype=np.float64)
+            for g, sub in pdf[~pdf["__q0"]].groupby("__pk")}
 
-            def leaf_counts(tree, pks):
-                # clean feature rows keyed by the string partition value
-                # the decision loop uses
+        def kdq_counts(tree, pks):
+            # {partition: leaf counts} from the collected groups, else
+            # from one grouped distributed pass
+            if groups is None:
                 pk_clean = feats.filter(_f0_clean()).withColumn(
                     "__pk", F.col(self.partition_col).cast("string"))
                 return distributed_leaf_counts_by_group(pk_clean, "__pk", fcols, tree, pks)
+            empty = np.empty((0, len(fcols)))
+            return {pk: tree.fill_counts(groups.get(pk, empty)) for pk in pks}
 
-            if self.kdq._tree is None:
-                # small-table fast path: when EVERY partition fits
-                # under the build-sample cap (so the distributed
-                # chain's "sample" is the full clean partition — no seeded
-                # sampling whose row set depends on physical
-                # partitioning) and the decoded frame was collected,
-                # its clean feature rows replace the per-drift-event
-                # sample-collect + leaf-count JOBS: tree builds are row-order
-                # independent and the leaf assignment is the same
-                # numpy kernel the distributed fill broadcasts, so
-                # every tree, count vector and drift decision is
-                # bit-identical (asserted in tests). Above the caps — the
-                # 100-TB regime — the distributed chain below runs
-                # unchanged.
-                if pdf is not None and all(
-                    int(stats_by[pk]["__n"]) <= self.kdq.build_sample_cap
-                    for pk in todo
-                ):
-                    groups = {
-                        str(g): sub[fcols].to_numpy(dtype=np.float64)
-                        for g, sub in pdf[pdf["__clean"]].groupby("__pk")
-                    }
-                    if all(groups.get(pk) is not None and len(groups[pk])
-                           for pk in todo):
-                        self._kdq_groups = groups
-                if self._kdq_groups is not None:
-                    tree = self.kdq.build_tree_from_sample(
-                        self._kdq_groups[todo[0]])
-                    counts_by = {
-                        pk: tree.fill_counts(self._kdq_groups[pk])
-                        for pk in todo
-                    }
-                else:
-                    tree = self._kdq_build_tree(
-                        self._kdq_clean_feats_for(df, feats, todo[0], todo)
-                    )
-                    counts_by = leaf_counts(tree, todo)
-                self.kdq.install_reference(tree, counts_by[todo[0]])
-                self.kdq._input_cols = [f"f{i}" for i in range(audio.N_FEATURES)]
+        counts_by: dict = {}
+        if self.kdq is not None:
+            tree = self.kdq._tree  # restored from the checkpoint on a resumed run
+            self._kdq_fresh_ref = tree is None
+            if tree is None:
+                tree = self._kdq_tree(df, feats, todo[0], todo, groups)
                 self._kdq_ref_pk = todo[0]
-                self._kdq_fresh_ref = True
-            else:
-                counts_by = leaf_counts(self.kdq._tree, todo)
-                self._kdq_fresh_ref = False
+            counts_by = kdq_counts(tree, todo)
+            if self._kdq_fresh_ref:
+                self.kdq.install_reference(tree, counts_by[todo[0]])
+                self.kdq._input_cols = fcols
         if qcounts_future is not None:
             qcounts_by = qcounts_future.result()
-        nan_by: dict = {}
-        if feats is not None and self.kdq is None:
-            # no kdq leaf totals to derive decode failures from: the
-            # collect's clean flags, or one grouped count of bad rows,
-            # cover every partition
-            if pdf is not None:
-                got = (~pdf["__clean"]).groupby(pdf["__pk"]).sum().to_dict()
-            else:
-                bad_rows = feats.groupBy(self.partition_col).agg(
-                    F.sum(_f0_bad().cast("long")).alias("__bad")).collect()
-                got = {str(r[self.partition_col]): r["__bad"] or 0 for r in bad_rows}
-            nan_by = {pk: int(got.get(pk, 0)) for pk in todo}
 
         # sequential decision loop over collected summaries; a
         # partition's frame is built only where a check reads its rows
@@ -1752,35 +1723,20 @@ class ValidationSuite:
                         threshold=self.hdm.beta, n_rows=n_rows, details=det,
                     ))
 
-            # kdq: decisions on collected counts; rebuild + one recount
-            # pass only on a drift event
+            # kdq: decisions on collected counts; a drift event rebuilds
+            # the tree from the drifted partition and recounts it and
+            # every partition not yet decided
             if self.kdq is not None:
                 if self.kdq.drift_state == DRIFT:
                     ref_pk = self._kdq_ref_pk
-                    scope = ([ref_pk] if ref_pk in todo else []) + todo[i:]
-                    if self._kdq_groups is not None and ref_pk in self._kdq_groups:
-                        # small-table fast path: rebuild + recount from
-                        # the already-collected clean feature matrix —
-                        # zero Spark jobs per drift event (same trees,
-                        # same exact counts as the distributed chain)
-                        tree = self.kdq.build_tree_from_sample(
-                            self._kdq_groups[ref_pk])
-                        recount = {
-                            p: tree.fill_counts(self._kdq_groups[p])
-                            for p in scope
-                        }
-                    else:
-                        ref_feats = self._kdq_clean_feats_for(df, feats, ref_pk, todo)
-                        tree = self._kdq_build_tree(ref_feats)
-                        # one recount pass for the drifted reference + all
-                        # not-yet-decided partitions under the new tree
-                        recount = leaf_counts(tree, scope)
+                    tree = self._kdq_tree(df, feats, ref_pk, todo, groups)
+                    recount = kdq_counts(
+                        tree, ([ref_pk] if ref_pk in todo else []) + todo[i:])
                     counts_by.update(recount)
-                    if ref_pk in recount:
-                        ref_counts = recount[ref_pk]
-                    else:  # reference partition completed in a prior run
-                        ref_counts = distributed_leaf_counts(ref_feats, fcols, tree)
-                    self.kdq.install_reference(tree, ref_counts)
+                    self.kdq.install_reference(tree, recount[ref_pk] if ref_pk in recount
+                                               else distributed_leaf_counts(  # done in a prior run
+                                                   self._kdq_clean_feats_for(df, feats, ref_pk, todo),
+                                                   fcols, tree))
                 if is_ref and self._kdq_fresh_ref and pk == self._kdq_ref_pk:
                     verdicts.append(Verdict(pk, "kdq_tree", PASS, n_rows=n_rows,
                                             details={"role": "reference"}))
@@ -1791,27 +1747,8 @@ class ValidationSuite:
                     verdicts.append(Verdict(pk, "kdq_tree", DRIFT if state == DRIFT else PASS,
                                             statistic=self.kdq.test_dist,
                                             threshold=self.kdq._critical_dist, n_rows=n_rows))
-                # decode integrity comes free from the leaf-count totals:
-                # undecodable clips produce NaN feature rows, which no
-                # leaf counts
-                n_nan = n_rows - int(counts_by[pk].sum())
-            elif feats is not None:
-                n_nan = nan_by[pk]
-            if feats is not None:
-                verdicts.append(Verdict(pk, "decode_integrity", PASS if n_nan == 0 else FAIL,
-                                        statistic=float(n_nan), threshold=0.0, n_rows=n_rows))
-                if n_nan:
-                    violations.append(
-                        feats.filter(
-                            (F.col(self.partition_col).cast("string") == pk)
-                            & _f0_bad()
-                        )
-                        .select(F.col(self.key_col).alias("row_key"))
-                        .withColumn("value", F.lit(None).cast("string"))
-                        .withColumn("reason", F.lit("decode_integrity"))
-                    )
 
-            if self._quality_active():
+            if feats is not None:
                 qv, qviol = self._quality_verdicts(pk, feats, n_rows, qcounts_by[pk])
                 verdicts.extend(qv)
                 violations.extend(qviol)

@@ -112,9 +112,10 @@ def local_frame(spark: SparkSession, rows: Iterable, schema: T.StructType | str)
 # witness runs keep the distributed plans that scale with cores.
 DRIVER_ROW_CAPS: dict[str, int] = {
     # suite rows, gated by the constraint pass's exact count: one collect of the decoded
-    # frame (features, quality flags, KS/PSI/HDM columns) feeds the kdq tree builds, the
-    # quality and decode-integrity counts and the summary numpy twins; with no decode,
-    # the summary probe's collect of the KS/PSI/HDM projection
+    # frame (features, decode-integrity and quality flags, KS bins, PSI/HDM values) feeds
+    # the kdq tree builds and leaf counts, the flag counts and the summary counts, on fresh
+    # and resumed runs; with no decode, the summary probe's collect of the same KS/PSI/HDM
+    # columns
     "suite_rows": 100_000,
     # HDM (feature, value, count) entries held as numpy arrays; past it they spill to a frame
     "hdm_values": 2_000_000,

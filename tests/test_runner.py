@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from menelaus_spark import tables
+from menelaus_spark.operators import histograms as H
 from menelaus_spark.runner import ValidationSuite
 from menelaus_spark.verdicts import DRIVER_ROW_CAPS
 
@@ -989,12 +990,33 @@ def corrupt_df(spark, tmp_path_factory):
     return spark.read.parquet(path)
 
 
+@pytest.fixture(scope="module")
+def ks_special_df(spark):
+    # two double KS columns holding null, NaN, +inf and -inf: "score"
+    # in partitions 1 and 2, "score0" in the reference partition 0,
+    # whose min and max (-inf, NaN) then become the KS range
+    specials = {"1": None, "3": float("nan"), "5": float("inf"), "7": float("-inf")}
+
+    def score(parts):
+        x = F.col("dur_ms") / 1000.0
+        for digit, v in specials.items():
+            x = F.when(F.col("part").isin(parts) & F.col("clip_id").endswith(digit),
+                       F.lit(v).cast("double")).otherwise(x)
+        return x
+
+    df = tables.audio_table(spark, n_rows=300, n_parts=3, null_frac=0.0)
+    return df.withColumn("score", score([1, 2])).withColumn("score0", score([0])).cache()
+
+
 _COLLECT_CASES = {
     "drifted": ("audio_df", {}),
     "undecodable": ("corrupt_df", _AUDIO_DEPTH_KW),
     "quality_only": ("depth_df", dict(_AUDIO_DEPTH_KW, kdq_features=False)),
     # no decode: the summary pass's own probe is the collect
     "no_decode": ("audio_df", {"kdq_features": False}),
+    "ks_special": ("ks_special_df", {"ks_cols": ("dur_ms", "score", "score0")}),
+    # a non-string psi column, and no KS column to bin
+    "psi_int": ("audio_df", {"psi_col": "sr_hz", "ks_cols": ()}),
 }
 
 
@@ -1011,12 +1033,18 @@ def test_decoded_collect_matches_cap0(spark, tmp_path, request, monkeypatch, cas
                        lambda self, scoped, todo, ranges, pdf: pdf is not None)
     quality_pdf = _spy(monkeypatch, ValidationSuite, "_quality_counts_by_part",
                        lambda self, feats, pks, pdf=None: pdf is not None)
+    # the suite_rows cap in force at each grouped count (the exploded
+    # summary pass, the distributed kdq leaf counts, HDM's own summaries)
+    counts_at_cap = _spy(monkeypatch, H, "salted_count",
+                         lambda *a, **k: DRIVER_ROW_CAPS["suite_rows"])
     fast, dist = _collect_vs_cap0(
         spark, tmp_path, df, lambda sp, tp, name: _suite(sp, tp, name, **kw), case)
     assert fast == dist
     # the first run decided from the collect, the second from Spark jobs
     assert summary_pdf == [True, False]
-    assert quality_pdf == ([True, False] if "quality_rules" in kw else [])
+    decodes = kw.get("kdq_features", True) or "quality_rules" in kw
+    assert quality_pdf == ([True, False] if decodes else [])
+    assert counts_at_cap and set(counts_at_cap) == {0}
     if case == "undecodable":
         states = {(v["partition_key"], v["check_name"]): v
                   for rec in fast[0] for v in json.loads(rec)[0]}
@@ -1027,16 +1055,16 @@ def test_decoded_collect_matches_cap0(spark, tmp_path, request, monkeypatch, cas
 
 
 def test_decoded_collect_with_non_string_psi_column(spark, tmp_path, audio_df, monkeypatch):
-    """A non-string psi column keeps the summary pass on its exploded
-    aggregation (the driver twin does not replicate Java's
-    number-to-string cast); the kdq decisions still read the collect."""
+    """A non-string psi column is cast to string by Spark inside the
+    collected projection, so the summary pass and the kdq decisions
+    both read the collect."""
     summary_pdf = _spy(monkeypatch, ValidationSuite, "_global_summary_pass",
                        lambda self, scoped, todo, ranges, pdf: pdf is not None)
     fast, dist = _collect_vs_cap0(
         spark, tmp_path, audio_df,
         lambda sp, tp, name: _suite(sp, tp, name, psi_col="sr_hz"), "psi_int")
     assert fast == dist
-    assert summary_pdf == [False, False]
+    assert summary_pdf == [True, False]
     s = _suite(spark, tmp_path, "psi_int_groups", psi_col="sr_hz")
     s.run(audio_df)
     assert s._kdq_groups is not None

@@ -6,12 +6,14 @@ benchmark's ``suite_cold`` configuration is bounded here, and every
 frame a run caches must be released when it returns or raises."""
 
 import os
+import shutil
 import sys
 
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from menelaus_spark import runner  # noqa: E402
 from menelaus_spark.runner import ValidationSuite  # noqa: E402
 from perfbench.workloads import Context, SuiteCold  # noqa: E402
 
@@ -20,6 +22,10 @@ from perfbench.workloads import Context, SuiteCold  # noqa: E402
 # their own, 14 while the summary probe, the kdq collect and the
 # quality counts each read the data through jobs of their own)
 WARM_SUITE_JOBS = 11
+# at most this many jobs in a warm run resumed from a manifest of
+# partitions 0-8 that validates partition 9 (15 while a resumed run
+# counted its kdq leaves with a job of its own)
+WARM_APPEND_JOBS = 13
 
 
 def _job_ids(sc) -> set[int]:
@@ -50,6 +56,31 @@ def test_suite_cold_warm_job_count(spark, suite_cold):
     wl.suite(wl.fresh_checkpoint()).run(df)
     n = len(_job_ids(spark.sparkContext) - before)
     assert n <= WARM_SUITE_JOBS
+
+
+def test_resumed_append_warm_job_count(spark, suite_cold, monkeypatch):
+    # a resumed run decides kdq from the decoded frame's collect, as a
+    # fresh run does: its restored tree counts the new partition's
+    # leaves with no distributed pass
+    wl, df = suite_cold
+    base = wl.fresh_checkpoint()
+    wl.suite(base).run(df.filter("part < 9"))
+
+    def append():
+        ckpt = wl.fresh_checkpoint()
+        shutil.copytree(base, ckpt)
+        wl.suite(ckpt).run(df)
+
+    append()  # cold
+    calls = []
+    real = runner.distributed_leaf_counts_by_group
+    monkeypatch.setattr(runner, "distributed_leaf_counts_by_group",
+                        lambda *a: calls.append(a) or real(*a))
+    before = _job_ids(spark.sparkContext)
+    append()
+    n = len(_job_ids(spark.sparkContext) - before)
+    assert not calls
+    assert n <= WARM_APPEND_JOBS
 
 
 def test_run_releases_cached_frames(spark, suite_cold):

@@ -92,6 +92,22 @@ def test_histogram_constant_column(spark):
     assert np.array_equal(_bin_counts(df, "x", *ranges["x"], 10), expected)
 
 
+@pytest.mark.parametrize("lo, hi", [
+    (0.5, 2.5), (1.0, 1.0), (0.0, 5e-324), (float("-inf"), 2.0),
+    (0.0, float("inf")), (0.0, float("nan")),
+])
+def test_bin_index_sql_matches_bin_index_col(spark, lo, hi):
+    # the SQL text of the suite's KS bins is bin_index_col's expression,
+    # also for null, NaN, +-inf and degenerate or non-finite ranges
+    vals = [None, float("nan"), float("inf"), float("-inf"), -1.0, 0.0, 5e-324,
+            0.5, 1.0, 1.7, 2.5, 3.0]
+    df = spark.createDataFrame([(v,) for v in vals], "x double")
+    rows = df.select(histograms.bin_index_col(F.col("x"), lo, hi, 16).alias("col"),
+                     F.expr(histograms.bin_index_sql("x", lo, hi, 16)).alias("sql")).collect()
+    assert [r["col"] for r in rows] == [r["sql"] for r in rows]
+    assert any(r["col"] is not None for r in rows)
+
+
 def test_range_and_accepted_values(spark):
     df = tables.audio_table(spark, n_rows=50, n_parts=1)
     assert constraints.range_violations(df, "dur_ms", lo=200, hi=3000, key="clip_id").count() == 0
