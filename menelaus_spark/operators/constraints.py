@@ -3,8 +3,9 @@ integrity, null-rate / range rules, decoded-PCM integrity.
 
 Each check returns (list[Verdict-ready dict fields], violations
 DataFrame in VIOLATION_SCHEMA shape minus partition/check columns —
-the runner stamps those on). Violations stay DISTRIBUTED DataFrames;
-only the per-check scalar statistics are collected.
+the runner stamps those on; a keyed row_key is the key as a string).
+Violations are DataFrames: the suite runner collects them only under
+its ``suite_rows`` row cap.
 
 These generalize the reference's schema-freeze validation
 (/root/reference/menelaus/detector.py:43-124, 221-307): menelaus
@@ -53,11 +54,14 @@ def uniqueness_violations(df: DataFrame, key: str) -> DataFrame:
     )
 
 
-def referential_orphans(child: DataFrame, parent: DataFrame, key: str) -> DataFrame:
+def referential_orphans(child: DataFrame, parent: DataFrame, key: str,
+                        carry: tuple = ()) -> DataFrame:
     """Child keys with no parent -> left-anti join (the Spark-native
     generalization of menelaus input-conformance, SURVEY.md §2.3).
-    Catalyst/AQE picks broadcast-anti when the parent is small."""
-    return child.join(parent, on=key, how="left_anti").select(F.col(key).alias("row_key"))
+    Catalyst/AQE picks broadcast-anti when the parent is small.
+    ``carry`` names child columns kept beside ``row_key``."""
+    return child.join(parent, on=key, how="left_anti").select(
+        F.col(key).alias("row_key"), *carry)
 
 
 def null_rate(df: DataFrame, col: str) -> tuple[float, int]:
@@ -75,7 +79,7 @@ def range_violations(df: DataFrame, col: str, lo=None, hi=None, key: str = None)
         cond = cond | (F.col(col) < F.lit(lo))
     if hi is not None:
         cond = cond | (F.col(col) > F.lit(hi))
-    keyc = F.col(key) if key else F.monotonically_increasing_id().cast("string")
+    keyc = (F.col(key) if key else F.monotonically_increasing_id()).cast("string")
     return df.filter(cond).select(
         keyc.alias("row_key"), F.col(col).cast("string").alias("value")
     )
@@ -105,7 +109,7 @@ def transcript_rate_cond(transcript_col: str, dur_col: str, lo: float, hi: float
 
 def transcript_rate_violations(df: DataFrame, transcript_col: str, dur_col: str,
                                lo: float, hi: float, key: str = None) -> DataFrame:
-    keyc = F.col(key) if key else F.monotonically_increasing_id().cast("string")
+    keyc = (F.col(key) if key else F.monotonically_increasing_id()).cast("string")
     return df.filter(transcript_rate_cond(transcript_col, dur_col, lo, hi)).select(
         keyc.alias("row_key"),
         F.round(transcript_rate_expr(transcript_col, dur_col), 3)
@@ -165,7 +169,7 @@ def payload_size_cond(bytes_col: str, sr_col: str, dur_col: str, tol_frac: float
 
 def payload_size_violations(df: DataFrame, bytes_col: str, sr_col: str, dur_col: str,
                             tol_frac: float, key: str = None) -> DataFrame:
-    keyc = F.col(key) if key else F.monotonically_increasing_id().cast("string")
+    keyc = (F.col(key) if key else F.monotonically_increasing_id()).cast("string")
     return df.filter(payload_size_cond(bytes_col, sr_col, dur_col, tol_frac)).select(
         keyc.alias("row_key"),
         F.length(F.col(bytes_col)).cast("string").alias("value"),
@@ -173,7 +177,7 @@ def payload_size_violations(df: DataFrame, bytes_col: str, sr_col: str, dur_col:
 
 
 def accepted_values_violations(df: DataFrame, col: str, allowed: list, key: str = None) -> DataFrame:
-    keyc = F.col(key) if key else F.monotonically_increasing_id().cast("string")
+    keyc = (F.col(key) if key else F.monotonically_increasing_id()).cast("string")
     return df.filter(~F.col(col).isin(allowed) | F.col(col).isNull()).select(
         keyc.alias("row_key"), F.col(col).cast("string").alias("value")
     )

@@ -22,7 +22,11 @@ rows (the drift summaries, the kdq trees and leaf counts, the decode
 integrity and quality counts), on fresh and resumed runs alike; over
 it each decision runs one distributed pass, and only O(bins + leaves
 + categories) summaries reach the driver. The sequential drift
-decisions then run driver-side. Completed partitions are recorded in the
+decisions then run driver-side. Under the same cap the driver builds
+every violation row (the quality rows from that collect, the
+constraint rows from one collect of the failing partitions' frames)
+and writes each partition's violation file itself; over it a failing
+partition's rows take one Spark write. Completed partitions are recorded in the
 CheckpointManifest (lineage fingerprint, metrics, serialized state,
 verdict rows); a resumed run replays those verdicts byte-identically
 and continues from the first unvisited partition.
@@ -34,9 +38,12 @@ import functools
 import time
 
 import numpy as np
+import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from menelaus_spark import audio
 from menelaus_spark.checks.hdm import HDDDM
@@ -63,6 +70,8 @@ from menelaus_spark.verdicts import (
 )
 
 KS_BINS = 1024
+_REFERENTIAL = "referential:transcript"
+_VIOLATION_ARROW = to_arrow_schema(VIOLATION_SCHEMA)
 
 
 def _f0_clean():
@@ -454,27 +463,37 @@ class ValidationSuite:
         return {pk: out.get(pk, [0] * len(conds)) for pk in pks}
 
     def _quality_verdicts(self, pk: str, feats: DataFrame, n_rows: int,
-                          counts: list[int]):
+                          counts: list[int], flagged=None):
         """Decode-integrity, per-clip audio-quality, payload-size and
         metadata verdicts for one partition from its collected
         violation counts
         (_quality_counts_by_part); violation rows are only
-        materialized on failure, from the cached feats frame."""
+        materialized on failure: from ``flagged``, the partition's
+        flagged rows of the decoded frame's collect, when there is one
+        (pandas frames), else from the cached feats frame."""
         verdicts, violations = [], []
         feats_pk = None
-        for (name, cond, value), n_bad in zip(self._quality_conds(), counts):
+        for i, ((name, cond, value), n_bad) in enumerate(
+                zip(self._quality_conds(), counts)):
             verdicts.append(Verdict(pk, name, PASS if n_bad == 0 else FAIL,
                                     statistic=float(n_bad), threshold=0.0, n_rows=n_rows))
-            if n_bad:
-                if feats_pk is None:
-                    feats_pk = feats.filter(
-                        F.col(self.partition_col).cast("string") == pk)
-                violations.append(
-                    feats_pk.filter(cond)
-                    .select(F.col(self.key_col).alias("row_key"),
-                            value.alias("value"))
-                    .withColumn("reason", F.lit(name))
-                )
+            if not n_bad:
+                continue
+            if flagged is not None:
+                rows = flagged[flagged[f"__q{i}"]]
+                violations.append(pd.DataFrame({
+                    "row_key": rows["__key"], "value": rows[f"__v{i}"],
+                    "reason": name}))
+                continue
+            if feats_pk is None:
+                feats_pk = feats.filter(
+                    F.col(self.partition_col).cast("string") == pk)
+            violations.append(
+                feats_pk.filter(cond)
+                .select(F.col(self.key_col).cast("string").alias("row_key"),
+                        value.alias("value"))
+                .withColumn("reason", F.lit(name))
+            )
         return verdicts, violations
 
     def _constraint_aggs(self) -> list:
@@ -532,13 +551,32 @@ class ValidationSuite:
         return C.schema_check(df, self.expected_schema)
 
     def _constraint_verdicts(self, pk: str, part_df, stats: dict,
-                             schema_result: tuple | None):
-        """The constraint verdicts of one partition from its row of the
-        constraint pass. ``part_df()`` returns the partition's frame;
-        it is called only where a violation count is non-zero or the
-        referential check runs, so a clean partition builds none."""
-        verdicts, violations = [], []
+                             schema_result: tuple | None, crows_by: dict | None):
+        """The constraint verdicts and violations of one partition from
+        its row of the constraint pass. Under the ``suite_rows`` gate
+        its violation rows (and its orphan count) come from
+        ``crows_by``, the run's one constraint collect
+        (_constraint_rows); over it (``crows_by`` None) they are Spark
+        frames. ``part_df()`` returns the partition's frame; it is
+        called only over the gate, where a violation count is non-zero
+        or the referential check runs, so a clean partition builds
+        none."""
+        verdicts = []
         n_rows = int(stats["__n"])
+        n_orphan = None
+        if crows_by is not None:
+            rows = crows_by.get(pk)
+            violations = [] if rows is None else [rows]
+            if self.referential is not None:
+                n_orphan = (0 if rows is None
+                            else int((rows["reason"] == _REFERENTIAL).sum()))
+        else:
+            violations = self._constraint_violations(part_df, stats)
+            if self.referential is not None:
+                orphans = self._orphans(part_df())
+                n_orphan = orphans.count()
+                if n_orphan:
+                    violations.append(orphans)
 
         if schema_result is not None:
             ok, problems = schema_result
@@ -550,77 +588,93 @@ class ValidationSuite:
             verdicts.append(Verdict(pk, f"null_rate:{c}", PASS if rate <= mx else FAIL,
                                     statistic=rate, threshold=mx, n_rows=n_rows))
 
-        for c, (lo, hi) in self.ranges.items():
-            n_bad = int(stats[f"__range_{c}"] or 0)
-            verdicts.append(Verdict(pk, f"range:{c}", PASS if n_bad == 0 else FAIL,
-                                    statistic=float(n_bad), threshold=0.0, n_rows=n_rows))
-            if n_bad:  # violation rows only materialized on failure
-                violations.append(
-                    C.range_violations(part_df(), c, lo, hi, key=self.key_col)
-                    .withColumn("reason", F.lit(f"range:{c}"))
-                )
-
-        for c, allowed in self.accepted_values.items():
-            n_bad = int(stats[f"__acc_{c}"] or 0)
-            verdicts.append(Verdict(pk, f"accepted:{c}", PASS if n_bad == 0 else FAIL,
-                                    statistic=float(n_bad), threshold=0.0, n_rows=n_rows))
-            if n_bad:
-                violations.append(
-                    C.accepted_values_violations(part_df(), c, allowed, key=self.key_col)
-                    .withColumn("reason", F.lit(f"accepted:{c}"))
-                )
-
+        counted = [(f"range:{c}", f"__range_{c}") for c in self.ranges]
+        counted += [(f"accepted:{c}", f"__acc_{c}") for c in self.accepted_values]
         if self.cps_bounds is not None:
-            lo, hi = self.cps_bounds
-            n_bad = int(stats["__cps_bad"] or 0)
-            verdicts.append(Verdict(pk, "transcript_rate", PASS if n_bad == 0 else FAIL,
-                                    statistic=float(n_bad), threshold=0.0, n_rows=n_rows))
-            if n_bad:
-                violations.append(
-                    C.transcript_rate_violations(
-                        part_df(), self.transcript_col, self.dur_col, lo, hi,
-                        key=self.key_col)
-                    .withColumn("reason", F.lit("transcript_rate"))
-                )
-
+            counted.append(("transcript_rate", "__cps_bad"))
         if self.payload_tol is not None and not self._payload_in_decode():
-            n_bad = int(stats["__paysize_bad"] or 0)
-            verdicts.append(Verdict(pk, "payload_size", PASS if n_bad == 0 else FAIL,
+            counted.append(("payload_size", "__paysize_bad"))
+        for name, stat in counted:
+            n_bad = int(stats[stat] or 0)
+            verdicts.append(Verdict(pk, name, PASS if n_bad == 0 else FAIL,
                                     statistic=float(n_bad), threshold=0.0, n_rows=n_rows))
-            if n_bad:
-                violations.append(
-                    C.payload_size_violations(
-                        part_df().filter(self._payload_codec_gate()),
-                        self.bytes_col, self.sr_col, self.dur_col,
-                        self.payload_tol, key=self.key_col)
-                    .withColumn("reason", F.lit("payload_size"))
-                )
 
         n_dup_rows = n_rows - int(stats["__n_distinct"])
         verdicts.append(Verdict(pk, f"unique:{self.key_col}",
                                 PASS if n_dup_rows == 0 else FAIL,
                                 statistic=float(n_dup_rows), threshold=0.0, n_rows=n_rows))
-        if n_dup_rows:
-            dups = C.uniqueness_violations(part_df(), self.key_col)
-            violations.append(
-                dups.select("row_key", F.col("n_dup").cast("string").alias("value"))
-                .withColumn("reason", F.lit(f"unique:{self.key_col}"))
-            )
 
         if self.referential is not None:
-            orphans = C.referential_orphans(
-                part_df().select(self.key_col), self.referential.select(self.key_col),
-                self.key_col,
-            )
-            n_orphan = orphans.count()
-            verdicts.append(Verdict(pk, "referential:transcript", PASS if n_orphan == 0 else FAIL,
+            verdicts.append(Verdict(pk, _REFERENTIAL, PASS if n_orphan == 0 else FAIL,
                                     statistic=float(n_orphan), threshold=0.0, n_rows=n_rows))
-            if n_orphan:
-                violations.append(
-                    orphans.withColumn("value", F.lit(None).cast("string"))
-                    .withColumn("reason", F.lit("referential:transcript"))
-                )
         return verdicts, violations
+
+    def _constraint_violations(self, part_df, stats: dict) -> list[DataFrame]:
+        """(row_key, value, reason) frames of one partition's failing
+        row-level constraint checks, the referential check aside: one
+        per non-zero violation count of its constraint-pass row, the
+        key cast to a string."""
+        out = []
+        for c, (lo, hi) in self.ranges.items():
+            if stats[f"__range_{c}"]:
+                out.append(C.range_violations(part_df(), c, lo, hi, key=self.key_col)
+                           .withColumn("reason", F.lit(f"range:{c}")))
+        for c, allowed in self.accepted_values.items():
+            if stats[f"__acc_{c}"]:
+                out.append(C.accepted_values_violations(part_df(), c, allowed,
+                                                        key=self.key_col)
+                           .withColumn("reason", F.lit(f"accepted:{c}")))
+        if self.cps_bounds is not None and stats["__cps_bad"]:
+            lo, hi = self.cps_bounds
+            out.append(C.transcript_rate_violations(
+                part_df(), self.transcript_col, self.dur_col, lo, hi, key=self.key_col)
+                .withColumn("reason", F.lit("transcript_rate")))
+        if (self.payload_tol is not None and not self._payload_in_decode()
+                and stats["__paysize_bad"]):
+            out.append(C.payload_size_violations(
+                part_df().filter(self._payload_codec_gate()),
+                self.bytes_col, self.sr_col, self.dur_col,
+                self.payload_tol, key=self.key_col)
+                .withColumn("reason", F.lit("payload_size")))
+        if int(stats["__n"]) > int(stats["__n_distinct"]):
+            out.append(C.uniqueness_violations(part_df(), self.key_col).select(
+                F.col("row_key").cast("string"),
+                F.col("n_dup").cast("string").alias("value"),
+                F.lit(f"unique:{self.key_col}").alias("reason")))
+        return out
+
+    def _orphans(self, child: DataFrame, carry: tuple = ()) -> DataFrame:
+        """(row_key, value, reason) rows of ``child``'s keys that the
+        referential table lacks, the key cast to a string, with the
+        ``carry`` columns of ``child``."""
+        return C.referential_orphans(
+            child.select(self.key_col, *carry), self.referential.select(self.key_col),
+            self.key_col, carry,
+        ).select(F.col("row_key").cast("string"),
+                 F.lit(None).cast("string").alias("value"),
+                 F.lit(_REFERENTIAL).alias("reason"), *carry)
+
+    def _constraint_rows(self, df: DataFrame, scoped: DataFrame, todo: list[str],
+                         stats_by: dict) -> dict:
+        """{partition: pandas (row_key, value, reason) rows} of every
+        row-level constraint check that fails in a partition of
+        ``todo``, from ONE collect of the union of those partitions'
+        frames and, with a referential table, of the scope's orphans.
+        With nothing to read no job runs. Called under the
+        ``suite_rows`` gate only: each frame holds at most the scoped
+        row count."""
+        frames = []
+        for pk in todo:
+            part_df = functools.cache(functools.partial(self._part_frame, df, pk))
+            frames += [f.withColumn("__pk", F.lit(pk))
+                       for f in self._constraint_violations(part_df, stats_by[pk])]
+        if self.referential is not None:
+            frames.append(self._orphans(scoped.withColumn(
+                "__pk", F.col(self.partition_col).cast("string")), ("__pk",)))
+        if not frames:
+            return {}
+        pdf = functools.reduce(DataFrame.unionByName, frames).toPandas()
+        return {str(pk): g.drop(columns="__pk") for pk, g in pdf.groupby("__pk")}
 
     @staticmethod
     def _bin_blame(ref_counts, test_counts, lo: float, hi: float,
@@ -830,8 +884,13 @@ class ValidationSuite:
     def _finish_partition(self, pk: str, n_rows: int, fingerprint: dict,
                           verdicts: list, violations: list, t0: float,
                           metrics: dict | None = None) -> None:
-        n_viol = 0
-        if violations:
+        """Write the partition's violation rows, then append its
+        manifest record. ``violations`` holds pandas (row_key, value,
+        reason) frames under the ``suite_rows`` gate, written by the
+        driver with no Spark job, or Spark frames over it, written by
+        one Spark job. Either way the partition's directory holds this
+        attempt's rows only."""
+        if violations and isinstance(violations[0], DataFrame):
             from pyspark.sql import Observation
 
             all_v = violations[0]
@@ -850,6 +909,9 @@ class ValidationSuite:
             all_v = all_v.observe(obs, F.count(F.lit(1)).alias("n"))
             all_v.write.mode("overwrite").parquet(self.manifest.violations_dir(pk))
             n_viol = int(obs.get["n"])
+        else:
+            n_viol = self.manifest.write_violations(
+                pk, self._violation_table(pk, violations))
         self.manifest.append(
             {
                 "partition_key": pk,
@@ -863,6 +925,25 @@ class ValidationSuite:
                 "elapsed_s": round(time.time() - t0, 3),
             }
         )
+
+    @staticmethod
+    def _violation_table(pk: str, frames: list):
+        """The pandas (row_key, value, reason) ``frames`` of partition
+        ``pk`` as an Arrow table in VIOLATION_SCHEMA, shaped as the
+        Spark write shapes them (a null value is ""); None without
+        rows. Every string in it was made by Spark."""
+        if not frames:
+            return None
+        rows = pd.concat(frames, ignore_index=True)
+        reasons = rows["reason"].tolist()
+        return pa.Table.from_pydict({
+            "partition_key": [pk] * len(rows),
+            "check_name": reasons,
+            "row_key": [k if isinstance(k, str) else None for k in rows["row_key"]],
+            "reason": reasons,
+            "details": [[("value", v if isinstance(v, str) else "")]
+                        for v in rows["value"]],
+        }, schema=_VIOLATION_ARROW)
 
     @staticmethod
     def _sorted_keys(values) -> list[str]:
@@ -1304,16 +1385,15 @@ class ValidationSuite:
             if self.hdm is not None:
                 self.hdm._release_owned()
         verdicts = verdicts_df(self.spark, verdict_rows)
-        import os
-
-        viol_root = os.path.join(self.manifest.dir, "violations")
-        if os.path.isdir(viol_root) and any(os.scandir(viol_root)):
-            # schema is known by construction (every violation write
-            # uses the VIOLATION_SCHEMA shape) — passing it skips the
-            # footer-sampling schema-inference pass over the sink dirs
-            violations_df = self.spark.read.schema(VIOLATION_SCHEMA).parquet(
-                *[os.path.join(viol_root, d) for d in sorted(os.listdir(viol_root))]
-            )
+        # the recorded partitions' files only: a directory left by an
+        # attempt killed before its manifest append is not this run's.
+        # The schema is known by construction (every violation write
+        # uses the VIOLATION_SCHEMA shape); passing it skips the
+        # footer-sampling schema-inference pass over the sink dirs
+        viol_dirs = [self.manifest.violations_dir(r["partition_key"])
+                     for r in self.manifest.records if r["n_violations"]]
+        if viol_dirs:
+            violations_df = self.spark.read.schema(VIOLATION_SCHEMA).parquet(*viol_dirs)
         else:
             violations_df = empty_violations(self.spark)
         return verdicts, violations_df
@@ -1386,17 +1466,20 @@ class ValidationSuite:
         """The projection of the cached decoded frame that the driver
         collects once, under the ``suite_rows`` cap, to feed every
         decision that reads decoded rows: the string partition key
-        ``__pk``, the features (kdq), each _quality_conds predicate as a
-        flag ``__q{i}`` (a null predicate is False, as Spark's
-        ``sum(cast)`` counts it 0; ``__q0`` is decode integrity) and,
-        with ``summary``, the summary pass's inputs (_summary_cols),
-        whose KS columns _with_ks_bins bins once the ranges are
-        known."""
-        sel = [F.col(self.partition_col).cast("string").alias("__pk")]
+        ``__pk``, the key as a string ``__key``, the features (kdq),
+        each _quality_conds predicate as a flag ``__q{i}`` (a null
+        predicate is False, as Spark's ``sum(cast)`` counts it 0;
+        ``__q0`` is decode integrity) with its violation value
+        ``__v{i}`` on flagged rows and, with ``summary``, the summary
+        pass's inputs (_summary_cols), whose KS columns _with_ks_bins
+        bins once the ranges are known."""
+        sel = [F.col(self.partition_col).cast("string").alias("__pk"),
+               F.col(self.key_col).cast("string").alias("__key")]
         if self.kdq is not None:
             sel += [f"f{i}" for i in range(audio.N_FEATURES)]
-        sel += [F.coalesce(cond, F.lit(False)).alias(f"__q{i}")
-                for i, (_, cond, _) in enumerate(self._quality_conds())]
+        for i, (_, cond, value) in enumerate(self._quality_conds()):
+            flag = F.coalesce(cond, F.lit(False))
+            sel += [flag.alias(f"__q{i}"), F.when(flag, value).alias(f"__v{i}")]
         if summary:
             sel += list(self._summary_cols)
         return feats.select(*sel)
@@ -1587,7 +1670,10 @@ class ValidationSuite:
         counts, the kdq tree builds and leaf counts, and the
         decode-integrity and quality counts. Over the cap each runs its
         one distributed pass. A suite with no decode collects the
-        summary columns with its own bounded probe."""
+        summary columns with its own bounded probe. Under the same gate
+        the violation rows reach the driver too (_constraint_rows,
+        _quality_verdicts) and _finish_partition writes them with no
+        Spark job."""
         t0 = time.time()
         run_summary = bool(self.ks_cols or self.psi_col or self.hdm is not None)
         summary_in_feats = self._summary_in_decode()
@@ -1616,10 +1702,16 @@ class ValidationSuite:
             proj = self._with_ks_bins(proj, ranges)
         probe = (self._summary_probe(scoped, ranges)
                  if run_summary and feats is None else None)
-        # the decoded frame holds one row per scoped row, so pass 1's
-        # exact counts gate its collect
-        collect = proj is not None and sum(
-            int(stats_by[pk]["__n"]) for pk in todo) <= DRIVER_ROW_CAPS["suite_rows"]
+        # the decoded frame holds one row per scoped row, and every
+        # violation check reads at most one row per scoped row, so pass
+        # 1's exact counts gate the decoded collect and the driver's
+        # violation rows. The constraint rows are collected now, under
+        # the decode
+        bounded = sum(int(stats_by[pk]["__n"]) for pk in todo
+                      ) <= DRIVER_ROW_CAPS["suite_rows"]
+        crows_future = (submit(self._constraint_rows, df, scoped, todo, stats_by)
+                        if bounded else None)
+        collect = proj is not None and bounded
         summary_from_pdf = collect and summary_in_feats
 
         # global pass 2: KS histograms + PSI frequencies + HDM
@@ -1649,8 +1741,12 @@ class ValidationSuite:
         # idle slots
         qcounts_by: dict = {}
         qcounts_future = None
+        flagged_by: dict = {}
         if pdf is not None:
             qcounts_by = self._quality_counts_by_part(feats, todo, pdf)
+            qcols = [f"__q{i}" for i in range(len(self._quality_conds()))]
+            flagged_by = {str(pk): g for pk, g in
+                          pdf[pdf[qcols].any(axis=1)].groupby("__pk")}
         elif feats is not None:
             qcounts_future = submit(self._quality_counts_by_part, feats, todo)
         fcols = [f"f{i}" for i in range(audio.N_FEATURES)]
@@ -1682,6 +1778,7 @@ class ValidationSuite:
                 self.kdq._input_cols = fcols
         if qcounts_future is not None:
             qcounts_by = qcounts_future.result()
+        crows_by = crows_future.result() if crows_future is not None else None
 
         # sequential decision loop over collected summaries; a
         # partition's frame is built only where a check reads its rows
@@ -1693,7 +1790,7 @@ class ValidationSuite:
             is_ref = not self.manifest.records
             part_df = functools.cache(functools.partial(self._part_frame, df, pk))
             verdicts, violations = self._constraint_verdicts(pk, part_df, stats,
-                                                             schema_result)
+                                                             schema_result, crows_by)
 
             # HDM: test-side agg AND distinct-value summary both come
             # precomputed from the global passes, so the exact
@@ -1749,7 +1846,9 @@ class ValidationSuite:
                                             threshold=self.kdq._critical_dist, n_rows=n_rows))
 
             if feats is not None:
-                qv, qviol = self._quality_verdicts(pk, feats, n_rows, qcounts_by[pk])
+                qv, qviol = self._quality_verdicts(
+                    pk, feats, n_rows, qcounts_by[pk],
+                    None if pdf is None else flagged_by.get(pk))
                 verdicts.extend(qv)
                 violations.extend(qviol)
 

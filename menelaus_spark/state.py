@@ -13,12 +13,17 @@ Record shape:
      "fingerprint": {"n": int, "key_hash": int},
      "verdicts": [verdict-row dicts], "n_violations": int,
      "check_states": {check_name: state dict}, "elapsed_s": float}
+
+A partition's violation rows live beside the manifest, in
+``violations/partition_key=<pk>/``, written before its record is
+appended; a run returns the files of recorded partitions only.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import tempfile
 
 
@@ -63,3 +68,28 @@ class CheckpointManifest:
 
     def violations_dir(self, partition_key: str) -> str:
         return os.path.join(self.dir, "violations", f"partition_key={partition_key}")
+
+    def write_violations(self, partition_key: str, table=None) -> int:
+        """Replace a partition's violation files with ``table``, a
+        pyarrow Table in the violation schema, written as ONE Parquet
+        file; ``None`` or no rows leaves none. The directory is cleared
+        first, so rows of an earlier attempt never outlive this one,
+        and the file lands by temp-file + rename: a kill leaves at most
+        a dot-named temp, which Spark's reader skips. Returns the number
+        of rows written."""
+        import pyarrow.parquet as pq
+
+        d = self.violations_dir(partition_key)
+        shutil.rmtree(d, ignore_errors=True)
+        if table is None or table.num_rows == 0:
+            return 0
+        os.makedirs(d)
+        fd, tmp = tempfile.mkstemp(dir=d, prefix=".", suffix=".parquet.tmp")
+        os.close(fd)
+        try:
+            pq.write_table(table, tmp)
+            os.replace(tmp, os.path.join(d, "part-00000.parquet"))
+        finally:
+            if os.path.exists(tmp):
+                os.unlink(tmp)
+        return table.num_rows

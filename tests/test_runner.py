@@ -239,6 +239,11 @@ def test_violations_surface(spark, tmp_path):
     assert v[("0", "null_rate:transcript")]["state"] == "fail"
     assert v[("0", "unique:clip_id")]["state"] == "fail"
     assert violations_df.filter(F.col("check_name") == "unique:clip_id").count() > 0
+    # the driver-written rows equal the Spark-written ones of cap 0
+    with pytest.MonkeyPatch.context() as m:
+        m.setitem(DRIVER_ROW_CAPS, "suite_rows", 0)
+        _, dist = _suite(spark, tmp_path, "viol_cap0", kdq_features=False).run(df)
+    assert _violation_rows(violations_df) == _violation_rows(dist)
 
 
 def test_referential_check(spark, tmp_path):
@@ -251,6 +256,14 @@ def test_referential_check(spark, tmp_path):
     v = _by_check([r.asDict(recursive=True) for r in verdicts_df.collect()])
     assert v[("0", "referential:transcript")]["state"] == "fail"
     assert violations_df.filter(F.col("check_name") == "referential:transcript").count() > 10
+    # one collect of the scope's orphans gives the per-partition counts
+    # and rows of cap 0's one count and write per partition
+    with pytest.MonkeyPatch.context() as m:
+        m.setitem(DRIVER_ROW_CAPS, "suite_rows", 0)
+        dist = _suite(spark, tmp_path, "ref_cap0", kdq_features=False, referential=trans)
+        _, dist_violations = dist.run(df)
+    assert _manifest_rows(suite) == _manifest_rows(dist)
+    assert _violation_rows(violations_df) == _violation_rows(dist_violations)
 
 
 def test_hdm_past_cap_fallback_identical(spark, tmp_path, audio_df, monkeypatch):
@@ -1008,6 +1021,20 @@ def ks_special_df(spark):
     return df.withColumn("score", score([1, 2])).withColumn("score0", score([0])).cache()
 
 
+@pytest.fixture(scope="module")
+def long_key_df(spark, tmp_path_factory):
+    # 60 clips keyed by a long: partition 1 clips (audio_clipping) and
+    # its clips whose string key ends in "3" break the dur_ms range
+    path = str(tmp_path_factory.mktemp("audio_long_key") / "table")
+    df = tables.audio_table(spark, n_rows=60, n_parts=3, null_frac=0.0,
+                            drift={1: {"gain": 8.0}})
+    df = df.withColumn("dur_ms", F.when(
+        (F.col("part") == 1) & F.col("clip_id").endswith("3"), 5000)
+        .otherwise(F.col("dur_ms")))
+    tables.write_audio_table(df.withColumn("clip_id", F.xxhash64("clip_id")), path)
+    return spark.read.parquet(path)
+
+
 _COLLECT_CASES = {
     "drifted": ("audio_df", {}),
     "undecodable": ("corrupt_df", _AUDIO_DEPTH_KW),
@@ -1017,6 +1044,8 @@ _COLLECT_CASES = {
     "ks_special": ("ks_special_df", {"ks_cols": ("dur_ms", "score", "score0")}),
     # a non-string psi column, and no KS column to bin
     "psi_int": ("audio_df", {"psi_col": "sr_hz", "ks_cols": ()}),
+    # violation keys are written as strings whatever the key's type
+    "long_key": ("long_key_df", {"quality_rules": {"clip_rate_max": 0.05}}),
 }
 
 
@@ -1052,6 +1081,9 @@ def test_decoded_collect_matches_cap0(spark, tmp_path, request, monkeypatch, cas
         assert bad[0] == 0 and bad[1] > 0 and bad[2] > 0
         assert sum(json.loads(r)["check_name"] == "decode_integrity"
                    for r in fast[1]) == sum(bad)
+    if case == "long_key":
+        names = {json.loads(r)["check_name"] for r in fast[1]}
+        assert {"range:dur_ms", "audio_clipping"} <= names
 
 
 def test_decoded_collect_with_non_string_psi_column(spark, tmp_path, audio_df, monkeypatch):
@@ -1110,6 +1142,68 @@ def test_decoded_collect_resume_equals_one_shot(spark, tmp_path, audio_df):
             s = _suite(spark, tmp_path, f"resume_{cap}")
             s.run(audio_df)
             assert _manifest_rows(s) == _manifest_rows(one_shot)
+
+
+@pytest.mark.parametrize("cap", [None, 0])
+def test_stale_violation_directories_are_not_returned(spark, tmp_path, audio_df, cap):
+    """Violation directories left by an earlier attempt are cleared as
+    their partitions are validated, also where a partition has no
+    violation rows now, on the driver write path and at cap 0."""
+    import os
+
+    from menelaus_spark.verdicts import VIOLATION_SCHEMA
+
+    with pytest.MonkeyPatch.context() as m:
+        if cap is not None:
+            m.setitem(DRIVER_ROW_CAPS, "suite_rows", cap)
+        s = _suite(spark, tmp_path, f"stale_{cap}")
+        for pk in map(str, range(10)):
+            spark.createDataFrame(
+                [(pk, "range:dur_ms", "stale", "range:dur_ms", {"value": "1"})],
+                VIOLATION_SCHEMA).write.parquet(s.manifest.violations_dir(pk))
+        _, violations = s.run(audio_df)
+    assert "stale" not in {r["row_key"] for r in violations.collect()}
+    clean = [r["partition_key"] for r in s.manifest.records if not r["n_violations"]]
+    assert clean
+    assert not any(os.path.exists(s.manifest.violations_dir(pk)) for pk in clean)
+
+
+class _Killed(Exception):
+    pass
+
+
+@pytest.mark.parametrize("cap", [None, 0])
+def test_resume_after_kill_between_violation_write_and_append(
+        spark, tmp_path, depth_df, cap):
+    """A run killed after partition 2's violation file is written and
+    before its manifest record is appended resumes to the one-shot
+    run's manifest and violation rows."""
+    import os
+
+    from menelaus_spark.state import CheckpointManifest
+
+    _, want = _suite(spark, tmp_path, f"kill_one_shot_{cap}", **_AUDIO_DEPTH_KW).run(depth_df)
+    want = _violation_rows(want)
+    with pytest.MonkeyPatch.context() as m:
+        if cap is not None:
+            m.setitem(DRIVER_ROW_CAPS, "suite_rows", cap)
+        real = CheckpointManifest.append
+
+        def killed(self, record):
+            if record["partition_key"] == "2":
+                assert record["n_violations"]
+                assert os.listdir(self.violations_dir("2"))
+                raise _Killed
+            real(self, record)
+
+        m.setattr(CheckpointManifest, "append", killed)
+        with pytest.raises(_Killed):
+            _suite(spark, tmp_path, f"kill_{cap}", **_AUDIO_DEPTH_KW).run(depth_df)
+        m.setattr(CheckpointManifest, "append", real)
+        s = _suite(spark, tmp_path, f"kill_{cap}", **_AUDIO_DEPTH_KW)
+        assert s.manifest.completed_keys() == ["0", "1"]
+        _, got = s.run(depth_df)
+        assert _violation_rows(got) == want
 
 
 def _distinct_scope(self, df, done):

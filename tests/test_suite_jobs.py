@@ -15,13 +15,15 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from menelaus_spark import runner  # noqa: E402
 from menelaus_spark.runner import ValidationSuite  # noqa: E402
+from menelaus_spark.verdicts import DRIVER_ROW_CAPS  # noqa: E402
 from perfbench.workloads import Context, SuiteCold  # noqa: E402
 
 # at most this many jobs in a warm suite_cold run at smoke size on 4
 # cores (18 while the partition list and the KS ranges had jobs of
 # their own, 14 while the summary probe, the kdq collect and the
-# quality counts each read the data through jobs of their own)
-WARM_SUITE_JOBS = 11
+# quality counts each read the data through jobs of their own, 11
+# while a partition's violation rows took a Spark write job)
+WARM_SUITE_JOBS = 10
 # at most this many jobs in a warm run resumed from a manifest of
 # partitions 0-8 that validates partition 9 (15 while a resumed run
 # counted its kdq leaves with a job of its own)
@@ -81,6 +83,26 @@ def test_resumed_append_warm_job_count(spark, suite_cold, monkeypatch):
     n = len(_job_ids(spark.sparkContext) - before)
     assert not calls
     assert n <= WARM_APPEND_JOBS
+
+
+def test_violations_written_by_the_driver_under_the_gate(spark, suite_cold, monkeypatch):
+    # under the suite_rows gate the driver writes every partition's
+    # violation file; at cap 0 a failing partition's rows take one
+    # Spark write
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    wl, df = suite_cold
+    calls = []
+    real = DataFrameWriter.parquet
+    monkeypatch.setattr(DataFrameWriter, "parquet",
+                        lambda self, *a, **k: calls.append(a) or real(self, *a, **k))
+    suite = wl.suite(wl.fresh_checkpoint())
+    suite.run(df)
+    assert not calls
+    assert any(r["n_violations"] for r in suite.manifest.records)
+    monkeypatch.setitem(DRIVER_ROW_CAPS, "suite_rows", 0)
+    wl.suite(wl.fresh_checkpoint()).run(df)
+    assert calls
 
 
 def test_run_releases_cached_frames(spark, suite_cold):
