@@ -16,17 +16,22 @@ Per partition (one "batch" in reference terms):
 
 Statistics for every unvisited partition come from a constant number
 of global passes grouped by partition key: one constraint aggregation
-and one decode of the payloads. Under the ``suite_rows`` row cap, one
-collect of the decoded frame feeds every decision that reads decoded
-rows (the drift summaries, the kdq trees and leaf counts, the decode
-integrity and quality counts), on fresh and resumed runs alike; over
-it each decision runs one distributed pass, and only O(bins + leaves
-+ categories) summaries reach the driver. The sequential drift
-decisions then run driver-side. Under the same cap the driver builds
-every violation row (the quality rows from that collect, the
-constraint rows from one collect of the failing partitions' frames)
-and writes each partition's violation file itself; over it a failing
-partition's rows take one Spark write. Completed partitions are recorded in the
+and one decode of the payloads. The ``suite_rows`` row cap, read
+against the constraint pass's exact row count, decides only who counts;
+what is counted is defined once, in two frames: the summary frame (KS
+bins, PSI strings, HDM doubles) and the decoded projection (features,
+quality flags and their violation values). Under the cap the driver
+collects them (one collect of the decoded projection, or of a no-decode
+suite's summary frame) and pandas counts, on fresh and resumed runs
+alike; over it Spark counts the same columns in one grouped pass per
+decision, and only O(bins + leaves + categories) summaries reach the
+driver. The sequential drift decisions then run driver-side. Under the
+same cap the driver builds every violation row (the quality rows from
+the decoded collect, the constraint rows from one collect of the
+failing partitions' frames) and writes each partition's violation file
+itself; over it a failing partition's rows take one Spark write, and
+the referential check counts the scope's orphans in one grouped pass.
+Completed partitions are recorded in the
 CheckpointManifest (lineage fingerprint, metrics, serialized state,
 verdict rows); a resumed run replays those verdicts byte-identically
 and continues from the first unvisited partition.
@@ -64,7 +69,6 @@ from menelaus_spark.verdicts import (
     PASS,
     VIOLATION_SCHEMA,
     Verdict,
-    driver_rows,
     empty_violations,
     verdicts_df,
 )
@@ -439,61 +443,46 @@ class ValidationSuite:
         self._quality_conds_cache = out
         return out
 
-    def _quality_counts_by_part(self, feats: DataFrame, pks: list[str],
+    def _quality_counts_by_part(self, proj: DataFrame, pks: list[str],
                                 pdf=None) -> dict:
         """Violation counts for EVERY quality check x partition: the
-        per-partition sums of the ``__q{i}`` flags of ``pdf``, the
-        decoded frame's collect, when there is one, else ONE
-        aggregation over the cached feats frame (keeps the suite's job
-        count O(1) in the partition count)."""
-        conds = self._quality_conds()
+        per-partition sums of the ``__q{i}`` flags of the decoded
+        projection (_decoded_projection), from ``pdf``, its collect,
+        when there is one, else in ONE grouped aggregation of ``proj``
+        (keeps the suite's job count O(1) in the partition count)."""
+        qcols = [f"__q{i}" for i in range(len(self._quality_conds()))]
         if pdf is not None:
-            qcols = [f"__q{i}" for i in range(len(conds))]
             sums = pdf.groupby("__pk")[qcols].sum()
-            return {pk: ([int(n) for n in sums.loc[pk]] if pk in sums.index
-                         else [0] * len(conds))
-                    for pk in pks}
-        rows = feats.groupBy(self.partition_col).agg(*[
-            F.sum(cond.cast("long")).alias(f"__q{i}")
-            for i, (_, cond, _) in enumerate(conds)
-        ]).collect()
-        out = {str(r[self.partition_col]): [int(r[f"__q{i}"] or 0)
-                                            for i in range(len(conds))]
-               for r in rows}
-        return {pk: out.get(pk, [0] * len(conds)) for pk in pks}
+        else:
+            sums = proj.groupBy("__pk").agg(
+                *[F.sum(F.col(q).cast("long")).alias(q) for q in qcols]
+            ).toPandas().set_index("__pk")
+        return {pk: ([int(n) for n in sums.loc[pk]] if pk in sums.index
+                     else [0] * len(qcols))
+                for pk in pks}
 
-    def _quality_verdicts(self, pk: str, feats: DataFrame, n_rows: int,
-                          counts: list[int], flagged=None):
+    def _quality_verdicts(self, pk: str, n_rows: int, counts: list[int], rows):
         """Decode-integrity, per-clip audio-quality, payload-size and
         metadata verdicts for one partition from its collected
-        violation counts
-        (_quality_counts_by_part); violation rows are only
-        materialized on failure: from ``flagged``, the partition's
-        flagged rows of the decoded frame's collect, when there is one
-        (pandas frames), else from the cached feats frame."""
+        violation counts (_quality_counts_by_part). Violation rows are
+        only materialized on failure, from ``rows``: the partition's
+        flagged rows of the decoded projection's collect (pandas) under
+        the ``suite_rows`` gate, else the projection itself (Spark)."""
         verdicts, violations = [], []
-        feats_pk = None
-        for i, ((name, cond, value), n_bad) in enumerate(
-                zip(self._quality_conds(), counts)):
+        for i, ((name, _, _), n_bad) in enumerate(zip(self._quality_conds(), counts)):
             verdicts.append(Verdict(pk, name, PASS if n_bad == 0 else FAIL,
                                     statistic=float(n_bad), threshold=0.0, n_rows=n_rows))
             if not n_bad:
                 continue
-            if flagged is not None:
-                rows = flagged[flagged[f"__q{i}"]]
+            q, v = f"__q{i}", f"__v{i}"
+            if isinstance(rows, DataFrame):
+                violations.append(rows.filter((F.col("__pk") == pk) & F.col(q)).select(
+                    F.col("__key").alias("row_key"), F.col(v).alias("value"),
+                    F.lit(name).alias("reason")))
+            else:
+                bad = rows[rows[q]]
                 violations.append(pd.DataFrame({
-                    "row_key": rows["__key"], "value": rows[f"__v{i}"],
-                    "reason": name}))
-                continue
-            if feats_pk is None:
-                feats_pk = feats.filter(
-                    F.col(self.partition_col).cast("string") == pk)
-            violations.append(
-                feats_pk.filter(cond)
-                .select(F.col(self.key_col).cast("string").alias("row_key"),
-                        value.alias("value"))
-                .withColumn("reason", F.lit(name))
-            )
+                    "row_key": bad["__key"], "value": bad[v], "reason": name}))
         return verdicts, violations
 
     def _constraint_aggs(self) -> list:
@@ -530,12 +519,16 @@ class ValidationSuite:
                 .cast("long")).alias("__paysize_bad"))
         # test-side min/max for the HDM + KS drift checks ride along in
         # the same pass (HDM consumes them via `precomputed`), plus
-        # mean + approx-quantile sketches for the manifest metrics
+        # mean + approx-quantile sketches for the manifest metrics. The
+        # min/max skip NaN, as HDM._minmax_count does: Spark orders NaN
+        # above every double, so a NaN would pin the KS range's hi (SQL
+        # text: one py4j call each, as in _ks_bin)
         for c in sorted(set(self.hdm_cols) | set(self.ks_cols)):
             col = F.col(c).cast("double")
+            clean = f"nanvl(CAST(`{c.replace('`', '``')}` AS DOUBLE), CAST(NULL AS DOUBLE))"
             aggs += [
-                F.min(col).alias(f"__mm_lo_{c}"),
-                F.max(col).alias(f"__mm_hi_{c}"),
+                F.expr(f"min({clean})").alias(f"__mm_lo_{c}"),
+                F.expr(f"max({clean})").alias(f"__mm_hi_{c}"),
                 F.avg(col).alias(f"__mean_{c}"),
                 F.percentile_approx(col, 0.5, 1000).alias(f"__p50_{c}"),
                 F.percentile_approx(col, 0.95, 1000).alias(f"__p95_{c}"),
@@ -551,32 +544,26 @@ class ValidationSuite:
         return C.schema_check(df, self.expected_schema)
 
     def _constraint_verdicts(self, pk: str, part_df, stats: dict,
-                             schema_result: tuple | None, crows_by: dict | None):
+                             schema_result: tuple | None, crows_by: dict | None,
+                             orphans_by: dict):
         """The constraint verdicts and violations of one partition from
-        its row of the constraint pass. Under the ``suite_rows`` gate
-        its violation rows (and its orphan count) come from
-        ``crows_by``, the run's one constraint collect
+        its row of the constraint pass and its orphan count in
+        ``orphans_by``. Under the ``suite_rows`` gate its violation rows
+        come from ``crows_by``, the run's one constraint collect
         (_constraint_rows); over it (``crows_by`` None) they are Spark
         frames. ``part_df()`` returns the partition's frame; it is
-        called only over the gate, where a violation count is non-zero
-        or the referential check runs, so a clean partition builds
-        none."""
+        called only over the gate, where a violation count is non-zero,
+        so a clean partition builds none."""
         verdicts = []
         n_rows = int(stats["__n"])
-        n_orphan = None
+        n_orphan = orphans_by.get(pk, 0)
         if crows_by is not None:
             rows = crows_by.get(pk)
             violations = [] if rows is None else [rows]
-            if self.referential is not None:
-                n_orphan = (0 if rows is None
-                            else int((rows["reason"] == _REFERENTIAL).sum()))
         else:
             violations = self._constraint_violations(part_df, stats)
-            if self.referential is not None:
-                orphans = self._orphans(part_df())
-                n_orphan = orphans.count()
-                if n_orphan:
-                    violations.append(orphans)
+            if n_orphan:
+                violations.append(self._orphans(part_df()))
 
         if schema_result is not None:
             ok, problems = schema_result
@@ -654,6 +641,12 @@ class ValidationSuite:
                  F.lit(None).cast("string").alias("value"),
                  F.lit(_REFERENTIAL).alias("reason"), *carry)
 
+    def _scope_orphans(self, scoped: DataFrame) -> DataFrame:
+        """The scope's orphan rows (_orphans) with their string
+        partition key ``__pk``."""
+        return self._orphans(scoped.withColumn(
+            "__pk", F.col(self.partition_col).cast("string")), ("__pk",))
+
     def _constraint_rows(self, df: DataFrame, scoped: DataFrame, todo: list[str],
                          stats_by: dict) -> dict:
         """{partition: pandas (row_key, value, reason) rows} of every
@@ -669,8 +662,7 @@ class ValidationSuite:
             frames += [f.withColumn("__pk", F.lit(pk))
                        for f in self._constraint_violations(part_df, stats_by[pk])]
         if self.referential is not None:
-            frames.append(self._orphans(scoped.withColumn(
-                "__pk", F.col(self.partition_col).cast("string")), ("__pk",)))
+            frames.append(self._scope_orphans(scoped))
         if not frames:
             return {}
         pdf = functools.reduce(DataFrame.unionByName, frames).toPandas()
@@ -1281,15 +1273,18 @@ class ValidationSuite:
         Per-partition statistics for ALL unvisited partitions come
         from a constant number of global passes — one
         groupBy(partition) constraint aggregation and ONE decode
-        pandas pass, then under the ``suite_rows`` cap one collect of
-        the decoded frame, and over it one distributed pass per
+        pandas pass. The ``suite_rows`` cap then decides who counts:
+        under it the driver collects the decoded projection (or a
+        no-decode suite's summary frame) once and counts in pandas;
+        over it Spark counts the same columns, one grouped pass per
         decision (the fused (partition, kind, key) count of the KS
         histograms, PSI frequencies and HDM distinct values, one kdq
         leaf count, one count of the decode-integrity and quality
-        flags) — then the sequential drift decisions run driver-side
-        on the collected summaries. Job count is O(1) in the partition
-        count (over the cap, plus one kdq recount pass per drift
-        event).
+        flags, one orphan count) — then the sequential drift decisions
+        run driver-side on the collected summaries. Job count is O(1)
+        in the partition count (over the cap, plus one kdq recount pass
+        per drift event and one violation write per failing
+        partition).
 
         The scope is known before any Spark job runs: all of ``df`` on
         a fresh checkpoint, else the rows outside the manifest's
@@ -1303,9 +1298,9 @@ class ValidationSuite:
         (spark_optimization_guide §2.6). The partition list and the KS
         reference ranges are read from the constraint aggregation's
         groups and min/max columns. The decode carries the KS, PSI and
-        HDM columns (_summary_cols), and one collect of the decoded
-        frame then feeds the summary, kdq, decode-integrity and
-        quality decisions (see _run_vectorized).
+        HDM columns (_summary_cols), so under the cap one collect of
+        the decoded projection feeds the summary, kdq, decode-integrity
+        and quality decisions (see _run_vectorized).
 
         The frames a run caches (the feature frame, HDM's reference
         frames) are released before it returns or raises. A run that
@@ -1429,7 +1424,7 @@ class ValidationSuite:
 
     @functools.cached_property
     def _summary_cols(self) -> dict:
-        """{name: expression} of the summary pass's inputs as a collect
+        """{name: expression} of the summary columns as the decode
         carries them: each KS column as its Java string (the decode's
         pandas boundary would turn a NaN into a null, which the KS clamp
         sends to the other edge), the psi column as a string and each
@@ -1444,35 +1439,35 @@ class ValidationSuite:
         return cols
 
     def _with_ks_bins(self, frame: DataFrame, ranges: dict) -> DataFrame:
-        """``frame``, which holds _summary_cols, with each KS column
-        replaced by its bin index (_ks_bin): the collect then holds the
-        exploded pass's keys, and the driver only counts them. Spark's
-        ordering of null, NaN and +-inf and its float arithmetic need
-        no numpy twin."""
+        """``frame``, which holds the summary columns, with each KS
+        column replaced by its bin index (_ks_bin): the summary frame,
+        whose columns are the summary pass's keys. Spark's ordering of
+        null, NaN and +-inf and its float arithmetic need no numpy
+        twin."""
         return frame.withColumns({f"__ks_{c}": self._ks_bin(f"__ks_{c}", ranges[c])
                                   for c in self.ks_cols})
 
-    def _summary_probe(self, scoped: DataFrame, ranges: dict):
-        """The summary pass's driver fast path for a suite with no
-        decode: under the ``suite_rows`` cap, ONE bounded Arrow collect
-        (driver_rows) of the summary columns replaces the exploded
-        grouped count (see _global_summary_pass). Returns the collected
-        frame, or None over the cap."""
-        return driver_rows(self._with_ks_bins(scoped.select(
+    def _summary_frame(self, scoped: DataFrame, ranges: dict) -> DataFrame:
+        """The scope's summary frame (_with_ks_bins), ``__pk`` beside
+        it. Its KS columns are binned from the source columns: only the
+        decode's pandas boundary needs the string round trip."""
+        cols = dict(self._summary_cols, **{f"__ks_{c}": F.col(c) for c in self.ks_cols})
+        return self._with_ks_bins(scoped.select(
             F.col(self.partition_col).cast("string").alias("__pk"),
-            *[e.alias(n) for n, e in self._summary_cols.items()]), ranges), "suite_rows")
+            *[e.alias(n) for n, e in cols.items()]), ranges)
 
     def _decoded_projection(self, feats: DataFrame, summary: bool) -> DataFrame:
-        """The projection of the cached decoded frame that the driver
-        collects once, under the ``suite_rows`` cap, to feed every
-        decision that reads decoded rows: the string partition key
-        ``__pk``, the key as a string ``__key``, the features (kdq),
-        each _quality_conds predicate as a flag ``__q{i}`` (a null
-        predicate is False, as Spark's ``sum(cast)`` counts it 0;
-        ``__q0`` is decode integrity) with its violation value
-        ``__v{i}`` on flagged rows and, with ``summary``, the summary
-        pass's inputs (_summary_cols), whose KS columns _with_ks_bins
-        bins once the ranges are known."""
+        """The projection of the cached decoded frame that every
+        decision reading decoded rows counts from, collected once under
+        the ``suite_rows`` cap and read by Spark over it: the string
+        partition key ``__pk``, the key as a string ``__key``, the
+        features (kdq), each _quality_conds predicate as a flag
+        ``__q{i}`` (a null predicate is False, as Spark's ``sum(cast)``
+        counts it 0; ``__q0`` is decode integrity, so ``~__q0`` selects
+        the clean rows) with its violation value ``__v{i}`` on flagged
+        rows and, with ``summary``, the summary columns (_summary_cols),
+        whose KS columns _with_ks_bins bins once the ranges are known.
+        The only place the quality predicates are evaluated."""
         sel = [F.col(self.partition_col).cast("string").alias("__pk"),
                F.col(self.key_col).cast("string").alias("__key")]
         if self.kdq is not None:
@@ -1485,22 +1480,20 @@ class ValidationSuite:
         return feats.select(*sel)
 
     def _global_summary_pass(
-        self, scoped: DataFrame, todo: list[str], ranges: dict, pdf
+        self, summary: DataFrame, todo: list[str], pdf
     ) -> tuple[dict, dict]:
         """KS histograms + PSI frequencies + HDM distinct-value
-        summaries for EVERY partition in ONE exploded grouped count —
-        one scan of the (numeric, codec) projection where rounds 1-2
-        used two. HDM values ride as their Java
+        summaries for EVERY partition from the summary frame
+        ``summary`` (_with_ks_bins): the decoded projection, or the
+        scope's (_summary_frame). HDM values ride as their Java
         shortest-round-trip string (exact double round-trip), and the
         driver cap still guards the HDM side: past it, HDM falls back
         to its own per-batch summary jobs.
 
-        ``pdf`` is the decoded frame's collect (_decoded_projection) or,
-        in a suite with no decode, _summary_probe's. When it is there,
-        its columns already hold the exploded pass's keys
-        (_with_ks_bins), so the driver only counts them and no further
-        job runs. Over the cap, the exploded pass runs unchanged — the
-        100-TB path.
+        Under the ``suite_rows`` gate ``pdf`` is the frame's collect,
+        whose columns already hold the summary keys, so the driver only
+        counts them and no job runs. Over it (``pdf`` None) ONE exploded
+        grouped count of the frame's columns runs — the 100-TB path.
 
         Returns (kspsi_by, hdm_sum_by)."""
         hdm_cols = self.hdm_cols if self.hdm is not None else []
@@ -1539,25 +1532,15 @@ class ValidationSuite:
                     for pk in todo
                 }
             return kspsi_by, hdm_sum_by
-        structs = [F.struct(F.lit(f"ks:{c}").alias("kind"),
-                            self._ks_bin(c, ranges[c]).cast("string").alias("key"))
-                   for c in self.ks_cols]
+        keys = [(f"ks:{c}", F.col(f"__ks_{c}")) for c in self.ks_cols]
         if self.psi_col:
-            structs.append(F.struct(
-                F.lit("psi").alias("kind"),
-                F.col(self.psi_col).cast("string").alias("key"),
-            ))
-        for c in hdm_cols:
-            v = F.col(c).cast("double")
-            structs.append(F.struct(
-                F.lit(f"hdm:{c}").alias("kind"),
-                F.when(~F.isnan(v), v).cast("string").alias("key"),
-            ))
+            keys.append(("psi", F.col("__psi")))
+        keys += [(f"hdm:{c}", F.when(~F.isnan(f"__hdm_{c}"), F.col(f"__hdm_{c}")))
+                 for c in hdm_cols]
         exploded = (
-            scoped.select(
-                F.col(self.partition_col).cast("string").alias("__pk"),
-                F.explode(F.array(*structs)).alias("kk"),
-            )
+            summary.select("__pk", F.explode(F.array(*[
+                F.struct(F.lit(kind).alias("kind"), e.cast("string").alias("key"))
+                for kind, e in keys])).alias("kk"))
             .select("__pk", "kk.kind", "kk.key")
             .filter(F.col("key").isNotNull())
         )
@@ -1620,23 +1603,21 @@ class ValidationSuite:
         }
         return kspsi_by, hdm_sum_by
 
-    def _kdq_clean_feats_for(self, df: DataFrame, feats: DataFrame | None,
+    def _kdq_clean_feats_for(self, df: DataFrame, proj: DataFrame | None,
                              pk: str, todo: list[str]) -> DataFrame:
-        """Clean feature vectors of one partition: from the cached
-        global feature frame when the partition is in scope, else
-        recomputed from the source table (resume case: the kdq
-        reference partition may already be completed)."""
+        """Clean feature vectors of one partition: from the decoded
+        projection when the partition is in scope, else recomputed from
+        the source table (resume case: the kdq reference partition may
+        already be completed)."""
         fcols = [f"f{i}" for i in range(audio.N_FEATURES)]
-        if feats is not None and pk in todo:
-            return feats.filter(
-                F.col(self.partition_col).cast("string") == pk
-            ).filter(_f0_clean()).select(*fcols)
+        if proj is not None and pk in todo:
+            return proj.filter((F.col("__pk") == pk) & ~F.col("__q0")).select(*fcols)
         part = df.filter(F.col(self.partition_col) == self._pk_value(df, pk))
         return audio.features_df(part, key_col=self.key_col).filter(
             _f0_clean()
         ).select(*fcols)
 
-    def _kdq_tree(self, df: DataFrame, feats: DataFrame | None, pk: str,
+    def _kdq_tree(self, df: DataFrame, proj: DataFrame | None, pk: str,
                   todo: list[str], groups: dict | None):
         """The kdq tree of partition ``pk``, built driver-side from its
         clean feature vectors: its group of the decoded frame's collect
@@ -1647,7 +1628,7 @@ class ValidationSuite:
         ary = None if groups is None else groups.get(pk)
         if ary is None or len(ary) > self.kdq.build_sample_cap:
             ary, _ = self.kdq._collect_build_sample(
-                self._kdq_clean_feats_for(df, feats, pk, todo))
+                self._kdq_clean_feats_for(df, proj, pk, todo))
         return self.kdq.build_tree_from_sample(ary)
 
     def _run_vectorized(self, df: DataFrame, scoped: DataFrame, submit,
@@ -1660,25 +1641,29 @@ class ValidationSuite:
         on run()'s driver thread pool and returns its future.
 
         While the decode runs, this thread builds the run's invariants:
-        the schema check and the one projection of ``feats`` that the
-        driver collects (_decoded_projection). Once pass 1 has given
-        the partition list, its exact row counts and the KS ranges, and
-        the decode has filled the cache, ONE collect of that
-        projection, under the
-        ``suite_rows`` cap, feeds every decision that reads decoded
-        rows, on a fresh and on a resumed run alike: the summary
-        counts, the kdq tree builds and leaf counts, and the
-        decode-integrity and quality counts. Over the cap each runs its
-        one distributed pass. A suite with no decode collects the
-        summary columns with its own bounded probe. Under the same gate
-        the violation rows reach the driver too (_constraint_rows,
-        _quality_verdicts) and _finish_partition writes them with no
-        Spark job."""
+        the schema check and the decoded projection
+        (_decoded_projection), the one place that evaluates the quality
+        predicates. Pass 1 gives the partition list, its exact row
+        counts and the KS ranges. The ``suite_rows`` gate on those
+        counts decides only who counts; what is counted is defined once,
+        in two frames. The summary frame (_with_ks_bins) holds the KS
+        bins, the psi string and the HDM doubles: the decoded
+        projection carries it, else it is built from the scope
+        (_summary_frame). Under the gate the driver collects each frame
+        once (the projection after the decode has filled the cache, a
+        no-decode suite's summary frame at once) and pandas counts the
+        summaries, the kdq leaves and the quality flags, on a fresh and
+        on a resumed run alike. Over it Spark counts them from the same
+        columns: one exploded grouped count of the scope's summary
+        frame, one kdq leaf count and one flag count of the projection.
+        Under the same gate the violation rows reach the driver too
+        (_constraint_rows, _quality_verdicts) and _finish_partition
+        writes them with no Spark job; over it the scope's orphans are
+        counted in one grouped pass."""
         t0 = time.time()
         run_summary = bool(self.ks_cols or self.psi_col or self.hdm is not None)
-        summary_in_feats = self._summary_in_decode()
         schema_result = self._schema_result(df)
-        proj = (self._decoded_projection(feats, summary_in_feats)
+        proj = (self._decoded_projection(feats, self._summary_in_decode())
                 if feats is not None else None)
 
         # pass 1's groups are the partitions to validate; on a fresh
@@ -1698,33 +1683,36 @@ class ValidationSuite:
             ranges = {c: (stats_by[todo[0]][f"__mm_lo_{c}"],
                           stats_by[todo[0]][f"__mm_hi_{c}"])
                       for c in self.ks_cols}
-        if summary_in_feats:
+        if self._summary_in_decode():
             proj = self._with_ks_bins(proj, ranges)
-        probe = (self._summary_probe(scoped, ranges)
-                 if run_summary and feats is None else None)
         # the decoded frame holds one row per scoped row, and every
         # violation check reads at most one row per scoped row, so pass
-        # 1's exact counts gate the decoded collect and the driver's
-        # violation rows. The constraint rows are collected now, under
-        # the decode
+        # 1's exact counts gate the driver's collects and violation
+        # rows. The constraint rows (or, over the gate, the orphan
+        # counts) are read now, under the decode
         bounded = sum(int(stats_by[pk]["__n"]) for pk in todo
                       ) <= DRIVER_ROW_CAPS["suite_rows"]
-        crows_future = (submit(self._constraint_rows, df, scoped, todo, stats_by)
-                        if bounded else None)
-        collect = proj is not None and bounded
-        summary_from_pdf = collect and summary_in_feats
+        crows_future = orphans_future = None
+        if bounded:
+            crows_future = submit(self._constraint_rows, df, scoped, todo, stats_by)
+        elif self.referential is not None:
+            orphans_future = submit(
+                self._scope_orphans(scoped).groupBy("__pk").count().collect)
 
         # global pass 2: KS histograms + PSI frequencies + HDM
-        # distinct-value summaries for every partition, from a bounded
-        # collect or ONE exploded grouped count. The sequential HDM
-        # updates then run driver-side on the collected summaries —
+        # distinct-value summaries for every partition. The sequential
+        # HDM updates then run driver-side on the collected summaries —
         # zero Spark jobs per partition, keeping the suite's job count
-        # O(1) in the partition count. The exploded pass runs here,
-        # while the decode is in flight.
+        # O(1) in the partition count. Unless the decoded projection is
+        # collected, the scope's summary frame is read here, while the
+        # decode is in flight.
         kspsi_by: dict = {}
         hdm_sum_by: dict = {}
-        if run_summary and not summary_from_pdf:
-            kspsi_by, hdm_sum_by = self._global_summary_pass(scoped, todo, ranges, probe)
+        collect = bounded and proj is not None
+        if run_summary and not collect:
+            frame = self._summary_frame(scoped, ranges)
+            kspsi_by, hdm_sum_by = self._global_summary_pass(
+                frame, todo, frame.toPandas() if bounded else None)
 
         # global pass 3 (the only pandas stage): decode + features +
         # quality metrics for ALL partitions, already running on the
@@ -1733,8 +1721,8 @@ class ValidationSuite:
         if feats_future is not None:
             feats_future.result()
         pdf = proj.toPandas() if collect else None
-        if summary_from_pdf:
-            kspsi_by, hdm_sum_by = self._global_summary_pass(scoped, todo, ranges, pdf)
+        if run_summary and pdf is not None:
+            kspsi_by, hdm_sum_by = self._global_summary_pass(proj, todo, pdf)
         # without the collect, the quality-count aggregation runs on the
         # driver thread pool WHILE the kdq build-sample collect +
         # leaf-count job run, so the two jobs back-fill each other's
@@ -1743,12 +1731,12 @@ class ValidationSuite:
         qcounts_future = None
         flagged_by: dict = {}
         if pdf is not None:
-            qcounts_by = self._quality_counts_by_part(feats, todo, pdf)
+            qcounts_by = self._quality_counts_by_part(proj, todo, pdf)
             qcols = [f"__q{i}" for i in range(len(self._quality_conds()))]
             flagged_by = {str(pk): g for pk, g in
                           pdf[pdf[qcols].any(axis=1)].groupby("__pk")}
-        elif feats is not None:
-            qcounts_future = submit(self._quality_counts_by_part, feats, todo)
+        elif proj is not None:
+            qcounts_future = submit(self._quality_counts_by_part, proj, todo)
         fcols = [f"f{i}" for i in range(audio.N_FEATURES)]
         # each partition's clean feature rows (__q0 is decode integrity)
         groups = self._kdq_groups = None if pdf is None or self.kdq is None else {
@@ -1759,9 +1747,8 @@ class ValidationSuite:
             # {partition: leaf counts} from the collected groups, else
             # from one grouped distributed pass
             if groups is None:
-                pk_clean = feats.filter(_f0_clean()).withColumn(
-                    "__pk", F.col(self.partition_col).cast("string"))
-                return distributed_leaf_counts_by_group(pk_clean, "__pk", fcols, tree, pks)
+                return distributed_leaf_counts_by_group(
+                    proj.filter(~F.col("__q0")), "__pk", fcols, tree, pks)
             empty = np.empty((0, len(fcols)))
             return {pk: tree.fill_counts(groups.get(pk, empty)) for pk in pks}
 
@@ -1770,7 +1757,7 @@ class ValidationSuite:
             tree = self.kdq._tree  # restored from the checkpoint on a resumed run
             self._kdq_fresh_ref = tree is None
             if tree is None:
-                tree = self._kdq_tree(df, feats, todo[0], todo, groups)
+                tree = self._kdq_tree(df, proj, todo[0], todo, groups)
                 self._kdq_ref_pk = todo[0]
             counts_by = kdq_counts(tree, todo)
             if self._kdq_fresh_ref:
@@ -1779,6 +1766,11 @@ class ValidationSuite:
         if qcounts_future is not None:
             qcounts_by = qcounts_future.result()
         crows_by = crows_future.result() if crows_future is not None else None
+        if orphans_future is not None:
+            orphans_by = {r["__pk"]: int(r["count"]) for r in orphans_future.result()}
+        else:
+            orphans_by = {pk: int((rows["reason"] == _REFERENTIAL).sum())
+                          for pk, rows in (crows_by or {}).items()}
 
         # sequential decision loop over collected summaries; a
         # partition's frame is built only where a check reads its rows
@@ -1789,8 +1781,8 @@ class ValidationSuite:
             fingerprint = {"n": n_rows, "key_hash": int(stats["__key_hash"] or 0)}
             is_ref = not self.manifest.records
             part_df = functools.cache(functools.partial(self._part_frame, df, pk))
-            verdicts, violations = self._constraint_verdicts(pk, part_df, stats,
-                                                             schema_result, crows_by)
+            verdicts, violations = self._constraint_verdicts(
+                pk, part_df, stats, schema_result, crows_by, orphans_by)
 
             # HDM: test-side agg AND distinct-value summary both come
             # precomputed from the global passes, so the exact
@@ -1826,13 +1818,13 @@ class ValidationSuite:
             if self.kdq is not None:
                 if self.kdq.drift_state == DRIFT:
                     ref_pk = self._kdq_ref_pk
-                    tree = self._kdq_tree(df, feats, ref_pk, todo, groups)
+                    tree = self._kdq_tree(df, proj, ref_pk, todo, groups)
                     recount = kdq_counts(
                         tree, ([ref_pk] if ref_pk in todo else []) + todo[i:])
                     counts_by.update(recount)
                     self.kdq.install_reference(tree, recount[ref_pk] if ref_pk in recount
                                                else distributed_leaf_counts(  # done in a prior run
-                                                   self._kdq_clean_feats_for(df, feats, ref_pk, todo),
+                                                   self._kdq_clean_feats_for(df, proj, ref_pk, todo),
                                                    fcols, tree))
                 if is_ref and self._kdq_fresh_ref and pk == self._kdq_ref_pk:
                     verdicts.append(Verdict(pk, "kdq_tree", PASS, n_rows=n_rows,
@@ -1845,10 +1837,9 @@ class ValidationSuite:
                                             statistic=self.kdq.test_dist,
                                             threshold=self.kdq._critical_dist, n_rows=n_rows))
 
-            if feats is not None:
+            if proj is not None:
                 qv, qviol = self._quality_verdicts(
-                    pk, feats, n_rows, qcounts_by[pk],
-                    None if pdf is None else flagged_by.get(pk))
+                    pk, n_rows, qcounts_by[pk], proj if pdf is None else flagged_by.get(pk))
                 verdicts.extend(qv)
                 violations.extend(qviol)
 

@@ -5,12 +5,14 @@ reproduces a byte-identical verdict table (north_rule)."""
 
 import json
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from menelaus_spark import tables
 from menelaus_spark.operators import histograms as H
 from menelaus_spark.runner import ValidationSuite
+from menelaus_spark.state import CheckpointManifest
 from menelaus_spark.verdicts import DRIVER_ROW_CAPS
 
 
@@ -971,12 +973,13 @@ def _spy(monkeypatch, owner, name, record):
     return calls
 
 
-def _collect_vs_cap0(spark, tmp_path, df, make, name):
+def _collect_vs_cap0(spark, tmp_path, df, make, name, caps=(None, 0)):
     """(manifest rows, violation rows) of a run that collects the
     decoded frame, and of one with the ``suite_rows`` cap at 0, which
-    runs every distributed pass."""
+    runs every distributed pass; ``caps`` sets other caps (None keeps
+    the table's)."""
     out = []
-    for cap in (None, 0):
+    for cap in caps:
         with pytest.MonkeyPatch.context() as m:
             if cap is not None:
                 m.setitem(DRIVER_ROW_CAPS, "suite_rows", cap)
@@ -1059,9 +1062,9 @@ def test_decoded_collect_matches_cap0(spark, tmp_path, request, monkeypatch, cas
     fixture, kw = _COLLECT_CASES[case]
     df = request.getfixturevalue(fixture)
     summary_pdf = _spy(monkeypatch, ValidationSuite, "_global_summary_pass",
-                       lambda self, scoped, todo, ranges, pdf: pdf is not None)
+                       lambda self, summary, todo, pdf: pdf is not None)
     quality_pdf = _spy(monkeypatch, ValidationSuite, "_quality_counts_by_part",
-                       lambda self, feats, pks, pdf=None: pdf is not None)
+                       lambda self, proj, pks, pdf=None: pdf is not None)
     # the suite_rows cap in force at each grouped count (the exploded
     # summary pass, the distributed kdq leaf counts, HDM's own summaries)
     counts_at_cap = _spy(monkeypatch, H, "salted_count",
@@ -1084,6 +1087,33 @@ def test_decoded_collect_matches_cap0(spark, tmp_path, request, monkeypatch, cas
     if case == "long_key":
         names = {json.loads(r)["check_name"] for r in fast[1]}
         assert {"range:dur_ms", "audio_clipping"} <= names
+    if case == "ks_special":
+        # the reference range skips NaN: its hi is no longer NaN
+        for cap in (None, 0):
+            rec = CheckpointManifest(str(tmp_path / f"{case}_{cap}")).records[0]
+            ref = rec["check_states"]["ks_ref"]["score0"]
+            assert not np.isnan([ref["lo"], ref["hi"]]).any()
+            assert rec["metrics"]["mm_hi_score0"] == ref["hi"]
+
+
+@pytest.mark.parametrize("case", ["drifted", "undecodable", "no_decode"])
+def test_suite_rows_gate_boundary(spark, tmp_path, request, monkeypatch, case):
+    """With the ``suite_rows`` cap at exactly the scoped row count the
+    driver collects; one below it Spark counts. Both runs give the
+    same manifest and violation rows, byte for byte."""
+    fixture, kw = _COLLECT_CASES[case]
+    df = request.getfixturevalue(fixture)
+    n = df.count()
+    summary_pdf = _spy(monkeypatch, ValidationSuite, "_global_summary_pass",
+                       lambda self, summary, todo, pdf: pdf is not None)
+    quality_pdf = _spy(monkeypatch, ValidationSuite, "_quality_counts_by_part",
+                       lambda self, proj, pks, pdf=None: pdf is not None)
+    at_cap, below_cap = _collect_vs_cap0(
+        spark, tmp_path, df, lambda sp, tp, name: _suite(sp, tp, name, **kw),
+        f"boundary_{case}", caps=(n, n - 1))
+    assert at_cap == below_cap
+    assert summary_pdf == [True, False]
+    assert quality_pdf == ([] if case == "no_decode" else [True, False])
 
 
 def test_decoded_collect_with_non_string_psi_column(spark, tmp_path, audio_df, monkeypatch):
@@ -1091,7 +1121,7 @@ def test_decoded_collect_with_non_string_psi_column(spark, tmp_path, audio_df, m
     collected projection, so the summary pass and the kdq decisions
     both read the collect."""
     summary_pdf = _spy(monkeypatch, ValidationSuite, "_global_summary_pass",
-                       lambda self, scoped, todo, ranges, pdf: pdf is not None)
+                       lambda self, summary, todo, pdf: pdf is not None)
     fast, dist = _collect_vs_cap0(
         spark, tmp_path, audio_df,
         lambda sp, tp, name: _suite(sp, tp, name, psi_col="sr_hz"), "psi_int")

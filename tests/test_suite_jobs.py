@@ -28,6 +28,14 @@ WARM_SUITE_JOBS = 10
 # partitions 0-8 that validates partition 9 (15 while a resumed run
 # counted its kdq leaves with a job of its own)
 WARM_APPEND_JOBS = 13
+# at most this many jobs in a warm run of a suite with no decode at a
+# suite_rows cap of 0 (11 while a summary probe collected rows before
+# the exact scoped count was read, and threw them away over the cap)
+WARM_NO_DECODE_CAP0_JOBS = 10
+# at a suite_rows cap of 0 the referential check adds at most this many
+# jobs to a warm suite_cold run (30 while each partition counted its
+# orphans in a job of its own)
+REFERENTIAL_CAP0_EXTRA_JOBS = 3
 
 
 def _job_ids(sc) -> set[int]:
@@ -51,13 +59,55 @@ def suite_cold(spark, tmp_path_factory):
     return wl, spark.read.parquet(wl.path)
 
 
+def _warm_jobs(spark, wl, df, make) -> int:
+    """Jobs of the second of two runs of ``make(checkpoint)`` over ``df``."""
+    make(wl.fresh_checkpoint()).run(df)  # cold: codegen, first plans
+    before = _job_ids(spark.sparkContext)
+    make(wl.fresh_checkpoint()).run(df)
+    return len(_job_ids(spark.sparkContext) - before)
+
+
 def test_suite_cold_warm_job_count(spark, suite_cold):
     wl, df = suite_cold
-    wl.suite(wl.fresh_checkpoint()).run(df)  # cold: codegen, first plans
-    before = _job_ids(spark.sparkContext)
-    wl.suite(wl.fresh_checkpoint()).run(df)
-    n = len(_job_ids(spark.sparkContext) - before)
-    assert n <= WARM_SUITE_JOBS
+    assert _warm_jobs(spark, wl, df, wl.suite) <= WARM_SUITE_JOBS
+
+
+def test_no_decode_suite_collects_nothing_over_the_gate(spark, suite_cold, monkeypatch):
+    # a suite with no decode reads the exact scoped row count before any
+    # summary: over the gate Spark counts the summary frame, and no
+    # bounded collect runs first
+    from menelaus_spark import tables, verdicts
+
+    wl, df = suite_cold
+    calls = []
+    for mod in (verdicts, runner):
+        if hasattr(mod, "driver_rows"):
+            real = mod.driver_rows
+            monkeypatch.setattr(mod, "driver_rows",
+                                lambda *a, real=real: calls.append(a) or real(*a))
+    monkeypatch.setitem(DRIVER_ROW_CAPS, "suite_rows", 0)
+
+    def no_decode(ckpt):
+        return ValidationSuite(
+            spark, ckpt, expected_schema=tables.AUDIO_SCHEMA,
+            null_rate_max={"transcript": 0.2}, ranges={"dur_ms": (200, 3000)},
+            accepted_values={"codec": wl.codecs}, cps_bounds=(1.0, 60.0),
+            payload_tol=0.02, kdq_features=False)
+
+    n = _warm_jobs(spark, wl, df, no_decode)
+    assert not calls
+    assert n <= WARM_NO_DECODE_CAP0_JOBS
+
+
+def test_referential_check_over_the_gate_is_one_pass(spark, suite_cold, monkeypatch):
+    # over the gate the scope's orphans are counted in one grouped pass,
+    # not one job per partition
+    wl, df = suite_cold
+    monkeypatch.setitem(DRIVER_ROW_CAPS, "suite_rows", 0)
+    base = _warm_jobs(spark, wl, df, wl.suite)
+    monkeypatch.setattr(wl, "suite_kwargs", lambda: {"referential": df.select("clip_id")})
+    n = _warm_jobs(spark, wl, df, wl.suite)
+    assert n <= base + REFERENTIAL_CAP0_EXTRA_JOBS
 
 
 def test_resumed_append_warm_job_count(spark, suite_cold, monkeypatch):
